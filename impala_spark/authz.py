@@ -20,8 +20,9 @@ data row, exactly like the reference's cached AuthorizationPolicy.
 Enforcement model (engine.sql calls AuthzPolicy.check_access):
   * SELECT statements require SELECT (or ALL) on every referenced base
     table, at table, database, or server scope.
-  * INSERT/UPSERT require INSERT (or ALL) on the target table (plus
-    SELECT on source tables); UPDATE/DELETE/TRUNCATE require ALL.
+  * INSERT/UPSERT require INSERT (or ALL) on the target table,
+    UPDATE/DELETE/TRUNCATE require ALL on it; each also requires SELECT
+    on every other table its source query reads.
   * CREATE/DROP TABLE/VIEW require ALL at database or server scope.
   * Column-level SELECT grants authorize a statement only when every
     identifier in it that names a column of that table is covered by
@@ -92,16 +93,6 @@ _SHOW_GRANT_ROLE_RE = re.compile(
 #: URI schemes the sandbox "filesystem" accepts (HdfsUri analysis —
 #: "No FileSystem for scheme: x" otherwise)
 _KNOWN_URI_SCHEMES = {"hdfs", "file", "s3a", ""}
-
-
-def is_authz_statement(q: str) -> bool:
-    """True when q is one of the authorization statement forms (matched
-    before the generic SHOW / DDL dispatch in engine.sql)."""
-    return any(r.match(q) for r in (
-        _CREATE_DROP_ROLE_RE, _GRANT_REVOKE_ROLE_RE, _GRANT_PRIV_RE,
-        _REVOKE_PRIV_RE, _SHOW_ROLES_RE, _SHOW_CURRENT_ROLES_RE,
-        _SHOW_ROLE_GRANT_RE, _SHOW_GRANT_ROLE_RE,
-    ))
 
 
 class AuthzPolicy:
@@ -412,27 +403,24 @@ class AuthzPolicy:
                         f" execute 'SELECT' on: default.{t.split('.')[-1]}"
                     )
             return
-        if kind in ("INSERT", "UPSERT"):
+        if kind in ("INSERT", "UPSERT", "UPDATE", "DELETE", "TRUNCATE",
+                    "COMPUTE STATS"):
             assert target is not None
-            if not has(("INSERT",), target):
+            # INSERT on an insert target, ALL (only) on anything modified
+            levels = ("INSERT",) if kind in ("INSERT", "UPSERT") else ()
+            if not has(levels, target):
                 raise AuthorizationError(
                     f"User '{self.user}' does not have privileges to"
-                    f" execute 'INSERT' on: default.{target.split('.')[-1]}"
+                    f" execute '{levels[0] if levels else kind}' on:"
+                    f" default.{target.split('.')[-1]}"
                 )
+            # ...and SELECT on every other table the statement reads
             for t in tables:
                 if t.lower() != target.lower() and not has(("SELECT",), t):
                     raise AuthorizationError(
                         f"User '{self.user}' does not have privileges to"
                         f" execute 'SELECT' on: default.{t.split('.')[-1]}"
                     )
-            return
-        if kind in ("UPDATE", "DELETE", "TRUNCATE", "COMPUTE STATS"):
-            assert target is not None
-            if not has((), target):  # ALL only
-                raise AuthorizationError(
-                    f"User '{self.user}' does not have privileges to"
-                    f" execute '{kind}' on: default.{target.split('.')[-1]}"
-                )
             return
         if kind in ("CREATE", "DROP"):
             # database-or-server scope ALL (AuthorizeableDb)

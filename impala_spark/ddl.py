@@ -778,6 +778,11 @@ def insert(
     return _refresh_view(spark, t)
 
 
+def _ack(spark: SparkSession, msg: str) -> DataFrame:
+    """One-row status result of a statement that returns no rows."""
+    return spark.sql(f"SELECT '{msg}' AS result")
+
+
 def truncate(spark: SparkSession, stmt_or_table: str) -> DataFrame:
     """TRUNCATE [TABLE] [IF EXISTS] name — drop all rows, keep schema
     (A/TruncateStmt.java:32: IF EXISTS makes a missing table a no-op)."""
@@ -786,7 +791,7 @@ def truncate(spark: SparkSession, stmt_or_table: str) -> DataFrame:
         stmt_or_table, re.IGNORECASE)
     name = m.group(2).strip("`") if m else stmt_or_table
     if m and m.group("ife") and table_info(name) is None:
-        return spark.sql("SELECT 'table does not exist (IF EXISTS)' AS result")
+        return _ack(spark, "table does not exist (IF EXISTS)")
     t = _managed(name)
     schema = spark.table(name).schema
     empty = spark.createDataFrame([], schema)

@@ -11,6 +11,7 @@ UPDATE/DELETE) are routed to Python implementations here / in ddl.py.
 from __future__ import annotations
 
 import re
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,33 +27,192 @@ class ImpalaAnalysisError(ImpalaUnsupportedError):
     (Analyzer.java resolution errors). Subclasses ImpalaUnsupportedError so
     one except clause catches the whole compat surface."""
 
-_COMPUTE_STATS_RE = re.compile(
-    r"^\s*COMPUTE\s+(INCREMENTAL\s+)?STATS\s+([\w.`]+)\s*$", re.IGNORECASE
+
+#: a table or database name: bare or db-qualified, any part backticked
+_NAME = r"(?:`[^`]+`|\w+)(?:\.(?:`[^`]+`|\w+))*"
+#: the query a statement reads
+_QUERY = r"(?:SELECT|WITH|VALUES)\b.*"
+
+#: The statement table: (kind, pattern, handler method), first match wins.
+#: ``classify`` is the only place a statement's kind, target and source
+#: are worked out; dispatch, authorization, auditing and EXPLAIN all read
+#: its record. Named groups: ``target`` (table or database), ``alias`` +
+#: ``from``/``set`` (join-form UPDATE/DELETE), ``source`` (the query read).
+_STATEMENTS = tuple(
+    (kind, re.compile(rf"\s*(?:{pattern})", re.IGNORECASE | re.DOTALL), handler)
+    for kind, pattern, handler in (
+        # a query, parenthesized ones included (first: it overlaps no other
+        # row, and it is the hot path)
+        ("query", r"(?:SELECT|WITH|VALUES)\b|(?![A-Za-z_])", "_run_query"),
+        # no COMMENT statement in the 2.7 grammar (sql-parser.cup has no
+        # comment_on rule): never fall through to Spark's COMMENT ON
+        ("comment", r"COMMENT\b", "_reject_comment"),
+        # CREATE/DROP ROLE, GRANT/REVOKE, SHOW ROLES/GRANT ROLE: no
+        # privilege checks on catalog objects (GrantRevokePrivStmt.java:31-34)
+        ("authz", r"(?:(?:CREATE|DROP)\s+ROLE|GRANT|REVOKE|SHOW\s+(?:CURRENT\s+"
+                  r"ROLES|ROLES|ROLE\s+GRANT|GRANT\s+ROLE))\b", "_authz_stmt"),
+        ("explain", r"EXPLAIN\s+(?!ANALYZE\b)(?P<source>.+)", "_explain_stmt"),
+        ("compute_stats", rf"COMPUTE\s+(?:INCREMENTAL\s+)?STATS\s+(?P<target>{_NAME})\s*$",
+         "_compute_stats_stmt"),
+        # A/DropStatsStmt.java:28-30: PARTITION is only valid with INCREMENTAL;
+        # both forms demote the same stats
+        ("drop_stats", rf"DROP\s+(?:INCREMENTAL\s+)?STATS\s+(?P<target>{_NAME})"
+                       r"(?:\s+PARTITION\s*\([^)]*\))?\s*$", "_drop_stats"),
+        ("set", r"SET(?:\s+(?P<key>\w+)\s*=\s*(?P<value>.+?))?\s*$", "_set"),
+        ("use", rf"USE\s+(?P<target>{_NAME})\s*$", "_use"),
+        # SHOW [AGGREGATE|ANALYTIC] FUNCTIONS [IN db] [[LIKE] 'pattern']
+        # (show_functions_stmt + opt_function_category)
+        ("show_functions", r"SHOW\s+(?:(?P<cat>AGGREGATE|ANALYTIC)\s+)?FUNCTIONS"
+                           rf"(?:\s+IN\s+(?P<target>{_NAME}))?"
+                           r"(?:\s+(?:LIKE\s+)?'(?P<pat>[^']*)')?\s*$", "_show_functions_stmt"),
+        # Impala SHOW forms Spark SQL lacks (service/MetadataOp.java)
+        ("show", r"SHOW\s+(?P<what>FILES\s+IN|TABLE\s+STATS|COLUMN\s+STATS|RANGE\s+"
+                 r"PARTITIONS|PARTITIONS|CREATE\s+TABLE|CREATE\s+FUNCTION|FUNCTIONS)"
+                 rf"\s*(?P<target>{_NAME})?\s*$", "_show"),
+        ("describe_db", rf"DESCRIBE\s+DATABASE\s+(?:EXTENDED\s+|FORMATTED\s+)?(?P<target>{_NAME})\s*$",
+         "_describe_db"),
+        ("describe", rf"DESCRIBE\s+(?P<fmt>FORMATTED\s+|EXTENDED\s+)?(?P<target>{_NAME})\s*$",
+         "_run_query"),
+        ("insert", rf"INSERT\s+(?P<mode>INTO|OVERWRITE)\s+(?:TABLE\s+)?(?P<target>{_NAME})\s*"
+                   r"(?:\((?P<cols>[^)]*)\)\s*)?"  # column permutation (InsertStmt.java:73)
+                   r"(?:PARTITION\s*\((?P<part>[^)]*)\)\s*)?"
+                   # plan hints + comments before the source (InsertStmt planHints_)
+                   r"(?P<hints>(?:(?:\[[^\]]*\]|/\*[^*]*\*+(?:[^/*][^*]*\*+)*/|--[^\n]*\n)\s*)*)"
+                   rf"(?P<source>{_QUERY})?", "_insert"),
+        ("upsert", rf"UPSERT\s+(?:INTO\s+)?(?:TABLE\s+)?(?P<target>{_NAME})\s*"
+                   rf"(?:\([^)]*\)\s*)?(?P<source>{_QUERY})?", "_modify"),
+        ("create_function", r"CREATE\s+(?P<agg>AGGREGATE\s+)?FUNCTION\s+(?:IF\s+NOT\s+EXISTS\s+)?"
+                            rf"(?P<target>{_NAME})\s*(?:\([^)]*\))?\s*"
+                            r"(?:RETURNS\s+\w+)?\s*(?P<opts>.*)$", "_create_function"),
+        ("drop_function", r"DROP\s+(?:AGGREGATE\s+)?FUNCTION\s+(?:IF\s+EXISTS\s+)?"
+                          rf"(?P<target>{_NAME})\s*(?:\([^)]*\))?\s*$", "_drop_function"),
+        ("ctas", rf"CREATE\s+TABLE\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<target>{_NAME})\s*"
+                 r"(?:PARTITIONED\s+BY\s*\((?P<part>[^)]*)\)\s*)?"
+                 r"(?:PARTITION\s+BY\s+HASH\s*\((?P<hash>[^)]*)\)\s*"
+                 r"(?:PARTITIONS\s+(?P<nb1>\d+)|INTO\s+(?P<nb2>\d+)\s+BUCKETS)\s*)?"
+                 r"(?:STORED\s+AS\s+(?P<fmt>\w+)\s*)?"
+                 rf"AS\s+(?P<source>{_QUERY})$", "_ctas"),
+        ("create_like", r"CREATE\s+(?P<external>EXTERNAL\s+)?TABLE\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
+                        rf"(?P<target>{_NAME})\s+LIKE\s+(?P<like>{_NAME})(?P<tail>.*)$",
+         "_create_like"),
+        # column list balanced-paren-extracted by the handler: types nest
+        # parens (sql-parser.cup:2373 create_tbl_stmt)
+        ("create_table", r"CREATE\s+(?:EXTERNAL\s+)?TABLE\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
+                         rf"(?P<target>{_NAME})\s*\(", "_create_table_with_cols"),
+        # no column list: the Avro schema supplies it
+        ("create_avro", r"CREATE\s+(?:EXTERNAL\s+)?TABLE\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?"
+                        rf"(?P<target>{_NAME})\s+STORED\s+AS\s+AVRO\b.*?"
+                        r"avro\.schema\.(?:literal'\s*=\s*'(?P<lit>(?:[^']|'')*)'"
+                        r"|url'\s*=\s*'(?P<url>[^']*)')", "_create_avro"),
+        ("create_view", rf"CREATE\s+VIEW\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<target>{_NAME})\s*"
+                        rf"(?:\((?P<cols>[^)]*)\)\s*)?AS\s+(?P<source>{_QUERY})$", "_create_view"),
+        ("alter_view", rf"ALTER\s+VIEW\s+(?P<target>{_NAME})(?:\s+AS\s+(?P<source>{_QUERY})"
+                       rf"|\s+RENAME\s+TO\s+(?P<rename>{_NAME}))?", "_alter_view"),
+        ("database", r"(?P<op>CREATE|DROP)\s+(?:DATABASE|SCHEMA)\s+"
+                     rf"(?P<ine>IF\s+(?:NOT\s+)?EXISTS\s+)?(?P<target>{_NAME})(?P<tail>.*)$",
+         "_database"),
+        ("drop_table", rf"DROP\s+TABLE\s+(?P<ine>IF\s+EXISTS\s+)?(?P<target>{_NAME})\s*(?:PURGE)?\s*$",
+         "_drop_table"),
+        # A/AlterTableSetColumnStats.java: manual metastore column stats
+        ("set_column_stats", rf"ALTER\s+TABLE\s+(?P<target>{_NAME})\s+SET\s+COLUMN\s+STATS\s+"
+                             rf"(?P<col>{_NAME})\s*\((?P<body>.*)\)\s*$", "_set_column_stats_stmt"),
+        ("alter_table", rf"ALTER\s+TABLE\s+(?P<target>{_NAME})"
+                        rf"(?:\s+RENAME\s+TO\s+(?P<rename>{_NAME}))?", "_alter_table"),
+        ("update", rf"UPDATE\s+(?P<alias>{_NAME})\s+SET\s+(?P<set>.*)$", "_modify"),
+        ("delete", rf"DELETE\s+(?:(?!FROM\b)(?P<alias>{_NAME})\s+FROM\s+|FROM\s+)?"
+                   rf"(?P<from>(?P<target>{_NAME}).*)$", "_modify"),
+        ("truncate", rf"TRUNCATE\b(?:\s+TABLE\b)?(?:\s+IF\s+EXISTS\b)?(?:\s+(?P<target>{_NAME}))?",
+         "_truncate"),
+        ("load", r"LOAD\s+DATA\b(?:\s+INPATH\s+'(?P<uri>[^']*)'\s+(?:OVERWRITE\s+)?INTO\s+TABLE\s+"
+                 rf"(?P<target>{_NAME}))?", "_load"),
+        # REFRESH t [PARTITION (spec)] (IMPALA-1683)
+        ("refresh", rf"(?P<op>INVALIDATE\s+METADATA|REFRESH)\b(?:\s+(?P<target>{_NAME})\s*"
+                    r"(?:PARTITION\s*\([^)]*\)\s*)?)?(?P<tail>.*)$", "_refresh"),
+        ("drop_view", rf"DROP\s+VIEW\s+(?:IF\s+EXISTS\s+)?(?P<target>{_NAME})", "_drop_view"),
+        # table/view DDL of other shapes: Spark runs it natively
+        ("ddl", r"(?P<op>CREATE|DROP|ALTER)\s+(?:EXTERNAL\s+)?(?P<obj>TABLE|VIEW)\b"
+                rf"(?:\s+IF\s+(?:NOT\s+)?EXISTS)?(?:\s+(?P<target>{_NAME}))?", "_run_query"),
+        # any other statement the grammar knows: Spark runs it natively
+        ("command", r"(?:CREATE|DROP|ALTER|TRUNCATE|LOAD|SET|USE|SHOW|DESCRIBE|COMPUTE|"
+                    r"INVALIDATE|REFRESH)\b", "_run_query"),
+        ("other", r"", "_run_query"),
+    )
 )
-#: DROP STATS t | DROP INCREMENTAL STATS t PARTITION (spec)
-#: (A/DropStatsStmt.java:28-30 — the PARTITION clause is only valid with
-#: INCREMENTAL; both route to the same stats-demotion here)
-_DROP_STATS_RE = re.compile(
-    r"^\s*DROP\s+(INCREMENTAL\s+)?STATS\s+([\w.`]+)"
-    r"(?:\s+PARTITION\s*\([^)]*\))?\s*$",
-    re.IGNORECASE,
+
+#: kinds that write engine-managed (session) tables; a target qualified
+#: with another database is a Spark catalog table, which Spark writes
+_SESSION_TABLE_KINDS = ("insert", "ctas", "create_like", "drop_table")
+#: kinds EXPLAIN accepts (sql-parser.cup explain_stmt: queries, DML, CTAS);
+#: the rest must never execute as a side effect of EXPLAIN
+_EXPLAINABLE_KINDS = (
+    "query", "other", "explain", "comment", "insert", "upsert", "update",
+    "delete", "ctas",
 )
-_SET_RE = re.compile(r"^\s*SET\s+(\w+)\s*=\s*(.+?)\s*$", re.IGNORECASE)
-_USE_RE = re.compile(r"^\s*USE\s+([\w`]+)\s*$", re.IGNORECASE)
-_EXPLAIN_RE = re.compile(r"^\s*EXPLAIN\s+(.*)$", re.IGNORECASE | re.DOTALL)
-_INSERT_RE = re.compile(
-    r"^\s*INSERT\s+(?P<mode>INTO|OVERWRITE)\s+(?:TABLE\s+)?(?P<table>[\w`]+)\s*"
-    r"(?:\((?P<cols>[^)]*)\)\s*)?"  # column permutation (InsertStmt.java:73)
-    r"(?:PARTITION\s*\((?P<part>[^)]*)\)\s*)?"
-    # plan hints + comments between the target and the source query
-    # (InsertStmt.java planHints_: [shuffle] / /* +noshuffle */ / -- ...)
-    r"(?P<hints>(?:(?:\[[^\]]*\]|/\*[^*]*\*+(?:[^/*][^*]*\*+)*/|--[^\n]*\n)\s*)*)"
-    r"(?P<select>(?:SELECT|VALUES|WITH)\s.*)$",
-    re.IGNORECASE | re.DOTALL,
+#: whitespace and comments ahead of a statement's first keyword
+_LEADING_COMMENTS_RE = re.compile(r"(?:\s+|/\*.*?\*/|--[^\n]*)*", re.DOTALL)
+#: SHOW surfaces that target a table (Privilege.ANY, VIEW_METADATA event)
+_SHOW_TABLE_SURFACES = (
+    "FILES IN", "TABLE STATS", "COLUMN STATS", "PARTITIONS",
+    "RANGE PARTITIONS", "CREATE TABLE",
 )
+#: table/view DDL kinds -> (audited privilege, object type; None = a view
+#: when the engine registered one under the name, else a table)
+_DDL_EVENTS = {
+    "ctas": ("CREATE", "TABLE"),
+    "create_like": ("CREATE", "TABLE"),
+    "create_table": ("CREATE", "TABLE"),
+    "create_avro": ("CREATE", "TABLE"),
+    "create_view": ("CREATE", "VIEW"),
+    "alter_view": ("ALTER", "VIEW"),
+    "drop_table": ("DROP", None),
+    "drop_view": ("DROP", "VIEW"),
+    "alter_table": ("ALTER", None),
+    "set_column_stats": ("ALTER", None),
+}
+_CREATE_TABLE_HEAD_RE = re.compile(r"\s*CREATE\s+TABLE\b", re.IGNORECASE)
+
+
+class Stmt(NamedTuple):
+    """A classified statement (ImpalaEngine.classify)."""
+
+    kind: str
+    #: the text the row matched (a PARTITION BY RANGE clause stripped)
+    text: str
+    match: re.Match
+    #: target table or database: backticks stripped, a join-form
+    #: UPDATE/DELETE alias resolved to its table
+    target: str | None
+    #: the query the statement reads (None when it reads none)
+    source: str | None
+    handler: str
+    #: (columns, parsed spec) of a stripped PARTITION BY RANGE clause
+    range_spec: tuple | None = None
+    #: the query EXPLAIN plans, when not the source: an UPDATE's rows to
+    #: modify (the plan of ``SELECT *`` over its FROM/WHERE part)
+    plan_source: str | None = None
+
+
+def _show_surface(m: re.Match) -> str:
+    """The SHOW row's surface, single-spaced ('TABLE STATS')."""
+    return " ".join(m.group("what").upper().split())
+
+
+def _unquote(name: str | None) -> str | None:
+    return name.replace("`", "") if name else name
+
+
+def _resolve_alias(alias: str, from_clause: str) -> str:
+    """A join-form UPDATE/DELETE target: the table an alias names in the
+    FROM clause (ModifyStmt.java:116-130), or the name itself."""
+    try:
+        return ddl._resolve_modify_target(alias, from_clause)
+    except ValueError:
+        return _unquote(alias)
+
+
 _WITH_PREFIX_RE = re.compile(r"^\s*WITH\s", re.IGNORECASE)
 _DML_HEAD_RE = re.compile(
-    r"(?is)^((?:INSERT|UPSERT)\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?[\w.`]+\s*"
+    rf"(?is)^((?:INSERT|UPSERT)\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?{_NAME}\s*"
     r"(?:\([^)]*\)\s*)?"  # column permutation stays in the head
     r"(?:PARTITION\s*\([^)]*\)\s*)?)(.*)$"
 )
@@ -136,14 +296,6 @@ def _hoist_with_clause(q: str) -> str:
                     return f"{hm.group(1).rstrip()} {q[:i].strip()} {hm.group(2)}"
                 return q
     return q
-_CTAS_RE = re.compile(
-    r"^\s*CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(?P<table>[\w`]+)\s*"
-    r"(?:PARTITIONED\s+BY\s*\((?P<part>[^)]*)\)\s*)?"
-    r"(?:PARTITION\s+BY\s+HASH\s*\((?P<hash>[^)]*)\)\s*"
-    r"(?:PARTITIONS\s+(?P<nb1>\d+)|INTO\s+(?P<nb2>\d+)\s+BUCKETS)\s*)?"
-    r"AS\s+(?P<select>(?:SELECT|WITH|VALUES)\s.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
 
 #: Kudu-style hash partition clause (sql-parser.cup tbl_partition_clauses,
 #: A/KuduPartitionParam.java): PARTITION BY HASH (cols) PARTITIONS n —
@@ -198,84 +350,11 @@ def _sql_literal(v) -> str:
     return str(v)
 
 
-_CREATE_LIKE_RE = re.compile(
-    r"^\s*CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(?P<table>[\w`]+)\s+LIKE\s+(?P<like>[\w`]+)\s*$",
-    re.IGNORECASE,
-)
-_CREATE_FUNCTION_RE = re.compile(
-    r"^\s*CREATE\s+(?P<agg>AGGREGATE\s+)?FUNCTION\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-    r"(?P<name>[\w.`]+)\s*(?:\((?P<args>[^)]*)\))?\s*"
-    r"(?:RETURNS\s+(?P<ret>\w+))?\s*(?P<opts>.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_DROP_FUNCTION_RE = re.compile(
-    r"^\s*DROP\s+(?:AGGREGATE\s+)?FUNCTION\s+(?:IF\s+EXISTS\s+)?"
-    r"(?P<name>[\w.`]+)\s*(?:\([^)]*\))?\s*$",
-    re.IGNORECASE,
-)
 _SYMBOL_RE = re.compile(r"SYMBOL\s*=\s*'([^']+)'|UPDATE_FN\s*=\s*'([^']+)'", re.IGNORECASE)
-
-#: plain CREATE TABLE with column definitions (sql-parser.cup:2373
-#: create_tbl_stmt); the column list is balanced-paren-extracted in
-#: _create_table_with_cols since types nest parens (DECIMAL(18,4),
-#: ARRAY<STRUCT<...>>).
-_CREATE_TABLE_HDR_RE = re.compile(
-    r"^\s*CREATE\s+(?:EXTERNAL\s+)?TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-    r"(?P<table>[\w.`]+)\s*\(",
-    re.IGNORECASE,
-)
-
-_CREATE_VIEW_RE = re.compile(
-    r"^\s*CREATE\s+VIEW\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?(?P<name>[\w.`]+)\s*"
-    r"(?:\((?P<cols>[^)]*)\)\s*)?AS\s+"
-    r"(?P<select>(?:SELECT|WITH|VALUES)\s.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_ALTER_VIEW_RE = re.compile(
-    r"^\s*ALTER\s+VIEW\s+(?P<name>[\w.`]+)\s+AS\s+"
-    r"(?P<select>(?:SELECT|WITH|VALUES)\s.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-
-_DROP_TABLE_RE = re.compile(
-    r"^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?(?P<table>[\w`]+)\s*(?P<purge>PURGE)?\s*$",
-    re.IGNORECASE,
-)
-#: Impala-specific SHOW forms Spark SQL lacks (service/MetadataOp.java,
-#: sql-parser.cup show_stmt): SHOW FILES IN t, SHOW TABLE/COLUMN STATS t,
-#: SHOW PARTITIONS t, SHOW CREATE TABLE t, SHOW FUNCTIONS.
-_SHOW_RE = re.compile(
-    r"^\s*SHOW\s+(?P<kind>FILES\s+IN|TABLE\s+STATS|COLUMN\s+STATS|"
-    r"RANGE\s+PARTITIONS|PARTITIONS|"
-    r"CREATE\s+TABLE|CREATE\s+FUNCTION|FUNCTIONS)\s*(?P<target>[\w.`]+)?\s*$",
-    re.IGNORECASE,
-)
-
-_DESCRIBE_DB_RE = re.compile(
-    r"^\s*DESCRIBE\s+DATABASE\s+(?:EXTENDED\s+)?(?P<db>[\w`]+)\s*$", re.IGNORECASE
-)
-
-#: ALTER TABLE t SET COLUMN STATS col ('numDVs'='n', ...)
-#: (A/AlterTableSetColumnStats.java — manual metastore column stats).
-_SET_COL_STATS_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+([\w.`]+)\s+SET\s+COLUMN\s+STATS\s+([\w`]+)"
-    r"\s*\((.*)\)\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
 
 #: the reference's StatsKey spellings, in enum order
 #: (catalog/ColumnStats.java:53-57)
 _COL_STATS_KEYS = ("numDVs", "numNulls", "avgSize", "maxSize")
-
-#: SHOW [AGGREGATE|ANALYTIC] FUNCTIONS [IN db] [[LIKE] 'pattern']
-#: (sql-parser.cup show_functions_stmt + opt_function_category;
-#: ShowFunctionsStmt carries a TFunctionCategory).
-_SHOW_FUNCS_RE = re.compile(
-    r"^\s*SHOW\s+(?:(?P<cat>AGGREGATE|ANALYTIC)\s+)?FUNCTIONS"
-    r"(?:\s+IN\s+(?P<db>[\w`]+))?"
-    r"(?:\s+(?:LIKE\s+)?'(?P<pat>[^']*)')?\s*$",
-    re.IGNORECASE,
-)
 
 #: the reference's builtin category membership (catalog/BuiltinsDb —
 #: AggregateFunction registrations and AnalyticExpr.java's fn whitelist).
@@ -543,470 +622,63 @@ class ImpalaEngine:
 
     # -- the main path (Frontend.createExecRequest analog) -----------------
     def sql(self, query: str) -> DataFrame:
-        q = _hoist_with_clause(query.strip().rstrip(";"))
-        q = _strip_session_db_refs(q, self.spark)
+        """Run one statement: normalize, classify, authorize, then the
+        statement row's handler (queries take an admission slot there)."""
+        q = query.strip().rstrip(";")
+        q = _hoist_with_clause(q[_LEADING_COMMENTS_RE.match(q).end():])
+        stmt = self.classify(_strip_session_db_refs(q, self.spark))
+        self._enforce_authz(stmt)
+        return getattr(self, stmt.handler)(stmt)
 
-        if re.match(r"^\s*COMMENT\b", q, re.IGNORECASE):
-            # no COMMENT statement in the 2.7 grammar (sql-parser.cup has
-            # no comment_on rule) — reject like the parser, never fall
-            # through to Spark's COMMENT ON
-            raise ImpalaUnsupportedError(
-                "Syntax error: COMMENT is not a statement in Impala 2.7 "
-                "(use ALTER TABLE ... SET TBLPROPERTIES ('comment'='...'))"
-            )
-
-        from impala_spark import authz as _authz_mod
-
-        if _authz_mod.is_authz_statement(q):
-            # CREATE/DROP ROLE, GRANT/REVOKE, SHOW ROLES/GRANT ROLE —
-            # privilege checks on catalog objects are skipped for these
-            # (GrantRevokePrivStmt.java:31-34)
-            return self._authz.execute(self.spark, q, engine=self)
-        self._enforce_authz(q)
-
-        m = _EXPLAIN_RE.match(q)
-        if m and m.group(1).strip().upper().split()[0] not in ("ANALYZE",):
-            # the reference authorizes EXPLAIN exactly like the inner
-            # statement (Frontend analyzes before planning)
-            self._enforce_authz(m.group(1).strip())
-            return self._explain_df(m.group(1))
-
-        m = _COMPUTE_STATS_RE.match(q)
-        if m:
-            return self.compute_stats(m.group(2).strip("`"))
-        m = _DROP_STATS_RE.match(q)
-        if m:
-            # DROP STATS reverts the planner to the stats-less posture
-            # (the reference drops the metastore stats and the planner
-            # falls back to as-written plans) — here: the table leaves
-            # the stats-routing set, so subsequent statements plan in
-            # the default session again. Catalog numbers themselves are
-            # harmless to keep (nothing reads them once unrouted).
-            tname = m.group(2).strip("`")
-            if tname.split(".")[-1] in self._views:
-                # A/DropStatsStmt.java:89-91 exact text
-                raise ImpalaAnalysisError(
-                    f"DROP STATS not allowed on a view: {tname.split('.')[-1]}")
-            if tname in self._stats_tables:
-                self._stats_tables.discard(tname)
-                self._stats_versions.pop(tname, None)
-                return self.spark.sql(
-                    "SELECT 'stats dropped (table left the CBO posture)' AS result"
-                )
-            return self.spark.sql("SELECT 'stats dropped (no-op on Spark)' AS result")
-        m = _SET_RE.match(q)
-        if m:
-            return self.set_option(m.group(1), m.group(2))
-        if re.match(r"^\s*SET\s*$", q, re.IGNORECASE):
-            # bare SET lists query options (Impala shell behavior)
-            rows = [
-                ("appx_count_distinct", str(self.appx_count_distinct).lower()),
-                ("explain_level", str(self.explain_level)),
-                ("request_pool", self._request_pool),
-            ]
-            for opt, conf in sorted(_QUERY_OPTIONS.items()):
-                if conf:
-                    try:
-                        val = str(self.spark.conf.get(conf))
-                    except Exception:
-                        val = "(unset)"
-                else:
-                    val = "(no-op on Spark)"
-                rows.append((opt, val))
-            return self.spark.createDataFrame(rows, "option: string, value: string")
-        m = _USE_RE.match(q)
-        if m:
-            db = m.group(1).strip("`")
-            try:
-                self.spark.catalog.setCurrentDatabase(db)
-            except Exception as e:
-                # analysis/UseStmt / Analyzer.getDb error text
-                raise ImpalaAnalysisError(f"Database does not exist: {db}") from e
-            return self.spark.sql("SELECT current_database() AS db")
-
-        m = _SHOW_FUNCS_RE.match(q)
-        if m:
-            return self.show_functions(
-                category=(m.group("cat") or "").upper() or None,
-                pattern=m.group("pat"),
-                db=(m.group("db") or "").strip("`") or None,
-            )
-        m = _SHOW_RE.match(q)
-        if m:
-            kind = re.sub(r"\s+", " ", m.group("kind").upper().strip())
-            target = (m.group("target") or "").strip("`")
-            if target and kind in (
-                "FILES IN", "TABLE STATS", "COLUMN STATS", "PARTITIONS",
-                "RANGE PARTITIONS", "CREATE TABLE",
-            ):
-                # table-targeted metadata needs ANY privilege on the
-                # object (AuthorizationChecker Privilege.ANY)
-                self._authz.check_any_access(self.spark, target)
-                bare_t = target.split(".")[-1]
-                if kind == "CREATE TABLE" and bare_t in self._views:
-                    # the definition exposes the underlying tables — the
-                    # user needs privileges on each (TestShowCreateTable:
-                    # "...to see the definition of view")
-                    from impala_spark.authz import AuthorizationError
-                    from impala_spark.rewrites import referenced_base_tables
-
-                    refs = referenced_base_tables(
-                        self._view_texts.get(bare_t, "")
-                    )
-                    for ref in sorted(refs or set()):
-                        if not self._authz.visible_table(
-                            self.spark, ref, include_column_privs=False
-                        ):
-                            raise AuthorizationError(
-                                f"User '{self._authz.user}' does not have"
-                                " privileges to see the definition of"
-                                f" view 'default.{bare_t}'."
-                            )
-            if kind == "FILES IN":
-                return self.show_files(target)
-            if kind == "TABLE STATS":
-                return self.show_table_stats(target)
-            if kind == "COLUMN STATS":
-                return self.show_column_stats(target)
-            if kind == "RANGE PARTITIONS":
-                return self.show_range_partitions(target)
-            if kind == "PARTITIONS":
-                return self.show_partitions(target)
-            if kind == "CREATE TABLE":
-                return self.show_create_table(target)
-            if kind == "FUNCTIONS":
-                return self.show_functions()
-            if kind == "CREATE FUNCTION":
-                # show_create_function_stmt (sql-parser.cup:5760s analog)
-                name = target
-                if name not in self._functions:
-                    raise ImpalaAnalysisError(f"default.{name}() unknown")
-                stmt = (
-                    f"CREATE FUNCTION {name} LOCATION '<library>' "
-                    f"SYMBOL='{self._functions[name]}'"
-                )
-                return self.spark.createDataFrame(
-                    [(stmt,)], "create_function: string"
-                )
-
-        m = _DESCRIBE_DB_RE.match(q)
-        if m:
-            # describe_db_stmt: database metadata surface
-            db = m.group("db").strip("`")
-            try:
-                return self.spark.sql(f"DESCRIBE DATABASE {db}")
-            except Exception as e:
-                raise ImpalaAnalysisError(f"Database does not exist: {db}") from e
-
-        upper = q.upper()
-        m = _INSERT_RE.match(q)
-        if m and ddl.table_info(m.group("table").strip("`")) is None:
-            tgt = m.group("table").strip("`")
-            if tgt.split(".")[-1] in self._views:
-                # InsertStmt.java:386-390 exact text
-                raise ImpalaAnalysisError(
-                    "Impala does not support INSERTing into views: "
-                    f"default.{tgt.split('.')[-1]}")
-            # never let a write statement fall through to Spark against a
-            # read-only fixture view — it would try to write the view's
-            # backing files.
-            raise ValueError(
-                f"INSERT target '{m.group('table')}' is not a managed table; "
-                "create it with CTAS/CREATE TABLE first"
-            )
-        if m:
-            static = None
-            if m.group("part"):
-                static = {}
-                for kv in m.group("part").split(","):
-                    k, eq, v = kv.partition("=")
-                    if eq:  # static key; dynamic keys have no '='
-                        static[k.strip().strip("`")] = v.strip().strip("'\"")
-            hints = [
-                h.lower()
-                for h in re.findall(r"[A-Za-z_]+", m.group("hints") or "")
-            ]
-            return ddl.insert(
-                self.spark,
-                m.group("table").strip("`"),
-                m.group("select"),
-                overwrite=m.group("mode").upper() == "OVERWRITE",
-                static_partition=static or None,
-                columns=(m.group("cols").split(",")
-                         if m.group("cols") is not None else None),
-                hints=hints or None,
-            )
-        m = _CREATE_FUNCTION_RE.match(q)
-        if m:
-            # analysis/CreateUdfStmt.java:35-75 / CreateUdaStmt.java:30-60:
-            # LOCATION points at a native binary — accepted and ignored
-            # here; SYMBOL resolves into the Arrow-batched UDF library.
-            sym = _SYMBOL_RE.search(m.group("opts") or "")
-            symbol = (sym.group(1) or sym.group(2)) if sym else m.group("name").strip("`")
-            name = m.group("name").strip("`")
-            ifn.create_function(
-                self.spark, name, symbol, aggregate=bool(m.group("agg"))
-            )
-            self._functions[name] = symbol
-            return self.spark.sql(f"SELECT 'function {name} created' AS result")
-        m = _DROP_FUNCTION_RE.match(q)
-        if m:
-            name = m.group("name").strip("`")
-            existed = self._functions.pop(name, None)
-            # Spark has no udf.unregister; the engine-side catalog entry is
-            # what SHOW FUNCTIONS surfaces, so dropping it is the contract.
-            status = "dropped" if existed else "did not exist"
-            return self.spark.sql(f"SELECT 'function {name} {status}' AS result")
-        rng = None
-        if re.match(r"^\s*CREATE\s+TABLE\b", q, re.IGNORECASE):
-            # PARTITION BY RANGE -> physical layout (r12): strip the
-            # clause so the plain CTAS / column-list regexes apply, and
-            # thread the parsed spec into the create
+    def classify(self, q: str) -> Stmt:
+        """Match ``q`` against the statement table (first row wins) and
+        work out, once, the target and the source query it reads. Leading
+        comments are dropped, so a comment-led statement is classified
+        (and authorized) by its first keyword."""
+        q = q[_LEADING_COMMENTS_RE.match(q).end():]
+        range_spec = plan_source = None
+        if _CREATE_TABLE_HEAD_RE.match(q):
+            # PARTITION BY RANGE -> physical layout (r12): strip the clause
+            # so the CTAS / column-list rows apply
             ext = _extract_range_partition_clause(q)
             if ext is not None:
-                rng_cols, rng_spec, q = ext
-                rng = (rng_cols, rng_spec)
-        m = _CTAS_RE.match(q)
-        if m:
-            tname = m.group("table").strip("`")
-            if re.search(r"\bIF\s+NOT\s+EXISTS\b", q, re.IGNORECASE) and (
-                ddl.table_info(tname) is not None
-                or tname in self._views
-                or self.spark.catalog.tableExists(tname)
-            ):
-                # IF NOT EXISTS CTAS keeps the existing object and skips
-                # the select (CreateTableAsSelectStmt — the statement is
-                # a no-op, it must not replace the table's rows)
-                return self.spark.sql("SELECT 'table exists (kept)' AS result")
-            # analysis/CreateTableStmt.java error text; non-strict mode
-            # keeps create-or-replace so harness queries stay idempotent
-            self._strict_create_guard(q, tname)
-            if rng:
-                if m.group("hash") or m.group("part"):
-                    raise ImpalaUnsupportedError(
-                        "PARTITION BY RANGE cannot be combined with other"
-                        " partition clauses"
-                    )
-                return ddl.create_table_range_partitioned(
-                    self.spark, tname, rng[0], rng[1],
-                    query_or_df=m.group("select"),
-                )
-            if m.group("hash"):
-                # PARTITION BY HASH -> persisted bucketed layout (r11)
-                hcols = [
-                    c.strip().strip("`")
-                    for c in m.group("hash").split(",") if c.strip()
-                ]
-                n = int(m.group("nb1") or m.group("nb2"))
-                return ddl.create_table_hash_bucketed(
-                    self.spark, tname, hcols, n,
-                    query_or_df=m.group("select"),
-                )
-            pcols = [c.strip().strip("`") for c in (m.group("part") or "").split(",") if c.strip()]
-            return ddl.create_table_as_select(
-                self.spark, m.group("table").strip("`"), m.group("select"),
-                partition_cols=pcols or None,
-            )
-        m = _CREATE_LIKE_RE.match(q)
-        if m:
-            return ddl.create_table_like(
-                self.spark, m.group("table").strip("`"), m.group("like").strip("`")
-            )
-        m = _CREATE_TABLE_HDR_RE.match(q)
-        if m:
-            return self._create_table_with_cols(q, m, rng=rng)
-        m = re.match(
-            r"(?is)^\s*CREATE\s+(?:EXTERNAL\s+)?TABLE\s+"
-            r"(?:IF\s+NOT\s+EXISTS\s+)?(?P<table>`[^`]+`|[\w.]+)\s+"
-            r"STORED\s+AS\s+AVRO\b.*?"
-            r"avro\.schema\.(?:literal'\s*=\s*'(?P<lit>(?:[^']|'')*)'"
-            r"|url'\s*=\s*'(?P<url>[^']*)')", q)
-        if m:
-            # column list omitted: the Avro schema literal supplies it
-            # (AvroSchemaUtils.extractAvroTblProps + AvroSchemaParser —
-            # the reference infers the columns when none are declared,
-            # CreateTableStmt.analyzeAvroSchema)
-            from impala_spark.sources import avro_schema_to_cols
-
-            tname = self._session_view_name(m.group("table"))
-            if ddl.table_info(tname) is not None and re.search(
-                r"\bIF\s+NOT\s+EXISTS\b", q, re.IGNORECASE
-            ):
-                return self.spark.sql("SELECT 'table exists (kept)' AS result")
-            if m.group("lit") is not None:
-                lit = m.group("lit").replace("''", "'")
+                range_spec, q = ext[:2], ext[2]
+        for kind, pattern, handler in _STATEMENTS:
+            m = pattern.match(q)
+            if m:
+                break
+        g = m.groupdict()
+        target, source = _unquote(g.get("target")), g.get("source")
+        if kind == "query":
+            source = q
+        elif kind == "update":
+            # ModifyStmt.java: a top-level FROM ahead of any WHERE makes the
+            # join form, whose FROM clause names the target by alias. The
+            # source selects the SET clause itself (each `col = rhs` is a
+            # boolean item), so a subquery or joined table it reads counts
+            rest = g["set"]
+            fi, wi = ddl._top_level_kw(rest, "FROM"), ddl._top_level_kw(rest, "WHERE")
+            if fi >= 0 and (wi < 0 or fi < wi):
+                sets, frm = rest[:fi].strip(), rest[fi + 4:].strip()
+                target = _resolve_alias(g["alias"], frm)
             else:
-                # avro.schema.url: read the schema file (file/hdfs-less
-                # path over the local fs, HdfsUri analysis already ran)
-                from urllib.parse import urlparse
+                sets = (rest[:wi] if wi >= 0 else rest).strip()
+                frm = g["alias"] + (f" {rest[wi:]}" if wi >= 0 else "")
+                target = _unquote(g["alias"])
+            source, plan_source = f"SELECT {sets} FROM {frm}", f"SELECT * FROM {frm}"
+        elif kind == "delete":
+            source = f"SELECT * FROM {g['from']}"
+            if g["alias"]:
+                target = _resolve_alias(g["alias"], g["from"])
+        if kind in _SESSION_TABLE_KINDS and "." in target + (g.get("like") or ""):
+            handler = "_run_query"
+        return Stmt(kind, q, m, target, source, handler, range_spec, plan_source)
 
-                p = urlparse(m.group("url")).path or m.group("url")
-                try:
-                    with open(p) as fh:
-                        lit = fh.read()
-                except OSError as e:
-                    raise ImpalaAnalysisError(
-                        f"Failed to read Avro schema at: {m.group('url')}. "
-                        f"{e.strerror}") from e
-            cols = avro_schema_to_cols(lit)
-            if not cols:
-                raise ImpalaAnalysisError(
-                    "An Avro table requires column definitions or an "
-                    "Avro schema")
-            return ddl.create_table(self.spark, tname, cols)
-        m = _CREATE_VIEW_RE.match(q)
-        if m:
-            # analysis/CreateViewStmt.java. Fixture tables are session
-            # temp views, so the view is session-scoped too (a persistent
-            # Spark view cannot reference temp objects); within the
-            # session it resolves through the catalog exactly like the
-            # reference's LocalView.
-            vname = self._session_view_name(m.group("name"))
-            exists = any(
-                v.name == vname for v in self.spark.catalog.listTables()
-            )
-            if exists and m.group("ine"):
-                return self.spark.sql("SELECT 'view exists (kept)' AS result")
-            if exists and self.strict:
-                raise ImpalaAnalysisError(f"Table already exists: default.{vname}")
-            cols = (m.group("cols") or "").strip()
-            col_list = f" ({cols})" if cols else ""
-            self._sql_with_impala_errors(
-                f"CREATE OR REPLACE TEMPORARY VIEW {vname}{col_list} AS "
-                + translate(m.group("select"), strict=self.strict)
-            )
-            self._views.add(vname)
-            self._view_texts[vname] = m.group("select")
-            return self.spark.sql(f"SELECT 'view {vname} created' AS result")
-        m = _ALTER_VIEW_RE.match(q)
-        if m:
-            # analysis/AlterViewStmt.java: redefine an existing view
-            vname = self._session_view_name(m.group("name"))
-            if not any(v.name == vname for v in self.spark.catalog.listTables()):
-                raise ImpalaAnalysisError(f"Table does not exist: default.{vname}")
-            if vname not in self._views:
-                # AlterViewStmt.java:50-53 exact text — without this the
-                # redefinition would silently REPLACE a table's session
-                # view with the new select
-                raise ImpalaAnalysisError(
-                    f"ALTER VIEW not allowed on a table: default.{vname}")
-            self._sql_with_impala_errors(
-                f"CREATE OR REPLACE TEMPORARY VIEW {vname} AS "
-                + translate(m.group("select"), strict=self.strict)
-            )
-            self._view_texts[vname] = m.group("select")
-            return self.spark.sql(f"SELECT 'view {vname} altered' AS result")
-        m = re.match(
-            r"(?is)^\s*(?P<op>CREATE|DROP)\s+(?:DATABASE|SCHEMA)\s+"
-            r"(?P<ine>IF\s+(?:NOT\s+)?EXISTS\s+)?(?P<db>`[^`]+`|\w+)"
-            r"(?P<tail>.*)$", q)
-        if m:
-            # db-DDL error parity (Analyzer.java:113-114, DropDbStmt.java
-            # :73-76) — Spark's SCHEMA_* texts never surface
-            db = m.group("db").strip("`")
-            exists = any(
-                d.name == db for d in self.spark.catalog.listDatabases()
-            )
-            if m.group("op").upper() == "CREATE":
-                if exists and not m.group("ine"):
-                    raise ImpalaAnalysisError(f"Database already exists: {db}")
-            else:
-                if not exists and not m.group("ine"):
-                    raise ImpalaAnalysisError(f"Database does not exist: {db}")
-                if exists and db.lower() in (
-                    "default", self.spark.catalog.currentDatabase().lower()
-                ):
-                    raise ImpalaAnalysisError(
-                        f"Cannot drop current default database: {db}")
-                if exists and not re.search(
-                    r"(?i)\bCASCADE\b", m.group("tail") or ""
-                ) and any(
-                    not t.isTemporary
-                    for t in self.spark.catalog.listTables(db)
-                ):
-                    raise ImpalaAnalysisError(
-                        f"Cannot drop non-empty database: {db}")
-            return self._sql_with_impala_errors(q)
-        m = _DROP_TABLE_RE.match(q)
-        if m:
-            tname = m.group("table").strip("`")
-            if tname in self._views:
-                # analysis/DropTableOrViewStmt.java:94-96 exact text
-                raise ImpalaAnalysisError(
-                    f"DROP TABLE not allowed on a view: default.{tname}")
-            if ddl.table_info(tname) is not None:
-                ddl.drop_table(self.spark, tname, purge=True)
-                return self.spark.sql("SELECT 'dropped' AS result")
-            if not self.spark.catalog.tableExists(tname):
-                if re.search(r"\bIF\s+EXISTS\b", q, re.IGNORECASE):
-                    return self.spark.sql("SELECT 'did not exist' AS result")
-                # analysis/DropTableOrViewStmt.java error text
-                raise ImpalaAnalysisError(f"Table does not exist: default.{tname}")
-        if upper.startswith("ALTER TABLE"):
-            m2 = re.match(r"ALTER\s+TABLE\s+(`[^`]+`|\S+)", q, re.IGNORECASE)
-            if m2 and m2.group(1).strip("`") in self._views:
-                # AlterTableStmt.java:76-79
-                raise ImpalaAnalysisError(
-                    "ALTER TABLE not allowed on a view: "
-                    + m2.group(1).strip("`")
-                )
-            m2 = _SET_COL_STATS_RE.match(q)
-            if m2:
-                return self._set_column_stats(
-                    m2.group(1).strip("`"), m2.group(2).strip("`"), m2.group(3)
-                )
-            return ddl.alter_table(self.spark, q)
-        if upper.startswith(("UPDATE ", "DELETE ", "UPSERT ")):
-            mt = re.match(
-                r"(?is)^\s*(UPDATE|DELETE|UPSERT)\s+(?:FROM\s+|INTO\s+)?"
-                r"(?:TABLE\s+)?(`[^`]+`|[\w.]+)", q)
-            if mt and mt.group(2).strip("`").split(".")[-1] in self._views:
-                kind = mt.group(1).upper()
-                if kind == "UPSERT":
-                    # InsertStmt.java:386-390 (op name UPSERT)
-                    raise ImpalaAnalysisError(
-                        "Impala does not support UPSERTing into views: "
-                        f"default.{mt.group(2).strip('`').split('.')[-1]}")
-                # ModifyStmt analysis rejects view targets
-                raise ImpalaAnalysisError(
-                    "Impala does not support modifying a non-Kudu table: "
-                    f"default.{mt.group(2).strip('`').split('.')[-1]}")
-            return ddl.modify(self.spark, q, strict=self.strict)
-        if upper.startswith("TRUNCATE"):
-            return ddl.truncate(self.spark, q)
-        if upper.startswith("LOAD DATA"):
-            return ddl.load_data(self.spark, q)
-        if upper.startswith(("INVALIDATE METADATA", "REFRESH")):
-            # REFRESH t [PARTITION (spec)] (IMPALA-1683, 2.7): the
-            # partition spec narrows the reload in the reference; Spark's
-            # refreshTable reloads the table's file listing either way
-            m = re.match(
-                r"(?is)^\s*(?:INVALIDATE\s+METADATA|REFRESH)\s+"
-                r"(`[^`]+`|[\w.]+)\s*(?:PARTITION\s*\([^)]*\)\s*)?$", q)
-            target = m.group(1).strip("`") if m else None
-            if target and target.upper() != "METADATA":
-                self.spark.catalog.refreshTable(target)
-            else:
-                self.spark.catalog.clearCache()
-            return self.spark.sql("SELECT 'metadata refreshed' AS result")
-
-        if upper.startswith("DROP VIEW"):
-            m2 = re.match(
-                r"DROP\s+VIEW\s+(?:IF\s+EXISTS\s+)?(`[^`]+`|\S+)", q,
-                re.IGNORECASE,
-            )
-            if m2:
-                vname = m2.group(1).strip("`")
-                if vname not in self._views and (
-                    ddl.table_info(vname) is not None
-                    or self.spark.catalog.tableExists(vname)
-                ):
-                    # DropTableOrViewStmt.java:97-99 exact text
-                    raise ImpalaAnalysisError(
-                        f"DROP VIEW not allowed on a table: default.{vname}")
-                # keep the view registry in sync for ALTER TABLE checks
-                self._views.discard(vname)
-                self._view_texts.pop(vname, None)
+    def _run_query(self, stmt: Stmt) -> DataFrame:
+        """Hand a statement to Spark through translate — the query path,
+        and every statement the engine leaves to Spark — under an
+        admission slot."""
+        q = stmt.text
         if self.appx_count_distinct:
             from impala_spark.parser import rewrite_appx_count_distinct
 
@@ -1019,6 +691,14 @@ class ImpalaEngine:
                 token.release()
 
     def _run_query_stmt(self, q: str) -> DataFrame:
+        df, sess = self._query_df(q)
+        if sess is not self.spark:
+            df = _ntz_outputs(df)
+        return _boolean_null_outputs(df)
+
+    def _query_df(self, q: str) -> tuple[DataFrame, SparkSession]:
+        """The DataFrame a query statement plans to, and the session it
+        plans in — shared by execution and EXPLAIN."""
         # strict-mode analysis always runs on the USER's text first
         sql_text = translate(q, strict=self.strict)
         rw = self._plan_rewrite(q)
@@ -1026,167 +706,505 @@ class ImpalaEngine:
         # two-pass global rank (r12) composes on top of the distinct
         # rewrite's output when both fire (the rewritten text re-emits
         # the user's ranking window over the joined group rows)
-        grk = self._global_rank_df(rw if rw is not None else q, sess)
-        if grk is not None:
-            df = grk
-            orig_cols = self._sql_with_impala_errors(sql_text, spark=sess).columns
-            if df.columns != orig_cols:
-                df = df.toDF(*orig_cols)
-        elif rw is not None:
+        df = self._global_rank_df(rw if rw is not None else q, sess)
+        if df is None and rw is None:
+            return self._sql_with_impala_errors(sql_text, spark=sess), sess
+        if df is None:
             df = self._sql_with_impala_errors(translate(rw), spark=sess)
-            # The rewrite renames UNALIASED aggregate outputs (__cd0/__a0,
-            # r10 ADVICE): restore the original statement's output names
-            # positionally. Analysis-only — the unrewritten frame is never
-            # executed, and the rewrite preserves select-item order/count.
-            orig_cols = self._sql_with_impala_errors(sql_text, spark=sess).columns
-            if df.columns != orig_cols:
-                df = df.toDF(*orig_cols)
-        else:
-            df = self._sql_with_impala_errors(sql_text, spark=sess)
-        if sess is not self.spark:
-            df = _ntz_outputs(df)
-        return _boolean_null_outputs(df)
+        # Both rewrites rename UNALIASED outputs (__cd0/__a0, r10 ADVICE):
+        # restore the statement's own names positionally. Analysis-only —
+        # the unrewritten frame is never executed, and the rewrites keep
+        # select-item order and count.
+        orig_cols = self._sql_with_impala_errors(sql_text, spark=sess).columns
+        if df.columns != orig_cols:
+            df = df.toDF(*orig_cols)
+        return df, sess
 
-    def _enforce_authz(self, q: str) -> None:
+    # -- statement handlers (one per _STATEMENTS row) -------------------------
+    def _reject_comment(self, stmt: Stmt) -> DataFrame:
+        raise ImpalaUnsupportedError(
+            "Syntax error: COMMENT is not a statement in Impala 2.7 "
+            "(use ALTER TABLE ... SET TBLPROPERTIES ('comment'='...'))"
+        )
+
+    def _authz_stmt(self, stmt: Stmt) -> DataFrame:
+        return self._authz.execute(self.spark, stmt.text, engine=self)
+
+    def _explain_stmt(self, stmt: Stmt) -> DataFrame:
+        text = self.explain(stmt.source)
+        return self.spark.createDataFrame(
+            [(line,) for line in text.split("\n")], "explain_string: string"
+        )
+
+    def _compute_stats_stmt(self, stmt: Stmt) -> DataFrame:
+        return self.compute_stats(stmt.target)
+
+    def _drop_stats(self, stmt: Stmt) -> DataFrame:
+        # DROP STATS reverts the planner to the stats-less posture (the
+        # reference drops the metastore stats and the planner falls back
+        # to as-written plans) — here: the table leaves the stats-routing
+        # set, so later statements plan in the default session again.
+        # Catalog numbers themselves are harmless to keep (nothing reads
+        # them once unrouted).
+        tname = stmt.target
+        if tname.split(".")[-1] in self._views:
+            # A/DropStatsStmt.java:89-91 exact text
+            raise ImpalaAnalysisError(
+                f"DROP STATS not allowed on a view: {tname.split('.')[-1]}")
+        if tname in self._stats_tables:
+            self._stats_tables.discard(tname)
+            self._stats_versions.pop(tname, None)
+            return ddl._ack(self.spark, "stats dropped (table left the CBO posture)")
+        return ddl._ack(self.spark, "stats dropped (no-op on Spark)")
+
+    def _set(self, stmt: Stmt) -> DataFrame:
+        key = stmt.match.group("key")
+        if key is not None:
+            return self.set_option(key, stmt.match.group("value"))
+        # bare SET lists query options (Impala shell behavior)
+        rows = [
+            ("appx_count_distinct", str(self.appx_count_distinct).lower()),
+            ("explain_level", str(self.explain_level)),
+            ("request_pool", self._request_pool),
+        ]
+        for opt, conf in sorted(_QUERY_OPTIONS.items()):
+            if conf:
+                try:
+                    val = str(self.spark.conf.get(conf))
+                except Exception:
+                    val = "(unset)"
+            else:
+                val = "(no-op on Spark)"
+            rows.append((opt, val))
+        return self.spark.createDataFrame(rows, "option: string, value: string")
+
+    def _use(self, stmt: Stmt) -> DataFrame:
+        try:
+            self.spark.catalog.setCurrentDatabase(stmt.target)
+        except Exception as e:
+            # analysis/UseStmt / Analyzer.getDb error text
+            raise ImpalaAnalysisError(
+                f"Database does not exist: {stmt.target}") from e
+        return self.spark.sql("SELECT current_database() AS db")
+
+    def _show_functions_stmt(self, stmt: Stmt) -> DataFrame:
+        return self.show_functions(
+            category=(stmt.match.group("cat") or "").upper() or None,
+            pattern=stmt.match.group("pat"),
+            db=stmt.target or None,
+        )
+
+    def _show(self, stmt: Stmt) -> DataFrame:
+        what = _show_surface(stmt.match)
+        target = stmt.target or ""
+        if what == "FUNCTIONS":
+            return self.show_functions()
+        if what == "CREATE FUNCTION":
+            # show_create_function_stmt (sql-parser.cup:5760s analog)
+            if target not in self._functions:
+                raise ImpalaAnalysisError(f"default.{target}() unknown")
+            text = (
+                f"CREATE FUNCTION {target} LOCATION '<library>' "
+                f"SYMBOL='{self._functions[target]}'"
+            )
+            return self.spark.createDataFrame([(text,)], "create_function: string")
+        return {
+            "FILES IN": self.show_files,
+            "TABLE STATS": self.show_table_stats,
+            "COLUMN STATS": self.show_column_stats,
+            "RANGE PARTITIONS": self.show_range_partitions,
+            "PARTITIONS": self.show_partitions,
+            "CREATE TABLE": self.show_create_table,
+        }[what](target)
+
+    def _describe_db(self, stmt: Stmt) -> DataFrame:
+        # describe_db_stmt: database metadata surface
+        try:
+            return self.spark.sql(f"DESCRIBE DATABASE {stmt.target}")
+        except Exception as e:
+            raise ImpalaAnalysisError(
+                f"Database does not exist: {stmt.target}") from e
+
+    def _insert(self, stmt: Stmt) -> DataFrame:
+        m, tgt = stmt.match, stmt.target
+        if stmt.source is None:
+            return self._run_query(stmt)
+        if ddl.table_info(tgt) is None:
+            if tgt in self._views:
+                # InsertStmt.java:386-390 exact text
+                raise ImpalaAnalysisError(
+                    f"Impala does not support INSERTing into views: default.{tgt}")
+            # never let a write statement fall through to Spark against a
+            # read-only fixture view — it would try to write the view's
+            # backing files.
+            raise ValueError(
+                f"INSERT target '{m.group('target')}' is not a managed table; "
+                "create it with CTAS/CREATE TABLE first"
+            )
+        static = None
+        if m.group("part"):
+            static = {}
+            for kv in m.group("part").split(","):
+                k, eq, v = kv.partition("=")
+                if eq:  # static key; dynamic keys have no '='
+                    static[k.strip().strip("`")] = v.strip().strip("'\"")
+        hints = [h.lower() for h in re.findall(r"[A-Za-z_]+", m.group("hints"))]
+        return ddl.insert(
+            self.spark,
+            tgt,
+            stmt.source,
+            overwrite=m.group("mode").upper() == "OVERWRITE",
+            static_partition=static or None,
+            columns=m.group("cols").split(",") if m.group("cols") is not None else None,
+            hints=hints or None,
+        )
+
+    def _create_function(self, stmt: Stmt) -> DataFrame:
+        # analysis/CreateUdfStmt.java:35-75 / CreateUdaStmt.java:30-60:
+        # LOCATION points at a native binary — accepted and ignored here;
+        # SYMBOL resolves into the Arrow-batched UDF library.
+        name = stmt.target
+        sym = _SYMBOL_RE.search(stmt.match.group("opts"))
+        symbol = (sym.group(1) or sym.group(2)) if sym else name
+        ifn.create_function(
+            self.spark, name, symbol, aggregate=bool(stmt.match.group("agg"))
+        )
+        self._functions[name] = symbol
+        return ddl._ack(self.spark, f"function {name} created")
+
+    def _drop_function(self, stmt: Stmt) -> DataFrame:
+        name = stmt.target
+        existed = self._functions.pop(name, None)
+        # Spark has no udf.unregister; the engine-side catalog entry is
+        # what SHOW FUNCTIONS surfaces, so dropping it is the contract.
+        status = "dropped" if existed else "did not exist"
+        return ddl._ack(self.spark, f"function {name} {status}")
+
+    def _exists(self, tname: str) -> bool:
+        """Any resolvable object: managed table, engine view, fixture view."""
+        return (
+            ddl.table_info(tname) is not None
+            or tname in self._views
+            or self.spark.catalog.tableExists(tname)
+        )
+
+    def _ctas(self, stmt: Stmt) -> DataFrame:
+        m, tname, rng = stmt.match, stmt.target, stmt.range_spec
+        if m.group("ine") and self._exists(tname):
+            # IF NOT EXISTS CTAS keeps the existing object and skips the
+            # select (CreateTableAsSelectStmt — the statement is a no-op,
+            # it must not replace the table's rows)
+            return ddl._ack(self.spark, "table exists (kept)")
+        fmt = (m.group("fmt") or "PARQUET").upper()
+        if fmt != "PARQUET":
+            # CTAS writes parquet; format_spec names what is unknown
+            from impala_spark.sources import format_spec
+
+            try:
+                format_spec(fmt)
+            except ValueError as e:
+                raise ImpalaUnsupportedError(str(e)) from e
+            raise ImpalaUnsupportedError(
+                f"CREATE TABLE AS SELECT writes PARQUET; STORED AS {fmt} is not supported")
+        # analysis/CreateTableStmt.java error text; non-strict mode
+        # keeps create-or-replace so harness queries stay idempotent
+        self._strict_create_guard(stmt, tname)
+        if rng:
+            if m.group("hash") or m.group("part"):
+                raise ImpalaUnsupportedError(
+                    "PARTITION BY RANGE cannot be combined with other"
+                    " partition clauses"
+                )
+            return ddl.create_table_range_partitioned(
+                self.spark, tname, rng[0], rng[1], query_or_df=stmt.source,
+            )
+        if m.group("hash"):
+            # PARTITION BY HASH -> persisted bucketed layout (r11)
+            hcols = [c.strip().strip("`") for c in m.group("hash").split(",") if c.strip()]
+            n = int(m.group("nb1") or m.group("nb2"))
+            return ddl.create_table_hash_bucketed(
+                self.spark, tname, hcols, n, query_or_df=stmt.source,
+            )
+        pcols = [c.strip().strip("`") for c in (m.group("part") or "").split(",") if c.strip()]
+        return ddl.create_table_as_select(
+            self.spark, tname, stmt.source, partition_cols=pcols or None,
+        )
+
+    def _create_like(self, stmt: Stmt) -> DataFrame:
+        m = stmt.match
+        if m.group("external") or m.group("tail").strip():
+            # EXTERNAL, LIKE PARQUET 'file' or clauses after the source:
+            # Spark runs these
+            return self._run_query(stmt)
+        return ddl.create_table_like(self.spark, stmt.target, _unquote(m.group("like")))
+
+    def _create_avro(self, stmt: Stmt) -> DataFrame:
+        # column list omitted: the Avro schema literal supplies it
+        # (AvroSchemaUtils.extractAvroTblProps + AvroSchemaParser — the
+        # reference infers the columns when none are declared,
+        # CreateTableStmt.analyzeAvroSchema)
+        from impala_spark.sources import avro_schema_to_cols
+
+        m = stmt.match
+        tname = self._session_view_name(m.group("target"))
+        if ddl.table_info(tname) is not None and m.group("ine"):
+            return ddl._ack(self.spark, "table exists (kept)")
+        if m.group("lit") is not None:
+            lit = m.group("lit").replace("''", "'")
+        else:
+            # avro.schema.url: read the schema file (file/hdfs-less path
+            # over the local fs, HdfsUri analysis already ran)
+            from urllib.parse import urlparse
+
+            p = urlparse(m.group("url")).path or m.group("url")
+            try:
+                with open(p) as fh:
+                    lit = fh.read()
+            except OSError as e:
+                raise ImpalaAnalysisError(
+                    f"Failed to read Avro schema at: {m.group('url')}. "
+                    f"{e.strerror}") from e
+        cols = avro_schema_to_cols(lit)
+        if not cols:
+            raise ImpalaAnalysisError(
+                "An Avro table requires column definitions or an Avro schema")
+        return ddl.create_table(self.spark, tname, cols)
+
+    def _create_view(self, stmt: Stmt) -> DataFrame:
+        # analysis/CreateViewStmt.java. Fixture tables are session temp
+        # views, so the view is session-scoped too (a persistent Spark
+        # view cannot reference temp objects); within the session it
+        # resolves through the catalog exactly like the reference's
+        # LocalView.
+        m = stmt.match
+        vname = self._session_view_name(m.group("target"))
+        exists = any(v.name == vname for v in self.spark.catalog.listTables())
+        if exists and m.group("ine"):
+            return ddl._ack(self.spark, "view exists (kept)")
+        if exists and self.strict:
+            raise ImpalaAnalysisError(f"Table already exists: default.{vname}")
+        cols = (m.group("cols") or "").strip()
+        col_list = f" ({cols})" if cols else ""
+        self._sql_with_impala_errors(
+            f"CREATE OR REPLACE TEMPORARY VIEW {vname}{col_list} AS "
+            + translate(stmt.source, strict=self.strict)
+        )
+        self._views.add(vname)
+        self._view_texts[vname] = stmt.source
+        return ddl._ack(self.spark, f"view {vname} created")
+
+    def _alter_view(self, stmt: Stmt) -> DataFrame:
+        if stmt.source is None:
+            return self._run_query(stmt)
+        # analysis/AlterViewStmt.java: redefine an existing view
+        vname = self._session_view_name(stmt.match.group("target"))
+        if not any(v.name == vname for v in self.spark.catalog.listTables()):
+            raise ImpalaAnalysisError(f"Table does not exist: default.{vname}")
+        if vname not in self._views:
+            # AlterViewStmt.java:50-53 exact text — without this the
+            # redefinition would silently REPLACE a table's session view
+            # with the new select
+            raise ImpalaAnalysisError(
+                f"ALTER VIEW not allowed on a table: default.{vname}")
+        self._sql_with_impala_errors(
+            f"CREATE OR REPLACE TEMPORARY VIEW {vname} AS "
+            + translate(stmt.source, strict=self.strict)
+        )
+        self._view_texts[vname] = stmt.source
+        return ddl._ack(self.spark, f"view {vname} altered")
+
+    def _database(self, stmt: Stmt) -> DataFrame:
+        # db-DDL error parity (Analyzer.java:113-114, DropDbStmt.java
+        # :73-76) — Spark's SCHEMA_* texts never surface
+        m, db = stmt.match, stmt.target
+        exists = any(d.name == db for d in self.spark.catalog.listDatabases())
+        if m.group("op").upper() == "CREATE":
+            if exists and not m.group("ine"):
+                raise ImpalaAnalysisError(f"Database already exists: {db}")
+        else:
+            if not exists and not m.group("ine"):
+                raise ImpalaAnalysisError(f"Database does not exist: {db}")
+            if exists and db.lower() in (
+                "default", self.spark.catalog.currentDatabase().lower()
+            ):
+                raise ImpalaAnalysisError(f"Cannot drop current default database: {db}")
+            if exists and not re.search(r"(?i)\bCASCADE\b", m.group("tail")) and any(
+                not t.isTemporary for t in self.spark.catalog.listTables(db)
+            ):
+                raise ImpalaAnalysisError(f"Cannot drop non-empty database: {db}")
+        return self._sql_with_impala_errors(stmt.text)
+
+    def _drop_table(self, stmt: Stmt) -> DataFrame:
+        tname = stmt.target
+        if tname in self._views:
+            # analysis/DropTableOrViewStmt.java:94-96 exact text
+            raise ImpalaAnalysisError(
+                f"DROP TABLE not allowed on a view: default.{tname}")
+        if ddl.table_info(tname) is not None:
+            ddl.drop_table(self.spark, tname, purge=True)
+            return ddl._ack(self.spark, "dropped")
+        if self.spark.catalog.tableExists(tname):
+            return self._run_query(stmt)
+        if stmt.match.group("ine"):
+            return ddl._ack(self.spark, "did not exist")
+        # analysis/DropTableOrViewStmt.java error text
+        raise ImpalaAnalysisError(f"Table does not exist: default.{tname}")
+
+    def _reject_view_alter(self, stmt: Stmt) -> None:
+        if stmt.target in self._views:
+            # AlterTableStmt.java:76-79
+            raise ImpalaAnalysisError(
+                f"ALTER TABLE not allowed on a view: {stmt.target}")
+
+    def _set_column_stats_stmt(self, stmt: Stmt) -> DataFrame:
+        self._reject_view_alter(stmt)
+        m = stmt.match
+        return self._set_column_stats(stmt.target, _unquote(m.group("col")), m.group("body"))
+
+    def _alter_table(self, stmt: Stmt) -> DataFrame:
+        self._reject_view_alter(stmt)
+        return ddl.alter_table(self.spark, stmt.text)
+
+    def _modify(self, stmt: Stmt) -> DataFrame:
+        bare = stmt.target.split(".")[-1]
+        if bare in self._views:
+            if stmt.kind == "upsert":
+                # InsertStmt.java:386-390 (op name UPSERT)
+                raise ImpalaAnalysisError(
+                    f"Impala does not support UPSERTing into views: default.{bare}")
+            # ModifyStmt analysis rejects view targets
+            raise ImpalaAnalysisError(
+                f"Impala does not support modifying a non-Kudu table: default.{bare}")
+        return ddl.modify(self.spark, stmt.text, strict=self.strict)
+
+    def _truncate(self, stmt: Stmt) -> DataFrame:
+        return ddl.truncate(self.spark, stmt.text)
+
+    def _load(self, stmt: Stmt) -> DataFrame:
+        return ddl.load_data(self.spark, stmt.text)
+
+    def _refresh(self, stmt: Stmt) -> DataFrame:
+        # REFRESH t [PARTITION (spec)]: the partition spec narrows the
+        # reload in the reference; Spark's refreshTable reloads the
+        # table's file listing either way
+        target = stmt.target
+        if target and not stmt.match.group("tail").strip() and target.upper() != "METADATA":
+            self.spark.catalog.refreshTable(target)
+        else:
+            self.spark.catalog.clearCache()
+        return ddl._ack(self.spark, "metadata refreshed")
+
+    def _drop_view(self, stmt: Stmt) -> DataFrame:
+        vname = stmt.target
+        if vname not in self._views and (
+            ddl.table_info(vname) is not None
+            or self.spark.catalog.tableExists(vname)
+        ):
+            # DropTableOrViewStmt.java:97-99 exact text
+            raise ImpalaAnalysisError(
+                f"DROP VIEW not allowed on a table: default.{vname}")
+        # keep the view registry in sync for ALTER TABLE checks
+        self._views.discard(vname)
+        self._view_texts.pop(vname, None)
+        return self._run_query(stmt)
+
+    # -- authorization (AuthorizationChecker.java) ------------------------------
+    def _enforce_authz(self, stmt: Stmt) -> None:
         """Privilege enforcement (authorization/AuthorizationChecker.java
         — the reference's Frontend registers PrivilegeRequests during
         analysis and fails before planning). No-op unless the engine was
-        constructed with server_name. Classification is by statement
-        kind; referenced tables come from the rewrite layer's resolver,
-        with its 'unknown shape' answer treated conservatively (only a
-        database- or server-scope grant authorizes). Table-targeted
-        SHOW/DESCRIBE metadata surfaces require ANY privilege on the
-        object and COMPUTE STATS requires ALL (check_metadata_access /
-        engine routing)."""
+        constructed with server_name. The requirement follows the
+        statement kind; the tables a statement reads come from the
+        rewrite layer's resolver over its source query, with its 'unknown
+        shape' answer treated conservatively (only a database- or
+        server-scope grant authorizes)."""
         if not self._authz.server_name:
             return
+        from impala_spark.authz import AuthorizationError
         from impala_spark.rewrites import referenced_base_tables
 
-        mw = re.match(r"\s*([A-Za-z_]+)", q)
-        head = mw.group(1).upper() if mw else ""
-        if head in ("SELECT", "WITH", "VALUES"):
-            refs = referenced_base_tables(q)
-            self._authz.check_access(
-                self.spark, q, "SELECT",
-                sorted(refs) if refs is not None else None,
-            )
-        elif head in ("INSERT", "UPSERT"):
-            m = re.match(
-                r"(?is)^\s*(?:INSERT|UPSERT)\s+(?:INTO|OVERWRITE)\s+"
-                r"(?:TABLE\s+)?(`[^`]+`|[\w.]+)", q)
-            target = m.group(1).strip("`") if m else None
-            sel = q[q.upper().find("SELECT"):] if "SELECT" in q.upper() else ""
-            refs = referenced_base_tables(sel) if sel else set()
-            self._authz.check_access(
-                self.spark, q, "INSERT",
-                sorted(refs) if refs is not None else None, target,
-            )
-        elif head in ("UPDATE", "DELETE", "TRUNCATE"):
-            m = re.match(
-                r"(?is)^\s*(?:UPDATE\s+|DELETE\s+(?:FROM\s+)?|TRUNCATE\s+"
-                r"(?:TABLE\s+)?(?:IF\s+EXISTS\s+)?)(`[^`]+`|[\w.]+)", q)
-            if m:
-                target = m.group(1).strip("`")
-                # join-form DELETE names the target by ALIAS — resolve it
-                # against the FROM clause so the ALL check lands on the
-                # real table, not the alias
-                fm = re.match(r"(?is)^\s*DELETE\s+([\w`]+)\s+FROM\s+(.*)$", q)
-                if fm and ddl.table_info(target) is None:
-                    try:
-                        target = ddl._resolve_modify_target(
-                            fm.group(1), fm.group(2))
-                    except ValueError:
-                        pass
-                self._authz.check_access(self.spark, q, head, [], target)
-        elif head == "USE":
+        az, kind, target, m = self._authz, stmt.kind, stmt.target, stmt.match
+
+        def reads(text: str) -> list[str] | None:
+            refs = referenced_base_tables(text)
+            return sorted(refs) if refs is not None else None
+
+        def deny(obj: str):
+            return AuthorizationError(
+                f"User '{az.user}' does not have privileges to access: {obj}")
+
+        if kind == "explain":
+            # the reference authorizes EXPLAIN exactly like the inner
+            # statement (Frontend analyzes before planning)
+            self._enforce_authz(self.classify(stmt.source.strip()))
+        elif kind == "query":
+            az.check_access(self.spark, stmt.text, "SELECT", reads(stmt.source))
+        elif kind in ("insert", "upsert"):
+            az.check_access(
+                self.spark, stmt.text, "INSERT", reads(stmt.source or stmt.text), target)
+        elif kind in ("update", "delete"):
+            # ALL on the target, SELECT on every other table the source
+            # reads (A/ModifyStmt.java:41-59 analyzes a source SELECT)
+            az.check_access(
+                self.spark, stmt.text, kind.upper(), reads(stmt.source), target)
+        elif kind == "truncate" and target:
+            az.check_access(self.spark, stmt.text, "TRUNCATE", [], target)
+        elif kind == "compute_stats":
+            # COMPUTE [INCREMENTAL] STATS needs ALL on the table (the 2.x
+            # Sentry model has no ALTER privilege level)
+            az.check_access(self.spark, stmt.text, "COMPUTE STATS", [], target)
+        elif kind == "load" and target:
+            # LOAD DATA INPATH 'uri' INTO TABLE t: ALL on the URI
+            # (AuthorizeableUri) + INSERT on the target
+            az.check_uri_access(m.group("uri"))
+            az.check_access(self.spark, stmt.text, "INSERT", [], target)
+        elif kind == "use":
             # TestUseDb: USE requires ANY privilege on the database
-            m = re.match(r"(?is)^\s*USE\s+(`[^`]+`|\w+)", q)
-            if m and not self._authz.visible_db(
-                self.spark, m.group(1).strip("`")
+            if not az.visible_db(self.spark, target):
+                raise deny(f"{target}.*")
+        elif kind == "refresh":
+            # TestResetMetadata: table-targeted reset needs table-level ANY
+            # (column-only grants insufficient); bare INVALIDATE METADATA
+            # is a server-scope action
+            if target and target.upper() != "FUNCTIONS":
+                az.check_any_access(self.spark, target)
+            elif not target and m.group("op").upper().startswith("INVALIDATE") and not any(
+                p.scope == "SERVER"
+                for r in az._roles_of(az.user)
+                for p in az.role_privs.get(r, ())
             ):
-                from impala_spark.authz import AuthorizationError
-
-                raise AuthorizationError(
-                    f"User '{self._authz.user}' does not have privileges"
-                    f" to access: {m.group(1).strip('`')}.*"
-                )
-        elif head in ("INVALIDATE", "REFRESH"):
-            # TestResetMetadata: table-targeted reset needs table-level
-            # ANY (column-only grants insufficient); bare INVALIDATE
-            # METADATA is a server-scope action
-            m = re.match(
-                r"(?is)^\s*(?:INVALIDATE\s+METADATA|REFRESH)\s+"
-                r"(`[^`]+`|[\w.]+)", q)
-            if m and m.group(1).upper() != "FUNCTIONS":
-                self._authz.check_any_access(
-                    self.spark, m.group(1).strip("`"))
-            elif not m and head == "INVALIDATE":
-                from impala_spark.authz import AuthorizationError
-
-                if not any(
-                    p.scope == "SERVER"
-                    for r in self._authz._roles_of(self._authz.user)
-                    for p in self._authz.role_privs.get(r, ())
-                ):
-                    raise AuthorizationError(
-                        f"User '{self._authz.user}' does not have "
-                        "privileges to access: server"
-                    )
-        elif head in ("CREATE", "DROP") and re.match(
-                r"(?is)^\s*\w+\s+(?:AGGREGATE\s+)?FUNCTION\b", q):
+                raise deny("server")
+        elif kind in ("create_function", "drop_function"):
             # function management is server-admin only (TestFunction)
-            self._authz.check_create_drop_functions()
-        elif head == "SHOW" and re.match(
-                r"(?is)^\s*SHOW\s+(?:AGGREGATE\s+|ANALYTIC\s+)?FUNCTIONS\b",
-                q):
+            az.check_create_drop_functions()
+        elif kind == "show_functions" or (kind == "show" and _show_surface(m) == "FUNCTIONS"):
             # SHOW FUNCTIONS needs ANY privilege on the db (TestFunction:
             # "show functions" errors, "show functions in tpch" passes)
-            m = re.match(
-                r"(?is)^\s*SHOW\s+(?:AGGREGATE\s+|ANALYTIC\s+)?FUNCTIONS"
-                r"(?:\s+IN\s+(`[^`]+`|\w+))?", q)
-            db = (m.group(1) or "").strip("`") if m else ""
-            db = db or self.spark.catalog.currentDatabase()
-            if not self._authz.visible_db(self.spark, db):
-                from impala_spark.authz import AuthorizationError
-
-                raise AuthorizationError(
-                    f"User '{self._authz.user}' does not have privileges"
-                    f" to access: {db}"
-                )
-        elif head in ("CREATE", "DROP", "ALTER") and re.match(
-                r"(?is)^\s*\w+\s+(TABLE|VIEW)\b", q):
-            self._authz.check_access(
-                self.spark, q, "DROP" if head == "DROP" else "CREATE", [])
-        elif head == "DESCRIBE":
-            m = re.match(
-                r"(?is)^\s*DESCRIBE\s+(?P<fmt>FORMATTED\s+|EXTENDED\s+)?"
-                r"(?P<t>`[^`]+`|[\w.]+)\s*$", q)
-            if m and m.group("t").upper() != "DATABASE":
-                # plain DESCRIBE accepts column-level grants; FORMATTED
-                # needs table scope or higher (TestDescribe)
-                self._authz.check_any_access(
-                    self.spark, m.group("t").strip("`"),
-                    allow_column_privs=m.group("fmt") is None)
-        elif head == "COMPUTE":
-            # COMPUTE [INCREMENTAL] STATS needs ALL on the table (the
-            # 2.x Sentry model has no ALTER privilege level)
-            m = re.match(
-                r"(?is)^\s*COMPUTE\s+(?:INCREMENTAL\s+)?STATS\s+"
-                r"(`[^`]+`|[\w.]+)", q)
-            if m:
-                self._authz.check_access(
-                    self.spark, q, "COMPUTE STATS", [],
-                    m.group(1).strip("`"))
-        elif head == "LOAD":
-            # LOAD DATA INPATH 'uri' INTO TABLE t: the reference requires
-            # ALL on the URI (AuthorizeableUri) + INSERT on the target
-            m = re.match(
-                r"(?is)^\s*LOAD\s+DATA\s+INPATH\s+'([^']*)'\s+"
-                r"(?:OVERWRITE\s+)?INTO\s+TABLE\s+(`[^`]+`|[\w.]+)", q)
-            if m:
-                self._authz.check_uri_access(m.group(1))
-                self._authz.check_access(
-                    self.spark, q, "INSERT", [], m.group(2).strip("`"))
+            db = (kind == "show_functions" and target) or self.spark.catalog.currentDatabase()
+            if not az.visible_db(self.spark, db):
+                raise deny(db)
+        elif kind == "show" and target and _show_surface(m) in _SHOW_TABLE_SURFACES:
+            # table-targeted metadata needs ANY privilege on the object
+            # (AuthorizationChecker Privilege.ANY)
+            az.check_any_access(self.spark, target)
+            bare = target.split(".")[-1]
+            if _show_surface(m) == "CREATE TABLE" and bare in self._views:
+                # the definition exposes the underlying tables — the user
+                # needs privileges on each (TestShowCreateTable: "...to see
+                # the definition of view")
+                view_refs = referenced_base_tables(self._view_texts.get(bare, ""))
+                for ref in sorted(view_refs or set()):
+                    if not az.visible_table(self.spark, ref, include_column_privs=False):
+                        raise AuthorizationError(
+                            f"User '{az.user}' does not have privileges to see"
+                            f" the definition of view 'default.{bare}'.")
+        elif kind == "describe":
+            # plain DESCRIBE accepts column-level grants; FORMATTED needs
+            # table scope or higher (TestDescribe)
+            az.check_any_access(self.spark, target, allow_column_privs=m.group("fmt") is None)
+        elif kind in _DDL_EVENTS or kind == "ddl":
+            op = _DDL_EVENTS[kind][0] if kind in _DDL_EVENTS else m.group("op").upper()
+            az.check_access(self.spark, stmt.text, "DROP" if op == "DROP" else "CREATE", [])
 
     # -- auditing (Analyzer.getAccessEvents analog) ---------------------------
     def _qual(self, name: str) -> str:
@@ -1246,164 +1264,46 @@ class ImpalaEngine:
         resolution inside rewritten subqueries — our function registry
         is not a catalog database).
         """
-        text = q.strip().rstrip(";")
-        mw = re.match(r"\s*([A-Za-z_]+)", text)
-        head = mw.group(1).upper() if mw else ""
-
-        if head == "EXPLAIN":
-            return self.access_events(text[len("EXPLAIN"):])
-        if head == "USE":
-            m = re.match(r"(?is)^\s*USE\s+(`[^`]+`|\w+)", text)
-            return {(m.group(1).strip("`").lower(), "DATABASE", "ANY")} \
-                if m else set()
-        if head in ("INVALIDATE", "REFRESH"):
-            return set()
-        if head in ("SELECT", "WITH", "VALUES"):
-            return self._select_events(text)
-        if head in ("INSERT", "UPSERT"):
-            m = re.match(
-                r"(?is)^\s*(?:INSERT|UPSERT)\s+(?:INTO|OVERWRITE)\s+"
-                r"(?:TABLE\s+)?(`[^`]+`|[\w.]+)", text)
-            events: set[tuple[str, str, str]] = set()
-            if m:
-                events.add((self._qual(m.group(1)), "TABLE", "INSERT"))
-            up = text.upper()
-            for kw in ("SELECT", "WITH"):
-                pos = up.find(kw)
-                if pos >= 0:
-                    events |= self._select_events(text[pos:])
-                    break
+        stmt = self.classify(q.strip().rstrip(";"))
+        if stmt.kind == "explain":
+            return self.access_events(stmt.source)
+        kind, t, g = stmt.kind, stmt.target, stmt.match.groupdict()
+        events = self._select_events(stmt.source) if stmt.source else set()
+        if not t:
             return events
-        if head in ("UPDATE", "DELETE"):
-            m = re.match(
-                r"(?is)^\s*(?:UPDATE\s+|DELETE\s+(?:FROM\s+)?)"
-                r"(`[^`]+`|[\w.]+)", text)
-            events = set()
-            if m:
-                target = m.group(1).strip("`")
-                fm = re.match(
-                    r"(?is)^\s*(?:DELETE|UPDATE)\s+([\w`]+)\s+"
-                    r"(?:FROM|SET)\s+(.*)$", text)
-                if fm and ddl.table_info(target) is None \
-                        and fm.group(1).strip("`") == target:
-                    try:
-                        rest = fm.group(2)
-                        from_m = re.search(r"(?is)\bFROM\s+(.*)$", text)
-                        if head == "DELETE" or from_m:
-                            src = from_m.group(1) if from_m else rest
-                            target = ddl._resolve_modify_target(
-                                fm.group(1), src)
-                    except ValueError:
-                        pass
-                events.add((self._qual(target), "TABLE", "SELECT"))
-                events.add((self._qual(target), "TABLE", "INSERT"))
-            from_m = re.search(r"(?is)\bFROM\s", text)
-            if from_m:
-                events |= self._select_events(text[from_m.start():])
-            return events
-        if head == "TRUNCATE":
-            m = re.match(
-                r"(?is)^\s*TRUNCATE\s+(?:TABLE\s+)?(?:IF\s+EXISTS\s+)?"
-                r"(`[^`]+`|[\w.]+)", text)
-            return {(self._qual(m.group(1)), "TABLE", "INSERT")} \
-                if m else set()
-        if head == "LOAD":
-            m = re.search(r"(?is)\bINTO\s+TABLE\s+(`[^`]+`|[\w.]+)", text)
-            return {(self._qual(m.group(1)), "TABLE", "INSERT")} \
-                if m else set()
-        if head == "COMPUTE" or (head == "DROP" and re.match(
-                r"(?is)^\s*DROP\s+(?:INCREMENTAL\s+)?STATS\b", text)):
-            m = re.search(
-                r"(?is)\bSTATS\s+(`[^`]+`|[\w.]+)", text)
-            return {(self._qual(m.group(1)), "TABLE", "ALTER")} \
-                if m else set()
-        if head == "CREATE":
-            m = re.match(
-                r"(?is)^\s*CREATE\s+DATABASE\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-                r"(`[^`]+`|\w+)", text)
-            if m:
-                return {(m.group(1).strip("`").lower(), "DATABASE",
-                         "CREATE")}
-            m = re.match(
-                r"(?is)^\s*CREATE\s+VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-                r"(`[^`]+`|[\w.]+)", text)
-            if m:
-                events = {(self._qual(m.group(1)), "VIEW", "CREATE")}
-                am = re.search(r"(?is)\bAS\s+(SELECT|WITH|VALUES)\b", text)
-                if am:
-                    events |= self._select_events(text[am.start(1):])
-                return events
-            m = re.match(
-                r"(?is)^\s*CREATE\s+(?:EXTERNAL\s+)?TABLE\s+"
-                r"(?:IF\s+NOT\s+EXISTS\s+)?(`[^`]+`|[\w.]+)", text)
-            if m:
-                events = {(self._qual(m.group(1)), "TABLE", "CREATE")}
-                lm = re.search(
-                    r"(?is)\bLIKE\s+(PARQUET\s+'[^']*'|`[^`]+`|[\w.]+)",
-                    text)
-                if lm and not lm.group(1).upper().startswith("PARQUET"):
-                    events.add((self._qual(lm.group(1)), "TABLE",
-                                "VIEW_METADATA"))
-                am = re.search(r"(?is)\bAS\s+(SELECT|WITH)\b", text)
-                if am:
-                    events |= self._select_events(text[am.start(1):])
-                return events
-            return set()
-        if head == "DROP":
-            m = re.match(
-                r"(?is)^\s*DROP\s+(DATABASE|SCHEMA|VIEW|TABLE)\s+"
-                r"(?:IF\s+EXISTS\s+)?(`[^`]+`|[\w.]+)", text)
-            if not m:
-                return set()
-            kind, name = m.group(1).upper(), m.group(2)
-            if kind in ("DATABASE", "SCHEMA"):
-                return {(name.strip("`").lower(), "DATABASE", "DROP")}
-            objtype = "VIEW" if kind == "VIEW" else self._obj_type(name)
-            return {(self._qual(name), objtype, "DROP")}
-        if head == "ALTER":
-            m = re.match(
-                r"(?is)^\s*ALTER\s+(TABLE|VIEW)\s+(`[^`]+`|[\w.]+)", text)
-            if not m:
-                return set()
-            objtype = "VIEW" if m.group(1).upper() == "VIEW" \
-                else self._obj_type(m.group(2))
-            events = {(self._qual(m.group(2)), objtype, "ALTER")}
-            rm = re.search(
-                r"(?is)\bRENAME\s+TO\s+(`[^`]+`|[\w.]+)", text)
-            if rm:
-                events.add((self._qual(rm.group(1)), objtype, "CREATE"))
-            am = re.search(r"(?is)\bAS\s+(SELECT|WITH)\b", text)
-            if am and m.group(1).upper() == "VIEW":
-                events |= self._select_events(text[am.start(1):])
-            return events
-        if head == "DESCRIBE":
-            m = re.match(
-                r"(?is)^\s*DESCRIBE\s+DATABASE\s+(?:EXTENDED\s+|FORMATTED\s+)?"
-                r"(`[^`]+`|\w+)", text)
-            if m:
-                return {(m.group(1).strip("`").lower(), "DATABASE",
-                         "VIEW_METADATA")}
-            m = re.match(
-                r"(?is)^\s*DESCRIBE\s+(FORMATTED\s+|EXTENDED\s+)?"
-                r"(`[^`]+`|[\w.]+)", text)
-            if not m:
-                return set()
-            priv = "VIEW_METADATA" if m.group(1) else "ANY"
+        if kind == "use":
+            return {(t.lower(), "DATABASE", "ANY")}
+        if kind == "database":
+            return {(t.lower(), "DATABASE", g["op"].upper())}
+        if kind == "describe_db":
+            return {(t.lower(), "DATABASE", "VIEW_METADATA")}
+        if kind in ("update", "delete"):
+            return events | {(self._qual(t), "TABLE", "SELECT"), (self._qual(t), "TABLE", "INSERT")}
+        if kind in ("insert", "upsert", "truncate", "load"):
+            return events | {(self._qual(t), "TABLE", "INSERT")}
+        if kind in ("compute_stats", "drop_stats"):
+            return {(self._qual(t), "TABLE", "ALTER")}
+        if kind == "describe":
             # a nested-collection path audits the enclosing table
-            name = m.group(2).strip("`")
-            parts = name.split(".")
-            if len(parts) > 2:
-                name = ".".join(parts[:2])
+            name = ".".join(t.split(".")[:2])
+            priv = "VIEW_METADATA" if g["fmt"] else "ANY"
             return {(self._qual(name), self._obj_type(name), priv)}
-        if head == "SHOW":
-            m = re.match(
-                r"(?is)^\s*SHOW\s+(PARTITIONS|TABLE\s+STATS|COLUMN\s+STATS|"
-                r"CREATE\s+TABLE|FILES\s+IN)\s+(`[^`]+`|[\w.]+)", text)
-            if m:
-                name = m.group(2)
-                return {(self._qual(name), self._obj_type(name),
-                         "VIEW_METADATA")}
-            return set()
+        if kind == "show" and _show_surface(stmt.match) in _SHOW_TABLE_SURFACES:
+            return {(self._qual(t), self._obj_type(t), "VIEW_METADATA")}
+        if kind in _DDL_EVENTS or kind == "ddl":
+            if kind == "ddl":
+                priv = g["op"].upper()
+                objtype = "VIEW" if g["obj"].upper() == "VIEW" else (
+                    "TABLE" if priv == "CREATE" else None)
+            else:
+                priv, objtype = _DDL_EVENTS[kind]
+            objtype = objtype or self._obj_type(t)
+            events.add((self._qual(t), objtype, priv))
+            if g.get("rename"):
+                events.add((self._qual(g["rename"]), objtype, "CREATE"))
+            if g.get("like") and g["like"].upper() != "PARQUET":
+                events.add((self._qual(g["like"]), "TABLE", "VIEW_METADATA"))
+            return events
         return set()
 
     def _route_session(self, q: str):
@@ -1639,42 +1539,29 @@ class ImpalaEngine:
             f"engine; USE {db} first, then CREATE VIEW {base.strip('`')}"
         )
 
-    def _strict_create_guard(self, q: str, tname: str) -> None:
+    def _strict_create_guard(self, stmt: Stmt, tname: str) -> None:
         """Strict mode: any catalog-resolvable name (engine table, engine
         view, or fixture view) blocks CREATE like the reference analyzer
         (CreateTableStmt/CreateViewStmt 'Table already exists'); without
         it a strict CREATE TABLE region would silently SHADOW the fixture
         session view. Permissive mode keeps create-or-replace."""
-        if not self.strict or re.search(
-            r"\bIF\s+NOT\s+EXISTS\b", q, re.IGNORECASE
-        ):
-            return
-        if (
-            ddl.table_info(tname) is not None
-            or tname in self._views
-            or self.spark.catalog.tableExists(tname)
-        ):
+        if self.strict and not stmt.match.group("ine") and self._exists(tname):
             raise ImpalaAnalysisError(f"Table already exists: default.{tname}")
 
-    def _create_table_with_cols(
-        self, q: str, m: "re.Match[str]", rng: tuple | None = None
-    ) -> DataFrame:
+    def _create_table_with_cols(self, stmt: Stmt) -> DataFrame:
         """CREATE TABLE t (cols...) [PARTITIONED BY (...)] [STORED AS fmt]
         [LOCATION ...] — balanced-paren extraction of the column list,
         then ddl.create_table registers an empty managed table."""
         from impala_spark.sources import format_spec
 
-        tname = self._session_view_name(m.group("table"))
-        if re.search(r"\bIF\s+NOT\s+EXISTS\b", q, re.IGNORECASE) and (
-            ddl.table_info(tname) is not None
-            or tname in self._views
-            or self.spark.catalog.tableExists(tname)
-        ):
+        q, m, rng = stmt.text, stmt.match, stmt.range_spec
+        tname = self._session_view_name(m.group("target"))
+        if m.group("ine") and self._exists(tname):
             # IF NOT EXISTS keeps ANY resolvable object — a managed
             # table, an engine view, or a fixture session view (shadowing
             # the fixture would silently empty the name)
-            return self.spark.sql("SELECT 'table exists (kept)' AS result")
-        self._strict_create_guard(q, tname)
+            return ddl._ack(self.spark, "table exists (kept)")
+        self._strict_create_guard(stmt, tname)
         open_idx = m.end() - 1
         depth = 0
         close_idx = -1
@@ -2293,9 +2180,7 @@ class ImpalaEngine:
                         f"or -1 for unknown."
                     )
                 stored[canon] = v
-        return self.spark.sql(
-            f"SELECT 'column stats set on {tname}.{f.name}' AS result"
-        )
+        return ddl._ack(self.spark, f"column stats set on {tname}.{f.name}")
 
     def show_column_stats(self, table: str) -> DataFrame:
         """SHOW COLUMN STATS — per-column NDV / null count / max size
@@ -2499,128 +2384,56 @@ class ImpalaEngine:
         return rewrite_sql(expr_sql, rules)[0]
 
     # -- EXPLAIN (Frontend.getExplainString analog) --------------------------
-    def _explain_df(self, query: str) -> DataFrame:
-        text = self.explain(query)
-        return self.spark.createDataFrame(
-            [(line,) for line in text.split("\n")], "explain_string: string"
-        )
-
     def to_sql(self, query: str) -> str:
         """The reference's analyzed-statement toSql() — the spelling
         views persist and SHOW CREATE VIEW replays (A/SelectStmt.java
         #toSql, pinned by T/analysis/ToSqlTest.java). Bare table refs
         qualify against the session database like the analyzer's
-        resolution step."""
+        resolution step. The ToSqlTest surface is the query family;
+        DDL/DML statements (a WITH-prefixed INSERT/UPSERT included)
+        replay verbatim — their toSql in the reference is
+        statement-specific and our engine re-parses the original text."""
         from impala_spark.tosql import to_impala_sql
 
-        stripped = query.lstrip()
-        # first WORD, not a fixed slice: 'SELECT(1+1)' / 'VALUES(1)' /
-        # 'SELECT/*c*/1' have no whitespace after the keyword (r11 ADVICE)
-        mw = re.match(r"[A-Za-z_]+", stripped)
-        head = mw.group(0).upper() if mw else ""
-        if head == "WITH" and _hoist_with_clause(
-            stripped.rstrip().rstrip(";")
-        ).lstrip()[:2].upper() in ("IN", "UP"):
-            # WITH-prefixed INSERT/UPSERT is a DML statement, not a query
-            # — replay verbatim like the other statement kinds
-            return query.strip().rstrip(";")
-        if not stripped.startswith("(") and head not in (
-            "SELECT", "WITH", "VALUES", "",
-        ):
-            # the ToSqlTest surface is the query family; DDL/DML
-            # statements replay verbatim (their toSql in the reference
-            # is statement-specific and our engine re-parses the
-            # original text anyway)
-            return query.strip().rstrip(";")
+        text = query.strip().rstrip(";")
+        if self.classify(_hoist_with_clause(text)).kind != "query":
+            return text
         return to_impala_sql(
             query, default_db=self.spark.catalog.currentDatabase()
         )
 
-    def _explain_dml(self, query: str) -> str | None:
+    def _explain_dml(self, stmt: Stmt) -> str | None:
         """EXPLAIN of a write statement: the sink line the reference's
         planner puts at the plan root (HdfsTableSink 'WRITE TO HDFS
         [db.t, OVERWRITE=...]'; Kudu-surface UPDATE/DELETE/UPSERT sinks)
-        over the planned SOURCE query. Returns None for non-DML."""
-        q = query.strip().rstrip(";")
-        m = re.match(
-            r"(?is)^\s*CREATE\s+(?:EXTERNAL\s+)?TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-            r"(`[^`]+`|[\w.]+).*?\bAS\s+((?:SELECT|WITH|VALUES)\b.*)$", q)
-        if m:
-            # EXPLAIN CTAS plans the source under the table sink — it must
-            # NEVER execute the create (spark.sql would run the command
-            # eagerly; caught by a tableExists probe)
-            target = m.group(1).strip("`")
-            body = self.explain(m.group(2))
-            return (
-                f"WRITE TO HDFS [default.{target}, OVERWRITE=false]\n|\n"
-                + body
-            )
-        mw = re.match(r"\s*([A-Za-z_]+)", q)
-        head = mw.group(1).upper() if mw else ""
-        if head in (
-            "CREATE", "DROP", "ALTER", "TRUNCATE", "LOAD", "SET", "USE",
-            "SHOW", "DESCRIBE", "COMPUTE", "INVALIDATE", "REFRESH",
-            "GRANT", "REVOKE",
-        ):
+        over the planned SOURCE query. Returns None for queries."""
+        kind, t = stmt.kind, stmt.target
+        if kind not in _EXPLAINABLE_KINDS:
             # the grammar only accepts EXPLAIN over query/DML statements
             # (sql-parser.cup explain_stmt) — anything else is a syntax
             # error, and must never execute as a side effect
+            head = stmt.text.split(None, 1)[0].upper()
             raise ImpalaUnsupportedError(
                 f"Syntax error: EXPLAIN is not supported for {head} "
                 "statements (EXPLAIN accepts queries, INSERT/UPSERT/"
                 "UPDATE/DELETE, and CREATE TABLE AS SELECT)"
             )
-        m = re.match(
-            r"(?is)^\s*(INSERT|UPSERT)\s+(INTO|OVERWRITE)\s+(?:TABLE\s+)?"
-            r"(`[^`]+`|[\w.]+)\s*(?:\([^)]*\)\s*)?"
-            r"(?:PARTITION\s*\([^)]*\)\s*)?"
-            r"((?:SELECT|WITH|VALUES)\b.*)$", q)
-        if m:
-            head, mode, target, src = (
-                m.group(1).upper(), m.group(2).upper(),
-                m.group(3).strip("`"), m.group(4),
-            )
-            sink = (
-                f"UPSERT INTO [default.{target}]"
-                if head == "UPSERT"
-                else f"WRITE TO HDFS [default.{target}, "
-                     f"OVERWRITE={'true' if mode == 'OVERWRITE' else 'false'}]"
-            )
-            body = self.explain(src)
-            return f"{sink}\n|\n" + body
-        m = re.match(
-            r"(?is)^\s*UPDATE\s+(`[^`]+`|[\w.]+)\s+SET\s+"
-            r"(?P<set>.*?)(?:\s+FROM\s+(?P<from>.*?))?"
-            r"(?:\s+WHERE\s+(?P<where>.*))?$", q)
-        if m and ddl.table_info(m.group(1).strip("`")) is not None:
-            target = m.group(1).strip("`")
-            where = f" WHERE {m.group('where')}" if m.group("where") else ""
-            # join-form UPDATE plans the joined source (ModifyStmt's
-            # source statement); the plain form scans the target
-            frm = m.group("from") or target
-            body = self.explain(f"SELECT * FROM {frm}{where}")
-            return f"UPDATE [default.{target}]\n|\n" + body
-        m = re.match(
-            r"(?is)^\s*DELETE\s+FROM\s+(`[^`]+`|[\w.]+)"
-            r"(?:\s+WHERE\s+(.*))?$", q)
-        if m and ddl.table_info(m.group(1).strip("`")) is not None:
-            target = m.group(1).strip("`")
-            where = f" WHERE {m.group(2)}" if m.group(2) else ""
-            body = self.explain(f"SELECT * FROM {target}{where}")
-            return f"DELETE FROM [default.{target}]\n|\n" + body
-        m = re.match(
-            r"(?is)^\s*DELETE\s+([\w`]+)\s+FROM\s+(.*)$", q)
-        if m:
-            # join-form DELETE: the target names an alias of the joined
-            # refs; plan the source join (ModifyStmt source statement)
-            try:
-                target = ddl._resolve_modify_target(m.group(1), m.group(2))
-            except ValueError:
-                target = m.group(1).strip("`")
-            if ddl.table_info(target) is not None:
-                body = self.explain(f"SELECT * FROM {m.group(2)}")
-                return f"DELETE FROM [default.{target}]\n|\n" + body
-        return None
+        if kind == "ctas":
+            # plans the source under the table sink — it must NEVER
+            # execute the create (spark.sql runs commands eagerly)
+            sink = f"WRITE TO HDFS [default.{t}, OVERWRITE=false]"
+        elif kind == "insert" and stmt.source:
+            overwrite = stmt.match.group("mode").upper() == "OVERWRITE"
+            sink = f"WRITE TO HDFS [default.{t}, OVERWRITE={str(overwrite).lower()}]"
+        elif kind == "upsert" and stmt.source:
+            sink = f"UPSERT INTO [default.{t}]"
+        elif kind in ("update", "delete") and ddl.table_info(t) is not None:
+            # plans ModifyStmt's source statement: the joined refs of the
+            # join form, the target otherwise
+            sink = f"UPDATE [default.{t}]" if kind == "update" else f"DELETE FROM [default.{t}]"
+        else:
+            return None
+        return f"{sink}\n|\n" + self.explain(stmt.plan_source or stmt.source)
 
     def explain(self, query: str) -> str:
         """Impala-style plan text (planner/PlanNode.getExplainString analog).
@@ -2630,36 +2443,16 @@ class ImpalaEngine:
         exactly where the reference's DistributedPlanner would insert
         ExchangeNodes (shuffle boundaries).
         """
-        dml = self._explain_dml(query)
+        dml = self._explain_dml(self.classify(query.strip().rstrip(";")))
         if dml is not None:
             return dml
-        # strict engines apply the same analyzer rejections to EXPLAIN as
-        # to sql() — Impala analyzes before planning, so EXPLAIN of an
-        # invalid query raises the analysis error, not a plan.
-        # EXPLAIN plans in the same session AND through the same plan
-        # rewrites sql() would use, so after COMPUTE STATS the text shows
-        # the CBO plan and above the distinct-rewrite gate it shows the
-        # two-phase join plan the statement will actually get (the
-        # reference's EXPLAIN always reflects the executed plan).
-        sql_text = translate(query, strict=self.strict)
-        rw = self._plan_rewrite(query)
-        sess = self._route_session(query)
-        grk = self._global_rank_df(rw if rw is not None else query, sess)
-        if grk is not None:
-            df = grk
-            orig_cols = sess.sql(sql_text).columns
-            if df.columns != orig_cols:
-                df = df.toDF(*orig_cols)
-        elif rw is not None:
-            df = sess.sql(translate(rw))
-            # same positional output-name restore sql() performs — the
-            # plan text must show the statement's own column names, not
-            # the rewrite's internal __cd0/__a0 (r11 ADVICE)
-            orig_cols = sess.sql(sql_text).columns
-            if df.columns != orig_cols:
-                df = df.toDF(*orig_cols)
-        else:
-            df = sess.sql(sql_text)
+        # EXPLAIN plans through the same builder as execution: the same
+        # strict analysis and error texts, the same session, the same
+        # plan rewrites — after COMPUTE STATS the text shows the CBO plan
+        # and above the distinct-rewrite gate the two-phase join plan the
+        # statement will actually get (the reference's EXPLAIN always
+        # reflects the executed plan).
+        df, _sess = self._query_df(query)
         qe = df._jdf.queryExecution()
         plan = qe.executedPlan().toString()
         # Cardinality/size annotations (planner/PlanNode.getExplainString

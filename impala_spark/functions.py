@@ -41,14 +41,6 @@ def ndv_sketch(col: Column | str) -> Column:
     return F.hll_sketch_agg(col)
 
 
-def ndv_sketch_merge(sketch_col: Column | str) -> Column:
-    return F.hll_union_agg(sketch_col)
-
-
-def ndv_sketch_estimate(sketch_col: Column | str) -> Column:
-    return F.hll_sketch_estimate(sketch_col)
-
-
 def appx_median(col: Column | str) -> Column:
     """Impala appx_median() (BuiltinsDb.java:731-740)."""
     return F.percentile_approx(col, 0.5)
@@ -89,11 +81,6 @@ def sample(col: Column | str, n: int = 20) -> Column:
 
 
 def nvl(col: Column, default: Column) -> Column:
-    return F.coalesce(col, default)
-
-
-def isnull2(col: Column, default: Column) -> Column:
-    """Impala 2-arg isnull(a, b) == nvl."""
     return F.coalesce(col, default)
 
 

@@ -337,19 +337,6 @@ def minhash_lsh_pairs_exact(
     assume id uniqueness (a duplicated id would cross-join its own
     copies). All fixture corpora key docs by a unique doc_id.
 
-    Skew path (r13, r12 verdict #1): on corpora above
-    `spark.graft.minhash.skewProbeMinBytes` (estimated input bytes) the
-    banded relation is materialized once and its bucket sizes counted; a
-    band bucket larger than `spark.graft.minhash.hotBucketThreshold`
-    would put C(m,2) candidate-join work on ONE reduce-side task (a
-    single enormous key, which AQE's skew-join splitting cannot divide —
-    guide §2.5), so hot buckets are routed through a triangle-salted
-    self-join that spreads the same pairs over s(s+1)/2 tasks
-    (`spark.graft.minhash.saltFactor`). Output is identical by
-    construction: every unordered in-bucket pair is emitted exactly once
-    on either route, and the exact-Jaccard rescore expressions are
-    shared. Below the size gate the original single-SQL plan is used
-    untouched — the probe costs nothing at bench scale.
     """
     rows_per_band = num_hashes // bands
     spark = df.sparkSession
@@ -381,7 +368,6 @@ def minhash_lsh_pairs_exact(
     with _MINHASH_VIEW_LOCK:
         _MINHASH_VIEW_SEQ += 1
         view = f"__minhash_exact_input_{_MINHASH_VIEW_SEQ}"
-    df.createOrReplaceTempView(view)
     gets = ", ".join(f"get(_w, i + {j})" for j in range(k))
     # Signature minima as a CODEGEN'D hash aggregate over the exploded
     # shingle hashes (r12): transform()/array_min() are HigherOrderFunction
@@ -395,8 +381,7 @@ def minhash_lsh_pairs_exact(
     # transform form (interleaved A/B at sf0.1: identical 256 pairs,
     # median 0.590 -> 0.562 s, 4/5 wins; the win grows with corpus size
     # as the interpreted fraction grows).
-    min_exprs = [f"min(xxhash64(h, {s})) AS m{s}" for s in range(num_hashes)]
-    min_cols = ", ".join(min_exprs)
+    min_cols = ", ".join(f"min(xxhash64(h, {s})) AS m{s}" for s in range(num_hashes))
     # Band keys straight from the min columns: concat_ws over the casts is
     # byte-identical to array_join(transform(slice(...))) and fully
     # codegen'd. Empty docs never reach `sig` (explode emits no rows), so
@@ -429,29 +414,8 @@ def minhash_lsh_pairs_exact(
              array_sort(transform(shingles, s -> xxhash64(s))) AS sh_hash
       FROM sh
     )"""
-    # Default OFF (r13, measured): the materialize-and-probe route lost
-    # its interleaved A/Bs at every feasible corpus size — 0/3 on the
-    # 2x1500-cluster skew probe (plain 29 s vs salted 104 s median;
-    # cleanest pair 27 vs 47) and 1/4 on an unskewed 60k-doc corpus
-    # (11.5 vs 18.6 s median): two checkpoint barriers + the probe job
-    # cost more than the duplicated signature pass they remove, and the
-    # quadratic pair-output processing (identical in both routes)
-    # dominates whenever the all-pairs contract is feasible at all. The
-    # route stays tested and output-identical as the conf-enabled
-    # LIVENESS escape for corpora with pathological (>=hotBucketThreshold
-    # -member) duplication clusters, where the plain plan's single-key
-    # straggler task is the job's wall-clock; there, and only there,
-    # enable it explicitly. minhash_lsh_pairs_bounded remains the
-    # documented contract for extreme duplication.
-    probe_min = int(
-        spark.conf.get("spark.graft.minhash.skewProbeMinBytes", str(1 << 60))
-    )
-    est = _estimated_bytes(df)
+    df.createOrReplaceTempView(view)
     try:
-        if est is not None and est >= probe_min:
-            return _minhash_exact_skew_safe(
-                spark, base_cte, min_exprs, band_items, threshold
-            )
         return spark.sql(base_cte + f""", sig AS (
       SELECT id, {min_cols}
       FROM (SELECT id, explode(sh_hash) AS h FROM base)
@@ -474,165 +438,6 @@ def minhash_lsh_pairs_exact(
             spark.catalog.dropTempView(view)
         except Exception:
             pass  # never let cleanup mask the query result
-
-
-def _minhash_exact_skew_safe(
-    spark, base_cte: str, min_exprs: list[str], band_items: str, threshold: float
-) -> DataFrame:
-    """Large-corpus route for minhash_lsh_pairs_exact (r13): materialize
-    `base` and the narrow `banded` relation once, count band buckets, and
-    salt the demonstrably hot ones.
-
-    Two structural wins over the single-SQL plan at scale, independent of
-    skew: (a) the signature aggregate runs ONCE (the tree plan computed it
-    twice — once per candidate-join side, only the base exchange was
-    reused); (b) the exact-rescore probes read materialized `base` blocks
-    instead of re-running its exchange. The materializations are eager and
-    per-invocation (operators.materialize_stage — cluster-safe under
-    spark.graft.checkpoint.mode=reliable); nothing survives across runs.
-
-    Hot-bucket handling (triangle/salted self-join, guide §2.5 "salt the
-    key"): each member of a hot bucket gets a deterministic salt group
-    g = pmod(xxhash64(id), s); the bucket's C(m,2) pairs are partitioned
-    over the s(s+1)/2 cells {(i,j): i<=j} — the a-side row replicates to
-    cells (g, j>=g), the b-side to cells (i<=g, g), so a cross-group pair
-    lands exactly in cell (min(g), max(g)) and a same-group pair in (g,g)
-    where a_id < b_id dedups the two orderings. Join key (band_hash, i, j)
-    spreads the hot bucket over s(s+1)/2 reduce tasks instead of one.
-    Cold buckets take the plain self-join unchanged. Pair set is
-    identical to the plain join by construction; the salted exchange
-    appears in the plan ONLY when the count gate actually trips."""
-    from impala_spark.operators import materialize_stage
-
-    # Default 8192: C(8192,2) ~ 33M candidate pairs on ONE task is where
-    # the plain plan's straggler becomes the job's wall-clock. Below
-    # that, the r13 probe (2x1500-member clusters, 33k docs, shuffle-join
-    # regime) measured the salted route 0/3 AGAINST plain — the quadratic
-    # output processing (distinct + rescore), identical in both arms,
-    # dominates while this route's two materializations cost ~8 s. The
-    # salting is a liveness escape for pathological buckets, not a
-    # throughput win at feasible bucket sizes; for extreme duplication
-    # the bounded contract (minhash_lsh_pairs_bounded) stays the answer.
-    hot_threshold = int(
-        spark.conf.get("spark.graft.minhash.hotBucketThreshold", "8192")
-    )
-    salt = int(spark.conf.get("spark.graft.minhash.saltFactor", "8"))
-    base = materialize_stage(spark.sql(base_cte + " SELECT id, sh_hash FROM base"))
-    banded = materialize_stage(
-        base.select("id", F.explode("sh_hash").alias("h"))
-        .groupBy("id")
-        .agg(*[F.expr(c) for c in min_exprs])
-        .select("id", F.explode(F.expr(f"array({band_items})")).alias("band_hash"))
-    )
-    hot = (
-        banded.groupBy("band_hash")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > hot_threshold)
-        .select("band_hash")
-    )
-    # Driver-side count gate: #hot keys <= rows/threshold, tiny. The
-    # count job reads the materialized banded blocks — one narrow pass.
-    hot_keys = hot.limit(1).count() > 0
-    # Every join below carries an explicit SHUFFLE_HASH hint on its build
-    # side: the materialized LogicalRDDs have UNKNOWN stats (sizeInBytes
-    # = default max), so despite preferSortMergeJoin=false the planner
-    # cannot prove the build side small and silently falls back to
-    # SortMergeJoin — measured on the 33k-doc skew probe: the rescore
-    # SMJs sorted 2.25M pair rows with 640 B shingle arrays twice, 77 s
-    # vs 26 s for the plain plan's hash joins (r13; 8 SMJ / 0 SHJ in the
-    # unhinted plan). SHJ spills since Spark 3.2, same posture as the
-    # session-wide preference.
-    # Disjoint output names on every branch (Spark 4.1 rejects aliased
-    # self-joins over shared checkpoint-rooted LogicalRDD attributes).
-    a_side = banded.select(F.col("id").alias("a_id"), F.col("band_hash").alias("_abh"))
-    b_side = banded.select(
-        F.col("id").alias("b_id"), F.col("band_hash").alias("_bbh")
-    ).hint("shuffle_hash")
-    if not hot_keys:
-        cand = (
-            a_side.join(
-                b_side,
-                (F.col("_abh") == F.col("_bbh")) & (F.col("a_id") < F.col("b_id")),
-            )
-            .select("a_id", "b_id")
-        )
-    else:
-        cold_a = a_side.join(
-            F.broadcast(hot.withColumnRenamed("band_hash", "_abh")), "_abh", "left_anti"
-        )
-        # re-hint: a hint below an intermediate join (the broadcast anti)
-        # is consumed by that join and does not reach the cold self-join
-        cold_b = b_side.join(
-            F.broadcast(hot.withColumnRenamed("band_hash", "_bbh")), "_bbh", "left_anti"
-        ).hint("shuffle_hash")
-        cand_cold = cold_a.join(
-            cold_b,
-            (F.col("_abh") == F.col("_bbh")) & (F.col("a_id") < F.col("b_id")),
-        ).select("a_id", "b_id")
-        hot_rows = banded.join(F.broadcast(hot), "band_hash", "left_semi")
-        g = F.pmod(F.xxhash64(F.col("id")), F.lit(salt)).cast("int")
-        tri_a = (
-            hot_rows.withColumn("_gi", g)
-            .withColumn("_gj", F.explode(F.sequence(F.col("_gi"), F.lit(salt - 1))))
-            .select(
-                F.col("id").alias("a_id"),
-                F.col("band_hash").alias("_abh"),
-                "_gi",
-                "_gj",
-            )
-        )
-        tri_b = (
-            hot_rows.withColumn("_hj", g)
-            .withColumn("_hi", F.explode(F.sequence(F.lit(0), F.col("_hj"))))
-            .select(
-                F.col("id").alias("b_id"),
-                F.col("band_hash").alias("_bbh"),
-                "_hi",
-                "_hj",
-            )
-            .hint("shuffle_hash")
-        )
-        cand_hot = (
-            tri_a.join(
-                tri_b,
-                (F.col("_abh") == F.col("_bbh"))
-                & (F.col("_gi") == F.col("_hi"))
-                & (F.col("_gj") == F.col("_hj"))
-                & (
-                    (F.col("_gi") < F.col("_gj"))
-                    | (F.col("a_id") < F.col("b_id"))
-                ),
-            )
-            # off-diagonal cells see each unordered pair once in arbitrary
-            # id order — normalize to a_id < b_id (ids are never equal: a
-            # doc meets itself only on the diagonal, which requires a<b)
-            .select(
-                F.least("a_id", "b_id").alias("a_id"),
-                F.greatest("a_id", "b_id").alias("b_id"),
-            )
-        )
-        cand = cand_cold.unionByName(cand_hot)
-    cand = cand.dropDuplicates(["a_id", "b_id"])
-    # Build side = base (corpus rows); under duplication skew the pair
-    # side is the strictly larger stream.
-    sa = base.select(
-        F.col("id").alias("a_id"), F.col("sh_hash").alias("_ash")
-    ).hint("shuffle_hash")
-    sb = base.select(
-        F.col("id").alias("b_id"), F.col("sh_hash").alias("_bsh")
-    ).hint("shuffle_hash")
-    jac = F.round(
-        F.size(F.array_intersect("_ash", "_bsh"))
-        / F.size(F.array_union("_ash", "_bsh")),
-        6,
-    )
-    return (
-        cand.join(sa, "a_id")
-        .join(sb, "b_id")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("a_id", "b_id", "jaccard")
-    )
 
 
 def minhash_lsh_pairs_bounded(
@@ -847,15 +652,7 @@ def ngram_jaccard_pairs(
 # ---------------------------------------------------------------------------
 
 
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _norm(a):
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
-
-
-# SQL-string twins of _dot/_norm (§1.2): every higher-order lambda built
+# SQL-string vector folds (§1.2): every higher-order lambda built
 # through the PySpark Column API costs a fan of py4j round-trips plus an
 # eager re-analysis at plan-construction time — measured 6.4-9.7 s of pure
 # build in llm_embedding_near_dup and ~1.9 s in llm_ann_lsh (r13 phase
@@ -880,10 +677,6 @@ def _l2dist_sql(a: str, b: str) -> str:
 
 def _cos_sim_sql(a: str, b: str, digits: int = 6) -> str:
     return f"round(({_dot_sql(a, b)}) / (({_norm_sql(a)}) * ({_norm_sql(b)})), {digits})"
-
-
-def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return df.withColumn("vec_norm", _norm(F.col(vec_col).cast("array<double>")))
 
 
 def cosine_topk_bruteforce(

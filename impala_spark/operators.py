@@ -76,11 +76,6 @@ def scan(df: DataFrame, columns: Sequence[str] | None = None, predicate: str | C
     return df
 
 
-def select_node(df: DataFrame, predicate: str | Column) -> DataFrame:
-    """Residual-conjunct filter (planner/SelectNode.java)."""
-    return df.filter(predicate)
-
-
 def empty_set(df: DataFrame) -> DataFrame:
     """EmptySetNode (planner/EmptySetNode.java) — analysis proved 0 rows.
     `limit(0)` folds to LocalRelation(Nil) via PropagateEmptyRelation."""

@@ -593,3 +593,81 @@ def test_show_create_view_needs_underlying_privileges(spark, sf_dir):
     eng.sql("DROP VIEW v_orders_probe")
     eng._authz.server_name = saved
     eng.sql("DROP ROLE v_role")
+
+
+_SET_SUBQUERY = ("UPDATE authz_pt SET v = (SELECT max(o_comment) FROM orders)"
+                 " WHERE k = 1")
+
+
+class TestModifySources:
+    """UPDATE/DELETE need ALL on the target — an alias resolved to its
+    table — and SELECT on every other table the statement reads
+    (A/ModifyStmt.java:41-59 analyzes the statement as a source SELECT)."""
+
+    @pytest.fixture(scope="class")
+    def eng(self, spark):
+        e = ImpalaEngine(spark, sf_dir=SF, server_name="server1", user="mona")
+        e._authz.user_groups = {"mona": {"mg"}}
+        e.sql("CREATE ROLE mod_r")
+        e.sql("GRANT ROLE mod_r TO GROUP mg")
+        e._authz.server_name = None  # set the table up as superuser
+        e.sql("CREATE TABLE authz_pt (k BIGINT, v STRING, PRIMARY KEY (k))")
+        e.sql("INSERT INTO authz_pt SELECT o_orderkey, o_orderstatus FROM orders")
+        e._authz.server_name = "server1"
+        e.sql("GRANT ALL ON TABLE authz_pt TO ROLE mod_r")
+        yield e
+        e.sql("DROP ROLE mod_r")
+        e._authz.server_name = None
+        e.sql("DROP TABLE authz_pt")
+
+    @pytest.mark.parametrize("stmt", [
+        "DELETE a FROM authz_pt a JOIN orders o ON a.k = o.o_orderkey",
+        "UPDATE authz_pt SET v = 'x' FROM authz_pt JOIN orders o"
+        " ON authz_pt.k = o.o_orderkey",
+        "DELETE FROM authz_pt WHERE k IN"
+        " (SELECT o_orderkey FROM orders WHERE o_orderkey < 3)",
+        "UPDATE a SET v = 'x' FROM authz_pt a JOIN orders o"
+        " ON a.k = o.o_orderkey",
+        _SET_SUBQUERY,
+    ])
+    def test_sources_need_select(self, eng, stmt):
+        with pytest.raises(ImpalaAnalysisError,
+                           match=r"'SELECT' on: default\.orders$"):
+            eng.sql(stmt)
+
+    def test_set_subquery_is_audited(self, eng):
+        assert eng.access_events(_SET_SUBQUERY) == {
+            ("default.authz_pt", "TABLE", "SELECT"),
+            ("default.authz_pt", "TABLE", "INSERT"),
+            ("default.orders", "TABLE", "SELECT"),
+        }
+
+    @pytest.mark.parametrize("stmt, priv", [
+        ("/* c */ DROP TABLE authz_none", "DROP"),
+        ("-- c\nALTER TABLE authz_pt RENAME TO authz_none", "CREATE"),
+        ("/* c */ INSERT INTO authz_none SELECT * FROM authz_pt", "INSERT"),
+        ("-- c\n/* d */ UPDATE authz_pt SET v = 'x' WHERE k IN"
+         " (SELECT o_orderkey FROM orders)", "SELECT"),
+    ])
+    def test_comment_led_statements_are_authorized(self, eng, stmt, priv):
+        """A leading comment does not change how a statement is
+        classified, so it needs the same privileges as without one."""
+        with pytest.raises(ImpalaAnalysisError, match=f"execute '{priv}' on"):
+            eng.sql(stmt)
+
+    def test_update_alias_checks_the_aliased_table(self, eng):
+        stmt = ("UPDATE a SET v = 'y' FROM authz_pt a JOIN orders o"
+                " ON a.k = o.o_orderkey WHERE o.o_orderkey < 3")
+        eng.sql("GRANT SELECT ON TABLE orders TO ROLE mod_r")
+        try:
+            eng.sql(stmt)
+            eng.sql("REVOKE ALL ON TABLE authz_pt FROM ROLE mod_r")
+            with pytest.raises(ImpalaAnalysisError,
+                               match=r"'UPDATE' on: default\.authz_pt$"):
+                eng.sql(stmt)
+        finally:
+            eng.sql("GRANT ALL ON TABLE authz_pt TO ROLE mod_r")
+            eng.sql("REVOKE SELECT ON TABLE orders FROM ROLE mod_r")
+        updated = eng.sql("SELECT COUNT(*) FROM authz_pt WHERE v = 'y'")
+        joined = eng.sql("SELECT COUNT(*) FROM authz_pt WHERE k < 3")
+        assert updated.collect()[0][0] == joined.collect()[0][0] > 0

@@ -174,6 +174,24 @@ def test_plain_create_table_with_cols(spark, sf_dir):
     eng.sql("DROP TABLE plain_t")
 
 
+def test_ctas_stored_as_parquet(spark, sf_dir):
+    """Impala's CTAS spelling with a file-format clause. PARQUET is what
+    CTAS writes; any other format is rejected before Spark sees it."""
+    from impala_spark.engine import ImpalaEngine
+
+    eng = ImpalaEngine(spark, sf_dir)
+    eng.sql(
+        "CREATE TABLE t_ctas_fmt PARTITIONED BY (r_regionkey) STORED AS PARQUET"
+        " AS SELECT r_name, r_regionkey FROM region"
+    )
+    assert ddl.table_info("t_ctas_fmt").partition_cols == ["r_regionkey"]
+    assert spark.table("t_ctas_fmt").count() == spark.table("region").count()
+    for fmt in ("TEXTFILE", "SEQUENCEFILE", "NOSUCHFORMAT"):
+        with pytest.raises(ImpalaUnsupportedError, match=fmt):
+            eng.sql(f"CREATE TABLE t_ctas_fmt2 STORED AS {fmt} AS SELECT 1 AS x")
+    assert ddl.table_info("t_ctas_fmt2") is None
+
+
 def test_create_and_alter_view_through_engine(spark, sf_dir):
     """CREATE VIEW / ALTER VIEW (CreateViewStmt/AlterViewStmt): views are
     session-scoped (fixture tables are temp views) and resolve through

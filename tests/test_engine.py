@@ -414,3 +414,79 @@ def test_print_bytes_units():
     assert _print_bytes(5 * (1 << 30)) == "5.00GB"
     assert _print_bytes(3 * (1 << 40) + (1 << 39)) == "3.50TB"
     assert _print_bytes(2 * (1 << 50)) == "2.00PB"
+
+
+@pytest.fixture(scope="module")
+def modify_target(engine):
+    engine.sql("CREATE TABLE cls_pt (k BIGINT, v STRING, PRIMARY KEY (k))")
+    yield "cls_pt"
+    engine.sql("DROP TABLE cls_pt")
+
+
+_JOIN = "cls_pt a JOIN orders o ON a.k = o.o_orderkey"
+
+
+@pytest.mark.parametrize("stmt, kind, target, source", [
+    ("COMMENT ON TABLE nation IS 'x'", "comment", None, None),
+    ("GRANT ROLE r TO GROUP g", "authz", None, None),
+    ("EXPLAIN SELECT 1", "explain", None, "SELECT 1"),
+    ("EXPLAIN DELETE FROM cls_pt WHERE k = 1", "explain", None,
+     "DELETE FROM cls_pt WHERE k = 1"),
+    ("COMPUTE INCREMENTAL STATS `orders`", "compute_stats", "orders", None),
+    ("DROP STATS default.orders", "drop_stats", "default.orders", None),
+    ("SET mem_limit = 1g", "set", None, None),
+    ("USE `default`", "use", "default", None),
+    ("SHOW AGGREGATE FUNCTIONS IN default LIKE 'a*'", "show_functions", "default", None),
+    ("SHOW CREATE TABLE `db1`.`t`", "show", "db1.t", None),
+    ("DESCRIBE DATABASE default", "describe_db", "default", None),
+    ("DESCRIBE FORMATTED orders", "describe", "orders", None),
+    ("INSERT OVERWRITE TABLE t PARTITION (p=1) [shuffle] SELECT a FROM s",
+     "insert", "t", "SELECT a FROM s"),
+    ("WITH c AS (SELECT 1 AS a) INSERT INTO `db1`.t SELECT a FROM c",
+     "insert", "db1.t", "WITH c AS (SELECT 1 AS a) SELECT a FROM c"),
+    ("UPSERT INTO t (a, b) VALUES (1, 2)", "upsert", "t", "VALUES (1, 2)"),
+    ("CREATE FUNCTION f(INT) RETURNS INT LOCATION '/x.so' SYMBOL='abs'",
+     "create_function", "f", None),
+    ("DROP FUNCTION IF EXISTS f(INT)", "drop_function", "f", None),
+    ("CREATE TABLE `t` STORED AS PARQUET AS SELECT 1 AS x", "ctas", "t", "SELECT 1 AS x"),
+    ("CREATE TABLE t PARTITION BY RANGE (x) (PARTITION VALUES < 5) AS SELECT 1 AS x",
+     "ctas", "t", "SELECT 1 AS x"),
+    ("CREATE TABLE t LIKE orders", "create_like", "t", None),
+    ("CREATE TABLE db1.t (a INT)", "create_table", "db1.t", None),
+    ("CREATE TABLE t STORED AS AVRO TBLPROPERTIES ('avro.schema.literal'='{}')",
+     "create_avro", "t", None),
+    ("CREATE VIEW v (a) AS SELECT 1", "create_view", "v", "SELECT 1"),
+    ("ALTER VIEW v RENAME TO v2", "alter_view", "v", None),
+    ("DROP DATABASE IF EXISTS d CASCADE", "database", "d", None),
+    ("DROP TABLE IF EXISTS t PURGE", "drop_table", "t", None),
+    ("ALTER TABLE t SET COLUMN STATS a ('numDVs'='1')", "set_column_stats", "t", None),
+    ("ALTER TABLE t RENAME TO t2", "alter_table", "t", None),
+    ("UPDATE cls_pt SET v = 'x' WHERE k = 1", "update", "cls_pt",
+     "SELECT v = 'x' FROM cls_pt WHERE k = 1"),
+    ("UPDATE cls_pt SET v = (SELECT max(o_comment) FROM orders)", "update", "cls_pt",
+     "SELECT v = (SELECT max(o_comment) FROM orders) FROM cls_pt"),
+    (f"UPDATE a SET v = o.o_comment FROM {_JOIN}", "update", "cls_pt",
+     f"SELECT v = o.o_comment FROM {_JOIN}"),
+    ("DELETE FROM cls_pt WHERE k = 1", "delete", "cls_pt",
+     "SELECT * FROM cls_pt WHERE k = 1"),
+    (f"DELETE a FROM {_JOIN}", "delete", "cls_pt", f"SELECT * FROM {_JOIN}"),
+    ("TRUNCATE TABLE IF EXISTS t", "truncate", "t", None),
+    ("LOAD DATA INPATH '/tmp/x' INTO TABLE t", "load", "t", None),
+    ("REFRESH t PARTITION (p=1)", "refresh", "t", None),
+    ("DROP VIEW IF EXISTS v", "drop_view", "v", None),
+    ("DROP TABLE t CASCADE", "ddl", "t", None),
+    ("SHOW TABLES", "command", None, None),
+    ("select * from orders", "query", None, "select * from orders"),
+    ("(SELECT 1)", "query", None, "(SELECT 1)"),
+    ("/* c */ -- d\n SELECT 1", "query", None, "SELECT 1"),
+    ("-- c\nDROP TABLE `t`", "drop_table", "t", None),
+    ("FOO BAR", "other", None, None),
+])
+def test_statement_table_classifies(engine, modify_target, stmt, kind, target, source):
+    """One statement table classifies every statement: each row's kind,
+    its target (backticks stripped, a join-form alias resolved to the
+    table) and the source query it reads."""
+    from impala_spark.engine import _hoist_with_clause
+
+    got = engine.classify(_hoist_with_clause(stmt))
+    assert (got.kind, got.target, got.source) == (kind, target, source)

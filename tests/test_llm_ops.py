@@ -1024,47 +1024,6 @@ def test_minhash_exact_signature_aggregate_form(spark):
     assert "HashAggregate" in plan
 
 
-def test_minhash_exact_skew_salted_equivalence(spark):
-    """r13 (r12 verdict #1): band buckets above the hot threshold route
-    through the triangle-salted self-join. Pins (a) the pair set and
-    jaccards are identical to the plain plan, (b) the salted join keys
-    appear in the plan ONLY when the count gate trips, and (c) the
-    default-conf plan is the untouched single-SQL fast path."""
-    base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
-            "lambda mu nu xi omicron pi rho sigma tau upsilon")
-    rows = [(i, base + f" tail{i % 3}") for i in range(12)]
-    rows += [
-        (100 + i, f"unique document number {i} about completely different "
-                  f"subject matter entirely unrelated to the cluster")
-        for i in range(6)
-    ]
-    df = spark.createDataFrame(rows, "doc_id: long, text: string")
-    fast_df = llm_ops.minhash_lsh_pairs_exact(df, threshold=0.3)
-    assert "_gi" not in physical_plan(fast_df)  # default: fast path
-    fast = sorted(map(tuple, fast_df.collect()))
-    assert len(fast) > 10  # the 12-doc cluster really pairs up
-    confs = {
-        "spark.graft.minhash.skewProbeMinBytes": "0",
-        "spark.graft.minhash.hotBucketThreshold": "3",
-        "spark.graft.minhash.saltFactor": "4",
-    }
-    try:
-        for key, v in confs.items():
-            spark.conf.set(key, v)
-        salted_df = llm_ops.minhash_lsh_pairs_exact(df, threshold=0.3)
-        plan = physical_plan(salted_df)
-        assert "_gi" in plan and "_gj" in plan  # salted join keys present
-        assert sorted(map(tuple, salted_df.collect())) == fast
-        # probe path with no hot buckets: plain join branch, no salt
-        spark.conf.set("spark.graft.minhash.hotBucketThreshold", "1000000")
-        plain_df = llm_ops.minhash_lsh_pairs_exact(df, threshold=0.3)
-        assert "_gi" not in physical_plan(plain_df)
-        assert sorted(map(tuple, plain_df.collect())) == fast
-    finally:
-        for key in confs:
-            spark.conf.unset(key)
-
-
 def test_minhash_exact_concurrent_builds_isolated(spark):
     """r13 (r12 verdict #4): each call registers a UNIQUE temp view and
     drops it after building, so interleaved/concurrent calls on one

@@ -416,6 +416,25 @@ def test_explain_dml_statements(spark, sf_dir):
     eng.sql("DROP TABLE expdml_t")
 
 
+def test_explain_raises_the_statement_error(spark, sf_dir):
+    """EXPLAIN and execution build the query through one builder, so a
+    statement Spark rejects fails with the same Impala text either way."""
+    import pytest as _p
+
+    from impala_spark.engine import ImpalaAnalysisError, ImpalaEngine
+
+    eng = ImpalaEngine(spark, sf_dir)
+    for stmt in ("SELECT no_such_col FROM region",
+                 "SELECT * FROM no_such_table_xyz",
+                 "SELECT r_name FROM region r JOIN nation n"
+                 " ON r.r_regionkey = n.n_regionkey GROUP BY name"):
+        with _p.raises(ImpalaAnalysisError) as ran:
+            eng.sql(stmt)
+        with _p.raises(ImpalaAnalysisError) as explained:
+            eng.sql(f"EXPLAIN {stmt}")
+        assert str(explained.value) == str(ran.value), stmt
+
+
 def test_explain_ctas_plans_without_executing(spark, sf_dir):
     """EXPLAIN CTAS shows the sink plan and must NOT create the table
     (spark.sql executes DDL commands eagerly — caught by probe); other
