@@ -685,24 +685,24 @@ class ImpalaEngine:
             q = rewrite_appx_count_distinct(q)
         token = self._admit(q)
         try:
-            return self._run_query_stmt(q)
+            return self._run_query_stmt(q, stmt.kind)
         finally:
             if token is not None:
                 token.release()
 
-    def _run_query_stmt(self, q: str) -> DataFrame:
-        df, sess = self._query_df(q)
+    def _run_query_stmt(self, q: str, kind: str) -> DataFrame:
+        df, sess = self._query_df(q, kind)
         if sess is not self.spark:
             df = _ntz_outputs(df)
         return _boolean_null_outputs(df)
 
-    def _query_df(self, q: str) -> tuple[DataFrame, SparkSession]:
-        """The DataFrame a query statement plans to, and the session it
-        plans in — shared by execution and EXPLAIN."""
+    def _query_df(self, q: str, kind: str) -> tuple[DataFrame, SparkSession]:
+        """The DataFrame a statement of the classified `kind` plans to,
+        and the session it plans in — shared by execution and EXPLAIN."""
         # strict-mode analysis always runs on the USER's text first
         sql_text = translate(q, strict=self.strict)
         rw = self._plan_rewrite(q)
-        sess = self._route_session(q)
+        sess = self._route_session(q, kind)
         # two-pass global rank (r12) composes on top of the distinct
         # rewrite's output when both fire (the rewritten text re-emits
         # the user's ranking window over the joined group rows)
@@ -1306,19 +1306,18 @@ class ImpalaEngine:
             return events
         return set()
 
-    def _route_session(self, q: str):
-        """Pick the session a plain query plans in. After COMPUTE STATS
-        promoted every base table a SELECT reads, the statement plans in
-        the stats session — CBO + catalog stats reproduce the broadcast
-        shapes the registry otherwise needs hand hints for (the
-        reference's stats-costed DistributedPlanner.java:420-536
-        decision). Anything the scanner can't prove (views, engine-DDL
-        tables, qualified names, derived tables) keeps the default
-        session and Catalyst's stats-less planning."""
-        if not self._stats_tables or self._sf_dir is None:
-            return self.spark
-        head = q.lstrip()[:8].upper().split(None, 1)
-        if not head or head[0] not in ("SELECT", "WITH"):
+    def _route_session(self, q: str, kind: str):
+        """Pick the session a statement of the classified `kind` plans
+        in; only plain queries (kind "query") ever leave the default.
+        After COMPUTE STATS promoted every base table a SELECT reads, the
+        statement plans in the stats session — CBO + catalog stats
+        reproduce the broadcast shapes the registry otherwise needs hand
+        hints for (the reference's stats-costed
+        DistributedPlanner.java:420-536 decision). Anything the scanner
+        can't prove (views, engine-DDL tables, qualified names, derived
+        tables) keeps the default session and Catalyst's stats-less
+        planning."""
+        if kind != "query" or not self._stats_tables or self._sf_dir is None:
             return self.spark
         from impala_spark.rewrites import referenced_base_tables
 
@@ -2408,10 +2407,14 @@ class ImpalaEngine:
         [db.t, OVERWRITE=...]'; Kudu-surface UPDATE/DELETE/UPSERT sinks)
         over the planned SOURCE query. Returns None for queries."""
         kind, t = stmt.kind, stmt.target
-        if kind not in _EXPLAINABLE_KINDS:
+        if kind not in _EXPLAINABLE_KINDS or (
+            kind in ("insert", "upsert") and not stmt.source
+        ):
             # the grammar only accepts EXPLAIN over query/DML statements
             # (sql-parser.cup explain_stmt) — anything else is a syntax
-            # error, and must never execute as a side effect
+            # error, and must never execute as a side effect. An INSERT/
+            # UPSERT form the insert row cannot split has no source to
+            # plan, and spark.sql would run it as a write
             head = stmt.text.split(None, 1)[0].upper()
             raise ImpalaUnsupportedError(
                 f"Syntax error: EXPLAIN is not supported for {head} "
@@ -2443,7 +2446,8 @@ class ImpalaEngine:
         exactly where the reference's DistributedPlanner would insert
         ExchangeNodes (shuffle boundaries).
         """
-        dml = self._explain_dml(self.classify(query.strip().rstrip(";")))
+        stmt = self.classify(query.strip().rstrip(";"))
+        dml = self._explain_dml(stmt)
         if dml is not None:
             return dml
         # EXPLAIN plans through the same builder as execution: the same
@@ -2452,7 +2456,7 @@ class ImpalaEngine:
         # and above the distinct-rewrite gate the two-phase join plan the
         # statement will actually get (the reference's EXPLAIN always
         # reflects the executed plan).
-        df, _sess = self._query_df(query)
+        df, _sess = self._query_df(query, stmt.kind)
         qe = df._jdf.queryExecution()
         plan = qe.executedPlan().toString()
         # Cardinality/size annotations (planner/PlanNode.getExplainString

@@ -37,9 +37,14 @@ def materialize_stage(df: DataFrame) -> DataFrame:
       makes the job unrecoverable past this point.
     - `reliable`: `checkpoint()` to the fault-tolerant checkpoint dir —
       the 100 TB-cluster posture. The dir comes from
-      `spark.graft.checkpoint.dir` (set once per session here) or a
-      pre-set `sparkContext.setCheckpointDir`; missing both is a config
-      error worth failing loudly on, not silently downgrading.
+      `spark.graft.checkpoint.dir`, re-applied whenever it differs from
+      the context's current dir, or a pre-set
+      `sparkContext.setCheckpointDir`; missing both is a config error
+      worth failing loudly on, not silently downgrading. Reliable
+      checkpoint files are removed only when the checkpointed DataFrame
+      is garbage-collected (`get_spark` enables
+      `spark.cleaner.referenceTracking.cleanCheckpoints`); until then
+      they stay on disk.
 
     Either way the materialization is eager and per-invocation — every
     run computes from the inputs; nothing survives across runs."""
@@ -47,15 +52,20 @@ def materialize_stage(df: DataFrame) -> DataFrame:
     mode = (spark.conf.get("spark.graft.checkpoint.mode", "local") or "local").lower()
     if mode == "reliable":
         sc = spark.sparkContext
-        if sc.getCheckpointDir() is None:
-            ckdir = spark.conf.get("spark.graft.checkpoint.dir", None)
-            if not ckdir:
-                raise ValueError(
-                    "spark.graft.checkpoint.mode=reliable requires "
-                    "spark.graft.checkpoint.dir (or a pre-set "
-                    "sparkContext checkpoint dir)"
-                )
-            sc.setCheckpointDir(ckdir)
+        ckdir = spark.conf.get("spark.graft.checkpoint.dir", None)
+        current = sc.getCheckpointDir()
+        if ckdir:
+            # setCheckpointDir checkpoints into a fresh <dir>/<uuid>
+            path = sc._jvm.org.apache.hadoop.fs.Path(ckdir)
+            fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
+            if current is None or os.path.dirname(current) != str(fs.makeQualified(path)):
+                sc.setCheckpointDir(ckdir)
+        elif current is None:
+            raise ValueError(
+                "spark.graft.checkpoint.mode=reliable requires "
+                "spark.graft.checkpoint.dir (or a pre-set "
+                "sparkContext checkpoint dir)"
+            )
         return df.checkpoint(eager=True)
     return df.localCheckpoint()
 

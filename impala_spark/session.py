@@ -61,6 +61,9 @@ def get_spark(app_name: str = "impala_spark", master: str | None = None) -> Spar
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
+        # reliable checkpoints (operators.materialize_stage) are deleted
+        # once their DataFrame is garbage-collected; read at start-up only
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         # --- planner/exchange posture ---
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

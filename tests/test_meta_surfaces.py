@@ -435,6 +435,34 @@ def test_explain_raises_the_statement_error(spark, sf_dir):
         assert str(explained.value) == str(ran.value), stmt
 
 
+def test_explain_unsplittable_insert_is_a_syntax_error(spark, sf_dir):
+    """EXPLAIN of an INSERT/UPSERT form whose source cannot be split out
+    is rejected like other unexplainable statements; it must never reach
+    spark.sql as a write."""
+    import pytest as _p
+
+    from impala_spark.parser import ImpalaUnsupportedError
+    from impala_spark.session import register_tables
+
+    register_tables(spark, sf_dir)
+    eng = ImpalaEngine(spark, sf_dir)
+    eng.sql("DROP TABLE IF EXISTS exp_ins_probe")
+    eng.sql("CREATE TABLE exp_ins_probe (k BIGINT, v STRING, PRIMARY KEY (k))")
+    eng.sql("INSERT INTO exp_ins_probe VALUES (1, 'a')")
+    for stmt in ("INSERT INTO exp_ins_probe (SELECT r_regionkey, r_name FROM region)",
+                 "UPSERT INTO exp_ins_probe (SELECT r_regionkey, r_name FROM region)"):
+        with _p.raises(ImpalaUnsupportedError) as e:
+            eng.sql(f"EXPLAIN {stmt}")
+        head = stmt.split(None, 1)[0]
+        assert str(e.value) == (
+            f"Syntax error: EXPLAIN is not supported for {head} statements "
+            "(EXPLAIN accepts queries, INSERT/UPSERT/UPDATE/DELETE, and "
+            "CREATE TABLE AS SELECT)"
+        )
+    assert eng.sql("SELECT count(*) AS n FROM exp_ins_probe").first().n == 1
+    eng.sql("DROP TABLE exp_ins_probe")
+
+
 def test_explain_ctas_plans_without_executing(spark, sf_dir):
     """EXPLAIN CTAS shows the sink plan and must NOT create the table
     (spark.sql executes DDL commands eagerly — caught by probe); other

@@ -397,6 +397,14 @@ def test_materialize_stage_checkpoint_modes(spark, tmp_path):
         import os as _os
 
         assert _os.path.isdir(ckdir) and any(_os.scandir(ckdir))
+        # a changed dir takes effect on the next call; an unchanged one
+        # keeps the context's <dir>/<uuid> (one subdir, not one per call)
+        ckdir2 = str(tmp_path / "reliable_ck2")
+        spark.conf.set("spark.graft.checkpoint.dir", ckdir2)
+        ops.materialize_stage(df)
+        ops.materialize_stage(df)
+        assert spark.sparkContext.getCheckpointDir().startswith(f"file:{ckdir2}/")
+        assert len(_os.listdir(ckdir2)) == 1
     finally:
         spark.conf.unset("spark.graft.checkpoint.mode")
         spark.conf.unset("spark.graft.checkpoint.dir")

@@ -1639,3 +1639,79 @@ def test_strict_complex_type_slot_rules():
         "select id from functional.allcomplextypes order by id",
     ]:
         _tr_cat(sql)
+
+
+def test_strict_join_operands_follow_the_from_clause():
+    """USING resolves against the left operand however it is spelled
+    (`t AS a`, a bare first table), and an ON clause cannot see a
+    comma-joined ref declared after it (TableRef.analyzeJoin)."""
+    cases = [
+        ("select * from functional.alltypes as a"
+         " join functional.alltypessmall b using (badcol)",
+         'unknown column badcol for alias a'
+         ' (in "functional.alltypessmall b USING (badcol)")'),
+        ("select * from alltypes join alltypessmall using (badcol)",
+         'unknown column badcol for alias alltypes'
+         ' (in "alltypessmall USING (badcol)")'),
+        ("select a.id from functional.alltypes a join functional.alltypessmall b"
+         " on a.id = c.id, functional.alltypestiny c",
+         "Could not resolve column/field reference: 'c.id'"),
+    ]
+    for sql, want in cases:
+        with pytest.raises(ImpalaUnsupportedError) as e:
+            _tr_cat(sql)
+        assert str(e.value) == want
+        translate(sql, strict=True)  # catalog-free: stays permissive
+
+
+def test_strict_translate_is_reentrant():
+    """Concurrent strict translates with different catalog contexts must
+    each see only their own context: every result (or error text) equals
+    the statement's single-threaded verdict."""
+    import sys
+    import threading
+
+    from impala_spark.testcatalog import TABLE_SCHEMAS, schema_for_statement
+
+    def typed(sql, db=None):
+        return dict(schema=schema_for_statement(sql), catalog=TABLE_SCHEMAS,
+                    session_db=db)
+
+    stmts = [
+        "SELECT int_col + string_col FROM functional.alltypes",
+        "select a.a from a.a",
+        "select item from a.a, a.a.a",
+        "SELECT max(x) FROM u",
+        "SELECT a + b FROM t WHERE c > 1",
+    ]
+    calls = [(s, {}) for s in stmts]
+    calls += [(s, typed(s, db)) for s in stmts for db in (None, "a")]
+
+    def run(sql, ctx):
+        try:
+            return "ok:" + translate(sql, strict=True, **ctx)
+        except Exception as e:  # noqa: BLE001
+            return f"err:{type(e).__name__}: {e}"
+
+    want = [run(s, ctx) for s, ctx in calls]
+    assert len(set(want)) > len(stmts)  # the contexts do disagree
+    bad = []
+
+    def worker(offset):
+        for i in range(60 * len(calls)):
+            k = (i + offset) % len(calls)
+            got = run(*calls[k])
+            if got != want[k]:
+                bad.append((calls[k][0], want[k], got))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(5e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(n,)) for n in range(4)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+    finally:
+        sys.setswitchinterval(old)
+    assert not bad, f"{len(bad)} cross-talk results; first: {bad[:2]}"
