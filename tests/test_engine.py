@@ -79,6 +79,23 @@ def test_broadcast_hint_takes_effect(engine):
     assert "HASH JOIN [BROADCAST]" in text or "BROADCAST" in text
 
 
+def test_broadcast_hint_on_qualified_ref_plans_broadcast_join(engine):
+    engine.spark.table("nation").createOrReplaceGlobalTempView("hint_nation")
+    engine.sql("SET broadcast_threshold = -1")  # only the hint may broadcast
+    try:
+        for sql in (
+            "SELECT c_name, n.n_name FROM customer c JOIN [broadcast] "
+            "global_temp.hint_nation n ON c.c_nationkey = n.n_nationkey",
+            "SELECT c_name, n_name FROM customer JOIN [broadcast] "
+            "global_temp.hint_nation ON c_nationkey = n_nationkey",
+        ):
+            plan = engine.sql(sql)._jdf.queryExecution().executedPlan()
+            assert "BroadcastHashJoin" in plan.toString(), sql
+    finally:
+        engine.sql("SET broadcast_threshold = 16777216")
+        engine.spark.catalog.dropGlobalTempView("hint_nation")
+
+
 def test_create_function_sql_routing(spark, sf_dir):
     from impala_spark.engine import ImpalaEngine
 

@@ -195,6 +195,29 @@ def test_hint_in_subquery_attaches_to_inner_select():
     assert "/*+" not in out.split("(", 1)[0]
 
 
+def test_hint_targets_qualified_ref():
+    # the hint names the alias, else the whole written name — never the
+    # db part, which Spark would drop without a word
+    out = translate(
+        "SELECT a.id FROM functional.alltypes a "
+        "JOIN [broadcast] functional.alltypessmall b ON a.id = b.id"
+    )
+    assert "/*+ BROADCAST(b) */" in out and "[" not in out
+    out = translate(
+        "SELECT a.id FROM functional.alltypes a JOIN [shuffle] "
+        "functional.alltypessmall ON a.id = alltypessmall.id"
+    )
+    assert "/*+ SHUFFLE_HASH(functional.alltypessmall) */" in out
+    # with the catalog bound, the bracket hint is not read as a table ref
+    from impala_spark.testcatalog import TABLE_SCHEMAS
+
+    sql = (
+        "SELECT a.id FROM functional.alltypes a "
+        "JOIN [broadcast] functional.alltypessmall b ON a.id = b.id"
+    )
+    assert "BROADCAST(b)" in translate(sql, strict=True, catalog=TABLE_SCHEMAS)
+
+
 def test_hint_alias_after_as():
     out = translate("SELECT a FROM t1 JOIN [shuffle] t2 AS u ON t1.x=u.x")
     assert "SHUFFLE_HASH(u)" in out
@@ -1715,3 +1738,575 @@ def test_strict_translate_is_reentrant():
     finally:
         sys.setswitchinterval(old)
     assert not bad, f"{len(bad)} cross-talk results; first: {bad[:2]}"
+
+
+#: one statement per DDL analysis error path, with its exact reference
+#: text (AnalyzeDDLTest), replayed with the canned warehouse bound
+_DDL_ERROR_PATHS = [
+    (
+        "DROP STATS functional.alltypes PARTITION (year=2009)",
+        "Syntax error in line 1:\nDROP STATS does not accept a PARTITION"
+        " clause; use DROP INCREMENTAL STATS <table> PARTITION (...)",
+    ),
+    (
+        "DROP INCREMENTAL STATS functional.alltypes PARTITION (year=2011)",
+        "No matching partition(s) found.",
+    ),
+    (
+        "CREATE DATABASE functional",
+        "Database already exists: functional",
+    ),
+    (
+        "DROP FUNCTION nosuchdb.fn()",
+        "Database does not exist: nosuchdb",
+    ),
+    (
+        "CREATE TABLE newtbl LIKE PARQUET 'relative/path.parquet'",
+        "URI path must be absolute: relative/path.parquet",
+    ),
+    (
+        "CREATE TABLE newtbl LIKE PARQUET"
+        " '/test-warehouse/schemas/malformed_decimal_tiny.parquet'",
+        "Unsupported parquet type FIXED_LEN_BYTE_ARRAY for field c1",
+    ),
+    (
+        "CREATE TABLE newtbl LIKE PARQUET"
+        " '/test-warehouse/zipcode_incomes_rc/000000_0'",
+        "File is not a parquet file:"
+        " hdfs://localhost:20500/test-warehouse/zipcode_incomes_rc/000000_0",
+    ),
+    (
+        "DROP TABLE functional.alltypes_view",
+        "DROP TABLE not allowed on a view: functional.alltypes_view",
+    ),
+    (
+        "DROP VIEW functional.alltypes",
+        "DROP VIEW not allowed on a table: functional.alltypes",
+    ),
+    (
+        "ALTER TABLE functional.alltypes ADD PARTITION (year=2050, year=2051)",
+        "Duplicate partition key name: year",
+    ),
+    (
+        "ALTER TABLE functional.alltypes ADD PARTITION (int_col=1)",
+        "Column 'int_col' is not a partition column in table:"
+        " functional.alltypes",
+    ),
+    (
+        "ALTER TABLE functional.stringpartitionkey ADD PARTITION"
+        " (string_col=1)",
+        "Value of partition spec (column=string_col) has incompatible type:"
+        " 'TINYINT'. Expected type: 'STRING'.",
+    ),
+    (
+        "ALTER TABLE functional.alltypes ADD PARTITION (year=2050,"
+        " month=10000000000)",
+        "Partition key value may result in loss of precision.\nWould need to"
+        " cast '10000000000' to 'INT' for partition column: month",
+    ),
+    (
+        "ALTER TABLE functional.alltypes ADD PARTITION (year=int_col, month=1)",
+        "Non-constant expressions are not supported as static partition-key"
+        " values in 'year=int_col'.",
+    ),
+    (
+        "ALTER TABLE functional.alltypes DROP PARTITION (year=int_col)",
+        "Partition exprs cannot contain non-partition column(s): year ="
+        " int_col.",
+    ),
+    (
+        "ALTER TABLE functional.stringpartitionkey DROP PARTITION"
+        " (string_col=1)",
+        "operands of type STRING and TINYINT are not comparable: string_col ="
+        " 1",
+    ),
+    (
+        "ALTER TABLE functional.alltypes PARTITION (year=2009, month>10) SET"
+        " LOCATION '/x'",
+        "Partition expr in set location statements can only match one"
+        " partition. Too many matched partitions"
+        " year=2009/month=11,year=2009/month=12",
+    ),
+    (
+        "ALTER TABLE functional.alltypestiny PARTITION (year=2009, month=1)"
+        " SET LOCATION '/x'",
+        "Target partition is cached, please uncache before changing the"
+        " location using: ALTER TABLE functional.alltypestiny PARTITION (year"
+        " = 2009, month = 1) SET UNCACHED",
+    ),
+    (
+        "ALTER TABLE functional.alltypestiny SET LOCATION '/x'",
+        "Target table is cached, please uncache before changing the location"
+        " using: ALTER TABLE functional.alltypestiny SET UNCACHED",
+    ),
+    (
+        "ALTER TABLE functional_kudu.alltypes REPLACE COLUMNS (a INT)",
+        "ALTER TABLE REPLACE COLUMNS is not supported on Kudu tables",
+    ),
+    (
+        "ALTER TABLE functional_kudu.alltypes ADD COLUMNS (c ARRAY<INT>)",
+        "Kudu tables do not support complex types: c ARRAY<INT>",
+    ),
+    (
+        "ALTER TABLE functional_kudu.alltypes ADD COLUMNS (c INT PRIMARY KEY)",
+        "Cannot add a primary key using an ALTER TABLE ADD COLUMNS statement:"
+        " c INT PRIMARY KEY",
+    ),
+    (
+        "ALTER TABLE functional_kudu.alltypes CHANGE COLUMN int_col int_col"
+        " INT ENCODING PLAIN_ENCODING",
+        "Unsupported column options in ALTER TABLE CHANGE COLUMN statement:"
+        " int_col INT ENCODING PLAIN_ENCODING",
+    ),
+    (
+        "ALTER TABLE functional_kudu.alltypes CHANGE COLUMN int_col int_col"
+        " BIGINT",
+        "Cannot change the type of a Kudu column using an ALTER TABLE CHANGE"
+        " COLUMN statement: (INT vs BIGINT)",
+    ),
+    (
+        "ALTER TABLE functional.alltypes ADD COLUMNS (c INT NOT NULL)",
+        "The specified column options are only supported in Kudu tables: c INT"
+        " NOT NULL",
+    ),
+    (
+        "ALTER TABLE functional_hbase.alltypes ADD COLUMNS (c INT)",
+        "ALTER TABLE ADD|REPLACE COLUMNS not currently supported on HBase"
+        " tables.",
+    ),
+    (
+        "ALTER TABLE functional_hbase.alltypes DROP COLUMN int_col",
+        "ALTER TABLE DROP COLUMN not currently supported on HBase tables.",
+    ),
+    (
+        "ALTER TABLE functional_hbase.alltypes RECOVER PARTITIONS",
+        "ALTER TABLE RECOVER PARTITIONS must target an HDFS table:"
+        " functional_hbase.alltypes",
+    ),
+    (
+        "ALTER TABLE functional_hbase.alltypes SET FILEFORMAT PARQUET",
+        "ALTER TABLE SET not currently supported on HBase tables.",
+    ),
+    (
+        "ALTER TABLE functional.alltypes ADD COLUMNS (int_col INT)",
+        "Column already exists: int_col",
+    ),
+    (
+        "ALTER TABLE functional.alltypes DROP COLUMN year",
+        "Cannot drop partition column: year",
+    ),
+    (
+        "ALTER TABLE functional.alltypes CHANGE COLUMN int_col bigint_col INT",
+        "Column already exists: bigint_col",
+    ),
+    (
+        "ALTER TABLE functional.alltypes SET COLUMN STATS nosuchcol"
+        " ('numDVs'='1')",
+        "Column 'nosuchcol' does not exist in table: functional.alltypes",
+    ),
+    (
+        "ALTER TABLE functional.alltypes SET COLUMN STATS int_col"
+        " ('maxSize'='10')",
+        "Cannot update the 'maxSize' stats of column 'int_col' with type"
+        " 'INT'.\nChanging 'maxSize' is only allowed for variable-length"
+        " columns.",
+    ),
+    (
+        "ALTER TABLE functional.alltypes SET TBLPROPERTIES"
+        " ('storage_handler'='x')",
+        "Changing the 'storage_handler' table property is not supported to"
+        " protect against metadata corruption.",
+    ),
+    (
+        "ALTER TABLE functional_seq_snap.bad_seq_snap DROP COLUMN field",
+        "Cannot drop column 'field' from functional_seq_snap.bad_seq_snap."
+        " Tables must contain at least 1 column.",
+    ),
+    (
+        "ALTER TABLE functional.alltypes RENAME TO nosuchdb.t",
+        "Database does not exist: nosuchdb",
+    ),
+    (
+        "CREATE TABLE newtbl LIKE functional_kudu.alltypes",
+        "Cloning a Kudu table using CREATE TABLE LIKE is not supported.",
+    ),
+    (
+        "CREATE TABLE newtbl LIKE nosuchdb.t",
+        "Database does not exist: nosuchdb",
+    ),
+    (
+        "CREATE TABLE newtbl LIKE functional.nosuchtbl",
+        "Table does not exist: functional.nosuchtbl",
+    ),
+    (
+        "CREATE TABLE t (i INT) LOCATION 'file:///tmp/t' CACHED IN 'testPool'",
+        "Location 'file:/tmp/t' cannot be cached. Please retry without"
+        " caching: CREATE TABLE ... UNCACHED",
+    ),
+    (
+        "ALTER TABLE functional.alltypes CHANGE COLUMN int_col `a$b` INT",
+        "Invalid column/field name: a$b",
+    ),
+    (
+        "CREATE TABLE t (i INT PRIMARY KEY) STORED AS PARQUET",
+        "Unsupported column options for file format 'PARQUET': 'i INT PRIMARY"
+        " KEY'",
+    ),
+    (
+        "CREATE DATA SOURCE foo LOCATION '/foo.jar' CLASS 'com.foo.Bar'"
+        " API_VERSION 'V2'",
+        "Invalid API version: 'V2'",
+    ),
+    (
+        "CREATE TABLE t (i INT) PRODUCED BY DATA SOURCE nosuch",
+        "Data source does not exist: 'nosuch'",
+    ),
+    (
+        "CREATE AGGREGATE FUNCTION f(INT) RETURNS INT LOCATION"
+        " '/test-warehouse/test-udfs.ll' UPDATE_FN='Up'",
+        "IR UDAs are not yet supported.",
+    ),
+    (
+        "CREATE FUNCTION f(INT) RETURNS INT LOCATION"
+        " '/test-warehouse/libTestUdfs.so'",
+        "Argument 'SYMBOL' must be set.",
+    ),
+    (
+        "CREATE FUNCTION f(INT) RETURNS INT LOCATION"
+        " '/test-warehouse/libTestUdfs.so' SYMBOL=''",
+        "Could not find symbol ''",
+    ),
+    (
+        "CREATE FUNCTION f(INT) RETURNS INT LOCATION"
+        " '/test-warehouse/libTestUdfs.so' SYMBOL='_Zfoo'",
+        "Could not find symbol '_Zfoo' in:"
+        " hdfs://localhost:20500/test-warehouse/libTestUdfs.so",
+    ),
+    (
+        "CREATE FUNCTION f(INT) RETURNS INT LOCATION"
+        " '/test-warehouse/libTestUdfs.so' SYMBOL='Foo'",
+        "Could not find function Foo(INT) in:"
+        " hdfs://localhost:20500/test-warehouse/libTestUdfs.so",
+    ),
+    (
+        "CREATE FUNCTION f(INT) RETURNS INT LOCATION"
+        " '/test-warehouse/libTestUdfs.so' SYMBOL='Identity' PREPARE_FN=''",
+        "Could not find symbol ''",
+    ),
+    (
+        "CREATE FUNCTION f(INT) RETURNS INT LOCATION"
+        " '/test-warehouse/libTestUdfs.so' SYMBOL='Identity'"
+        " PREPARE_FN='_Zbar'",
+        "Could not find symbol '_Zbar' in:"
+        " hdfs://localhost:20500/test-warehouse/libTestUdfs.so",
+    ),
+    (
+        "CREATE FUNCTION f(INT) RETURNS INT LOCATION"
+        " '/test-warehouse/libTestUdfs.so' SYMBOL='Identity' CLOSE_FN='Bar'",
+        "Could not find function Bar(impala_udf::FunctionContext*,"
+        " impala_udf::FunctionContext::FunctionStateScope) in:"
+        " hdfs://localhost:20500/test-warehouse/libTestUdfs.so",
+    ),
+    (
+        "CREATE TABLE t (i INT, I STRING)",
+        "Duplicate column name: i",
+    ),
+    (
+        "CREATE TABLE t PARTITIONED BY (int_col) AS SELECT int_col FROM"
+        " functional.alltypes",
+        "Number of partition columns (1) must be smaller than the number of"
+        " columns in the select statement (1).",
+    ),
+    (
+        "CREATE TABLE t PARTITIONED BY (int_col) AS SELECT int_col, id FROM"
+        " functional.alltypes",
+        "Partition column name mismatch: int_col != id",
+    ),
+    (
+        "CREATE TABLE t (i INT) PARTITIONED BY (`a$b` INT)",
+        "Invalid column/field name: a$b",
+    ),
+    (
+        "CREATE TABLE t (i INT) PARTITIONED BY (i INT)",
+        "Duplicate column name: i",
+    ),
+    (
+        "CREATE TABLE t (i INT) PARTITIONED BY (p TIMESTAMP)",
+        "Type 'TIMESTAMP' is not supported as partition-column type in column:"
+        " p",
+    ),
+    (
+        "CREATE TABLE t (i INT PRIMARY KEY) PARTITION BY HASH (i) PARTITIONS 2"
+        " STORED AS KUDU LOCATION '/x'",
+        "LOCATION cannot be specified for a Kudu table.",
+    ),
+    (
+        "CREATE TABLE t (i INT PRIMARY KEY) PARTITION BY HASH (i) PARTITIONS 2"
+        " ROW FORMAT DELIMITED STORED AS KUDU",
+        "ROW FORMAT cannot be specified for file format KUDU.",
+    ),
+    (
+        "CREATE TABLE t (i INT PRIMARY KEY) PARTITIONED BY (p INT) STORED AS"
+        " KUDU",
+        "PARTITIONED BY cannot be used in Kudu tables.",
+    ),
+    (
+        "CREATE TABLE t LIKE PARQUET"
+        " '/test-warehouse/schemas/alltypestiny.parquet' STORED AS KUDU",
+        "CREATE TABLE LIKE FILE statement is not supported for Kudu tables.",
+    ),
+    (
+        "CREATE EXTERNAL TABLE t (i INT PRIMARY KEY) STORED AS KUDU",
+        "Primary keys cannot be specified for an external Kudu table",
+    ),
+    (
+        "CREATE TABLE t (i INT PRIMARY KEY) STORED AS KUDU",
+        "Table partitioning must be specified for managed Kudu tables.",
+    ),
+    (
+        "CREATE TABLE t (i INT PRIMARY KEY DEFAULT isnull(1, 2)) PARTITION BY"
+        " HASH (i) PARTITIONS 2 STORED AS KUDU",
+        "Default value of NULL not allowed on non-nullable column: 'i'",
+    ),
+    (
+        "CREATE TABLE t (i INT NULL PRIMARY KEY) PARTITION BY HASH (i)"
+        " PARTITIONS 2 STORED AS KUDU",
+        "Primary key columns cannot be nullable: i INT NULL PRIMARY KEY",
+    ),
+    (
+        "CREATE TABLE t (i INT NULL, j INT, PRIMARY KEY (i)) PARTITION BY HASH"
+        " (i) PARTITIONS 2 STORED AS KUDU",
+        "Primary key columns cannot be nullable: i INT NULL",
+    ),
+    (
+        "CREATE TABLE t (i INT PRIMARY KEY) PARTITION BY RANGE (i) (PARTITION"
+        " VALUE = int_col) STORED AS KUDU",
+        "Only constant values are allowed for range-partition bounds: int_col",
+    ),
+    (
+        "CREATE TABLE t (i INT PRIMARY KEY) PARTITION BY RANGE (i) (PARTITION"
+        " VALUE = NULL) STORED AS KUDU",
+        "Range partition values cannot be NULL. Range partition: 'PARTITION"
+        " VALUE = NULL'",
+    ),
+    (
+        "CREATE TABLE t (i INT, PRIMARY KEY (i, i)) PARTITION BY HASH (i)"
+        " PARTITIONS 2 STORED AS KUDU",
+        "Column 'i' is listed multiple times as a PRIMARY KEY.",
+    ),
+    (
+        "CREATE EXTERNAL TABLE t STORED AS KUDU TBLPROPERTIES"
+        " ('kudu.num_tablet_replicas'='3')",
+        "Table property 'kudu.num_tablet_replicas' cannot be used with an"
+        " external Kudu table.",
+    ),
+    (
+        "CREATE EXTERNAL TABLE t (i INT) STORED AS KUDU",
+        "Columns cannot be specified with an external Kudu table.",
+    ),
+    (
+        "CREATE EXTERNAL TABLE t STORED AS KUDU TBLPROPERTIES ('a'='b') AS"
+        " SELECT 1",
+        "CREATE TABLE AS SELECT is not supported for external Kudu tables.",
+    ),
+    (
+        "CREATE TABLE t PRIMARY KEY (id) PARTITION BY HASH (id) PARTITIONS 2"
+        " STORED AS KUDU AS SELECT id, int_array_col FROM"
+        " functional.allcomplextypes",
+        "Expr 'int_array_col' in select list returns a complex type"
+        " 'ARRAY<INT>'.\nOnly scalar types are allowed in the select list.",
+    ),
+    (
+        "CREATE TABLE t PRIMARY KEY (id) PARTITION BY HASH (id) PARTITIONS 2"
+        " STORED AS KUDU AS SELECT id, timestamp_col FROM functional.alltypes",
+        "Cannot create table 't': Type TIMESTAMP is not supported in Kudu",
+    ),
+    (
+        "CREATE TABLE t (i INT PRIMARY KEY, j INT PRIMARY KEY)",
+        "Multiple primary keys specified. Composite primary keys can be"
+        " specified using the PRIMARY KEY (col1, col2, ...) syntax at the"
+        " endPosition of the column definition.",
+    ),
+    (
+        "CREATE VIEW v AS SELECT 1 AS `a$b`",
+        "Invalid column/field name: a$b",
+    ),
+    (
+        "CREATE VIEW v (a) AS SELECT 1, 2",
+        "Column-definition list has fewer columns (1) than the view-definition"
+        " query statement returns (2).",
+    ),
+    (
+        "CREATE VIEW v (a, b, c) AS SELECT 1, 2",
+        "Column-definition list has more columns (3) than the view-definition"
+        " query statement returns (2).",
+    ),
+    (
+        "CREATE TABLE t (i INT PRIMARY KEY ENCODING FOO) PARTITION BY HASH (i)"
+        " PARTITIONS 2 STORED AS KUDU",
+        "Unsupported encoding value 'FOO'. Supported encoding values are:"
+        " AUTO_ENCODING, BIT_SHUFFLE, DICT_ENCODING, GROUP_VARINT,"
+        " PLAIN_ENCODING, PREFIX_ENCODING, RLE",
+    ),
+    (
+        "CREATE TABLE t (i INT PRIMARY KEY COMPRESSION FOO) PARTITION BY HASH"
+        " (i) PARTITIONS 2 STORED AS KUDU",
+        "Unsupported compression algorithm 'FOO'. Supported compression"
+        " algorithms are: DEFAULT_COMPRESSION, LZ4, NO_COMPRESSION, SNAPPY,"
+        " ZLIB",
+    ),
+    (
+        "CREATE TABLE t (i INT PRIMARY KEY BLOCK_SIZE -1) PARTITION BY HASH"
+        " (i) PARTITIONS 2 STORED AS KUDU",
+        "Invalid value for BLOCK_SIZE: -. A positive INTEGER value is"
+        " expected.",
+    ),
+    (
+        "CREATE TABLE t (i INT PRIMARY KEY DEFAULT NULL) PARTITION BY HASH (i)"
+        " PARTITIONS 2 STORED AS KUDU",
+        "Default value of NULL not allowed on non-nullable column: 'i'",
+    ),
+    (
+        "CREATE TABLE t (i INT PRIMARY KEY, s STRING DEFAULT 1) PARTITION BY"
+        " HASH (i) PARTITIONS 2 STORED AS KUDU",
+        "Default value 1 (type: TINYINT) is not compatible with column 's'"
+        " (type: STRING).",
+    ),
+    (
+        "CREATE TABLE t STORED AS AVRO TBLPROPERTIES ('avro.schema.url'='')",
+        "Invalid avro.schema.url: . Can not create a Path from an empty string",
+    ),
+    (
+        "CREATE TABLE t STORED AS AVRO TBLPROPERTIES"
+        " ('avro.schema.url'='foo://bar/s.json')",
+        "Failed to read Avro schema at: foo://bar/s.json. No FileSystem for"
+        " scheme: foo",
+    ),
+    (
+        "CREATE TABLE t STORED AS AVRO TBLPROPERTIES"
+        " ('avro.schema.url'='hdfs://bad host/s.json')",
+        "Failed to read Avro schema at: hdfs://bad host/s.json. Incomplete"
+        " HDFS URI, no host: hdfs://bad host/s.json",
+    ),
+    (
+        "CREATE TABLE t STORED AS AVRO TBLPROPERTIES"
+        " ('avro.schema.url'='schema.json')",
+        "Invalid avro.schema.url: schema.json. Path does not exist.",
+    ),
+    (
+        "CREATE TABLE t STORED AS AVRO TBLPROPERTIES"
+        " ('avro.schema.literal'='')",
+        "Avro schema is null or empty: default.t",
+    ),
+    (
+        "CREATE TABLE t STORED AS AVRO TBLPROPERTIES"
+        ' (\'avro.schema.literal\'=\'{"type": "record"]\')',
+        "Error parsing Avro schema for table 'default.t':"
+        " org.codehaus.jackson.JsonParseException: Unexpected close marker"
+        " ']': expected '}'",
+    ),
+    (
+        "CREATE TABLE t STORED AS AVRO TBLPROPERTIES"
+        ' (\'avro.schema.literal\'=\'{"type": \')',
+        "Error parsing Avro schema for table 'default.t': Invalid JSON schema",
+    ),
+    (
+        "CREATE TABLE t STORED AS AVRO TBLPROPERTIES"
+        ' (\'avro.schema.literal\'=\'{"name": "r", "type": "record"}\')',
+        "Error parsing Avro schema for table 'default.t': Record has no"
+        ' fields: {"name":"r","type":"record"}',
+    ),
+    (
+        "CREATE TABLE t STORED AS AVRO TBLPROPERTIES"
+        ' (\'avro.schema.literal\'=\'{"type": "record", "fields": []}\')',
+        "Error parsing Avro schema for table 'default.t': No name in schema:"
+        ' {"type":"record","fields":[]}',
+    ),
+    (
+        "CREATE TABLE t STORED AS AVRO TBLPROPERTIES"
+        ' (\'avro.schema.literal\'=\'{"name": "r", "type": "record", "fields":'
+        ' [{"name": "d", "type": {"type": "bytes", "logicalType":'
+        ' "decimal"}}]}\')',
+        "Error parsing Avro schema for table 'default.t': No 'precision'"
+        " property specified for 'decimal' logicalType",
+    ),
+    (
+        "CREATE TABLE t STORED AS AVRO TBLPROPERTIES"
+        ' (\'avro.schema.literal\'=\'{"name": "r", "type": "record", "fields":'
+        ' [{"name": "d", "type": {"type": "bytes", "logicalType": "decimal",'
+        ' "precision": -1}}]}\')',
+        "Error parsing Avro schema for table 'default.t': Invalid decimal"
+        " 'precision' property value: -1",
+    ),
+    (
+        "CREATE TABLE t STORED AS AVRO TBLPROPERTIES"
+        ' (\'avro.schema.literal\'=\'{"name": "r", "type": "record", "fields":'
+        ' [{"name": "d", "type": {"type": "bytes", "logicalType": "decimal",'
+        ' "precision": 5, "scale": -1}}]}\')',
+        "Error parsing Avro schema for table 'default.t': Invalid decimal"
+        " 'scale' property value: -1",
+    ),
+    (
+        "CREATE TABLE t STORED AS AVRO TBLPROPERTIES"
+        ' (\'avro.schema.literal\'=\'{"name": "r", "type": "record", "fields":'
+        ' [{"name": "u", "type": ["int", "string"]}]}\')',
+        "Unsupported type 'union' of column 'u'",
+    ),
+    (
+        "CREATE TABLE t (i INT PRIMARY KEY) PARTITION BY RANGE (i) (PARTITION"
+        " VALUE = (1, 2)) STORED AS KUDU",
+        "Number of specified range partition values is different than the"
+        " number of partitioning columns: (2 vs 1). Range partition:"
+        " 'PARTITION VALUE = (1,2)'",
+    ),
+    (
+        "CREATE TABLE t (i INT PRIMARY KEY) PARTITION BY RANGE (i) (PARTITION"
+        " VALUE = 'a') STORED AS KUDU",
+        "Range partition value 'a' (type: STRING) is not type compatible with"
+        " partitioning column 'i' (type: INT).",
+    ),
+]
+
+
+@pytest.mark.parametrize("sql,msg", _DDL_ERROR_PATHS)
+def test_strict_ddl_error_paths(sql, msg):
+    from impala_spark.testcatalog import TABLE_SCHEMAS, schema_for_statement
+
+    with pytest.raises(ImpalaUnsupportedError) as ei:
+        translate(
+            sql, strict=True, catalog=TABLE_SCHEMAS,
+            schema=schema_for_statement(sql),
+        )
+    assert str(ei.value) == msg
+
+
+def test_strict_ddl_clauses_are_read_before_the_query():
+    # CREATE clauses are the depth-0 words ahead of the query: a window's
+    # PARTITION BY, a LIKE predicate or a column named `location` is not
+    # a table clause, and the commas of a MAP<K,V> type split no columns
+    from impala_spark.testcatalog import TABLE_SCHEMAS
+
+    for sql in (
+        "CREATE VIEW v AS SELECT rank() OVER (PARTITION BY int_col "
+        "ORDER BY id) r FROM functional.alltypes",
+        "CREATE TABLE t AS SELECT rank() OVER (PARTITION BY int_col "
+        "ORDER BY id) r FROM functional.alltypes",
+        "CREATE TABLE t PRIMARY KEY (id) PARTITION BY HASH (id) PARTITIONS 2 "
+        "STORED AS KUDU AS SELECT id FROM functional.alltypes "
+        "WHERE string_col LIKE 'a%'",
+        "CREATE TABLE t (location STRING, PRIMARY KEY (location)) "
+        "PARTITION BY HASH (location) PARTITIONS 2 STORED AS KUDU",
+        "ALTER TABLE functional.alltypes ADD COLUMNS "
+        "(a MAP<STRING,INT>, b MAP<STRING,INT>)",
+        "CREATE EXTERNAL TABLE t STORED AS KUDU",
+    ):
+        translate(sql, strict=True, catalog=TABLE_SCHEMAS)
+    # an external Kudu CTAS with no column list is analyzed, not a crash
+    with pytest.raises(ImpalaUnsupportedError) as ei:
+        translate(
+            "CREATE EXTERNAL TABLE t STORED AS KUDU AS SELECT 1",
+            strict=True, catalog=TABLE_SCHEMAS,
+        )
+    assert str(ei.value) == (
+        "CREATE TABLE AS SELECT is not supported for external Kudu tables."
+    )

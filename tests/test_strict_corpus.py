@@ -70,6 +70,24 @@ def test_strict_verdicts_replay():
 
 
 if __name__ == "__main__":
+    before = {
+        rec["sql"]: rec["verdicts"]
+        for rec in map(json.loads, CORPUS.read_text().splitlines())
+    }
+    after = {sql: verdicts(sql) for sql in _statements()}
     with CORPUS.open("w") as f:
-        for sql in _statements():
-            f.write(json.dumps({"sql": sql, "verdicts": verdicts(sql)}) + "\n")
+        for sql, v in after.items():
+            f.write(json.dumps({"sql": sql, "verdicts": v}) + "\n")
+    moved = [
+        (sql, ctx, was, v[ctx])
+        for sql, v in after.items() if sql in before
+        for ctx, was in before[sql].items() if v.get(ctx) != was
+    ]
+    print(
+        f"{len(after.keys() - before.keys())} added, "
+        f"{len({sql for sql, *_ in moved})} changed "
+        f"({len(moved)} verdicts), "
+        f"{len(before.keys() - after.keys())} removed"
+    )
+    for sql, ctx, was, now in moved[:10]:
+        print(f"  [{ctx}] {sql.strip()[:100]!r}\n    {was}\n -> {now}")
