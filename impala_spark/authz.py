@@ -57,7 +57,7 @@ class AuthorizationError(ImpalaAnalysisError):
 class _Priv:
     priv: str                 # ALL | SELECT | INSERT
     scope: str                # SERVER | DATABASE | TABLE | URI
-    obj: str                  # '' / db name / table name / uri
+    obj: str                  # '' / db name / db.table / uri
     columns: tuple[str, ...] = ()
     grant_option: bool = False
 
@@ -240,6 +240,8 @@ class AuthzPolicy:
             key = self._existing(m.group(1))
             scope = (m.group(2) or "").upper()
             obj = (m.group(3) or "").strip("`'").lower()
+            if scope == "TABLE" and obj:
+                obj = ".".join(self._qualify(spark, obj))
             out = []
             for p in self.role_privs[key]:
                 if scope and (p.scope != scope or
@@ -251,8 +253,7 @@ class AuthzPolicy:
                         p.scope.lower(),
                         p.obj if p.scope == "DATABASE" else (
                             p.obj.split(".")[0] if p.scope == "TABLE"
-                            and "." in p.obj else
-                            ("default" if p.scope == "TABLE" else "")),
+                            else ""),
                         (p.obj.split(".", 1)[-1]
                          if p.scope == "TABLE" else ""),
                         c,
@@ -359,49 +360,57 @@ class AuthzPolicy:
                         " exist and that you have permissions to issue a"
                         " GRANT/REVOKE statement."
                     )
+            # stored as db.table: a bare name is the current database's
+            # when the grant runs, not when a later statement is checked
+            db, _, table = obj.rpartition(".")
+            obj = f"{db or spark.catalog.currentDatabase()}.{table}"
         return _Priv(priv, scope, obj, columns, bool(m.group("gopt")))
 
     # -- enforcement (AuthorizationChecker.java:125-145) -------------------
+    @staticmethod
+    def _qualify(spark, name: str) -> tuple[str, str]:
+        """(db, table) of a table name, a bare one in the current db."""
+        db, _, table = name.lower().rpartition(".")
+        return db or spark.catalog.currentDatabase().lower(), table
+
     def check_access(self, spark, q: str, kind: str,
-                     tables: list[str] | None, target: str | None = None) -> None:
+                     tables: list[str], target: str | None = None) -> None:
         """Raise AuthorizationError unless the current user's roles grant
-        the statement's required privileges. No-op when disabled.
-        tables=None means the resolver could not prove the referenced
-        set — conservative: only a database- or server-scope grant
-        authorizes (spelled as a table name no TABLE grant can match)."""
+        the statement's required privileges over the tables it reads.
+        No-op when disabled. A grant covers a table in its own database
+        only: TABLE grants compare database and name, DATABASE grants the
+        table's database."""
         if not self.server_name:
             return
-        if tables is None:
-            tables = ["*unresolved*"]
         privs: list[_Priv] = []
         for r in self._roles_of(self.user):
             privs.extend(self.role_privs.get(r, ()))
 
         def has(levels: tuple[str, ...], table: str) -> bool:
-            bare = table.split(".")[-1].lower()
-            for p in privs:
-                if p.priv not in levels and p.priv != "ALL":
-                    continue
-                if p.scope == "SERVER":
+            held = [p for p in privs if p.priv in levels or p.priv == "ALL"]
+            if any(p.scope == "SERVER" for p in held):
+                return True
+            db, name = self._qualify(spark, table)
+            for p in held:
+                if p.scope == "DATABASE" and p.obj.lower() == db:
                     return True
-                if (p.scope == "DATABASE"
-                        and p.obj.lower()
-                        == spark.catalog.currentDatabase().lower()):
+                if p.scope == "TABLE" and p.obj.lower() == f"{db}.{name}" and (
+                    not p.columns
+                    or self._columns_covered(spark, q, name, p.columns)
+                ):
                     return True
-                if p.scope == "TABLE" and p.obj.split(".")[-1].lower() == bare:
-                    if not p.columns:
-                        return True
-                    if self._columns_covered(spark, q, bare, p.columns):
-                        return True
             return False
+
+        def deny(priv: str, table: str) -> AuthorizationError:
+            return AuthorizationError(
+                f"User '{self.user}' does not have privileges to execute"
+                f" '{priv}' on: {'.'.join(self._qualify(spark, table))}"
+            )
 
         if kind == "SELECT":
             for t in tables:
                 if not has(("SELECT",), t):
-                    raise AuthorizationError(
-                        f"User '{self.user}' does not have privileges to"
-                        f" execute 'SELECT' on: default.{t.split('.')[-1]}"
-                    )
+                    raise deny("SELECT", t)
             return
         if kind in ("INSERT", "UPSERT", "UPDATE", "DELETE", "TRUNCATE",
                     "COMPUTE STATS"):
@@ -409,18 +418,11 @@ class AuthzPolicy:
             # INSERT on an insert target, ALL (only) on anything modified
             levels = ("INSERT",) if kind in ("INSERT", "UPSERT") else ()
             if not has(levels, target):
-                raise AuthorizationError(
-                    f"User '{self.user}' does not have privileges to"
-                    f" execute '{levels[0] if levels else kind}' on:"
-                    f" default.{target.split('.')[-1]}"
-                )
+                raise deny(levels[0] if levels else kind, target)
             # ...and SELECT on every other table the statement reads
             for t in tables:
                 if t.lower() != target.lower() and not has(("SELECT",), t):
-                    raise AuthorizationError(
-                        f"User '{self.user}' does not have privileges to"
-                        f" execute 'SELECT' on: default.{t.split('.')[-1]}"
-                    )
+                    raise deny("SELECT", t)
             return
         if kind in ("CREATE", "DROP"):
             # database-or-server scope ALL (AuthorizeableDb)
@@ -443,20 +445,17 @@ class AuthzPolicy:
         privileges"); the flag selects which predicate."""
         if not self.server_name:
             return True
-        bare = table.split(".")[-1].lower()
-        for r in self._roles_of(self.user):
-            for p in self.role_privs.get(r, ()):
-                if p.scope == "SERVER":
-                    return True
-                if (p.scope == "DATABASE"
-                        and p.obj.lower()
-                        == spark.catalog.currentDatabase().lower()):
-                    return True
-                if (p.scope == "TABLE"
-                        and p.obj.split(".")[-1].lower() == bare
-                        and (include_column_privs or not p.columns)):
-                    return True
-        return False
+        privs = [p for r in self._roles_of(self.user)
+                 for p in self.role_privs.get(r, ())]
+        if any(p.scope == "SERVER" for p in privs):
+            return True
+        db, name = self._qualify(spark, table)
+        return any(
+            p.scope == "DATABASE" and p.obj.lower() == db
+            or p.scope == "TABLE" and p.obj.lower() == f"{db}.{name}"
+            and (include_column_privs or not p.columns)
+            for p in privs
+        )
 
     def visible_db(self, spark, db: str) -> bool:
         """SHOW DATABASES / GetSchemas filtering: a database is listed
@@ -465,17 +464,13 @@ class AuthzPolicy:
         if not self.server_name:
             return True
         db_l = db.lower()
-        current = spark.catalog.currentDatabase().lower()
         for r in self._roles_of(self.user):
             for p in self.role_privs.get(r, ()):
                 if p.scope == "SERVER":
                     return True
                 if p.scope == "DATABASE" and p.obj.lower() == db_l:
                     return True
-                if p.scope == "TABLE" and db_l == (
-                    p.obj.split(".")[0].lower()
-                    if "." in p.obj else current
-                ):
+                if p.scope == "TABLE" and p.obj.split(".")[0].lower() == db_l:
                     return True
         return False
 
@@ -507,10 +502,9 @@ class AuthzPolicy:
             spark, table, include_column_privs=allow_column_privs
         ):
             return
-        bare = table.split(".")[-1].lower()
         raise AuthorizationError(
             f"User '{self.user}' does not have privileges to access:"
-            f" default.{bare}"
+            f" {'.'.join(self._qualify(spark, table))}"
         )
 
     def check_uri_access(self, uri: str) -> None:

@@ -26,7 +26,12 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from impala_spark.parser import ImpalaUnsupportedError, translate, validate_type_def
+from impala_spark.parser import (
+    ImpalaUnsupportedError,
+    from_ref_path,
+    translate,
+    validate_type_def,
+)
 
 WAREHOUSE = os.environ.get("IMPALA_SPARK_WAREHOUSE", "/tmp/impala_spark_warehouse")
 
@@ -879,11 +884,9 @@ def _resolve_modify_target(tgt: str, from_clause: str) -> str:
     name = tgt.strip("`")
     if table_info(name) is not None:
         return name
-    m = re.search(
-        rf"([\w`]+)\s+(?:AS\s+)?{re.escape(name)}\b", from_clause, re.IGNORECASE
-    )
-    if m and table_info(m.group(1).strip("`")) is not None:
-        return m.group(1).strip("`")
+    ref = from_ref_path(name, from_clause)
+    if ref is not None and table_info(ref) is not None:
+        return ref
     raise ValueError(f"'{name}' is not a valid table alias or reference.")
 
 

@@ -11,14 +11,15 @@ UPDATE/DELETE) are routed to Python implementations here / in ddl.py.
 from __future__ import annotations
 
 import re
-from typing import NamedTuple
+from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from impala_spark import ddl
 from impala_spark import functions as ifn
-from impala_spark.parser import ImpalaUnsupportedError, translate
+from impala_spark.parser import ImpalaUnsupportedError, scanned_tables, translate
 from impala_spark.session import register_tables
 
 
@@ -172,7 +173,8 @@ _DDL_EVENTS = {
 _CREATE_TABLE_HEAD_RE = re.compile(r"\s*CREATE\s+TABLE\b", re.IGNORECASE)
 
 
-class Stmt(NamedTuple):
+@dataclass(frozen=True)
+class Stmt:
     """A classified statement (ImpalaEngine.classify)."""
 
     kind: str
@@ -190,6 +192,14 @@ class Stmt(NamedTuple):
     #: the query EXPLAIN plans, when not the source: an UPDATE's rows to
     #: modify (the plan of ``SELECT *`` over its FROM/WHERE part)
     plan_source: str | None = None
+
+    @cached_property
+    def tables(self) -> frozenset[str]:
+        """The tables the statement reads (parser.scanned_tables over
+        its source, else its text), worked out once on first use:
+        authorization, auditing, admission, the size gates and stats
+        routing all read it."""
+        return scanned_tables(self.source or self.text)
 
 
 def _show_surface(m: re.Match) -> str:
@@ -556,7 +566,7 @@ class ImpalaEngine:
         self._pool_service = RequestPoolService(allocation_file, llama_site_file)
         self._admission = AdmissionController(self._pool_service)
 
-    def _admit(self, q: str):
+    def _admit(self, stmt: Stmt):
         """Resolve the session's pool and take an admission slot for a
         query statement. Returns a token to release (None when admission
         is not configured). Planning happens under the slot; the byte
@@ -578,7 +588,7 @@ class ImpalaEngine:
                 f"requested pool '{self._request_pool}'"
             )
         try:
-            estimate = self._gate_input_bytes(q) if self._sf_dir else 0
+            estimate = self._gate_input_bytes(stmt.tables) if self._sf_dir else 0
         except Exception:
             estimate = 0
         return self._admission.admit(pool, user, estimate_bytes=estimate)
@@ -683,30 +693,31 @@ class ImpalaEngine:
             from impala_spark.parser import rewrite_appx_count_distinct
 
             q = rewrite_appx_count_distinct(q)
-        token = self._admit(q)
+        token = self._admit(stmt)
         try:
-            return self._run_query_stmt(q, stmt.kind)
+            return self._run_query_stmt(q, stmt)
         finally:
             if token is not None:
                 token.release()
 
-    def _run_query_stmt(self, q: str, kind: str) -> DataFrame:
-        df, sess = self._query_df(q, kind)
+    def _run_query_stmt(self, q: str, stmt: Stmt) -> DataFrame:
+        df, sess = self._query_df(q, stmt)
         if sess is not self.spark:
             df = _ntz_outputs(df)
         return _boolean_null_outputs(df)
 
-    def _query_df(self, q: str, kind: str) -> tuple[DataFrame, SparkSession]:
-        """The DataFrame a statement of the classified `kind` plans to,
+    def _query_df(self, q: str, stmt: Stmt) -> tuple[DataFrame, SparkSession]:
+        """The DataFrame statement `q` (classified as `stmt`) plans to,
         and the session it plans in — shared by execution and EXPLAIN."""
         # strict-mode analysis always runs on the USER's text first
         sql_text = translate(q, strict=self.strict)
-        rw = self._plan_rewrite(q)
-        sess = self._route_session(q, kind)
+        rw = self._plan_rewrite(q, stmt)
+        sess = self._route_session(stmt)
         # two-pass global rank (r12) composes on top of the distinct
         # rewrite's output when both fire (the rewritten text re-emits
-        # the user's ranking window over the joined group rows)
-        df = self._global_rank_df(rw if rw is not None else q, sess)
+        # the user's ranking window over the joined group rows; it reads
+        # the same tables)
+        df = self._global_rank_df(rw if rw is not None else q, sess, stmt)
         if df is None and rw is None:
             return self._sql_with_impala_errors(sql_text, spark=sess), sess
         if df is None:
@@ -1114,20 +1125,13 @@ class ImpalaEngine:
         — the reference's Frontend registers PrivilegeRequests during
         analysis and fails before planning). No-op unless the engine was
         constructed with server_name. The requirement follows the
-        statement kind; the tables a statement reads come from the
-        rewrite layer's resolver over its source query, with its 'unknown
-        shape' answer treated conservatively (only a database- or
-        server-scope grant authorizes)."""
+        statement kind; the tables a statement reads are the record's
+        (Stmt.tables)."""
         if not self._authz.server_name:
             return
         from impala_spark.authz import AuthorizationError
-        from impala_spark.rewrites import referenced_base_tables
 
         az, kind, target, m = self._authz, stmt.kind, stmt.target, stmt.match
-
-        def reads(text: str) -> list[str] | None:
-            refs = referenced_base_tables(text)
-            return sorted(refs) if refs is not None else None
 
         def deny(obj: str):
             return AuthorizationError(
@@ -1138,15 +1142,14 @@ class ImpalaEngine:
             # statement (Frontend analyzes before planning)
             self._enforce_authz(self.classify(stmt.source.strip()))
         elif kind == "query":
-            az.check_access(self.spark, stmt.text, "SELECT", reads(stmt.source))
+            az.check_access(self.spark, stmt.text, "SELECT", sorted(stmt.tables))
         elif kind in ("insert", "upsert"):
-            az.check_access(
-                self.spark, stmt.text, "INSERT", reads(stmt.source or stmt.text), target)
+            az.check_access(self.spark, stmt.text, "INSERT", sorted(stmt.tables), target)
         elif kind in ("update", "delete"):
             # ALL on the target, SELECT on every other table the source
             # reads (A/ModifyStmt.java:41-59 analyzes a source SELECT)
             az.check_access(
-                self.spark, stmt.text, kind.upper(), reads(stmt.source), target)
+                self.spark, stmt.text, kind.upper(), sorted(stmt.tables), target)
         elif kind == "truncate" and target:
             az.check_access(self.spark, stmt.text, "TRUNCATE", [], target)
         elif kind == "compute_stats":
@@ -1192,8 +1195,8 @@ class ImpalaEngine:
                 # the definition exposes the underlying tables — the user
                 # needs privileges on each (TestShowCreateTable: "...to see
                 # the definition of view")
-                view_refs = referenced_base_tables(self._view_texts.get(bare, ""))
-                for ref in sorted(view_refs or set()):
+                view_refs = scanned_tables(self._view_texts.get(bare, ""))
+                for ref in sorted(view_refs):
                     if not az.visible_table(self.spark, ref, include_column_privs=False):
                         raise AuthorizationError(
                             f"User '{az.user}' does not have privileges to see"
@@ -1217,26 +1220,24 @@ class ImpalaEngine:
         return "VIEW" if name.strip("`").split(".")[-1] in self._views \
             else "TABLE"
 
-    def _select_events(self, q: str) -> set[tuple[str, str, str]]:
-        """SELECT events with view expansion: a view reference records
-        the view AND its underlying objects, transitively
-        (AuditingTest.TestSelect — view_view yields 3 events)."""
-        from impala_spark.rewrites import audit_table_refs
-
+    def _select_events(self, tables: frozenset[str]) -> set[tuple[str, str, str]]:
+        """SELECT events for the tables a statement reads, with view
+        expansion: a view reference records the view AND its underlying
+        objects, transitively (AuditingTest.TestSelect — view_view yields
+        3 events)."""
         events: set[tuple[str, str, str]] = set()
-        pending = [q]
+        pending = list(tables)
         seen_views: set[str] = set()
         while pending:
-            text = pending.pop()
-            for ref in audit_table_refs(text):
-                bare = ref.split(".")[-1]
-                if bare in self._views:
-                    events.add((self._qual(ref), "VIEW", "SELECT"))
-                    if bare not in seen_views:
-                        seen_views.add(bare)
-                        pending.append(self._view_texts.get(bare, ""))
-                else:
-                    events.add((self._qual(ref), "TABLE", "SELECT"))
+            ref = pending.pop()
+            bare = ref.split(".")[-1]
+            if bare in self._views:
+                events.add((self._qual(ref), "VIEW", "SELECT"))
+                if bare not in seen_views:
+                    seen_views.add(bare)
+                    pending.extend(scanned_tables(self._view_texts.get(bare, "")))
+            else:
+                events.add((self._qual(ref), "TABLE", "SELECT"))
         return events
 
     def access_events(self, q: str) -> set[tuple[str, str, str]]:
@@ -1268,7 +1269,7 @@ class ImpalaEngine:
         if stmt.kind == "explain":
             return self.access_events(stmt.source)
         kind, t, g = stmt.kind, stmt.target, stmt.match.groupdict()
-        events = self._select_events(stmt.source) if stmt.source else set()
+        events = self._select_events(stmt.tables)
         if not t:
             return events
         if kind == "use":
@@ -1306,25 +1307,21 @@ class ImpalaEngine:
             return events
         return set()
 
-    def _route_session(self, q: str, kind: str):
-        """Pick the session a statement of the classified `kind` plans
-        in; only plain queries (kind "query") ever leave the default.
+    def _route_session(self, stmt: Stmt):
+        """Pick the session a classified statement plans in; only plain
+        queries (kind "query") ever leave the default.
         After COMPUTE STATS promoted every base table a SELECT reads, the
         statement plans in the stats session — CBO + catalog stats
         reproduce the broadcast shapes the registry otherwise needs hand
         hints for (the reference's stats-costed
-        DistributedPlanner.java:420-536 decision). Anything the scanner
-        can't prove (views, engine-DDL tables, qualified names, derived
-        tables) keeps the default session and Catalyst's stats-less
+        DistributedPlanner.java:420-536 decision). A statement reading a
+        view, a stale or shadowed engine table, a qualified name or no
+        table at all keeps the default session and Catalyst's stats-less
         planning."""
-        if kind != "query" or not self._stats_tables or self._sf_dir is None:
+        if stmt.kind != "query" or not self._stats_tables or self._sf_dir is None \
+                or not stmt.tables:
             return self.spark
-        from impala_spark.rewrites import referenced_base_tables
-
-        refs = referenced_base_tables(q)
-        if not refs:
-            return self.spark
-        for r in refs:
+        for r in stmt.tables:
             if r not in self._stats_tables or r in self._views:
                 return self.spark
             if r in self._stats_versions:
@@ -1368,7 +1365,7 @@ class ImpalaEngine:
             )
             synced.add(name)
 
-    def _plan_rewrite(self, q: str) -> str | None:
+    def _plan_rewrite(self, q: str, stmt: Stmt) -> str | None:
         """Input-size-gated plan rewrites on plain user SQL — the engine
         analog of the reference's stats-driven aggregate planning
         (A/AggregateInfo.java:42-60 two-phase DISTINCT). Only fires above
@@ -1380,13 +1377,13 @@ class ImpalaEngine:
             two_level_distinct,
         )
 
-        if self._gate_input_bytes(q) < TWO_LEVEL_DISTINCT_MIN_INPUT_BYTES:
+        if self._gate_input_bytes(stmt.tables) < TWO_LEVEL_DISTINCT_MIN_INPUT_BYTES:
             return None
         # session UDAs (CREATE AGGREGATE FUNCTION) must be recognized as
         # aggregates — an unknown aggregate name would read as a scalar fn
         return two_level_distinct(q, extra_aggs=frozenset(self._functions))
 
-    def _global_rank_df(self, q: str, sess) -> DataFrame | None:
+    def _global_rank_df(self, q: str, sess, stmt: Stmt) -> DataFrame | None:
         """Two-pass global rank (r12): a statement whose select list
         carries a single GLOBAL ranking window executes as
         operators.global_rank — range exchange + slice-local window +
@@ -1404,7 +1401,7 @@ class ImpalaEngine:
             return None
         import impala_spark.rewrites as _rw_mod
 
-        if self._gate_input_bytes(q) < _rw_mod.GLOBAL_RANK_MIN_INPUT_BYTES:
+        if self._gate_input_bytes(stmt.tables) < _rw_mod.GLOBAL_RANK_MIN_INPUT_BYTES:
             return None
         from pyspark.sql import functions as F
 
@@ -1459,17 +1456,17 @@ class ImpalaEngine:
             df = df.limit(plan.limit)
         return df
 
-    def _gate_input_bytes(self, q: str) -> int:
-        """Input-size estimate for the size-gated rewrites, preferring
-        catalog stats over file sizes (r10 verdict task #5 — the
-        reference costs every such decision from COMPUTE STATS numbers):
-        per referenced table, catalog sizeInBytes when promoted, the
-        table's own files when its path is known (fixture parquet /
-        managed warehouse dir), and the whole fixture dir only as the
-        conservative unknown-shape fallback."""
+    def _gate_input_bytes(self, tables: frozenset[str]) -> int:
+        """Input-size estimate of a statement reading `tables` for the
+        size-gated rewrites, preferring catalog stats over file sizes
+        (r10 verdict task #5 — the reference costs every such decision
+        from COMPUTE STATS numbers): per table, catalog sizeInBytes when
+        promoted, the table's own files when its path is known (fixture
+        parquet / managed warehouse dir), and the whole fixture dir only
+        as the conservative fallback (no table, a view, an unknown
+        name)."""
         import os as _os
 
-        from impala_spark.rewrites import referenced_base_tables
         from impala_spark.session import (
             TABLES,
             _dir_total_bytes,
@@ -1477,11 +1474,10 @@ class ImpalaEngine:
         )
 
         fallback = _dir_total_bytes(self._sf_dir)
-        refs = referenced_base_tables(q)
-        if not refs:
+        if not tables:
             return fallback
         total = 0
-        for r in refs:
+        for r in tables:
             b = None
             if r in self._stats_tables and r not in self._views:
                 b = table_stats_bytes(
@@ -2456,7 +2452,7 @@ class ImpalaEngine:
         # and above the distinct-rewrite gate the two-phase join plan the
         # statement will actually get (the reference's EXPLAIN always
         # reflects the executed plan).
-        df, _sess = self._query_df(query, stmt.kind)
+        df, _sess = self._query_df(query, stmt)
         qe = df._jdf.queryExecution()
         plan = qe.executedPlan().toString()
         # Cardinality/size annotations (planner/PlanNode.getExplainString

@@ -447,6 +447,10 @@ def _rewrite_iregexp(tokens: list[Token]) -> list[Token]:
 # suppression — we drop it with a comment (Catalyst+AQE own join order).
 # ---------------------------------------------------------------------------
 
+#: Impala join hint -> the Spark strategy hint it maps to
+_JOIN_HINTS = {"BROADCAST": "BROADCAST", "SHUFFLE": "SHUFFLE_HASH"}
+
+
 def _rewrite_hints(tokens: list[Token]) -> list[Token]:
     # (out-index of the ENCLOSING block's SELECT, Spark hint body): a hint
     # on a table must land on the SELECT of the block that CONTAINS it —
@@ -471,17 +475,20 @@ def _rewrite_hints(tokens: list[Token]) -> list[Token]:
             select_stack.append((len(out), depth))
         last_select_idx = select_stack[-1][0] if select_stack else -1
         if t.kind == "op" and t.text == "[":
-            j = _significant(tokens, i)
-            k = _significant(tokens, j) if j != -1 else -1
-            if (
-                j != -1
-                and k != -1
-                and tokens[j].kind == "word"
-                and tokens[j].upper in ("BROADCAST", "SHUFFLE")
-                and tokens[k].kind == "op"
-                and tokens[k].text == "]"
-            ):
-                hint_kind = tokens[j].upper
+            # a hint list of join hint words, each mapped
+            words, k = [], i
+            while True:
+                j = _significant(tokens, k)
+                k = _significant(tokens, j) if j != -1 else -1
+                if k == -1 or tokens[j].kind != "word" \
+                        or tokens[j].upper not in _JOIN_HINTS \
+                        or tokens[k].kind != "op" or tokens[k].text not in (",", "]"):
+                    words = []
+                    break
+                words.append(_JOIN_HINTS[tokens[j].upper])
+                if tokens[k].text == "]":
+                    break
+            if words:
                 m = _significant(tokens, k)
                 target = None
                 if m != -1 and tokens[m].kind in ("word", "bident"):
@@ -506,8 +513,7 @@ def _rewrite_hints(tokens: list[Token]) -> list[Token]:
                     ):
                         target = tokens[a].text.strip("`")
                 if target:
-                    spark_hint = "BROADCAST" if hint_kind == "BROADCAST" else "SHUFFLE_HASH"
-                    hints.append((last_select_idx, f"{spark_hint}({target})"))
+                    hints.extend((last_select_idx, f"{w}({target})") for w in words)
                 i = k + 1  # drop the [hint] tokens
                 continue
         if t.kind == "word" and t.upper == "STRAIGHT_JOIN":
@@ -1164,121 +1170,20 @@ def _rewrite_one_order_by(tokens: list[Token], by_idx: int) -> int:
 # shuffle, so the rewrite preserves the SubplanNode's locality at scale.
 # ---------------------------------------------------------------------------
 
-_FROM_CLAUSE_WORDS = {
-    "WHERE", "GROUP", "ORDER", "LIMIT", "HAVING", "UNION", "JOIN",
-    "LEFT", "RIGHT", "FULL", "INNER", "CROSS", "ON", "LATERAL", "USING",
-}
-
-
-def _parse_from_item(out: list[Token], j: int, aliases: set[str]):
-    """Parse one FROM item starting at significant index j.
-
-    Returns (kind, end_idx, info): kind is 'collection' (info =
-    (base_idx, col_idx, alias_idx)) when the item is `alias.col calias`
-    with a KNOWN alias base, else 'table'. Registers the item's alias
-    (only the alias — a db qualifier must never count as an alias, or
-    `FROM mydb.t1 x, mydb.t2 y` would corrupt into a LATERAL VIEW).
-    """
-    t = out[j]
-    if t.kind == "op" and t.text == "(":
-        # derived table: skip the balanced group, then take its alias
-        close = _matching_paren(out, j)
-        nxt = _significant(out, close)
-        if nxt != -1 and out[nxt].kind == "word" and out[nxt].upper == "AS":
-            nxt = _significant(out, nxt)
-        if nxt != -1 and out[nxt].kind in ("word", "bident") and out[nxt].upper not in _FROM_CLAUSE_WORDS:
-            aliases.add(out[nxt].text.strip("`").lower())
-            return "table", nxt, None
-        return "table", close, None
-    if t.kind not in ("word", "bident"):
-        return "table", j, None
-    first = t
-    dot = _significant(out, j)
-    is_dotted = dot != -1 and out[dot].kind == "op" and out[dot].text == "."
-    col_idx = _significant(out, dot) if is_dotted else -1
-    end = col_idx if is_dotted and col_idx != -1 else j
-    # optional [AS] alias
-    nxt = _significant(out, end)
-    alias_idx = -1
-    if nxt != -1 and out[nxt].kind == "word" and out[nxt].upper == "AS":
-        alias_idx = _significant(out, nxt)
-    elif (
-        nxt != -1 and out[nxt].kind in ("word", "bident")
-        and out[nxt].upper not in _FROM_CLAUSE_WORDS
-    ):
-        alias_idx = nxt
-    if is_dotted and col_idx != -1 and first.text.strip("`").lower() in aliases:
-        # collection ref over a previously-bound alias
-        if alias_idx != -1:
-            aliases.add(out[alias_idx].text.strip("`").lower())
-            return "collection", alias_idx, (j, col_idx, alias_idx)
-        return "table", end, None
-    # plain or db-qualified table: register only its binding name
-    if alias_idx != -1:
-        aliases.add(out[alias_idx].text.strip("`").lower())
-        return "table", alias_idx, None
-    if not is_dotted:
-        aliases.add(first.text.strip("`").lower())
-    else:
-        aliases.add(out[col_idx].text.strip("`").lower())  # unaliased db.tbl binds as tbl
-    return "table", end, None
-
-
-def _rewrite_collection_refs(tokens: list[Token]) -> list[Token]:
+def _rewrite_collection_refs(tokens: list[Token], froms: list[_From]) -> list[Token]:
+    """Plan each collection ref of the FROM model `froms` (over `tokens`)
+    as a LATERAL VIEW explode: `, a.col c` -> ` LATERAL VIEW
+    explode(a.col) _exp_c AS c `."""
     out = list(tokens)
-    i = 0
-    while i < len(out):
-        t = out[i]
-        if not (t.kind == "word" and t.upper == "FROM"):
-            i += 1
-            continue
-        aliases: set[str] = set()
-        # parse the first item (binds the first alias), then walk the clause
-        j = _significant(out, i)
-        if j != -1 and not (out[j].kind == "word" and out[j].upper in _FROM_CLAUSE_WORDS):
-            _kind, j, _info = _parse_from_item(out, j, aliases)
-            j = _significant(out, j)
-        while j != -1:
-            tj = out[j]
-            if tj.kind == "word" and tj.upper in (_FROM_CLAUSE_WORDS - {
-                "JOIN", "LEFT", "RIGHT", "FULL", "INNER", "CROSS", "ON", "LATERAL", "USING"
-            }):
-                break
-            if tj.kind == "op" and tj.text == ")":
-                break  # end of an enclosing subquery's FROM
-            if tj.kind == "op" and tj.text == "(":
-                j = _significant(out, _matching_paren(out, j))  # ON (...) etc.
-                continue
-            if tj.kind == "word" and tj.upper == "JOIN":
-                nxt = _significant(out, j)  # the joined item binds an alias too
-                if nxt != -1 and not (
-                    out[nxt].kind == "word" and out[nxt].upper in _FROM_CLAUSE_WORDS
-                ):
-                    _kind, j, _info = _parse_from_item(out, nxt, aliases)
-                j = _significant(out, j)
-                continue
-            if tj.kind == "op" and tj.text == ",":
-                start = _significant(out, j)
-                if start == -1:
-                    break
-                kind, end, info = _parse_from_item(out, start, aliases)
-                if kind == "collection":
-                    a1, col, calias_idx = info
-                    base = out[a1].text.strip("`")
-                    coln = out[col].text.strip("`")
-                    calias = out[calias_idx].text.strip("`")
-                    repl = Token(
-                        "word",
-                        f" LATERAL VIEW explode({base}.{coln}) _exp_{calias} AS {calias} ",
-                    )
-                    out[j:calias_idx + 1] = [repl]
-                    j = out.index(repl)
-                else:
-                    j = end
-                j = _significant(out, j)
-                continue
-            j = _significant(out, j)
-        i += 1
+    refs = [src for f in froms for src in _collection_refs(f)]
+    for src in sorted(refs, key=lambda r: r.lo, reverse=True):  # indices hold
+        comma = _significant(tokens, src.lo, -1)
+        base, coln = src.raw
+        calias = tokens[src.alias_idx].text.strip("`")
+        out[comma:src.alias_idx + 1] = [Token(
+            "word",
+            f" LATERAL VIEW explode({base}.{coln}) _exp_{calias} AS {calias} ",
+        )]
     return out
 
 
@@ -5859,7 +5764,7 @@ _FILE_FORMATS = {
 
 def _check_strict_grammar_extras(ctx: _Analysis) -> None:
     """Reference ParserError statements Spark's laxer grammar accepts
-    (tools/grammar_sweep.py's accepted-negatives tail, r5 verdict missing
+    (the reference ParserTest negatives Spark parses, r5 verdict missing
     #3). All shapes here are ParserErrors in sql-parser.cup; Impala has no
     fine-grained message for them (generic 'Syntax error'), so the texts
     below name the violated rule instead."""
@@ -7055,6 +6960,22 @@ def _walk_from(tokens: list[Token], at: int, end: int) -> _From:
     return f
 
 
+def _collection_refs(f: _From) -> list[_Source]:
+    """The refs of FROM clause f that are collection paths: comma-joined
+    `alias.col c` items, aliased, whose first part is a ref name
+    registered earlier in the same clause. The translator plans exactly
+    these as LATERAL VIEW explode; every other path reaches Spark as
+    `db.table`, so _Analysis.scans counts it as a table read."""
+    out, names = [], set()
+    for k, src in enumerate(f.sources):
+        if k and src.join_idx == -1 and src.alias and len(src.raw) == 2 \
+                and src.parts[0] in names:
+            out.append(src)
+        if src.name:
+            names.add(src.name)
+    return out
+
+
 #: the statement heads the DDL checks analyze
 _DDL_HEADS = frozenset({"CREATE", "ALTER", "DROP", "TRUNCATE"})
 #: depth-0 words opening a DDL clause (the clause index keys); ROW,
@@ -7172,7 +7093,7 @@ class _Analysis:
     `select udf()` pins at :1870-1872 precede the catalog_.addFunction
     calls at :1877-1895), so a faithful replay of the earlier statements
     sees the PRE-registration catalog. frozenset of (db, name); empty =
-    fully-registered state (every non-sweep caller)."""
+    fully-registered state (every caller but such a replay)."""
 
     def __init__(
         self,
@@ -7401,8 +7322,8 @@ class _Analysis:
                 ):
                     end = k
                     break
-                if tk.kind == "word" and tk.upper == "FROM" \
-                        and from_idx == n:
+                # (`IS [NOT] DISTINCT FROM` is an operator: not in froms)
+                if k in froms and from_idx == n:
                     from_idx = k
             blocks.append(_Block(
                 idx, min(from_idx, end), end, d0, None,
@@ -7415,6 +7336,25 @@ class _Analysis:
                 key=lambda j: blocks[j].sel, default=None,
             )
         return blocks
+
+    @cached_property
+    def scans(self) -> frozenset[str]:
+        """The tables the statement reads: the path refs of every SELECT
+        block's FROM clause, lower-cased, a `db.table` ref as written. A
+        WITH view or inline view is no table (its body's blocks are
+        walked in turn), nor is a collection path (_collection_refs, the
+        translator's rule). Needs no catalog: authorization, auditing,
+        admission and plan routing ask it before planning."""
+        out: set[str] = set()
+        for b in self.blocks:
+            if b.from_clause is None:
+                continue
+            nested = _collection_refs(b.from_clause)
+            out.update(
+                ".".join(src.parts[:2]) for src in b.from_clause.sources
+                if src.kind in ("path", "table") and src not in nested
+            )
+        return frozenset(out)
 
     def ancestors(self, b: _Block) -> list[_Block]:
         out = []
@@ -7539,6 +7479,23 @@ class _Analysis:
             else:
                 amap[src.name] = src.table
         return amap, unknown, names
+
+
+def scanned_tables(sql: str) -> frozenset[str]:
+    """The tables statement text `sql` reads (_Analysis.scans)."""
+    return _Analysis(tokenize(sql)).scans
+
+
+def from_ref_path(name: str, from_clause: str) -> str | None:
+    """The path, as written, of the ref that registers `name` (its
+    explicit or implicit alias) in the FROM clause body `from_clause`:
+    how a join-form UPDATE/DELETE names its target (ModifyStmt.java:
+    116-130). None when no table ref registers it."""
+    ctx = _Analysis(tokenize(f"SELECT * FROM {from_clause}"))
+    f, name = ctx.blocks[0].from_clause, name.strip("`").lower()
+    return next((
+        ".".join(s.raw) for s in f.sources if s.raw and s.name == name
+    ), None)
 
 
 def _split_type_args(inner: str) -> list[str]:
@@ -8567,24 +8524,25 @@ def _ddl_create_table(ctx: _Analysis, d: _Ddl) -> None:
     tokens, sig, word = ctx.tokens, ctx.sig, ctx.word
     if _ddl_target(ctx, d):
         _ddl_create_exists(ctx, d)
-        src = d.like
-        if src is not None and src.parts[0] == "functional_kudu":
-            raise ImpalaUnsupportedError(
-                "Cloning a Kudu table using CREATE TABLE LIKE is not "
-                "supported."
-            )
-        if src is not None and len(src.parts) >= 2 \
-                and not ctx.known_table(src.parts[0]) \
-                and not _is_known_test_db(src.parts[0]):
-            raise ImpalaUnsupportedError(
-                f"Database does not exist: {src.parts[0]}"
-            )
-        if src is not None and not ctx.known_table(src.parts[-1]):
-            raise ImpalaUnsupportedError(
-                "Table does not exist: "
-                f"{src.parts[0] if len(src.parts) >= 2 else 'default'}."
-                f"{src.parts[-1]}"
-            )
+    # the LIKE source resolves whether or not the target exists
+    src = d.like
+    if src is not None and src.parts[0] == "functional_kudu":
+        raise ImpalaUnsupportedError(
+            "Cloning a Kudu table using CREATE TABLE LIKE is not "
+            "supported."
+        )
+    if src is not None and len(src.parts) >= 2 \
+            and not ctx.known_table(src.parts[0]) \
+            and not _is_known_test_db(src.parts[0]):
+        raise ImpalaUnsupportedError(
+            f"Database does not exist: {src.parts[0]}"
+        )
+    if src is not None and not ctx.known_table(src.parts[-1]):
+        raise ImpalaUnsupportedError(
+            "Table does not exist: "
+            f"{src.parts[0] if len(src.parts) >= 2 else 'default'}."
+            f"{src.parts[-1]}"
+        )
     _ddl_storage(ctx, d)
     stored = d.clauses.get("STORED", -1)
     fmt = word(stored + 2) if stored != -1 and word(stored + 1) == "AS" \
@@ -13245,7 +13203,7 @@ def _translate_checked(
         _check_strict_where_requires_from(ctx)
         _check_strict_between_subqueries(ctx)
         _check_strict_subquery_columns(ctx)
-    tokens = _rewrite_collection_refs(tokens)
+    tokens = _rewrite_collection_refs(tokens, (ctx or _Analysis(tokens)).froms)
     tokens = _rewrite_bool_aliases(tokens)
     tokens = _rewrite_iregexp(tokens)
     tokens = _rewrite_hints(tokens)

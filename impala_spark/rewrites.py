@@ -404,176 +404,6 @@ def _rewrite_region(
     return "".join(out)
 
 
-#: words that terminate a FROM item list / can't be a table alias
-_FROM_STOP_WORDS = frozenset({
-    "where", "group", "order", "limit", "offset", "having", "join",
-    "inner", "left", "right", "full", "cross", "semi", "anti", "on",
-    "using", "union", "lateral", "straight_join", "when", "then",
-    "else", "end", "and", "or", "not", "select",
-})
-
-
-def audit_table_refs(sql: str) -> set[str]:
-    """Lenient variant of referenced_base_tables for the auditing surface
-    (engine.access_events): best-effort instead of conservative. Derived
-    tables don't bail — the linear scan reaches their inner FROMs anyway;
-    db-qualified names keep their first two parts (a longer chain is a
-    nested-collection path, audited as the enclosing table); unparseable
-    spots are skipped rather than poisoning the whole answer. CTE names
-    are excluded (the reference registers no event for with-clause
-    views, AuditingTest.TestWithClause)."""
-    try:
-        tokens = tokenize(sql)
-    except Exception:
-        return set()
-    sig = _sig(tokens, 0, len(tokens))
-    ctes: set[str] = set()
-    for a, b, c in zip(sig, sig[1:], sig[2:]):
-        if (
-            tokens[a].kind in ("word", "bident")
-            and tokens[b].upper == "AS"
-            and tokens[c].kind == "op" and tokens[c].text == "("
-        ):
-            ctes.add(tokens[a].text.strip("`").lower())
-    refs: set[str] = set()
-    aliases: set[str] = set()
-    i = 0
-    while i < len(sig):
-        t = tokens[sig[i]]
-        if t.kind == "word" and t.upper in ("FROM", "JOIN"):
-            j = i + 1
-            while j < len(sig):
-                tj = tokens[sig[j]]
-                if tj.kind == "op" and tj.text == "(":
-                    break  # derived table: the scan reaches its FROMs
-                if tj.kind not in ("word", "bident"):
-                    break
-                parts = [tj.text.strip("`").lower()]
-                k = j
-                while (
-                    k + 1 < len(sig)
-                    and tokens[sig[k + 1]].kind == "op"
-                    and tokens[sig[k + 1]].text == "."
-                ):
-                    if k + 2 >= len(sig) or tokens[sig[k + 2]].kind not in (
-                        "word", "bident",
-                    ):
-                        break
-                    parts.append(tokens[sig[k + 2]].text.strip("`").lower())
-                    k += 2
-                if parts[0] in _FROM_STOP_WORDS:
-                    break
-                # keep db.table; a longer chain is a collection path
-                refs.add(".".join(parts[:2]))
-                k += 1
-                if k < len(sig) and tokens[sig[k]].upper == "AS":
-                    k += 1
-                if (
-                    k < len(sig)
-                    and tokens[sig[k]].kind in ("word", "bident")
-                    and tokens[sig[k]].text.strip("`").lower()
-                    not in _FROM_STOP_WORDS
-                ):
-                    aliases.add(tokens[sig[k]].text.strip("`").lower())
-                    k += 1
-                if (
-                    k < len(sig)
-                    and tokens[sig[k]].kind == "op"
-                    and tokens[sig[k]].text == ","
-                ):
-                    j = k + 1
-                    continue
-                i = k - 1
-                break
-        i += 1
-    # a FROM item that is a registered alias of another item is a
-    # correlated re-reference (`... from t a, a.col_path`), not a table
-    return {r for r in refs if r not in ctes
-            and r.split(".")[0] not in aliases}
-
-
-def referenced_base_tables(sql: str) -> set[str] | None:
-    """Lower-cased base-table names a statement reads FROM — CTE names
-    excluded, subquery FROMs included. Returns None whenever the shape
-    is not provably simple (qualified names, nested-collection paths,
-    anything surprising): callers must treat None as 'unknown' and take
-    the conservative path."""
-    try:
-        tokens = tokenize(sql)
-    except Exception:
-        return None
-    sig = _sig(tokens, 0, len(tokens))
-    ctes: set[str] = set()
-    # CTE names: every `ident AS (` (the only place that shape occurs in
-    # this grammar — Impala 2.7 has no named-WINDOW clause)
-    for a, b, c in zip(sig, sig[1:], sig[2:]):
-        if (
-            tokens[a].kind in ("word", "bident")
-            and tokens[b].upper == "AS"
-            and tokens[c].kind == "op" and tokens[c].text == "("
-        ):
-            ctes.add(tokens[a].text.strip("`").lower())
-    refs: set[str] = set()
-    i = 0
-    while i < len(sig):
-        t = tokens[sig[i]]
-        if t.kind == "word" and t.upper in ("FROM", "JOIN"):
-            j = i + 1
-            while True:
-                if j >= len(sig):
-                    break
-                tj = tokens[sig[j]]
-                if tj.kind == "op" and tj.text == "(":
-                    # derived table in FROM position: a trailing
-                    # `, table` after it would escape this scanner —
-                    # unknown is the only safe answer
-                    return None
-                if tj.kind not in ("word", "bident"):
-                    return None
-                # identifier chain
-                parts = [tj.text.strip("`").lower()]
-                k = j
-                while (
-                    k + 1 < len(sig)
-                    and tokens[sig[k + 1]].kind == "op"
-                    and tokens[sig[k + 1]].text == "."
-                ):
-                    if k + 2 >= len(sig) or tokens[sig[k + 2]].kind not in (
-                        "word", "bident",
-                    ):
-                        return None
-                    parts.append(tokens[sig[k + 2]].text.strip("`").lower())
-                    k += 2
-                if len(parts) != 1:
-                    return None  # db-qualified / collection path: unknown
-                if parts[0] in _FROM_STOP_WORDS:
-                    return None  # malformed for this scanner
-                refs.add(parts[0])
-                # skip optional [AS] alias
-                k += 1
-                if k < len(sig) and tokens[sig[k]].upper == "AS":
-                    k += 1
-                if (
-                    k < len(sig)
-                    and tokens[sig[k]].kind in ("word", "bident")
-                    and tokens[sig[k]].text.strip("`").lower()
-                    not in _FROM_STOP_WORDS
-                ):
-                    k += 1  # alias
-                # comma-separated FROM list continues the item loop
-                if (
-                    k < len(sig)
-                    and tokens[sig[k]].kind == "op"
-                    and tokens[sig[k]].text == ","
-                ):
-                    j = k + 1
-                    continue
-                i = k - 1
-                break
-        i += 1
-    return refs - ctes
-
-
 def _split_with_prefix(
     sql: str, reserved: tuple[str, ...] = ("__tla", "__t")
 ) -> tuple[str, str] | None:

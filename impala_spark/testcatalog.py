@@ -4,10 +4,10 @@ functional dataset the reference's analyzer tests run against
 T/testutil/ImpaladTestCatalog.java; the layouts themselves are the
 long-public Impala/Hive functional test schema — alltypes and friends).
 
-Used by tools/analyzer_sweep.py to bind translate(strict=True,
-schema=...) so the catalog-dependent half of the reference's
-AnalysisError pins (column-typed operands) can be replayed, and by
-tests as the canonical schema fixture.
+Tests bind translate(strict=True, schema=..., catalog=...) to it so the
+catalog-dependent half of the reference's AnalysisError pins
+(column-typed operands) replays; the strict corpus
+(tests/test_strict_corpus.py) freezes those verdicts.
 """
 
 from __future__ import annotations

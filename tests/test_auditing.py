@@ -326,3 +326,27 @@ def test_upsert_records_select_and_insert(eng):
         "upsert into nation select * from region") == {
         ev("default.region", "TABLE", "SELECT"),
         ev("default.nation", "TABLE", "INSERT")}
+
+
+def test_select_tables_come_from_the_from_model(eng):
+    """Exactly the tables each statement reads: no column after a FROM
+    inside EXTRACT or IS NOT DISTINCT FROM, the table after a join hint,
+    both sides of an inline-view join (comma form too)."""
+    orders = ev("default.orders", "TABLE", "SELECT")
+    customer = ev("default.customer", "TABLE", "SELECT")
+    for sql, want in (
+        ("SELECT EXTRACT(YEAR FROM o_orderdate) AS y FROM orders LIMIT 1",
+         {orders}),
+        ("SELECT count(*) FROM orders"
+         " WHERE o_custkey IS NOT DISTINCT FROM o_orderkey", {orders}),
+        ("SELECT count(*) FROM customer c JOIN [shuffle] orders o"
+         " ON c.c_custkey = o.o_custkey", {customer, orders}),
+        ("SELECT count(*) FROM (SELECT * FROM customer) c JOIN orders o"
+         " ON c.c_custkey = o.o_custkey", {customer, orders}),
+        ("SELECT count(*) FROM (SELECT * FROM customer) c, orders o"
+         " WHERE c.c_custkey = o.o_custkey", {customer, orders}),
+        # a path over an alias that Spark reads as db.table
+        ("SELECT * FROM orders otherdb JOIN otherdb.lineitem l ON TRUE",
+         {orders, ev("otherdb.lineitem", "TABLE", "SELECT")}),
+    ):
+        assert eng.access_events(sql) == want, sql

@@ -174,7 +174,108 @@ class TestPrivilegeSpec:
         eng.sql("DROP ROLE ps3")
 
 
+#: statements reading only orders and customer through a FROM inside
+#: EXTRACT or IS NOT DISTINCT FROM, a join hint and an inline view
+FROM_MODEL_PROBES = (
+    "SELECT EXTRACT(YEAR FROM o_orderdate) AS y FROM orders LIMIT 1",
+    "SELECT count(*) FROM orders WHERE o_custkey IS NOT DISTINCT FROM o_orderkey",
+    "SELECT count(*) FROM customer c JOIN [shuffle] orders o"
+    " ON c.c_custkey = o.o_custkey",
+    "SELECT count(*) FROM (SELECT * FROM customer) c JOIN orders o"
+    " ON c.c_custkey = o.o_custkey",
+)
+
+
+def _reader(spark, role: str, *grants: str) -> ImpalaEngine:
+    """An engine for 'carol', whose role holds only `grants`."""
+    e = ImpalaEngine(spark, sf_dir=SF, server_name="server1", user="carol")
+    e._authz.user_groups = {"carol": {"readers"}}
+    e.sql(f"CREATE ROLE {role}")
+    e.sql(f"GRANT ROLE {role} TO GROUP readers")
+    for g in grants:
+        e.sql(f"GRANT SELECT ON {g} TO ROLE {role}")
+    return e
+
+
 class TestEnforcement:
+    @pytest.mark.parametrize("sql", FROM_MODEL_PROBES)
+    def test_tables_read_come_from_the_from_model(self, spark, sql):
+        e = _reader(spark, "rl_probe", "TABLE orders", "TABLE customer")
+        try:
+            assert e.sql(sql).collect()
+        finally:
+            e.sql("DROP ROLE rl_probe")
+
+    def test_table_grant_covers_its_own_database_only(self, spark):
+        e = _reader(spark, "rl_qual", "TABLE default.orders")
+        try:
+            assert e.sql("SELECT count(*) FROM orders").collect()
+            for sql in ("SELECT count(*) FROM otherdb.orders",
+                        "SELECT count(*) FROM orders o, otherdb.orders p"):
+                with pytest.raises(
+                    ImpalaAnalysisError,
+                    match="User 'carol' does not have privileges to execute"
+                          " 'SELECT' on: otherdb.orders$",
+                ):
+                    e.sql(sql)
+            with pytest.raises(ImpalaAnalysisError,
+                               match="to access: otherdb.orders$"):
+                e.sql("DESCRIBE otherdb.orders")
+            # a DATABASE grant covers its own database only, too
+            e.sql("GRANT SELECT ON DATABASE default TO ROLE rl_qual")
+            with pytest.raises(ImpalaAnalysisError, match="on: otherdb.orders$"):
+                e.sql("SELECT count(*) FROM otherdb.orders")
+        finally:
+            e.sql("DROP ROLE rl_qual")
+
+    @pytest.mark.parametrize("sql, table", (
+        ("SELECT * FROM orders otherdb JOIN otherdb.orders s ON TRUE",
+         "otherdb.orders"),
+        ("SELECT * FROM orders otherdb, otherdb.orders", "otherdb.orders"),
+        ("SELECT v.* FROM orders otherdb, (SELECT * FROM otherdb.orders) v",
+         "otherdb.orders"),
+        ("SELECT * FROM customer `default` JOIN `default`.lineitem l ON TRUE",
+         "default.lineitem"),
+    ))
+    def test_path_over_an_alias_is_a_table_read(self, spark, sql, table):
+        """A two-part path whose first part is an alias in scope reaches
+        Spark as db.table unless it is the comma-joined, aliased
+        collection form: the table it names needs its own grant."""
+        e = _reader(spark, "rl_path", "TABLE orders", "TABLE customer")
+        try:
+            with pytest.raises(
+                ImpalaAnalysisError,
+                match=f"execute 'SELECT' on: {table}$",
+            ):
+                e.sql(sql)
+        finally:
+            e.sql("DROP ROLE rl_path")
+
+    def test_bare_table_grant_names_the_grant_time_database(self, spark):
+        """GRANT ... ON TABLE orders covers default.orders, the table it
+        named when it ran, also after USE of another database."""
+        spark.sql("CREATE DATABASE IF NOT EXISTS authz_other")
+        # authz_other.region makes the database visible to USE
+        e = _reader(spark, "rl_use", "TABLE orders", "TABLE authz_other.region")
+        try:
+            e.sql("USE authz_other")
+            for sql in ("SELECT count(*) FROM orders",
+                        "SELECT count(*) FROM authz_other.orders"):
+                with pytest.raises(
+                    ImpalaAnalysisError,
+                    match="execute 'SELECT' on: authz_other.orders$",
+                ):
+                    e.sql(sql)
+            e.sql("USE default")
+            assert e.sql("SELECT count(*) FROM orders").collect()
+            assert [(r.database, r.table) for r in e.sql(
+                "SHOW GRANT ROLE rl_use ON TABLE orders").collect()
+            ] == [("default", "orders")]
+        finally:
+            spark.catalog.setCurrentDatabase("default")
+            e.sql("DROP ROLE rl_use")
+            spark.sql("DROP DATABASE IF EXISTS authz_other CASCADE")
+
     def test_select_enforcement_lifecycle(self, spark):
         e = ImpalaEngine(spark, sf_dir=SF, server_name="server1", user="carol")
         e._authz.user_groups = {"carol": {"readers"}}

@@ -96,6 +96,16 @@ def test_broadcast_hint_on_qualified_ref_plans_broadcast_join(engine):
         engine.spark.catalog.dropGlobalTempView("hint_nation")
 
 
+def test_join_hint_list_maps_every_word(engine):
+    """A hint list maps each of its words like the one-word forms: the
+    statement plans instead of reaching Spark with the brackets."""
+    n = engine.sql(
+        "SELECT count(*) AS n FROM customer c JOIN [shuffle,broadcast] "
+        "nation n ON c.c_nationkey = n.n_nationkey"
+    ).first().n
+    assert n == engine.sql("SELECT count(*) AS n FROM customer").first().n
+
+
 def test_create_function_sql_routing(spark, sf_dir):
     from impala_spark.engine import ImpalaEngine
 

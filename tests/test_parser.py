@@ -2265,6 +2265,11 @@ _DDL_ERROR_PATHS = [
         "Range partition value 'a' (type: STRING) is not type compatible with"
         " partitioning column 'i' (type: INT).",
     ),
+    # the LIKE source resolves whether or not the new table's name is a
+    # known table
+    ("CREATE TABLE t2 LIKE nosuchdb.t", "Database does not exist: nosuchdb"),
+    ("CREATE TABLE t2 LIKE no_such_src",
+     "Table does not exist: default.no_such_src"),
 ]
 
 
@@ -2310,3 +2315,88 @@ def test_strict_ddl_clauses_are_read_before_the_query():
     assert str(ei.value) == (
         "CREATE TABLE AS SELECT is not supported for external Kudu tables."
     )
+
+
+def test_scanned_tables():
+    """The one table-reference resolver (authorization, auditing,
+    admission, the size gates and stats routing read it): the tables
+    every SELECT block's FROM clause names, from the strict analysis's
+    FROM model — no catalog needed, no shape left unresolved."""
+    from impala_spark.parser import scanned_tables as st
+
+    assert st("SELECT * FROM orders") == {"orders"}
+    assert st(
+        "SELECT * FROM orders o JOIN lineitem l"
+        " ON o.o_orderkey = l.l_orderkey"
+    ) == {"orders", "lineitem"}
+    assert st("SELECT * FROM customer, orders, lineitem WHERE 1=1") == {
+        "customer", "orders", "lineitem",
+    }
+    assert st("SELECT * FROM orders AS o, lineitem AS l") == {
+        "orders", "lineitem",
+    }
+    # WITH view names are not tables; their bodies' FROMs are
+    assert st(
+        "WITH c AS (SELECT 1 FROM orders)"
+        " SELECT * FROM c JOIN lineitem ON TRUE"
+    ) == {"orders", "lineitem"}
+    # predicate subqueries are scanned
+    assert st(
+        "SELECT 1 FROM orders WHERE o_custkey IN"
+        " (SELECT c_custkey FROM customer)"
+    ) == {"orders", "customer"}
+    assert st("SELECT 1") == set()
+    # an inline view's body is walked; a qualified name is kept as
+    # written; a FROM inside a call or operator names no table; a join
+    # hint list hides no table
+    assert st("SELECT * FROM (SELECT 1 FROM orders) s, lineitem") == {
+        "orders", "lineitem",
+    }
+    assert st("SELECT * FROM functional.alltypes") == {"functional.alltypes"}
+    assert st(
+        "SELECT EXTRACT(YEAR FROM o_orderdate) AS y FROM orders LIMIT 1"
+    ) == {"orders"}
+    assert st("SELECT substring(n_name FROM 2) FROM nation") == {"nation"}
+    assert st(
+        "SELECT 1 FROM orders WHERE o_custkey IS NOT DISTINCT FROM o_orderkey"
+    ) == {"orders"}
+    assert st("SELECT a IS DISTINCT FROM b FROM t") == {"t"}
+    assert st(
+        "SELECT count(*) FROM customer c JOIN [shuffle,broadcast] orders o"
+        " ON c.c_custkey = o.o_custkey"
+    ) == {"customer", "orders"}
+    assert st("SELECT a FROM x UNION ALL SELECT b FROM y") == {"x", "y"}
+    # a collection path is no table: only the comma-joined, aliased
+    # `a.col c` form over an earlier ref of the same FROM clause, which
+    # the translator plans as LATERAL VIEW explode
+    assert st("SELECT * FROM t a, a.items i") == {"t"}
+    assert st("SELECT * FROM t a, a.items AS i, i.sub s") == {"t"}
+    assert st("SELECT * FROM t a, (SELECT 1 FROM u b, b.items x) v") == {
+        "t", "u",
+    }
+    # every other two-part path reaches Spark as db.table, so it is read:
+    # unaliased, a JOIN operand, inside an inline view or a subquery, or
+    # over a name registered only after it
+    assert st("SELECT * FROM t, t.items") == {"t", "t.items"}
+    assert st("SELECT * FROM t a JOIN a.items i ON TRUE") == {"t", "a.items"}
+    assert st("SELECT * FROM t a WHERE EXISTS (SELECT 1 FROM a.items)") == {
+        "t", "a.items",
+    }
+    assert st("SELECT * FROM t a, (SELECT count(*) FROM a.items) v") == {
+        "t", "a.items",
+    }
+    assert st("SELECT * FROM (SELECT * FROM a.b) a") == {"a.b"}
+    assert st("SELECT * FROM db.t.items") == {"db.t"}
+
+
+def test_from_ref_path():
+    """The join-form UPDATE/DELETE target lookup: the ref registering an
+    alias (explicit or implicit) in a FROM clause, as written."""
+    from impala_spark.parser import from_ref_path
+
+    assert from_ref_path("o", "orders o JOIN customer c ON 1 = 1") == "orders"
+    assert from_ref_path("C", "orders o, db.customer AS c") == "db.customer"
+    assert from_ref_path("orders", "orders WHERE o_orderkey = 1") == "orders"
+    assert from_ref_path("x", "orders o") is None
+    # a word ahead of the alias that is no table ref is not the target
+    assert from_ref_path("o", "(SELECT 1 AS k) o") is None

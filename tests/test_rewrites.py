@@ -600,41 +600,6 @@ def test_engine_rewrite_preserves_strict_errors(spark, monkeypatch):
         )
 
 
-def test_referenced_base_tables():
-    """The routing scanner (engine._route_session's guard): every shape
-    it cannot prove must return None so the caller stays conservative."""
-    from impala_spark.rewrites import referenced_base_tables as rbt
-
-    assert rbt("SELECT * FROM orders") == {"orders"}
-    assert rbt(
-        "SELECT * FROM orders o JOIN lineitem l"
-        " ON o.o_orderkey = l.l_orderkey"
-    ) == {"orders", "lineitem"}
-    assert rbt("SELECT * FROM customer, orders, lineitem WHERE 1=1") == {
-        "customer", "orders", "lineitem",
-    }
-    assert rbt("SELECT * FROM orders AS o, lineitem AS l") == {
-        "orders", "lineitem",
-    }
-    # CTE names are not base tables; their bodies' FROMs are
-    assert rbt(
-        "WITH c AS (SELECT 1 FROM orders)"
-        " SELECT * FROM c JOIN lineitem ON TRUE"
-    ) == {"orders", "lineitem"}
-    # predicate subqueries are scanned (their FROM hits the same pass)
-    assert rbt(
-        "SELECT 1 FROM orders WHERE o_custkey IN"
-        " (SELECT c_custkey FROM customer)"
-    ) == {"orders", "customer"}
-    assert rbt("SELECT 1") == set()
-    # unknown shapes -> None (conservative): derived tables in FROM
-    # position (a trailing `, table` would escape), qualified names,
-    # nested-collection paths
-    assert rbt("SELECT * FROM (SELECT 1 FROM orders) s, lineitem") is None
-    assert rbt("SELECT * FROM functional.alltypes") is None
-    assert rbt("SELECT * FROM t, t.items") is None
-
-
 def test_order_by_alias_shadows_key(spark, monkeypatch):
     """ORDER BY resolves a bare name against select ALIASES before the
     grouping key (A/SelectStmt.java aliasSmap; Spark prefers the project

@@ -382,21 +382,26 @@ def test_gate_input_bytes_prefers_catalog_stats(spark):
     """The size-gated rewrites read per-table catalog stats once promoted
     (r10 verdict task #5), falling back to file sizes / the fixture dir
     only when a referenced table has none."""
+    from impala_spark.parser import scanned_tables
     from impala_spark.session import _dir_total_bytes
 
     eng = ImpalaEngine(spark, sf_dir=SF_01)
     whole_dir = _dir_total_bytes(SF_01)
-    q_orders = "SELECT COUNT(*) FROM orders"
+    orders = scanned_tables("SELECT COUNT(*) FROM orders")
     # unpromoted fixture: per-table file size, not the whole dir
-    per_file = eng._gate_input_bytes(q_orders)
+    per_file = eng._gate_input_bytes(orders)
     assert 0 < per_file < whole_dir
     eng.sql("COMPUTE STATS orders")
-    with_stats = eng._gate_input_bytes(q_orders)
+    with_stats = eng._gate_input_bytes(orders)
     assert with_stats > 0
     # catalog sizeInBytes of a parquet LOCATION table ~= its file bytes
     assert abs(with_stats - per_file) <= per_file  # same order of magnitude
-    # unknown shapes keep the conservative whole-dir fallback
-    assert eng._gate_input_bytes("SELECT 1 FROM (SELECT 1) s, orders") == whole_dir
+    # an inline view does not hide the tables read beside it
+    assert eng._gate_input_bytes(
+        scanned_tables("SELECT 1 FROM (SELECT 1) s, orders")) == with_stats
+    # no table, or an unknown name: the conservative whole-dir fallback
+    assert eng._gate_input_bytes(frozenset()) == whole_dir
+    assert eng._gate_input_bytes(frozenset({"no_such_table"})) == whole_dir
 
 
 # ---------------------------------------------------------------------------
