@@ -34,6 +34,10 @@ Enforcement model (engine.sql calls AuthzPolicy.check_access):
     privilege on the object (check_metadata_access), COMPUTE STATS
     requires ALL, and EXPLAIN is authorized like the statement it
     explains — matching the reference's Privilege.ANY/ALL requests.
+  * Shapes outside the Impala grammar that Spark runs natively (`FROM t
+    SELECT ...`, CACHE TABLE, CREATE TEMPORARY VIEW) require SELECT on
+    the tables the resolver finds plus a server-scope grant (SELECT for
+    reads, ALL for command heads); `TABLE t` is a SELECT of t.
 """
 
 from __future__ import annotations
@@ -474,20 +478,24 @@ class AuthzPolicy:
                     return True
         return False
 
+    def holds_server(self, *levels: str) -> bool:
+        """True when the user holds a server-scope privilege at one of
+        `levels` or ALL (at any level when none is given)."""
+        return any(
+            p.scope == "SERVER" and (not levels or p.priv in levels or p.priv == "ALL")
+            for r in self._roles_of(self.user)
+            for p in self.role_privs.get(r, ())
+        )
+
     def check_create_drop_functions(self) -> None:
         """CREATE/DROP FUNCTION requires server-scope ALL
         (AuthorizationTest.TestFunction exact text — only the admin role
         may manage functions)."""
-        if not self.server_name:
-            return
-        for r in self._roles_of(self.user):
-            for p in self.role_privs.get(r, ()):
-                if p.scope == "SERVER" and p.priv == "ALL":
-                    return
-        raise AuthorizationError(
-            f"User '{self.user}' does not have privileges to "
-            "CREATE/DROP functions."
-        )
+        if self.server_name and not self.holds_server("ALL"):
+            raise AuthorizationError(
+                f"User '{self.user}' does not have privileges to "
+                "CREATE/DROP functions."
+            )
 
     def check_any_access(self, spark, table: str,
                          allow_column_privs: bool = False) -> None:

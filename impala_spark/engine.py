@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from impala_spark import ddl
 from impala_spark import functions as ifn
 from impala_spark.parser import ImpalaUnsupportedError, scanned_tables, translate
-from impala_spark.session import register_tables
+from impala_spark.session import posture_df, register_tables
 
 
 class ImpalaAnalysisError(ImpalaUnsupportedError):
@@ -130,6 +130,8 @@ _STATEMENTS = tuple(
         ("refresh", rf"(?P<op>INVALIDATE\s+METADATA|REFRESH)\b(?:\s+(?P<target>{_NAME})\s*"
                     r"(?:PARTITION\s*\([^)]*\)\s*)?)?(?P<tail>.*)$", "_refresh"),
         ("drop_view", rf"DROP\s+VIEW\s+(?:IF\s+EXISTS\s+)?(?P<target>{_NAME})", "_drop_view"),
+        # TABLE t: the SQL-standard table value, which Spark runs natively
+        ("table", rf"TABLE\s+(?P<name>{_NAME})\s*$", "_run_query"),
         # table/view DDL of other shapes: Spark runs it natively
         ("ddl", r"(?P<op>CREATE|DROP|ALTER)\s+(?:EXTERNAL\s+)?(?P<obj>TABLE|VIEW)\b"
                 rf"(?:\s+IF\s+(?:NOT\s+)?EXISTS)?(?:\s+(?P<target>{_NAME}))?", "_run_query"),
@@ -146,9 +148,11 @@ _SESSION_TABLE_KINDS = ("insert", "ctas", "create_like", "drop_table")
 #: kinds EXPLAIN accepts (sql-parser.cup explain_stmt: queries, DML, CTAS);
 #: the rest must never execute as a side effect of EXPLAIN
 _EXPLAINABLE_KINDS = (
-    "query", "other", "explain", "comment", "insert", "upsert", "update",
-    "delete", "ctas",
+    "query", "table", "other", "explain", "comment", "insert", "upsert",
+    "update", "delete", "ctas",
 )
+#: heads of the `command` rows that read metadata, never table rows
+_METADATA_COMMANDS = ("SHOW", "DESCRIBE", "SET", "USE")
 #: whitespace and comments ahead of a statement's first keyword
 _LEADING_COMMENTS_RE = re.compile(r"(?:\s+|/\*.*?\*/|--[^\n]*)*", re.DOTALL)
 #: SHOW surfaces that target a table (Privilege.ANY, VIEW_METADATA event)
@@ -566,11 +570,11 @@ class ImpalaEngine:
         self._pool_service = RequestPoolService(allocation_file, llama_site_file)
         self._admission = AdmissionController(self._pool_service)
 
-    def _admit(self, stmt: Stmt):
+    def _admit(self, nbytes: int | None):
         """Resolve the session's pool and take an admission slot for a
-        query statement. Returns a token to release (None when admission
-        is not configured). Planning happens under the slot; the byte
-        estimate reuses the stats-backed gate the plan rewrites cost from."""
+        query statement reading `nbytes` (_gate_input_bytes). Returns a
+        token to release (None when admission is not configured).
+        Planning happens under the slot."""
         if self._admission is None:
             return None
         import getpass
@@ -587,11 +591,7 @@ class ImpalaEngine:
                 f"No mapping found for request from user '{user}' with "
                 f"requested pool '{self._request_pool}'"
             )
-        try:
-            estimate = self._gate_input_bytes(stmt.tables) if self._sf_dir else 0
-        except Exception:
-            estimate = 0
-        return self._admission.admit(pool, user, estimate_bytes=estimate)
+        return self._admission.admit(pool, user, estimate_bytes=nbytes or 0)
 
     # -- equivalence classes / layout advice (util/DisjointSet.java) -------
     def equiv_classes(self, query: str) -> list[set]:
@@ -633,11 +633,17 @@ class ImpalaEngine:
     # -- the main path (Frontend.createExecRequest analog) -----------------
     def sql(self, query: str) -> DataFrame:
         """Run one statement: normalize, classify, authorize, then the
-        statement row's handler (queries take an admission slot there)."""
+        statement row's handler (queries take an admission slot there).
+        Authorization (and the authorization statements themselves) read
+        the text as written; only the text handed on to Spark has its
+        `default.<view>` refs stripped."""
         q = query.strip().rstrip(";")
         q = _hoist_with_clause(q[_LEADING_COMMENTS_RE.match(q).end():])
-        stmt = self.classify(_strip_session_db_refs(q, self.spark))
+        stmt = self.classify(q)
         self._enforce_authz(stmt)
+        spark_q = _strip_session_db_refs(q, self.spark)
+        if spark_q != q and stmt.kind != "authz":
+            stmt = self.classify(spark_q)
         return getattr(self, stmt.handler)(stmt)
 
     def classify(self, q: str) -> Stmt:
@@ -661,6 +667,8 @@ class ImpalaEngine:
         target, source = _unquote(g.get("target")), g.get("source")
         if kind == "query":
             source = q
+        elif kind == "table":
+            source = f"SELECT * FROM {g['name']}"
         elif kind == "update":
             # ModifyStmt.java: a top-level FROM ahead of any WHERE makes the
             # join form, whose FROM clause names the target by alias. The
@@ -687,37 +695,44 @@ class ImpalaEngine:
     def _run_query(self, stmt: Stmt) -> DataFrame:
         """Hand a statement to Spark through translate — the query path,
         and every statement the engine leaves to Spark — under an
-        admission slot."""
+        admission slot. The statement is sized once: admission, the
+        size-gated rewrites and the posture all read `nbytes`."""
         q = stmt.text
         if self.appx_count_distinct:
             from impala_spark.parser import rewrite_appx_count_distinct
 
             q = rewrite_appx_count_distinct(q)
-        token = self._admit(stmt)
+        nbytes = self._gate_input_bytes(stmt.tables)
+        token = self._admit(nbytes)
         try:
-            return self._run_query_stmt(q, stmt)
+            return self._run_query_stmt(q, stmt, nbytes)
         finally:
             if token is not None:
                 token.release()
 
-    def _run_query_stmt(self, q: str, stmt: Stmt) -> DataFrame:
-        df, sess = self._query_df(q, stmt)
+    def _run_query_stmt(self, q: str, stmt: Stmt, nbytes: int | None) -> DataFrame:
+        df, sess = self._query_df(q, stmt, nbytes)
         if sess is not self.spark:
             df = _ntz_outputs(df)
-        return _boolean_null_outputs(df)
+        df = _boolean_null_outputs(df)
+        return posture_df(df, nbytes) if stmt.kind == "query" else df
 
-    def _query_df(self, q: str, stmt: Stmt) -> tuple[DataFrame, SparkSession]:
-        """The DataFrame statement `q` (classified as `stmt`) plans to,
-        and the session it plans in — shared by execution and EXPLAIN."""
+    def _query_df(
+        self, q: str, stmt: Stmt, nbytes: int | None
+    ) -> tuple[DataFrame, SparkSession]:
+        """The DataFrame statement `q` (classified as `stmt`, reading
+        `nbytes`) analyzes to, and the session it is routed to — shared
+        by execution and EXPLAIN, which both hand a plain query's plan on
+        to session.posture_df."""
         # strict-mode analysis always runs on the USER's text first
         sql_text = translate(q, strict=self.strict)
-        rw = self._plan_rewrite(q, stmt)
+        rw = self._plan_rewrite(q, nbytes)
         sess = self._route_session(stmt)
         # two-pass global rank (r12) composes on top of the distinct
         # rewrite's output when both fire (the rewritten text re-emits
         # the user's ranking window over the joined group rows; it reads
         # the same tables)
-        df = self._global_rank_df(rw if rw is not None else q, sess, stmt)
+        df = self._global_rank_df(rw if rw is not None else q, sess, nbytes)
         if df is None and rw is None:
             return self._sql_with_impala_errors(sql_text, spark=sess), sess
         if df is None:
@@ -1141,8 +1156,21 @@ class ImpalaEngine:
             # the reference authorizes EXPLAIN exactly like the inner
             # statement (Frontend analyzes before planning)
             self._enforce_authz(self.classify(stmt.source.strip()))
-        elif kind == "query":
+        elif kind in ("query", "table"):
             az.check_access(self.spark, stmt.text, "SELECT", sorted(stmt.tables))
+        elif kind in ("other", "command"):
+            # shapes Spark runs natively: SELECT on every table the
+            # resolver finds, and — unless the shape only reads metadata —
+            # a server-scope grant, since the resolver cannot prove what
+            # it reads (FROM t SELECT ..., CACHE TABLE, CREATE TEMPORARY
+            # VIEW); ALL for the command heads, which may write
+            az.check_access(self.spark, stmt.text, "SELECT", sorted(stmt.tables))
+            head = stmt.text.split(None, 1)[0].upper() if stmt.text.strip() else ""
+            priv = "SELECT" if kind == "other" else "ALL"
+            if head not in _METADATA_COMMANDS and not az.holds_server(priv):
+                raise AuthorizationError(
+                    f"User '{az.user}' does not have privileges to execute"
+                    f" '{priv}' on: server")
         elif kind in ("insert", "upsert"):
             az.check_access(self.spark, stmt.text, "INSERT", sorted(stmt.tables), target)
         elif kind in ("update", "delete"):
@@ -1171,11 +1199,8 @@ class ImpalaEngine:
             # is a server-scope action
             if target and target.upper() != "FUNCTIONS":
                 az.check_any_access(self.spark, target)
-            elif not target and m.group("op").upper().startswith("INVALIDATE") and not any(
-                p.scope == "SERVER"
-                for r in az._roles_of(az.user)
-                for p in az.role_privs.get(r, ())
-            ):
+            elif not target and m.group("op").upper().startswith("INVALIDATE") \
+                    and not az.holds_server():
                 raise deny("server")
         elif kind in ("create_function", "drop_function"):
             # function management is server-admin only (TestFunction)
@@ -1365,25 +1390,23 @@ class ImpalaEngine:
             )
             synced.add(name)
 
-    def _plan_rewrite(self, q: str, stmt: Stmt) -> str | None:
+    def _plan_rewrite(self, q: str, nbytes: int | None) -> str | None:
         """Input-size-gated plan rewrites on plain user SQL — the engine
         analog of the reference's stats-driven aggregate planning
         (A/AggregateInfo.java:42-60 two-phase DISTINCT). Only fires above
         the rewrite's input-size knee, like queries.gate_broadcast_hints."""
-        if self._sf_dir is None:
-            return None
         from impala_spark.rewrites import (
             TWO_LEVEL_DISTINCT_MIN_INPUT_BYTES,
             two_level_distinct,
         )
 
-        if self._gate_input_bytes(stmt.tables) < TWO_LEVEL_DISTINCT_MIN_INPUT_BYTES:
+        if nbytes is None or nbytes < TWO_LEVEL_DISTINCT_MIN_INPUT_BYTES:
             return None
         # session UDAs (CREATE AGGREGATE FUNCTION) must be recognized as
         # aggregates — an unknown aggregate name would read as a scalar fn
         return two_level_distinct(q, extra_aggs=frozenset(self._functions))
 
-    def _global_rank_df(self, q: str, sess, stmt: Stmt) -> DataFrame | None:
+    def _global_rank_df(self, q: str, sess, nbytes: int | None) -> DataFrame | None:
         """Two-pass global rank (r12): a statement whose select list
         carries a single GLOBAL ranking window executes as
         operators.global_rank — range exchange + slice-local window +
@@ -1392,7 +1415,7 @@ class ImpalaEngine:
         single-node analytic sort (planner/AnalyticPlanner.java), which
         has no distributed equivalent without this split. Gated on
         statement input size like the distinct rewrite."""
-        if self._sf_dir is None:
+        if nbytes is None:
             return None
         from impala_spark.rewrites import parse_global_rank
 
@@ -1401,7 +1424,7 @@ class ImpalaEngine:
             return None
         import impala_spark.rewrites as _rw_mod
 
-        if self._gate_input_bytes(stmt.tables) < _rw_mod.GLOBAL_RANK_MIN_INPUT_BYTES:
+        if nbytes < _rw_mod.GLOBAL_RANK_MIN_INPUT_BYTES:
             return None
         from pyspark.sql import functions as F
 
@@ -1456,15 +1479,18 @@ class ImpalaEngine:
             df = df.limit(plan.limit)
         return df
 
-    def _gate_input_bytes(self, tables: frozenset[str]) -> int:
-        """Input-size estimate of a statement reading `tables` for the
-        size-gated rewrites, preferring catalog stats over file sizes
-        (r10 verdict task #5 — the reference costs every such decision
-        from COMPUTE STATS numbers): per table, catalog sizeInBytes when
-        promoted, the table's own files when its path is known (fixture
-        parquet / managed warehouse dir), and the whole fixture dir only
-        as the conservative fallback (no table, a view, an unknown
-        name)."""
+    def _gate_input_bytes(self, tables: frozenset[str]) -> int | None:
+        """Input-size estimate of a statement reading `tables` for
+        admission, the size-gated rewrites and the posture, preferring
+        catalog stats over file sizes (r10 verdict task #5 — the
+        reference costs every such decision from COMPUTE STATS numbers):
+        per table, catalog sizeInBytes when promoted, the table's own
+        files when its path is known (fixture parquet / managed warehouse
+        dir), and the whole fixture dir only as the conservative fallback
+        (no table, a view, an unknown name). None without a fixture dir
+        (unknown scale: Catalyst's default plans)."""
+        if self._sf_dir is None:
+            return None
         import os as _os
 
         from impala_spark.session import (
@@ -2432,7 +2458,11 @@ class ImpalaEngine:
             sink = f"UPDATE [default.{t}]" if kind == "update" else f"DELETE FROM [default.{t}]"
         else:
             return None
-        return f"{sink}\n|\n" + self.explain(stmt.plan_source or stmt.source)
+        # the source plans as the write runs it: in the engine session's
+        # own posture (only plain queries take posture_df)
+        src = self.classify(stmt.plan_source or stmt.source)
+        df, _sess = self._query_df(src.text, src, self._gate_input_bytes(src.tables))
+        return f"{sink}\n|\n" + self._plan_text(df)
 
     def explain(self, query: str) -> str:
         """Impala-style plan text (planner/PlanNode.getExplainString analog).
@@ -2448,11 +2478,19 @@ class ImpalaEngine:
             return dml
         # EXPLAIN plans through the same builder as execution: the same
         # strict analysis and error texts, the same session, the same
-        # plan rewrites — after COMPUTE STATS the text shows the CBO plan
-        # and above the distinct-rewrite gate the two-phase join plan the
+        # plan rewrites and posture — after COMPUTE STATS the text shows
+        # the CBO plan, above the distinct-rewrite gate the two-phase
+        # join plan, and over KB-sized tables the single-node plan the
         # statement will actually get (the reference's EXPLAIN always
         # reflects the executed plan).
-        df, _sess = self._query_df(query, stmt)
+        nbytes = self._gate_input_bytes(stmt.tables)
+        df, _sess = self._query_df(query, stmt, nbytes)
+        if stmt.kind == "query":
+            df = posture_df(df, nbytes)
+        return self._plan_text(df)
+
+    def _plan_text(self, df: DataFrame) -> str:
+        """The Impala-style plan text of `df`'s executed plan (explain)."""
         qe = df._jdf.queryExecution()
         plan = qe.executedPlan().toString()
         # Cardinality/size annotations (planner/PlanNode.getExplainString

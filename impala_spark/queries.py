@@ -25,7 +25,13 @@ from pyspark.sql.window import Window
 from impala_spark import functions as ifn
 from impala_spark import operators as ops
 from impala_spark.parser import translate
-from impala_spark.session import register_tables, table
+from impala_spark.session import (
+    _dir_total_bytes,
+    _session_token,
+    posture_session,
+    register_tables,
+    table,
+)
 
 SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
@@ -39,16 +45,11 @@ def register(name: str, oracle: str | None = None, cache: bool = False):
     def deco(fn):
         if cache:
             def cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-                from impala_spark.session import (
-                    _session_token,
-                    posture_session,
-                )
-
                 # DataFrame-built ops are the compute-parallel family:
                 # a session PINNED at the shuffle-partition default (the
                 # posture rides the DataFrame; interleaved relational
                 # builds can no longer narrow it to 1 — r8 ADVICE)
-                spark = posture_session(spark, sf_dir, "parallel")
+                spark = posture_session(spark, _dir_total_bytes(sf_dir), "parallel")
                 key = (_session_token(spark), sf_dir, name)
                 df = _PLAN_CACHE.get(key)
                 if df is None:
@@ -61,9 +62,7 @@ def register(name: str, oracle: str | None = None, cache: bool = False):
             SPARK_QUERIES[name] = cached
         else:
             def uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
-                from impala_spark.session import posture_session
-
-                spark = posture_session(spark, sf_dir, "parallel")
+                spark = posture_session(spark, _dir_total_bytes(sf_dir), "parallel")
                 return fn(spark, sf_dir)
 
             uncached.__name__ = fn.__name__
@@ -128,8 +127,6 @@ _BROADCAST_HINT_RE = _re.compile(
 def gate_broadcast_hints(sql: str, sf_dir: str) -> str:
     """Strip /*+ BROADCAST(...) */ hints when the input scale makes the
     hinted build sides too large to broadcast (see the constant above)."""
-    from impala_spark.session import _dir_total_bytes
-
     if _dir_total_bytes(sf_dir) > BROADCAST_HINT_MAX_INPUT_BYTES:
         return _BROADCAST_HINT_RE.sub("", sql)
     return sql
@@ -139,12 +136,10 @@ def sql_query(name: str, impala_sql: str, oracle: str | None = None) -> None:
     """Register an Impala-dialect SQL query; oracle defaults to same text."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from impala_spark.session import _session_token, posture_session
-
-        # relational statement: small-input single-node fast path
-        # (1 shuffle partition on a conf-pinned cloned session — see
-        # session.posture_session)
-        spark = posture_session(spark, sf_dir, "relational")
+        # relational statement: the posture of the fixture dir's bytes
+        # (single-node below 64 MB, on a conf-pinned cloned session —
+        # see session.posture)
+        spark = posture_session(spark, _dir_total_bytes(sf_dir), "relational")
         key = (_session_token(spark), sf_dir, name)
         df = _PLAN_CACHE.get(key)
         if df is None:
@@ -1917,9 +1912,8 @@ def q_multi_distinct_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite is invoked directly so the equivalence is pinned at the
     driver's scale too."""
     from impala_spark.rewrites import two_level_distinct
-    from impala_spark.session import posture_session
 
-    spark = posture_session(spark, sf_dir, "relational")
+    spark = posture_session(spark, _dir_total_bytes(sf_dir), "relational")
     register_tables(spark, sf_dir)
     rw = two_level_distinct(_PLAIN_MULTI_DISTINCT)
     assert rw is not None, "rewrite must fire on two distinct groups"
@@ -2050,9 +2044,8 @@ def q_multi_distinct_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter, and multi-column COUNT(DISTINCT a, b) forms one distinct
     group on the tuple. Plan-asserted no-Expand, oracle-matched."""
     from impala_spark.rewrites import two_level_distinct
-    from impala_spark.session import posture_session
 
-    spark = posture_session(spark, sf_dir, "relational")
+    spark = posture_session(spark, _dir_total_bytes(sf_dir), "relational")
     register_tables(spark, sf_dir)
     rw = two_level_distinct(_MULTI_DISTINCT_HAVING)
     assert rw is not None, "rewrite must fire on HAVING + tuple-distinct"
@@ -2088,9 +2081,8 @@ def q_multi_distinct_with_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     generated __tla CTEs append to the user's WITH list (later members
     see earlier ones). Plan-asserted no-Expand, oracle-matched."""
     from impala_spark.rewrites import two_level_distinct
-    from impala_spark.session import posture_session
 
-    spark = posture_session(spark, sf_dir, "relational")
+    spark = posture_session(spark, _dir_total_bytes(sf_dir), "relational")
     register_tables(spark, sf_dir)
     rw = two_level_distinct(_MULTI_DISTINCT_WITH)
     assert rw is not None, "rewrite must fire through the WITH prefix"
@@ -2129,9 +2121,8 @@ def q_sum_avg_distinct_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     gets its own, joined back null-safely. Plan-asserted no-Expand,
     oracle-matched; HAVING maps post-merge."""
     from impala_spark.rewrites import two_level_distinct
-    from impala_spark.session import posture_session
 
-    spark = posture_session(spark, sf_dir, "relational")
+    spark = posture_session(spark, _dir_total_bytes(sf_dir), "relational")
     register_tables(spark, sf_dir)
     rw = two_level_distinct(_SUM_AVG_DISTINCT)
     assert rw is not None, "rewrite must fire on SUM/AVG(DISTINCT)"
@@ -2164,9 +2155,8 @@ def q_expr_key_distinct_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     Open exprs like x + 1 stay conservatively out (not precedence-safe
     as a token span). Plan-asserted no-Expand, oracle-matched."""
     from impala_spark.rewrites import two_level_distinct
-    from impala_spark.session import posture_session
 
-    spark = posture_session(spark, sf_dir, "relational")
+    spark = posture_session(spark, _dir_total_bytes(sf_dir), "relational")
     register_tables(spark, sf_dir)
     rw = two_level_distinct(_EXPR_KEY_DISTINCT)
     assert rw is not None, "rewrite must fire on an atomic expression key"
@@ -2200,9 +2190,8 @@ def q_open_key_distinct_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     references still keep the default plan). Plan-asserted no-Expand,
     oracle-matched."""
     from impala_spark.rewrites import two_level_distinct
-    from impala_spark.session import posture_session
 
-    spark = posture_session(spark, sf_dir, "relational")
+    spark = posture_session(spark, _dir_total_bytes(sf_dir), "relational")
     register_tables(spark, sf_dir)
     rw = two_level_distinct(_OPEN_KEY_DISTINCT)
     assert rw is not None, "rewrite must fire on an open expression key"
@@ -2237,9 +2226,8 @@ def q_rank_over_distinct_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     in HAVING by body inlining. Plan-asserted no-Expand,
     oracle-matched."""
     from impala_spark.rewrites import two_level_distinct
-    from impala_spark.session import posture_session
 
-    spark = posture_session(spark, sf_dir, "relational")
+    spark = posture_session(spark, _dir_total_bytes(sf_dir), "relational")
     register_tables(spark, sf_dir)
     rw = two_level_distinct(_RANK_OVER_DISTINCT)
     assert rw is not None, "rewrite must fire on a ranking window"
@@ -2275,9 +2263,8 @@ def q_window_agg_over_distinct_rewrite(spark: SparkSession, sf_dir: str) -> Data
     AggregateInfo.java:42-60, composed with AnalyticEvalNode on top of
     the merge aggregation). Plan-asserted no-Expand, oracle-matched."""
     from impala_spark.rewrites import two_level_distinct
-    from impala_spark.session import posture_session
 
-    spark = posture_session(spark, sf_dir, "relational")
+    spark = posture_session(spark, _dir_total_bytes(sf_dir), "relational")
     register_tables(spark, sf_dir)
     rw = two_level_distinct(_WINDOW_AGG_OVER_DISTINCT)
     assert rw is not None, "rewrite must fire on a window aggregate"
@@ -2314,9 +2301,8 @@ def q_group_concat_distinct_rewrite(spark: SparkSession, sf_dir: str) -> DataFra
     constant separator re-emitted verbatim. Plan-asserted no-Expand;
     the LENGTH contract is order-invariant so the oracle hash-matches."""
     from impala_spark.rewrites import two_level_distinct
-    from impala_spark.session import posture_session
 
-    spark = posture_session(spark, sf_dir, "relational")
+    spark = posture_session(spark, _dir_total_bytes(sf_dir), "relational")
     register_tables(spark, sf_dir)
     rw = two_level_distinct(_GROUP_CONCAT_DISTINCT)
     assert rw is not None, "rewrite must fire on GROUP_CONCAT(DISTINCT)"
@@ -2354,9 +2340,8 @@ def q_global_rank_twopass(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from impala_spark.functions import asc_impala, desc_impala
     from impala_spark.operators import global_rank
-    from impala_spark.session import posture_session
 
-    spark = posture_session(spark, sf_dir, "relational")
+    spark = posture_session(spark, _dir_total_bytes(sf_dir), "relational")
     register_tables(spark, sf_dir)
     lt = spark.table("lineitem")
     sort_cols = [
@@ -4294,10 +4279,9 @@ _STMT_RW_ORIG = """
 @register("stmt_rewrite_predicates", oracle=_STMT_RW_ORIG)
 def q_stmt_rewrite_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Execute the splice-rewritten statement; oracle runs the original."""
-    from impala_spark.session import posture_session
     from impala_spark.stmtrewriter import rewrite_predicates_sql
 
-    spark = posture_session(spark, sf_dir, "relational")
+    spark = posture_session(spark, _dir_total_bytes(sf_dir), "relational")
     register_tables(spark, sf_dir)
     rewritten, n_changes = rewrite_predicates_sql(_STMT_RW_ORIG)
     assert n_changes > 0, "statement rewrite did not fire"
@@ -4397,9 +4381,8 @@ _EXPRRULES_SELECT = """
 )
 def q_expr_rewrite_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Execute the rule-rewritten predicate; oracle runs the original."""
-    from impala_spark.session import posture_session
 
-    spark = posture_session(spark, sf_dir, "relational")
+    spark = posture_session(spark, _dir_total_bytes(sf_dir), "relational")
     register_tables(spark, sf_dir)
     sql = _EXPRRULES_SELECT.format(pred=_exprrules_rewritten_pred())
     return spark.sql(translate(sql))

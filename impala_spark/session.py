@@ -4,12 +4,18 @@ Scale posture (the part of the reference's DistributedPlanner that Spark
 replaces — reference: planner/DistributedPlanner.java:420-536 broadcast
 cost model, planner/RuntimeFilterGenerator.java runtime filters):
 
-- AQE on: runtime re-plan of shuffle partition counts, skew-join splitting,
-  and broadcast-join demotion/promotion from observed sizes.
-- Runtime bloom filters on at scale: Spark's equivalent of Impala's runtime
-  filters (build-side filter pushed to the probe scan); register_tables
-  disables them below SMALL_QUERY_BYTES (the reference's small-query fast
-  path, Planner.java:91-108).
+- Chosen per statement from the bytes it reads (`posture`): a
+  relational statement under SINGLE_NODE_MAX_INPUT_BYTES (64 MB) plans
+  with one shuffle partition, AQE and runtime bloom filters off — the
+  reference's single-node plan for small queries (Planner.java:91-108).
+  ImpalaEngine sizes each query from the tables it scans (`posture_df`);
+  the registry sizes its fixture dir (`posture_session`).
+- AQE on at scale: runtime re-plan of shuffle partition counts,
+  skew-join splitting, and broadcast-join demotion/promotion from
+  observed sizes.
+- Runtime bloom filters on at scale: Spark's equivalent of Impala's
+  runtime filters (build-side filter pushed to the probe scan);
+  register_tables disables them, and AQE, below SMALL_QUERY_BYTES.
 - autoBroadcastJoinThreshold 16 MB: every true dimension table broadcasts
   while facts never do — the static threshold compares COMPRESSED parquet
   bytes (see inline note), so 64 MB would broadcast multi-million-row
@@ -112,7 +118,7 @@ def get_spark(app_name: str = "impala_spark", master: str | None = None) -> Spar
         # files x ~24 MB per fact table — at 128 MB the whole 732 MB
         # lineitem scan collapses to ~6 map tasks on 32 cores, starving
         # the shuffle's map side. 32 MB = one fixture file per task.
-        # Measured (r7 sweep, tools/shuffle_sweep.py, 5-rep medians at
+        # Measured (r7 shuffle-cost sweep, BASELINE.md, 5-rep medians at
         # sf10): q3 3.08 -> 2.89 s, q5 4.13 -> 3.94 s, and the noisy-
         # tail outliers disappear. Neutral at sf0.1/0.001 (single file,
         # single row group = the split floor). On a real cluster reading
@@ -413,12 +419,11 @@ def register_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[s
         # gating idea as the reference's small-query fast path
         # (Planner.java:91-108: single-node, runtime filters off).
         spark.conf.set("spark.sql.adaptive.enabled", "false" if small else "true")
-        # shuffle.partitions is NOT sized down here: it is per-query-
-        # FAMILY, not global (r6's global-8 experiment regressed the
-        # compute-parallel LLM ops; r7 verdict task #1 says gate it).
-        # apply_query_posture() below sets 1 for relational statements
-        # under the small path and the session default for everything
-        # else.
+        # shuffle.partitions is NOT sized down here: it is per
+        # statement, not global (r6's global-8 experiment regressed the
+        # compute-parallel LLM ops): posture() below sets 1 for a
+        # relational statement reading under SINGLE_NODE_MAX_INPUT_BYTES
+        # and the session default for everything else.
     except Exception:
         pass  # static-conf build: keep whatever the session has
     tok = _session_token(spark)
@@ -762,31 +767,59 @@ def stats_session(spark: SparkSession, sf_dir: str) -> SparkSession:
 #: session shuffle-partition default (the 100 TB posture; see get_spark)
 DEFAULT_SHUFFLE_PARTITIONS = "32"
 
-#: (parent session token, posture key) -> cloned session with pinned conf
-_FAMILY_SESSIONS: dict[tuple[str, str], SparkSession] = {}
+#: Single-node ceiling: a relational statement reading less than this
+#: plans with ONE shuffle partition (tighter than SMALL_QUERY_BYTES, the
+#: bloom/AQE gate: the single-partition win is the skipped sampling job
+#: plus tiny-task scheduling, worth ~0.1 s — above ~64 MB of input the
+#: lost reduce parallelism costs more; sf1's 6M-row joins want cores).
+SINGLE_NODE_MAX_INPUT_BYTES = 64 << 20
+
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+def posture(input_bytes: int | None, family: str = "relational") -> dict[str, str] | None:
+    """The planner posture of a statement that reads `input_bytes`: the
+    conf keys it plans with — the per-statement analog of the
+    reference's small-query fast path (Planner.java:91-108: below the
+    single-node threshold, strip the distributed machinery).
+
+    Relational statements (scan/join/agg/sort) under
+    SINGLE_NODE_MAX_INPUT_BYTES run with ONE shuffle partition —
+    Impala's single-node plan. The win is partly task scheduling (32 ->
+    1 reduce tasks) and partly structural: a 1-partition range exchange
+    skips the RangePartitioner SAMPLING JOB, which otherwise re-executes
+    the whole aggregation once per ORDER BY just to pick sort
+    boundaries. Compute-parallel families (LLM ops: per-row
+    hashing/shingling; streaming) keep DEFAULT_SHUFFLE_PARTITIONS — rows,
+    not bytes, predict their CPU need (r6's global-8 regression). Below
+    SMALL_QUERY_BYTES runtime bloom filters and AQE are off (see that
+    constant).
+
+    None — keep the session's own conf — when the size is unknown or
+    SPARK_GRAFT_DISABLE_SMALL_POSTURE is set (the caller owns shuffle
+    parallelism: determinism tests)."""
+    if input_bytes is None or os.environ.get("SPARK_GRAFT_DISABLE_SMALL_POSTURE"):
+        return None
+    single = family == "relational" and input_bytes < SINGLE_NODE_MAX_INPUT_BYTES
+    small = input_bytes < SMALL_QUERY_BYTES
+    return {
+        _SHUFFLE_PARTITIONS: "1" if single else DEFAULT_SHUFFLE_PARTITIONS,
+        "spark.sql.optimizer.runtime.bloomFilter.enabled": "false" if small else "true",
+        "spark.sql.adaptive.enabled": "false" if small else "true",
+    }
+
+
+#: (parent session token, posture) -> cloned session with pinned conf
+_FAMILY_SESSIONS: dict[tuple[str, tuple], SparkSession] = {}
 
 
 def posture_session(
-    spark: SparkSession, sf_dir: str, family: str
+    spark: SparkSession, input_bytes: int, family: str
 ) -> SparkSession:
-    """Session whose SQLConf is PINNED to the statement family's posture —
-    the per-query-family analog of the reference's small-query fast path
-    (Planner.java:91-108: below the single-node threshold, strip the
-    distributed machinery).
-
-    Relational statements (scan/join/agg/sort) over a small input run
-    with ONE shuffle partition — Impala's single-node plan. Measured at
-    sf0.1 (interleaved A/B, two independent runs): every relational
-    headline query improves (suite -6% and -28%); the win is partly
-    task-scheduling (32 -> 1 reduce tasks) and partly structural: a
-    1-partition range exchange skips the RangePartitioner SAMPLING JOB,
-    which otherwise re-executes the whole aggregation once per ORDER BY
-    just to pick sort boundaries.
-
-    Compute-parallel families (LLM ops: per-row hashing/shingling;
-    streaming) keep DEFAULT_SHUFFLE_PARTITIONS — rows, not bytes,
-    predict their CPU need (r6's global-8 regression; gated per-family
-    per the r7 verdict).
+    """Session whose SQLConf is PINNED to `posture(input_bytes, family)`
+    — the registry's builders plan in it (queries.sql_query passes its
+    fixture dir's bytes). Clones are cached per posture, so a builder's
+    DataFrames (and queries._PLAN_CACHE entries) keep one session.
 
     WHY A CLONED SESSION (r8 verdict what's-wrong #4 / ADVICE): the
     r6-r8 implementation SET session-global shuffle.partitions at
@@ -798,39 +831,59 @@ def posture_session(
     ISOLATED SQLConf that is never mutated after creation — the posture
     rides the returned DataFrame itself, so concurrent/interleaved
     statement families cannot cross-contaminate.
-
-    Above the tiny threshold nothing changes: AQE owns partition counts
-    at the 100 TB design point.
     """
-    if os.environ.get("SPARK_GRAFT_DISABLE_SMALL_POSTURE"):
-        return spark  # caller owns shuffle parallelism (determinism tests)
-    # tighter than SMALL_QUERY_BYTES (the bloom/AQE gate): the
-    # single-partition win is the skipped sampling job + tiny-task
-    # scheduling, worth ~0.1s — above ~64 MB of input the lost
-    # reduce parallelism costs more (sf1's 6M-row joins want cores)
-    tiny = _dir_total_bytes(sf_dir) < (64 << 20)
-    parts = (
-        "1" if (tiny and family == "relational") else DEFAULT_SHUFFLE_PARTITIONS
-    )
-    # the bloom/AQE byte class is part of the key (r9 ADVICE): every
-    # posture conf is pinned at clone CREATION and never mutated after,
-    # so interleaving two sf_dirs on opposite sides of SMALL_QUERY_BYTES
-    # cannot flip a not-yet-executed DataFrame's posture.
-    small = _dir_total_bytes(sf_dir) < SMALL_QUERY_BYTES
-    key = (_session_token(spark), f"parts={parts},small={small}")
+    conf = posture(input_bytes, family)
+    if conf is None:
+        return spark
+    key = (_session_token(spark), tuple(sorted(conf.items())))
     child = _FAMILY_SESSIONS.get(key)
     if child is None:
         try:
             child = spark.newSession()
             ensure_session_conf(child)
-            child.conf.set("spark.sql.shuffle.partitions", parts)
-            child.conf.set(
-                "spark.sql.optimizer.runtime.bloomFilter.enabled",
-                "false" if small else "true",
-            )
-            child.conf.set("spark.sql.adaptive.enabled", "false" if small else "true")
+            for k, v in conf.items():
+                child.conf.set(k, v)
             child._impala_spark_pinned = True  # register_tables: hands off
         except Exception:
             return spark  # static-conf build: keep whatever the session has
         _FAMILY_SESSIONS[key] = child
     return child
+
+
+#: routed session token -> (its runtime conf when cloned, the clone
+#: pinned to the single-node posture)
+_SINGLE_NODE_SESSIONS: dict[str, tuple] = {}
+
+
+def posture_df(df: DataFrame, input_bytes: int | None) -> DataFrame:
+    """`df` planned under the posture of a query reading `input_bytes`
+    (ImpalaEngine's plain queries): below SINGLE_NODE_MAX_INPUT_BYTES
+    its analyzed plan moves to a clone of its own session with only the
+    posture keys changed, where it is optimized, planned and executed;
+    otherwise `df` itself.
+
+    Analysis (and its error texts) stays in df's session, which owns the
+    temp views the statement names. `cloneSession()` copies that
+    session's CURRENT runtime conf — SETs, COMPUTE STATS's CBO flags, a
+    stats session's posture — which `newSession()` would lose (it starts
+    from SparkContext defaults). The clone is reused while that conf is
+    unchanged (one JVM-side map comparison, ~0.5 ms, against ~5 ms to
+    clone, pin and wrap a session and build its planner state anew) and
+    replaced after a SET; its own conf is never mutated, so a DataFrame
+    keeps the posture it planned with."""
+    conf = posture(input_bytes)
+    if conf is None or conf[_SHUFFLE_PARTITIONS] != "1":
+        return df
+    src = df.sparkSession
+    current = src._jsparkSession.sessionState().conf().getAllConfs()
+    cached = _SINGLE_NODE_SESSIONS.get(_session_token(src))
+    if cached is None or not cached[0].equals(current):
+        jclone = src._jsparkSession.cloneSession()
+        for k, v in conf.items():
+            jclone.conf().set(k, v)
+        cached = (current, SparkSession(src.sparkContext, jclone))
+        _SINGLE_NODE_SESSIONS[_session_token(src)] = cached
+    clone = cached[1]
+    dataset = getattr(src._jvm, "org.apache.spark.sql.classic.Dataset")
+    jdf = dataset.ofRows(clone._jsparkSession, df._jdf.queryExecution().analyzed())
+    return DataFrame(jdf, clone)

@@ -30,6 +30,12 @@ def test_select_simple_table(eng):
         ev("default.lineitem", "TABLE", "SELECT")}
 
 
+def test_table_value_audits_its_table(eng):
+    """TABLE t (the SQL-standard table value Spark runs) is a SELECT of t."""
+    assert eng.access_events("TABLE lineitem") == {
+        ev("default.lineitem", "TABLE", "SELECT")}
+
+
 def test_select_view_records_view_and_underlying(eng):
     eng.sql("CREATE VIEW audit_v1 AS SELECT * FROM orders")
     eng.sql("CREATE VIEW audit_v2 AS SELECT * FROM audit_v1")

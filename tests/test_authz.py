@@ -276,6 +276,48 @@ class TestEnforcement:
             e.sql("DROP ROLE rl_use")
             spark.sql("DROP DATABASE IF EXISTS authz_other CASCADE")
 
+    def test_spark_native_shapes_are_authorized(self, spark):
+        """TABLE t reads t; a FROM-first query is a shape the resolver
+        cannot see into, so it needs a server-scope grant."""
+        e = _reader(spark, "rl_native", "TABLE orders")
+        try:
+            assert e.sql("TABLE orders").count() > 0
+            with pytest.raises(ImpalaAnalysisError,
+                               match="execute 'SELECT' on: default.lineitem$"):
+                e.sql("TABLE lineitem")
+            for sql in ("FROM lineitem SELECT count(*)",
+                        "FROM orders SELECT count(*)"):
+                with pytest.raises(ImpalaAnalysisError,
+                                   match="execute 'SELECT' on: server$"):
+                    e.sql(sql)
+            e.sql("GRANT ALL ON SERVER TO ROLE rl_native")
+            assert e.sql("FROM lineitem SELECT count(*)").collect()[0][0] > 0
+        finally:
+            e.sql("DROP ROLE rl_native")
+
+    def test_qualified_refs_are_authorized_as_written(self, spark):
+        """After USE of another database, `default.<t>` names the
+        default-database table in privilege checks and in the
+        authorization statements, not a table of the current one."""
+        spark.sql("CREATE DATABASE IF NOT EXISTS authz_other")
+        e = _reader(spark, "rl_qtext", "TABLE default.orders",
+                    "TABLE authz_other.region")
+        try:
+            e.sql("USE authz_other")
+            assert e.sql("SELECT count(*) FROM default.orders").collect()
+            assert e.access_events("SELECT count(*) FROM default.orders") == {
+                ("default.orders", "TABLE", "SELECT")}
+            assert [(r.database, r.table) for r in e.sql(
+                "SHOW GRANT ROLE rl_qtext ON TABLE default.orders").collect()
+            ] == [("default", "orders")]
+            e.sql("GRANT SELECT ON TABLE default.customer TO ROLE rl_qtext")
+            e.sql("USE default")
+            assert e.sql("SELECT count(*) FROM customer").collect()
+        finally:
+            spark.catalog.setCurrentDatabase("default")
+            e.sql("DROP ROLE rl_qtext")
+            spark.sql("DROP DATABASE IF EXISTS authz_other CASCADE")
+
     def test_select_enforcement_lifecycle(self, spark):
         e = ImpalaEngine(spark, sf_dir=SF, server_name="server1", user="carol")
         e._authz.user_groups = {"carol": {"readers"}}

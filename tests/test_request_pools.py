@@ -462,13 +462,13 @@ def test_engine_concurrent_queries_bounded_by_pool(spark, sf_dir, tmp_path):
     state = {"in_flight": 0, "max_seen": 0, "done": 0, "errors": []}
     orig = eng._run_query_stmt
 
-    def tracked(q, kind):
+    def tracked(*args):
         with lock:
             state["in_flight"] += 1
             state["max_seen"] = max(state["max_seen"], state["in_flight"])
         try:
             time.sleep(0.05)  # hold the slot long enough to overlap
-            return orig(q, kind)
+            return orig(*args)
         finally:
             with lock:
                 state["in_flight"] -= 1

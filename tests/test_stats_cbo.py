@@ -73,6 +73,20 @@ def _norm_rows(rows):
     ]
 
 
+def _stats_routed(df, sf_dir: str) -> bool:
+    """True when `df` plans in `sf_dir`'s stats session or a posture
+    clone of it (tiny queries hand their plan to one): the session's
+    current database is the stats database and it parses LTZ literals.
+    False for the engine session and its clones."""
+    from impala_spark.session import stats_db_name
+
+    s = df.sparkSession
+    return (
+        s.catalog.currentDatabase() == stats_db_name(sf_dir)
+        and s.conf.get("spark.sql.timestampType") == "TIMESTAMP_LTZ"
+    )
+
+
 def _executed(df) -> str:
     df.collect()
     return df._jdf.queryExecution().executedPlan().toString()
@@ -81,14 +95,14 @@ def _executed(df) -> str:
 def test_compute_stats_promotes_and_routes(spark):
     eng = ImpalaEngine(spark, sf_dir=SF_01)
     default_df = eng.sql(Q3)
-    assert default_df.sparkSession is spark
+    assert not _stats_routed(default_df, SF_01)
     default_rows = _norm_rows(default_df.collect())
     for t in TPCH:
         eng.sql(f"COMPUTE STATS {t}")
     assert eng._stats_tables == set(TPCH)
     df = eng.sql(Q3)
     # routed to the stats session, Impala-parity NTZ output schema
-    assert df.sparkSession is not spark
+    assert _stats_routed(df, SF_01)
     assert [f.dataType.typeName() for f in df.schema.fields if
             f.name == "o_orderdate"] == ["timestamp_ntz"]
     # identical results (double-sum accumulation order may differ by ULPs)
@@ -105,7 +119,7 @@ def test_routing_guards(spark):
         "SELECT COUNT(*) AS n FROM stats_guard_v JOIN orders"
         " ON stats_guard_v.o_orderkey = orders.o_orderkey"
     )
-    assert df.sparkSession is spark
+    assert not _stats_routed(df, SF_01)
     # non-SELECT statements keep the default session
     assert eng.sql("SHOW TABLES").sparkSession is spark
 
@@ -159,7 +173,7 @@ def test_stats_plans_broadcast_shapes_sf10(spark):
         eng.sql(f"COMPUTE STATS {t}")
     for name, q, min_rows in (("q3", Q3, 10), ("q5", Q5, 1), ("q10", Q10, 20)):
         df = eng.sql(q)
-        assert df.sparkSession is not spark, name
+        assert _stats_routed(df, SF_10), name
         assert len(df.collect()) >= min_rows, name
         plan = _executed(df)
         assert "SortMergeJoin" not in plan, (name, plan)
@@ -184,7 +198,7 @@ def test_stats_path_matches_duckdb_oracle(spark):
         eng.sql(f"COMPUTE STATS {t}")
     for name, q in (("q3", Q3), ("q5", Q5), ("q10", Q10)):
         df = eng.sql(q)
-        assert df.sparkSession is not spark, name
+        assert _stats_routed(df, SF_01), name
         got = sorted(
             tuple(
                 round(v, 2) if isinstance(v, float) else str(v)
@@ -216,7 +230,7 @@ def test_stats_broadcast_budget_flips_at_scale(spark, monkeypatch):
     # a fresh clone must exist for the patched budget to apply
     S._STATS_SESSIONS.pop((S._session_token(spark), SF_01), None)
     df = eng.sql(Q3)
-    assert df.sparkSession is not spark
+    assert _stats_routed(df, SF_01)
     plan = _executed(df)
     assert "ShuffledHashJoin" in plan or "SortMergeJoin" in plan, plan
     S._STATS_SESSIONS.pop((S._session_token(spark), SF_01), None)
@@ -238,7 +252,7 @@ def test_rewrite_composes_with_stats_routing(spark, monkeypatch):
         " FROM orders GROUP BY o_orderstatus"
     )
     df = eng.sql(q)
-    assert df.sparkSession is not spark  # routed
+    assert _stats_routed(df, SF_01)  # routed
     plan = _executed(df)
     assert "Expand" not in plan, plan  # rewritten
     # values match DuckDB on the same parquet
@@ -289,11 +303,11 @@ def test_drop_stats_demotes_routing(spark):
     eng = ImpalaEngine(spark, sf_dir=SF_01)
     for t in TPCH:
         eng.sql(f"COMPUTE STATS {t}")
-    assert eng.sql(Q3).sparkSession is not spark
+    assert _stats_routed(eng.sql(Q3), SF_01)
     eng.sql("DROP STATS orders")
-    assert eng.sql(Q3).sparkSession is spark  # orders left the set
+    assert not _stats_routed(eng.sql(Q3), SF_01)  # orders left the set
     eng.sql("COMPUTE STATS orders")  # re-promote: routing returns
-    assert eng.sql(Q3).sparkSession is not spark
+    assert _stats_routed(eng.sql(Q3), SF_01)
 
 
 def test_two_sf_dirs_promote_into_isolated_databases(spark):
@@ -310,9 +324,10 @@ def test_two_sf_dirs_promote_into_isolated_databases(spark):
     rb = b.sql("SELECT COUNT(*) AS n FROM nation").collect()[0][0]
     assert ra == rb == 25  # nation is 25 rows at every SF
     # each routed session reads its OWN db
-    sa = a.sql("SELECT COUNT(*) AS n FROM nation").sparkSession
-    sb = b.sql("SELECT COUNT(*) AS n FROM nation").sparkSession
-    assert sa is not spark and sb is not spark and sa is not sb
+    da = a.sql("SELECT COUNT(*) AS n FROM nation")
+    db = b.sql("SELECT COUNT(*) AS n FROM nation")
+    assert _stats_routed(da, SF_001) and _stats_routed(db, SF_01)
+    sa, sb = da.sparkSession, db.sparkSession
     assert sa.catalog.currentDatabase() != sb.catalog.currentDatabase()
 
 
@@ -338,7 +353,7 @@ def test_managed_table_compute_stats_promotes_and_routes(spark):
         " WHERE c_custkey = o_custkey GROUP BY o_orderpriority"
     )
     df = eng.sql(q)
-    assert df.sparkSession is not spark, "managed+fixture join must route"
+    assert _stats_routed(df, SF_01), "managed+fixture join must route"
     plan = _executed(df)
     # CBO broadcasts the (small, stats-known) derived table
     assert "BroadcastHashJoin" in plan and "CartesianProduct" not in plan, plan
@@ -360,17 +375,17 @@ def test_managed_mutation_demotes_until_recompute(spark):
         "SELECT COUNT(*) AS n FROM stats_mut, orders"
         " WHERE c_custkey = o_custkey"
     )
-    assert eng.sql(q).sparkSession is not spark
+    assert _stats_routed(eng.sql(q), SF_01)
     eng.sql(
         "INSERT INTO stats_mut SELECT c_custkey, c_nationkey"
         " FROM customer WHERE c_mktsegment = 'AUTOMOBILE'"
     )
     demoted = eng.sql(q)
-    assert demoted.sparkSession is spark, "post-INSERT must demote"
+    assert not _stats_routed(demoted, SF_01), "post-INSERT must demote"
     want = demoted.collect()[0][0]
     eng.sql("COMPUTE STATS stats_mut")
     df = eng.sql(q)
-    assert df.sparkSession is not spark, "recompute must re-promote"
+    assert _stats_routed(df, SF_01), "recompute must re-promote"
     assert df.collect()[0][0] == want, "routed read must see the INSERT"
     # DROP TABLE: neither path may resolve the name afterwards
     eng.sql("DROP TABLE stats_mut")
@@ -414,7 +429,7 @@ def test_gate_input_bytes_prefers_catalog_stats(spark):
 _PERSIST_SCRIPT = """
 import sys
 sys.path.insert(0, "/root/repo")
-from impala_spark.session import PROMOTION_MODE, get_spark
+from impala_spark.session import PROMOTION_MODE, get_spark, stats_db_name
 from impala_spark.engine import ImpalaEngine
 
 spark = get_spark("persist_probe")
@@ -429,7 +444,8 @@ df = eng.sql(
     "SELECT COUNT(*) AS n FROM nation JOIN region"
     " ON n_regionkey = r_regionkey"
 )
-assert df.sparkSession is not spark, "must route to the stats session"
+assert df.sparkSession.catalog.currentDatabase() == stats_db_name(SF), \\
+    "must route to the stats session"
 print("PROBE_OK", "{want_mode}", df.collect()[0][0], flush=True)
 """
 
