@@ -696,34 +696,37 @@ class ImpalaEngine:
         """Hand a statement to Spark through translate — the query path,
         and every statement the engine leaves to Spark — under an
         admission slot. The statement is sized once: admission, the
-        size-gated rewrites and the posture all read `nbytes`."""
+        size-gated rewrites and the posture all read its sizes."""
+        nbytes, bound = self._gate_input_bytes(stmt.tables)
+        token = self._admit(nbytes)
+        try:
+            return self._run_query_stmt(stmt, nbytes, bound)
+        finally:
+            if token is not None:
+                token.release()
+
+    def _run_query_stmt(
+        self, stmt: Stmt, nbytes: int | None, bound: int | None
+    ) -> DataFrame:
+        df, sess = self._query_df(stmt, nbytes, bound)
+        if sess is not self.spark:
+            df = _ntz_outputs(df)
+        return _boolean_null_outputs(df)
+
+    def _query_df(
+        self, stmt: Stmt, nbytes: int | None, bound: int | None
+    ) -> tuple[DataFrame, SparkSession]:
+        """The DataFrame statement `stmt` plans to, and the session it
+        is routed to — shared by execution and EXPLAIN. `nbytes` and
+        `bound` are its _gate_input_bytes: the size-gated rewrites read
+        the first; a plain query is analyzed in the routed session, then
+        handed to session.posture_df with the second (EXPLAIN of a
+        write's source passes None: it plans as the write runs)."""
         q = stmt.text
         if self.appx_count_distinct:
             from impala_spark.parser import rewrite_appx_count_distinct
 
             q = rewrite_appx_count_distinct(q)
-        nbytes = self._gate_input_bytes(stmt.tables)
-        token = self._admit(nbytes)
-        try:
-            return self._run_query_stmt(q, stmt, nbytes)
-        finally:
-            if token is not None:
-                token.release()
-
-    def _run_query_stmt(self, q: str, stmt: Stmt, nbytes: int | None) -> DataFrame:
-        df, sess = self._query_df(q, stmt, nbytes)
-        if sess is not self.spark:
-            df = _ntz_outputs(df)
-        df = _boolean_null_outputs(df)
-        return posture_df(df, nbytes) if stmt.kind == "query" else df
-
-    def _query_df(
-        self, q: str, stmt: Stmt, nbytes: int | None
-    ) -> tuple[DataFrame, SparkSession]:
-        """The DataFrame statement `q` (classified as `stmt`, reading
-        `nbytes`) analyzes to, and the session it is routed to — shared
-        by execution and EXPLAIN, which both hand a plain query's plan on
-        to session.posture_df."""
         # strict-mode analysis always runs on the USER's text first
         sql_text = translate(q, strict=self.strict)
         rw = self._plan_rewrite(q, nbytes)
@@ -734,16 +737,19 @@ class ImpalaEngine:
         # the same tables)
         df = self._global_rank_df(rw if rw is not None else q, sess, nbytes)
         if df is None and rw is None:
-            return self._sql_with_impala_errors(sql_text, spark=sess), sess
-        if df is None:
-            df = self._sql_with_impala_errors(translate(rw), spark=sess)
-        # Both rewrites rename UNALIASED outputs (__cd0/__a0, r10 ADVICE):
-        # restore the statement's own names positionally. Analysis-only —
-        # the unrewritten frame is never executed, and the rewrites keep
-        # select-item order and count.
-        orig_cols = self._sql_with_impala_errors(sql_text, spark=sess).columns
-        if df.columns != orig_cols:
-            df = df.toDF(*orig_cols)
+            df = self._sql_with_impala_errors(sql_text, spark=sess)
+        else:
+            if df is None:
+                df = self._sql_with_impala_errors(translate(rw), spark=sess)
+            # Both rewrites rename UNALIASED outputs (__cd0/__a0, r10
+            # ADVICE): restore the statement's own names positionally.
+            # Analysis-only — the unrewritten frame is never executed,
+            # and the rewrites keep select-item order and count.
+            orig_cols = self._sql_with_impala_errors(sql_text, spark=sess).columns
+            if df.columns != orig_cols:
+                df = df.toDF(*orig_cols)
+        if stmt.kind == "query":
+            df = posture_df(df, bound)
         return df, sess
 
     # -- statement handlers (one per _STATEMENTS row) -------------------------
@@ -1479,38 +1485,57 @@ class ImpalaEngine:
             df = df.limit(plan.limit)
         return df
 
-    def _gate_input_bytes(self, tables: frozenset[str]) -> int | None:
-        """Input-size estimate of a statement reading `tables` for
-        admission, the size-gated rewrites and the posture, preferring
-        catalog stats over file sizes (r10 verdict task #5 — the
-        reference costs every such decision from COMPUTE STATS numbers):
-        per table, catalog sizeInBytes when promoted, the table's own
-        files when its path is known (fixture parquet / managed warehouse
-        dir), and the whole fixture dir only as the conservative fallback
-        (no table, a view, an unknown name). None without a fixture dir
-        (unknown scale: Catalyst's default plans)."""
+    def _gate_input_bytes(
+        self, tables: frozenset[str]
+    ) -> tuple[int | None, int | None]:
+        """(estimate, bound): the input size of a statement reading
+        `tables`, preferring catalog stats over file sizes (r10 verdict
+        task #5 — the reference costs every such decision from COMPUTE
+        STATS numbers). Per table: catalog sizeInBytes when promoted,
+        the table's own files when its path is known (fixture parquet /
+        managed warehouse dir), for an engine view the tables it reads,
+        and for any other table (a catalog table of another database, a
+        temp view made outside the engine) Catalyst's estimate.
+
+        The estimate feeds admission and the size-gated rewrites, which
+        fire above a size: the whole fixture dir stands in when there is
+        no table or a table has no size (no estimate, no such name).
+        The bound feeds the posture, which fires below a size, so it is
+        the estimate only when every table's size is known, else None —
+        the fixture dir bounds nothing stored elsewhere. Both None
+        without a fixture dir (unknown scale: Catalyst's default
+        plans)."""
         if self._sf_dir is None:
-            return None
+            return None, None
         import os as _os
 
         from impala_spark.session import (
             TABLES,
             _dir_total_bytes,
+            relation_bytes,
             table_stats_bytes,
         )
 
         fallback = _dir_total_bytes(self._sf_dir)
         if not tables:
-            return fallback
+            return fallback, fallback
         total = 0
-        for r in tables:
+        pending, seen_views = list(tables), set()
+        while pending:
+            r = pending.pop()
+            if r in self._views and r in self._view_texts:
+                if r not in seen_views:
+                    seen_views.add(r)
+                    pending.extend(scanned_tables(self._view_texts[r]))
+                continue
             b = None
-            if r in self._stats_tables and r not in self._views:
+            if r in self._stats_tables:
                 b = table_stats_bytes(
                     self.spark, self._sf_dir, r, self._stats_versions.get(r, 0)
                 )
             if b is None:
                 info = ddl.table_info(r)
+                fixture = _os.path.join(self._sf_dir, f"{r}.parquet")
                 if info is not None:
                     # fresh walk, not _dir_total_bytes: managed tables
                     # mutate, so a per-path size cache would go stale
@@ -1521,19 +1546,14 @@ class ImpalaEngine:
                                 b += _os.path.getsize(_os.path.join(root, f))
                             except OSError:
                                 pass
-                elif r in TABLES and r not in self._views:
-                    p = _os.path.join(self._sf_dir, f"{r}.parquet")
-                    if _os.path.isfile(p):
-                        try:
-                            b = _os.path.getsize(p)
-                        except OSError:
-                            b = None
-                    elif _os.path.isdir(p):
-                        b = _dir_total_bytes(p)
+                elif r in TABLES and _os.path.exists(fixture):
+                    b = _dir_total_bytes(fixture)
+                else:
+                    b = relation_bytes(self.spark, r)
             if b is None:
-                return fallback  # view / unknown name: conservative
+                return fallback, None
             total += b
-        return total
+        return total, total
 
     def _session_view_name(self, raw: str) -> str:
         """Resolve a possibly db-qualified view/table name to a session
@@ -2423,11 +2443,11 @@ class ImpalaEngine:
             query, default_db=self.spark.catalog.currentDatabase()
         )
 
-    def _explain_dml(self, stmt: Stmt) -> str | None:
-        """EXPLAIN of a write statement: the sink line the reference's
-        planner puts at the plan root (HdfsTableSink 'WRITE TO HDFS
-        [db.t, OVERWRITE=...]'; Kudu-surface UPDATE/DELETE/UPSERT sinks)
-        over the planned SOURCE query. Returns None for queries."""
+    def _explain_sink(self, stmt: Stmt) -> str | None:
+        """The sink line the reference's planner puts at the root of a
+        write statement's plan (HdfsTableSink 'WRITE TO HDFS [db.t,
+        OVERWRITE=...]'; Kudu-surface UPDATE/DELETE/UPSERT sinks), which
+        EXPLAIN prints over the planned SOURCE query. None for queries."""
         kind, t = stmt.kind, stmt.target
         if kind not in _EXPLAINABLE_KINDS or (
             kind in ("insert", "upsert") and not stmt.source
@@ -2458,11 +2478,7 @@ class ImpalaEngine:
             sink = f"UPDATE [default.{t}]" if kind == "update" else f"DELETE FROM [default.{t}]"
         else:
             return None
-        # the source plans as the write runs it: in the engine session's
-        # own posture (only plain queries take posture_df)
-        src = self.classify(stmt.plan_source or stmt.source)
-        df, _sess = self._query_df(src.text, src, self._gate_input_bytes(src.tables))
-        return f"{sink}\n|\n" + self._plan_text(df)
+        return sink
 
     def explain(self, query: str) -> str:
         """Impala-style plan text (planner/PlanNode.getExplainString analog).
@@ -2473,21 +2489,20 @@ class ImpalaEngine:
         ExchangeNodes (shuffle boundaries).
         """
         stmt = self.classify(query.strip().rstrip(";"))
-        dml = self._explain_dml(stmt)
-        if dml is not None:
-            return dml
+        sink = self._explain_sink(stmt)
         # EXPLAIN plans through the same builder as execution: the same
         # strict analysis and error texts, the same session, the same
         # plan rewrites and posture — after COMPUTE STATS the text shows
         # the CBO plan, above the distinct-rewrite gate the two-phase
         # join plan, and over KB-sized tables the single-node plan the
         # statement will actually get (the reference's EXPLAIN always
-        # reflects the executed plan).
-        nbytes = self._gate_input_bytes(stmt.tables)
-        df, _sess = self._query_df(query, stmt, nbytes)
-        if stmt.kind == "query":
-            df = posture_df(df, nbytes)
-        return self._plan_text(df)
+        # reflects the executed plan). A write's source plans as the
+        # write runs it, in the engine session's own posture.
+        src = stmt if sink is None else self.classify(stmt.plan_source or stmt.source)
+        nbytes, bound = self._gate_input_bytes(src.tables)
+        df, _sess = self._query_df(src, nbytes, bound if sink is None else None)
+        text = self._plan_text(df)
+        return text if sink is None else f"{sink}\n|\n{text}"
 
     def _plan_text(self, df: DataFrame) -> str:
         """The Impala-style plan text of `df`'s executed plan (explain)."""

@@ -168,22 +168,102 @@ def test_tiny_front_door_query_plans_single_node(spark):
 
 
 def test_query_above_the_ceiling_keeps_the_session_posture(spark, monkeypatch):
-    """A view sizes as the whole fixture dir (the conservative
-    fallback): patched to the ceiling, its query keeps 32 partitions."""
+    """A view sizes as the tables it reads: with orders patched to the
+    ceiling, a query over a view of it keeps 32 partitions."""
     from impala_spark import session as S
     from impala_spark.engine import ImpalaEngine
+    from impala_spark.parser import scanned_tables
 
     eng = ImpalaEngine(spark, SF_TINY)
     eng.sql("CREATE VIEW posture_ceiling_v AS SELECT * FROM orders")
     q = "SELECT o_orderstatus, count(*) AS n FROM posture_ceiling_v GROUP BY o_orderstatus"
     try:
+        size = os.path.getsize(os.path.join(SF_TINY, "orders.parquet"))
+        assert eng._gate_input_bytes(scanned_tables(q)) == (size, size)
         assert set(_exchange_partitions(eng.sql(q))) == {1}
-        monkeypatch.setitem(S._DIR_BYTES, SF_TINY, S.SINGLE_NODE_MAX_INPUT_BYTES)
+        monkeypatch.setitem(
+            S._DIR_BYTES, os.path.join(SF_TINY, "orders.parquet"),
+            S.SINGLE_NODE_MAX_INPUT_BYTES)
         df = eng.sql(q)
         assert df.sparkSession is spark
         assert set(_exchange_partitions(df)) == {32}
     finally:
         eng.sql("DROP VIEW posture_ceiling_v")
+
+
+def test_tables_stored_elsewhere_size_from_catalyst(spark, monkeypatch):
+    """A catalog table of another database is stored outside the
+    fixture dir, so the dir's bytes bound nothing: it sizes from
+    Catalyst's estimate, and above the ceiling its query keeps the
+    session's conf. A table Catalyst has no estimate for keeps it too."""
+    from impala_spark import session as S
+    from impala_spark.engine import ImpalaEngine
+    from impala_spark.parser import scanned_tables
+
+    eng = ImpalaEngine(spark, SF_TINY)
+    spark.sql("CREATE DATABASE IF NOT EXISTS posture_ext_db")
+    try:
+        spark.sql(
+            "CREATE TABLE posture_ext_db.t USING parquet AS"
+            " SELECT id % 3 AS k FROM range(30)")
+        q = "SELECT k, count(*) AS n FROM posture_ext_db.t GROUP BY k"
+        nbytes = S.relation_bytes(spark, "posture_ext_db.t")
+        assert 0 < nbytes < S.SINGLE_NODE_MAX_INPUT_BYTES
+        assert eng._gate_input_bytes(scanned_tables(q)) == (nbytes, nbytes)
+        assert set(_exchange_partitions(eng.sql(q))) == {1}
+        spark.createDataFrame([(i % 3,) for i in range(30)], "k long") \
+            .createOrReplaceTempView("posture_rows")
+        rows_q = "SELECT k, count(*) AS n FROM posture_rows GROUP BY k"
+        assert eng._gate_input_bytes(scanned_tables(rows_q)) == (TINY_BYTES, None)
+        df = eng.sql(rows_q)
+        assert df.sparkSession is spark
+        assert set(_exchange_partitions(df)) == {32}
+        monkeypatch.setattr(
+            S, "relation_bytes", lambda s, name: S.SINGLE_NODE_MAX_INPUT_BYTES)
+        df = eng.sql(q)
+        assert df.sparkSession is spark
+        assert set(_exchange_partitions(df)) == {32}
+        assert sorted(map(tuple, df.collect())) == [(0, 10), (1, 10), (2, 10)]
+    finally:
+        spark.catalog.dropTempView("posture_rows")
+        spark.sql("DROP DATABASE IF EXISTS posture_ext_db CASCADE")
+
+
+def test_use_reaches_a_tiny_query(spark):
+    """The optimizer resolves current_database() in the session that
+    plans the query — the clone — so a USE replaces it."""
+    from impala_spark.engine import ImpalaEngine
+
+    eng = ImpalaEngine(spark, SF_TINY)
+    assert eng.sql("SELECT database()").collect()[0][0] == "default"
+    spark.sql("CREATE DATABASE IF NOT EXISTS posture_use_db")
+    try:
+        eng.sql("USE posture_use_db")
+        assert eng.sql("SELECT database()").collect()[0][0] == "posture_use_db"
+        assert eng.sql(AGG).sparkSession.catalog.currentDatabase() == "posture_use_db"
+    finally:
+        eng.sql("USE default")
+        spark.sql("DROP DATABASE IF EXISTS posture_use_db CASCADE")
+    assert eng.sql("SELECT database()").collect()[0][0] == "default"
+
+
+def test_registry_clone_follows_runtime_sets(spark):
+    """posture_session clones the session as it is now: a SET reaches
+    the registry's next clone, while an earlier DataFrame keeps the conf
+    it was built with."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    before = posture_session(spark, TINY_BYTES, "relational")
+    try:
+        spark.conf.set(key, "-1")
+        after = posture_session(spark, TINY_BYTES, "relational")
+        assert after is not before
+        assert after.conf.get(key) == "-1"
+        assert after.conf.get("spark.sql.shuffle.partitions") == "1"
+        assert before.conf.get(key) == old
+        assert posture_session(spark, TINY_BYTES, "relational") is after
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_runtime_sets_reach_a_tiny_query(spark):

@@ -404,19 +404,20 @@ def test_gate_input_bytes_prefers_catalog_stats(spark):
     whole_dir = _dir_total_bytes(SF_01)
     orders = scanned_tables("SELECT COUNT(*) FROM orders")
     # unpromoted fixture: per-table file size, not the whole dir
-    per_file = eng._gate_input_bytes(orders)
+    per_file = eng._gate_input_bytes(orders)[0]
     assert 0 < per_file < whole_dir
     eng.sql("COMPUTE STATS orders")
-    with_stats = eng._gate_input_bytes(orders)
+    with_stats = eng._gate_input_bytes(orders)[0]
     assert with_stats > 0
     # catalog sizeInBytes of a parquet LOCATION table ~= its file bytes
     assert abs(with_stats - per_file) <= per_file  # same order of magnitude
     # an inline view does not hide the tables read beside it
     assert eng._gate_input_bytes(
-        scanned_tables("SELECT 1 FROM (SELECT 1) s, orders")) == with_stats
-    # no table, or an unknown name: the conservative whole-dir fallback
-    assert eng._gate_input_bytes(frozenset()) == whole_dir
-    assert eng._gate_input_bytes(frozenset({"no_such_table"})) == whole_dir
+        scanned_tables("SELECT 1 FROM (SELECT 1) s, orders"))[0] == with_stats
+    # no table, or an unknown name: the conservative whole-dir fallback,
+    # which bounds nothing for the posture
+    assert eng._gate_input_bytes(frozenset())[0] == whole_dir
+    assert eng._gate_input_bytes(frozenset({"no_such_table"})) == (whole_dir, None)
 
 
 # ---------------------------------------------------------------------------
