@@ -95,7 +95,10 @@ def mutation_count(name: str) -> int:
 
 
 def _bump(name: str) -> None:
+    from impala_spark.session import bump_catalog_version
+
     _MUTATIONS[name] = _MUTATIONS.get(name, 0) + 1
+    bump_catalog_version()
 
 
 def _unshadow_fixture(spark: SparkSession, name: str) -> None:

@@ -11,8 +11,11 @@ UPDATE/DELETE) are routed to Python implementations here / in ddl.py.
 from __future__ import annotations
 
 import re
+import threading
+from collections import OrderedDict
 from dataclasses import dataclass
-from functools import cached_property
+from functools import cached_property, wraps
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -20,7 +23,16 @@ from pyspark.sql import functions as F
 from impala_spark import ddl
 from impala_spark import functions as ifn
 from impala_spark.parser import ImpalaUnsupportedError, scanned_tables, translate
-from impala_spark.session import posture_df, register_tables
+from impala_spark.session import (
+    bump_catalog_version,
+    catalog_version,
+    plan_df,
+    posture_df,
+    posture_target,
+    register_tables,
+    same_state,
+    session_state,
+)
 
 
 class ImpalaAnalysisError(ImpalaUnsupportedError):
@@ -137,7 +149,7 @@ _STATEMENTS = tuple(
                 rf"(?:\s+IF\s+(?:NOT\s+)?EXISTS)?(?:\s+(?P<target>{_NAME}))?", "_run_query"),
         # any other statement the grammar knows: Spark runs it natively
         ("command", r"(?:CREATE|DROP|ALTER|TRUNCATE|LOAD|SET|USE|SHOW|DESCRIBE|COMPUTE|"
-                    r"INVALIDATE|REFRESH)\b", "_run_query"),
+                    r"INVALIDATE|REFRESH)\b", "_command"),
         ("other", r"", "_run_query"),
     )
 )
@@ -175,6 +187,7 @@ _DDL_EVENTS = {
     "set_column_stats": ("ALTER", None),
 }
 _CREATE_TABLE_HEAD_RE = re.compile(r"\s*CREATE\s+TABLE\b", re.IGNORECASE)
+_SHOW_TABLES_RE = re.compile(r"SHOW\s+TABLES\b", re.IGNORECASE)
 
 
 @dataclass(frozen=True)
@@ -204,6 +217,113 @@ class Stmt:
         authorization, auditing, admission, the size gates and stats
         routing all read it."""
         return scanned_tables(self.source or self.text)
+
+
+#: plain-query plans an engine keeps (a dashboard's distinct statements
+#: are tens; perfbench's `interactive` issues 19)
+PLAN_CACHE_SIZE = 128
+
+
+class PlanCacheInfo(NamedTuple):
+    """ImpalaEngine.plan_cache_info(), after functools' cache_info."""
+
+    hits: int
+    misses: int
+    #: entries dropped because what they planned with changed: the
+    #: catalog version moved, or the session or sizes they planned with
+    invalidations: int
+    maxsize: int
+    currsize: int
+
+
+class _Plan(NamedTuple):
+    """A plain query's plan-cache entry."""
+
+    checked: Stmt  # the statement as authorized
+    stmt: Stmt  # the statement as run (`default.<view>` refs stripped)
+    sizes: tuple  # its _gate_input_bytes
+    routed: SparkSession  # the session it was analyzed in
+    target: SparkSession  # the session it plans in: routed or its posture clone
+    state: tuple | None  # routed's session_state, when target is routed
+    plan: object  # the analyzed plan (JVM), output casts included
+
+
+class _Lookup(NamedTuple):
+    """A plain query's plan-cache key, the catalog version read with it,
+    the statement as authorized and the entry found (None: a miss)."""
+
+    key: tuple
+    version: int
+    checked: Stmt
+    entry: _Plan | None
+
+
+class _PlanCache:
+    """LRU of plain-query plans for one catalog version: the first
+    lookup under a newer version drops every entry. Thread-safe."""
+
+    def __init__(self, maxsize: int):
+        self._lock = threading.Lock()
+        self._plans: OrderedDict[tuple, _Plan] = OrderedDict()
+        self._version = catalog_version()
+        self.maxsize = maxsize
+        self.hits = self.misses = self.invalidations = 0
+
+    def _advance(self, version: int) -> bool:
+        """Move to `version` if newer; False when it is older (a lookup
+        that started before a change another thread has seen)."""
+        if version > self._version:
+            self.invalidations += len(self._plans)
+            self._plans.clear()
+            self._version = version
+        return version == self._version
+
+    def get(self, key: tuple, version: int) -> _Plan | None:
+        with self._lock:
+            entry = self._plans.get(key) if self._advance(version) else None
+            if entry is not None:
+                self._plans.move_to_end(key)
+            return entry
+
+    def hit(self) -> None:
+        with self._lock:
+            self.hits += 1
+
+    def miss(self, look: _Lookup, entry: _Plan | None) -> None:
+        """Count a planned query, and keep its plan (`entry`, None for a
+        plan not to reuse) unless the catalog changed while it planned."""
+        with self._lock:
+            self.misses += 1
+            if look.entry is not None:
+                self.invalidations += 1
+                self._plans.pop(look.key, None)
+            if entry is None or look.version != catalog_version() \
+                    or not self._advance(look.version):
+                return
+            self._plans[look.key] = entry
+            self._plans.move_to_end(look.key)
+            if len(self._plans) > self.maxsize:
+                self._plans.popitem(last=False)
+
+    def info(self) -> PlanCacheInfo:
+        with self._lock:
+            return PlanCacheInfo(
+                self.hits, self.misses, self.invalidations, self.maxsize, len(self._plans))
+
+
+def _changes_catalog(method):
+    """An API call that changes what statements plan to (like every
+    statement but a plain query through sql()): the catalog version is
+    bumped after it, even when it fails part-way."""
+
+    @wraps(method)
+    def call(self, *args, **kwargs):
+        try:
+            return method(self, *args, **kwargs)
+        finally:
+            bump_catalog_version()
+
+    return call
 
 
 def _show_surface(m: re.Match) -> str:
@@ -546,6 +666,8 @@ class ImpalaEngine:
         #: at ANALYZE time; a drifted count demotes the table from the
         #: CBO posture until COMPUTE STATS re-runs (stale-stats guard)
         self._stats_versions: dict[str, int] = {}
+        #: analyzed plans of plain queries, for their repeats (sql())
+        self._plans = _PlanCache(PLAN_CACHE_SIZE)
         if sf_dir:
             register_tables(spark, sf_dir)
         # Impala's fnv_hash/murmur_hash have no Spark builtin equivalent —
@@ -636,15 +758,39 @@ class ImpalaEngine:
         statement row's handler (queries take an admission slot there).
         Authorization (and the authorization statements themselves) read
         the text as written; only the text handed on to Spark has its
-        `default.<view>` refs stripped."""
+        `default.<view>` refs stripped.
+
+        A plain query planned before, with the same text, current
+        database, `strict` and `appx_count_distinct`, and no change to
+        the catalog since (session.catalog_version: every other
+        statement bumps it), skips classify, translate and analysis: it
+        is authorized and admitted again, and runs as a new DataFrame
+        over its cached analyzed plan (_run_query)."""
         q = query.strip().rstrip(";")
-        q = _hoist_with_clause(q[_LEADING_COMMENTS_RE.match(q).end():])
-        stmt = self.classify(q)
+        q = q[_LEADING_COMMENTS_RE.match(q).end():]
+        key = (q, self.spark.catalog.currentDatabase(), self.strict, self.appx_count_distinct)
+        version = catalog_version()
+        entry = self._plans.get(key, version)
+        if entry is not None:
+            self._enforce_authz(entry.checked)
+            return self._run_query(entry.stmt, _Lookup(key, version, entry.checked, entry))
+        q = _hoist_with_clause(q)
+        stmt = checked = self.classify(q)
         self._enforce_authz(stmt)
         spark_q = _strip_session_db_refs(q, self.spark)
         if spark_q != q and stmt.kind != "authz":
             stmt = self.classify(spark_q)
-        return getattr(self, stmt.handler)(stmt)
+        if stmt.kind == "query":
+            return self._run_query(stmt, _Lookup(key, version, checked, None))
+        try:
+            return getattr(self, stmt.handler)(stmt)
+        finally:
+            bump_catalog_version()
+
+    def plan_cache_info(self) -> PlanCacheInfo:
+        """Hits, misses and invalidations of the plain-query plan cache
+        (sql()), with its size and bound — functools' cache_info shape."""
+        return self._plans.info()
 
     def classify(self, q: str) -> Stmt:
         """Match ``q`` against the statement table (first row wins) and
@@ -692,15 +838,41 @@ class ImpalaEngine:
             handler = "_run_query"
         return Stmt(kind, q, m, target, source, handler, range_spec, plan_source)
 
-    def _run_query(self, stmt: Stmt) -> DataFrame:
+    def _run_query(self, stmt: Stmt, look: _Lookup | None = None) -> DataFrame:
         """Hand a statement to Spark through translate — the query path,
         and every statement the engine leaves to Spark — under an
         admission slot. The statement is sized once: admission, the
-        size-gated rewrites and the posture all read its sizes."""
+        size-gated rewrites and the posture all read its sizes.
+
+        A plain query comes with its plan-cache lookup (`look`, from
+        sql()). Its sizes are read again and its session derived again
+        (routing, posture clone); a cached plan serves only if all match
+        what it planned with — so a SET or spark.conf.set, a USE, a
+        resized table or SPARK_GRAFT_DISABLE_SMALL_POSTURE re-plans.
+        The DataFrame is new either way (plan_df): a re-collected one
+        would reuse its shuffle and broadcast output."""
         nbytes, bound = self._gate_input_bytes(stmt.tables)
         token = self._admit(nbytes)
         try:
-            return self._run_query_stmt(stmt, nbytes, bound)
+            if look is None:
+                return self._run_query_stmt(stmt, nbytes, bound)
+            routed = self._route_session(stmt)
+            target = posture_target(routed, bound)
+            state = session_state(routed) if target is routed else None
+            e = look.entry
+            if e is not None and e.sizes == (nbytes, bound) and e.routed is routed \
+                    and e.target is target and (state is None or same_state(state, e.state)):
+                self._plans.hit()
+                return plan_df(target, e.plan)
+            df = self._run_query_stmt(stmt, nbytes, bound)
+            plan = df._jdf.queryExecution().analyzed()
+            # rand()/uuid() draw their seed in analysis: such a plan
+            # would repeat its "random" values, so it is not kept
+            keep = df.sparkSession is target and plan.deterministic()
+            self._plans.miss(look, _Plan(
+                look.checked, stmt, (nbytes, bound), routed, target, state, plan,
+            ) if keep else None)
+            return df
         finally:
             if token is not None:
                 token.release()
@@ -753,6 +925,12 @@ class ImpalaEngine:
         return df, sess
 
     # -- statement handlers (one per _STATEMENTS row) -------------------------
+    def _command(self, stmt: Stmt) -> DataFrame:
+        """A statement Spark runs natively; a SHOW TABLES listing keeps
+        only the tables the user may see, as show_tables does."""
+        df = self._run_query(stmt)
+        return self._visible_tables(df) if _SHOW_TABLES_RE.match(stmt.text) else df
+
     def _reject_comment(self, stmt: Stmt) -> DataFrame:
         raise ImpalaUnsupportedError(
             "Syntax error: COMMENT is not a statement in Impala 2.7 "
@@ -1740,6 +1918,7 @@ class ImpalaEngine:
             raise
 
     # -- COMPUTE STATS -> ANALYZE TABLE (analysis/ComputeStatsStmt.java) ---
+    @_changes_catalog
     def compute_stats(self, table: str) -> DataFrame:
         """Impala COMPUTE STATS: table row count + per-column NDV/nulls/sizes
         (ComputeStatsStmt.java:218-242 issues exactly these child queries).
@@ -1873,6 +2052,7 @@ class ImpalaEngine:
         return self.spark.sql(f"DESCRIBE EXTENDED {table}")
 
     # -- SET (query options) ------------------------------------------------
+    @_changes_catalog
     def set_option(self, key: str, value: str) -> DataFrame:
         k = key.lower()
         self._user_set_options.add(k)
@@ -1967,15 +2147,20 @@ class ImpalaEngine:
         if pattern:
             like = pattern.replace("*", ".*")
             df = df.filter(df.tableName.rlike(f"^{like}$"))
-        if self._authz.server_name:
-            # listings show only objects the user holds ANY privilege on
-            # — column-level grants included (TestShowTableResultsFiltered)
-            visible = [
-                r.tableName for r in df.collect()
-                if self._authz.visible_table(self.spark, r.tableName)
-            ]
-            df = df.filter(F.col("tableName").isin(visible))
-        return df
+        return self._visible_tables(df)
+
+    def _visible_tables(self, df: DataFrame) -> DataFrame:
+        """A SHOW TABLES listing cut to the objects the user holds ANY
+        privilege on — column-level grants included
+        (TestShowTableResultsFiltered)."""
+        if not self._authz.server_name:
+            return df
+        visible = [
+            r.tableName for r in df.collect()
+            if self._authz.visible_table(
+                self.spark, f"{r.namespace}.{r.tableName}" if r.namespace else r.tableName)
+        ]
+        return df.filter(F.col("tableName").isin(visible))
 
     def show_databases(self) -> DataFrame:
         df = self.spark.sql("SHOW DATABASES")

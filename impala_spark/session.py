@@ -13,6 +13,12 @@ cost model, planner/RuntimeFilterGenerator.java runtime filters):
 - AQE on at scale: runtime re-plan of shuffle partition counts,
   skew-join splitting, and broadcast-join demotion/promotion from
   observed sizes.
+- Generated code is cached for the working set: Spark compiles one
+  class per whole-stage-codegen subtree shape and keeps them in an LRU
+  of spark.sql.codegen.cache.maxEntries (100 by default). perfbench's
+  19 `interactive` statements need 137 classes and its `batch` cycle
+  114, so at 100 every repeated statement recompiled ~2.6 classes (~8 ms
+  each); get_spark sets 1000, and a warm dashboard recompiles nothing.
 - Runtime bloom filters on at scale: Spark's equivalent of Impala's
   runtime filters (build-side filter pushed to the probe scan);
   register_tables disables them, and AQE, below SMALL_QUERY_BYTES.
@@ -31,6 +37,7 @@ from __future__ import annotations
 
 import os
 import re
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -146,6 +153,14 @@ def get_spark(app_name: str = "impala_spark", master: str | None = None) -> Spar
         # (UNSUPPORTED_SINGLE_PASS_ANALYZER_FEATURE on parquet reads), so
         # pin the proven fixed-point path only.
         .config("spark.sql.analyzer.singlePassResolver.enabled", "false")
+        # Generated-class cache: 1000 entries, not Spark's 100. perfbench's
+        # `interactive` statements need 137 classes and `batch` 114, so at
+        # 100 the LRU thrashed (~2.6 recompiles of ~8 ms per repeated
+        # statement, up to 13 for a window query). No size holds every
+        # shape (the 289 registry queries compile 2,924 distinct classes);
+        # 1000 holds a working set. Metaspace after 150 registry queries:
+        # 193.3 MB at 1000 against 187.0 MB at 100. Static: start-up only.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # --- semantics posture (Impala parity, SURVEY §7) ---
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
@@ -331,6 +346,28 @@ _REGISTERED: dict[tuple[str, str], dict[str, DataFrame]] = {}
 _CURRENT_SF: dict[str, str] = {}
 
 
+#: The catalog version, process-wide like what it versions (ddl's managed
+#: tables, the sessions' views): bumped after every change to what a table or
+#: view name resolves to — fixture views (re-)pointed by register_tables,
+#: a managed table written or dropped (ddl), and every statement but a
+#: plain query through ImpalaEngine.sql (DDL, DML, SET, USE, COMPUTE
+#: STATS, REFRESH, ...). ImpalaEngine's plan cache keys on it. A change
+#: made around all of these (a temp view replaced through the DataFrame
+#: API) is seen after REFRESH or INVALIDATE METADATA, as in Impala.
+_CATALOG_VERSION = 0
+_CATALOG_LOCK = threading.Lock()
+
+
+def catalog_version() -> int:
+    return _CATALOG_VERSION
+
+
+def bump_catalog_version() -> None:
+    global _CATALOG_VERSION
+    with _CATALOG_LOCK:
+        _CATALOG_VERSION += 1
+
+
 def invalidate_view_memo(spark: SparkSession) -> None:
     """Force the next register_tables on this session to re-point the
     fixture views (called by ddl when a managed table shadows/drops a
@@ -441,6 +478,7 @@ def register_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[s
         for name, df in cached.items():
             df.createOrReplaceTempView(name)
         _CURRENT_SF[tok] = sf_dir
+        bump_catalog_version()
         return cached
     dfs: dict[str, DataFrame] = {}
     for name in TABLES:
@@ -452,6 +490,7 @@ def register_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[s
         dfs[name] = df
     _REGISTERED[key] = dfs
     _CURRENT_SF[tok] = sf_dir
+    bump_catalog_version()
     return dfs
 
 
@@ -828,8 +867,19 @@ def posture(input_bytes: int | None, family: str = "relational") -> dict[str, st
     }
 
 
-#: (parent session token, pinned conf) -> (the parent's runtime conf and
-#: current database when cloned, the clone)
+def session_state(spark: SparkSession) -> tuple:
+    """What a query plans with besides its text: the session's runtime
+    conf map (a JVM snapshot) and its current database."""
+    jsess = spark._jsparkSession
+    return jsess.sessionState().conf().getAllConfs(), jsess.catalog().currentDatabase()
+
+
+def same_state(a: tuple, b: tuple) -> bool:
+    return a[1] == b[1] and a[0].equals(b[0])
+
+
+#: (parent session token, pinned conf) -> (the parent's session_state
+#: when cloned, the clone)
 _POSTURE_CLONES: dict[tuple[str, tuple], tuple] = {}
 
 
@@ -853,12 +903,11 @@ def _pinned_clone(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
     it: the optimizer resolves current_database() in the session that
     plans the query, so a clone from before a USE would answer with
     the old database."""
-    jsess = spark._jsparkSession
-    state = (jsess.sessionState().conf().getAllConfs(), jsess.catalog().currentDatabase())
+    state = session_state(spark)
     key = (_session_token(spark), tuple(sorted(conf.items())))
     cached = _POSTURE_CLONES.get(key)
-    if cached is None or not (cached[0][0].equals(state[0]) and cached[0][1] == state[1]):
-        jclone = jsess.cloneSession()
+    if cached is None or not same_state(cached[0], state):
+        jclone = spark._jsparkSession.cloneSession()
         for k, v in conf.items():
             jclone.conf().set(k, v)
         clone = SparkSession(spark.sparkContext, jclone)
@@ -886,21 +935,32 @@ def posture_session(
         return spark  # static-conf build: keep whatever the session has
 
 
-def posture_df(df: DataFrame, input_bytes: int | None) -> DataFrame:
-    """`df` planned under the posture of a query reading `input_bytes`
-    (ImpalaEngine's plain queries): below SINGLE_NODE_MAX_INPUT_BYTES
-    its analyzed plan moves to a pinned clone of its own session
-    (_pinned_clone), where it is optimized, planned and executed;
-    otherwise `df` itself.
-
-    Analysis (and its error texts) stays in df's session, which owns the
-    temp views the statement names; the clone plans with that session's
-    current conf, only the posture keys changed."""
+def posture_target(spark: SparkSession, input_bytes: int | None) -> SparkSession:
+    """The session a query analyzed in `spark` and reading `input_bytes`
+    plans in (ImpalaEngine's plain queries): below
+    SINGLE_NODE_MAX_INPUT_BYTES a pinned clone of `spark`
+    (_pinned_clone), which plans with `spark`'s current conf, only the
+    posture keys changed; otherwise `spark` itself."""
     conf = posture(input_bytes)
     if conf is None or conf[_SHUFFLE_PARTITIONS] != "1":
+        return spark
+    return _pinned_clone(spark, conf)
+
+
+def plan_df(spark: SparkSession, plan) -> DataFrame:
+    """A new DataFrame over an analyzed logical plan (a JVM object):
+    optimized, planned and executed in `spark` as a new query — nothing
+    of an earlier execution of the plan is reused."""
+    dataset = getattr(spark._jvm, "org.apache.spark.sql.classic.Dataset")
+    return DataFrame(dataset.ofRows(spark._jsparkSession, plan), spark)
+
+
+def posture_df(df: DataFrame, input_bytes: int | None) -> DataFrame:
+    """`df` planned under the posture of a query reading `input_bytes`:
+    its analyzed plan handed to posture_target's clone, or `df` itself.
+    Analysis (and its error texts) stays in df's session, which owns the
+    temp views the statement names."""
+    target = posture_target(df.sparkSession, input_bytes)
+    if target is df.sparkSession:
         return df
-    src = df.sparkSession
-    clone = _pinned_clone(src, conf)
-    dataset = getattr(src._jvm, "org.apache.spark.sql.classic.Dataset")
-    jdf = dataset.ofRows(clone._jsparkSession, df._jdf.queryExecution().analyzed())
-    return DataFrame(jdf, clone)
+    return plan_df(target, df._jdf.queryExecution().analyzed())

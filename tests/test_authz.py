@@ -276,6 +276,18 @@ class TestEnforcement:
             e.sql("DROP ROLE rl_use")
             spark.sql("DROP DATABASE IF EXISTS authz_other CASCADE")
 
+    def test_show_tables_statement_is_filtered(self, spark):
+        """The SHOW TABLES statement lists what show_tables() lists: only
+        the tables the user holds a privilege on."""
+        e = _reader(spark, "rl_show", "TABLE orders")
+        try:
+            assert {r.tableName for r in e.sql("SHOW TABLES").collect()} == {"orders"}
+            assert {r.tableName for r in e.show_tables().collect()} == {"orders"}
+            assert [r.tableName for r in e.sql("SHOW TABLES LIKE 'ord*'").collect()] == ["orders"]
+            assert e.sql("SHOW TABLES LIKE 'line*'").collect() == []
+        finally:
+            e.sql("DROP ROLE rl_show")
+
     def test_spark_native_shapes_are_authorized(self, spark):
         """TABLE t reads t; a FROM-first query is a shape the resolver
         cannot see into, so it needs a server-scope grant."""
