@@ -24,11 +24,15 @@ from impala_spark import ddl
 from impala_spark import functions as ifn
 from impala_spark.parser import ImpalaUnsupportedError, scanned_tables, translate
 from impala_spark.session import (
+    FixtureCopyInfo,
     bump_catalog_version,
     catalog_version,
+    fixture_copy_info,
+    fixture_files,
     plan_df,
     posture_df,
     posture_target,
+    refresh_fixtures,
     register_tables,
     same_state,
     session_state,
@@ -792,6 +796,11 @@ class ImpalaEngine:
         (sql()), with its size and bound — functools' cache_info shape."""
         return self._plans.info()
 
+    def fixture_copy_info(self) -> FixtureCopyInfo:
+        """The in-memory fixture copies the views read (one per fixture
+        file of the SparkContext) and the bytes they hold."""
+        return fixture_copy_info(self.spark)
+
     def classify(self, q: str) -> Stmt:
         """Match ``q`` against the statement table (first row wins) and
         work out, once, the target and the source query it reads. Leading
@@ -1296,11 +1305,15 @@ class ImpalaEngine:
     def _refresh(self, stmt: Stmt) -> DataFrame:
         # REFRESH t [PARTITION (spec)]: the partition spec narrows the
         # reload in the reference; Spark's refreshTable reloads the
-        # table's file listing either way
+        # table's file listing either way. A fixture view's in-memory
+        # copy is dropped (Spark's refresh and clearCache do not reach
+        # it), so the next scan re-reads the file.
         target = stmt.target
         if target and not stmt.match.group("tail").strip() and target.upper() != "METADATA":
-            self.spark.catalog.refreshTable(target)
+            if not refresh_fixtures(self.spark, target):
+                self.spark.catalog.refreshTable(target)
         else:
+            refresh_fixtures(self.spark)
             self.spark.catalog.clearCache()
         return ddl._ack(self.spark, "metadata refreshed")
 
@@ -2290,13 +2303,13 @@ class ImpalaEngine:
         t = ddl.table_info(table)
         if t is None:
             # view over files (fixture tables): the scan's file listing is
-            # exactly the reference's file-descriptor set for the table
+            # exactly the reference's file-descriptor set for the table;
+            # a view over a fixture's in-memory copy lists the fixture's
             from urllib.parse import urlparse
 
-            rows = []
-            for uri in self.spark.table(table).inputFiles():
-                p = urlparse(uri).path
-                rows.append((os.path.basename(p), os.path.getsize(p)))
+            files = fixture_files(self.spark, table) or [
+                urlparse(uri).path for uri in self.spark.table(table).inputFiles()]
+            rows = [(os.path.basename(p), os.path.getsize(p)) for p in files]
             if not rows:
                 raise ValueError(f"SHOW FILES: '{table}' has no backing files")
             return self.spark.createDataFrame(rows, "path: string, size_bytes: long")
@@ -2525,7 +2538,7 @@ class ImpalaEngine:
 
             df = self.spark.table(table)
             cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-            files = df.inputFiles()
+            files = fixture_files(self.spark, table) or df.inputFiles()
             loc = os.path.dirname(urlparse(files[0]).path) if files else "<in-memory>"
             ddl_text = (
                 f"CREATE EXTERNAL TABLE {table} ({cols}) STORED AS PARQUET LOCATION '{loc}'"
@@ -2717,14 +2730,34 @@ class ImpalaEngine:
             size_s = _print_bytes(size) if size is not None else "unavailable"
             return f"cardinality={card} size={size_s}"
 
-        scan_stats: list[str] = []
+        # A leaf that is an in-memory copy (a fixture view's, or a table
+        # cached by ALTER TABLE ... SET CACHED) reads as the table it
+        # copies, as Impala's plan shows a scan of an HDFS-cached table:
+        # the estimates use the copied plan's stats. Once the copy is
+        # filled Catalyst sizes it by the bytes it holds instead; the
+        # scan line then shows that size too, as the one the planner uses.
         header = ""
+        leaves: list[tuple[object, object]] = []  # (stats, relation leaf)
+        scan_stats: list[str] = []
         try:
             opt = qe.optimizedPlan()
             header = f"   {_fmt_stats(opt.stats())}\n"
-            leaves = opt.collectLeaves()
-            for i in range(leaves.size()):
-                scan_stats.append(_fmt_stats(leaves.apply(i).stats()))
+            found = opt.collectLeaves()
+            for i in range(found.size()):
+                leaf = found.apply(i)
+                st = leaf.stats()
+                if leaf.nodeName() == "InMemoryRelation":
+                    source = leaf.cacheBuilder().logicalPlan().collectLeaves().apply(0)
+                    copied = leaf.statsOfPlanToCache()
+                    shown = _fmt_stats(copied)
+                    held = int(st.sizeInBytes())
+                    if held != int(copied.sizeInBytes()):
+                        shown += f", in-memory size={_print_bytes(held)}"
+                    leaves.append((copied, source))
+                    scan_stats.append(shown)
+                else:
+                    leaves.append((st, leaf))
+                    scan_stats.append(_fmt_stats(st))
         except Exception:
             pass
         out = []
@@ -2770,18 +2803,31 @@ class ImpalaEngine:
         # position; that alignment only holds when the counts agree (a
         # ReusedExchange or AQE replan can drop/reorder physical scans).
         # On mismatch, skip per-scan annotations rather than mislabel.
-        n_scan_lines = 0
-        matched: list[tuple[str | None, int]] = []
+        # An in-memory scan is one SCAN line, named after the first scan
+        # of the plan it copies, which Spark prints nested below it (that
+        # plan runs once, to fill the copy, so its nodes are not shown).
+        matched: list[list] = []  # [name, indent]
+        copy_indent = None  # indent of the in-memory scan being read
         for raw in plan.split("\n"):
             stripped = raw.lstrip(" +-:*()0123456789")
             indent = len(raw) - len(raw.lstrip(" +-:"))
+            if copy_indent is not None:
+                if indent > copy_indent:
+                    if matched[-1][0] == "SCAN" and stripped.startswith(("FileScan", "Scan")):
+                        matched[-1][0] = next(
+                            (n for p, n in mapping if re.match(p, stripped)), "SCAN")
+                    continue
+                copy_indent = None
+            if stripped.startswith("Scan In-memory table"):
+                matched.append(["SCAN", indent])
+                copy_indent = indent
+                continue
             for pat, name in mapping:
                 if re.match(pat, stripped):
                     if name:
-                        matched.append((name, indent))
-                        if name.startswith("SCAN"):
-                            n_scan_lines += 1
+                        matched.append([name, indent])
                     break
+        n_scan_lines = sum(name.startswith("SCAN") for name, _indent in matched)
         annotate_scans = n_scan_lines == len(scan_stats)
         # Per-host resource estimate header (Planner.computeResourceReqs
         # analog) from the reference's cost-model constants:
@@ -2793,27 +2839,25 @@ class ImpalaEngine:
         MiB = 1024 * 1024
         leaf_sizes = []
         missing_stats: list[str] = []
-        try:
-            leaves = qe.optimizedPlan().collectLeaves()
-            for i in range(leaves.size()):
-                leaf = leaves.apply(i)
-                lb = int(leaf.stats().sizeInBytes())
-                # Catalyst's unknown-stats default is Long.MaxValue — a
-                # zero-file scan would otherwise estimate petabytes of
-                # per-host memory
-                leaf_sizes.append(0 if lb >= (1 << 62) else lb)
-                # Planner.getExplainString:295-307 missing-stats warning —
-                # a leaf without a CBO rowCount is a stats-less table
-                try:
-                    if leaf.stats().rowCount().isEmpty():
-                        name = leaf.relation().location().rootPaths().head().getName()
-                        name = name.removesuffix(".parquet")
-                        if f"default.{name}" not in missing_stats:
-                            missing_stats.append(f"default.{name}")
-                except Exception:
-                    pass
-        except Exception:
-            pass
+        for st, leaf in leaves:
+            try:
+                lb = int(st.sizeInBytes())
+            except Exception:
+                continue
+            # Catalyst's unknown-stats default is Long.MaxValue — a
+            # zero-file scan would otherwise estimate petabytes of
+            # per-host memory
+            leaf_sizes.append(0 if lb >= (1 << 62) else lb)
+            # Planner.getExplainString:295-307 missing-stats warning —
+            # a leaf without a CBO rowCount is a stats-less table
+            try:
+                if st.rowCount().isEmpty():
+                    name = leaf.relation().location().rootPaths().head().getName()
+                    name = name.removesuffix(".parquet")
+                    if f"default.{name}" not in missing_stats:
+                        missing_stats.append(f"default.{name}")
+            except Exception:
+                pass
         total_mem = 0
         scan_i = 0
         vcores = 0
