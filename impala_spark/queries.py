@@ -17,6 +17,7 @@ Determinism rules used throughout:
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import wraps
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,6 +25,7 @@ from pyspark.sql.window import Window
 
 from impala_spark import functions as ifn
 from impala_spark import operators as ops
+from impala_spark.engine import ImpalaEngine
 from impala_spark.parser import translate
 from impala_spark.session import (
     _dir_total_bytes,
@@ -37,37 +39,19 @@ SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
 
 
-def register(name: str, oracle: str | None = None, cache: bool = False):
-    """cache=True opts a side-effect-free fixture read into the prepared-
-    plan cache (see _PLAN_CACHE below). DDL/meta/stateful queries must
-    NOT set it."""
+def register(name: str, oracle: str | None = None):
+    """Register a DataFrame-built query; it is built anew on every call."""
 
     def deco(fn):
-        if cache:
-            def cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-                # DataFrame-built ops are the compute-parallel family:
-                # a session PINNED at the shuffle-partition default (the
-                # posture rides the DataFrame; interleaved relational
-                # builds can no longer narrow it to 1 — r8 ADVICE)
-                spark = posture_session(spark, _dir_total_bytes(sf_dir), "parallel")
-                key = (_session_token(spark), sf_dir, name)
-                df = _PLAN_CACHE.get(key)
-                if df is None:
-                    df = fn(spark, sf_dir)
-                    _PLAN_CACHE[key] = df
-                return df
+        @wraps(fn)
+        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            # DataFrame-built ops are the compute-parallel family: a
+            # session PINNED at the shuffle-partition default (the posture
+            # rides the DataFrame; interleaved relational builds can no
+            # longer narrow it to 1 — r8 ADVICE)
+            return fn(posture_session(spark, _dir_total_bytes(sf_dir), "parallel"), sf_dir)
 
-            cached.__name__ = fn.__name__
-            cached.__doc__ = fn.__doc__
-            SPARK_QUERIES[name] = cached
-        else:
-            def uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
-                spark = posture_session(spark, _dir_total_bytes(sf_dir), "parallel")
-                return fn(spark, sf_dir)
-
-            uncached.__name__ = fn.__name__
-            uncached.__doc__ = fn.__doc__
-            SPARK_QUERIES[name] = uncached
+        SPARK_QUERIES[name] = run
         if oracle is not None:
             ORACLE_SQL[name] = oracle
         return fn
@@ -75,78 +59,35 @@ def register(name: str, oracle: str | None = None, cache: bool = False):
     return deco
 
 
-#: Prepared-plan cache for the pure-SELECT registry queries, keyed by
-#: (session token, sf_dir, query name). The fixture tables are immutable
-#: parquet, so an analyzed DataFrame is valid for the session's lifetime;
-#: re-submitting the same statement should not pay analysis + optimization
-#: + whole-stage-codegen again (~0.2-1 s/plan, measured — the dominant
-#: per-query constant at bench SFs; execution itself re-runs in full each
-#: collect, AQE included). This is prepared-statement / plan-cache
-#: behavior, the standard long-lived-engine feature (Impala equivalently
-#: caches analyzed metadata between statements). Only sql_query entries
-#: use it: they are side-effect-free reads of the fixtures; DDL/meta/
-#: streaming queries stay uncached.
-_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+#: The registry's engines, one per (session token, fixture dir): every
+#: sql_query entry is a statement through ImpalaEngine.sql — the front
+#: door's sizing, admission, per-statement posture, broadcast-hint gate
+#: and plan cache (a repeat runs as a NEW DataFrame over the cached
+#: analyzed plan; nothing of an earlier execution is reused). Clearing
+#: it drops the engines and their plan caches, so the next call plans
+#: afresh.
+_PLAN_CACHE: dict[tuple[str, str], ImpalaEngine] = {}
 
 
-#: Broadcast-hint cost gate — the reference's broadcast-vs-partitioned
-#: join decision (planner/DistributedPlanner.java:425-506) made with the
-#: one statistic a path-based catalog has: total input bytes. Registry
-#: SQL marks FILTERED build sides it wants broadcast with
-#: /*+ BROADCAST(x) */ (Catalyst's non-CBO size estimates multiply
-#: through multi-table subqueries and would never pick them); those
-#: sides grow linearly with scale, so above this input size the hints
-#: are STRIPPED and Catalyst falls back to partitioned joins — the same
-#: flip the reference's cost model makes when build-side stats exceed
-#: the broadcast budget. Spark honors explicit broadcast hints
-#: unconditionally (an un-gated hint OOMs a cluster at sf1000); this
-#: gate is what makes the hinted plans safe at the 100 TB design point.
-#: 16 GiB ~= sf160: the largest hinted side (q3's BUILDING-customer x
-#: filtered-orders join, ~1% of orders) is ~2M rows / ~100 MB hashed
-#: there — still a safe broadcast; beyond it, it is not.
-#:
-#: r10 DEMOTION NOTE: these hints are now the STATS-LESS fallback only.
-#: After COMPUTE STATS, engine.sql() plans plain (hint-free) texts in
-#: the stats session (session.stats_session) where CBO + catalog stats
-#: make this same decision from row counts — the reference's actual
-#: mechanism — and flip it automatically as estimates grow with scale.
-#: Interleaved A/B at sf10 (loaded box, arms alternate per rep):
-#: stats-planned plain q3 0.99 s vs hinted 1.06 s, q10 1.67 vs 2.44
-#: (stats BEATS the hand plan), q5 3.17 vs 2.65 (hand join order still
-#: ~20% better). The registry keeps hinted texts because the driver's
-#: correctness harness runs statements stats-less.
-BROADCAST_HINT_MAX_INPUT_BYTES = 16 << 30
-
-import re as _re
-
-_BROADCAST_HINT_RE = _re.compile(
-    r"/\*\+\s*BROADCAST\s*\([^)]*\)(\s*,\s*BROADCAST\s*\([^)]*\))*\s*\*/"
-)
-
-
-def gate_broadcast_hints(sql: str, sf_dir: str) -> str:
-    """Strip /*+ BROADCAST(...) */ hints when the input scale makes the
-    hinted build sides too large to broadcast (see the constant above)."""
-    if _dir_total_bytes(sf_dir) > BROADCAST_HINT_MAX_INPUT_BYTES:
-        return _BROADCAST_HINT_RE.sub("", sql)
-    return sql
+def _engine(spark: SparkSession, sf_dir: str) -> ImpalaEngine:
+    """The registry engine over `sf_dir` in `spark`. A cached engine's
+    fixture views are re-pointed at `sf_dir` (a no-op while they point
+    there): the views are the session's, and another dir registered in
+    it since would answer for this one (last one wins)."""
+    key = (_session_token(spark), sf_dir)
+    eng = _PLAN_CACHE.get(key)
+    if eng is None:
+        eng = _PLAN_CACHE[key] = ImpalaEngine(spark, sf_dir)
+    else:
+        register_tables(spark, sf_dir)
+    return eng
 
 
 def sql_query(name: str, impala_sql: str, oracle: str | None = None) -> None:
     """Register an Impala-dialect SQL query; oracle defaults to same text."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # relational statement: the posture of the fixture dir's bytes
-        # (single-node below 64 MB, on a conf-pinned cloned session —
-        # see session.posture)
-        spark = posture_session(spark, _dir_total_bytes(sf_dir), "relational")
-        key = (_session_token(spark), sf_dir, name)
-        df = _PLAN_CACHE.get(key)
-        if df is None:
-            register_tables(spark, sf_dir)
-            df = spark.sql(gate_broadcast_hints(translate(impala_sql), sf_dir))
-            _PLAN_CACHE[key] = df
-        return df
+        return _engine(spark, sf_dir).sql(impala_sql)
 
     run.__name__ = f"q_{name}"
     run.__doc__ = impala_sql
@@ -992,34 +933,25 @@ sql_query(
 )
 
 # LIKE family (LikePredicate.java:35-39): LIKE / ILIKE / RLIKE / IREGEXP.
-_like_oracle = """
+sql_query(
+    "expr_like_family",
+    """
+    SELECT p_partkey,
+           p_name LIKE '%gold%' AS has_gold,
+           p_name ILIKE '%BLUE%' AS has_blue_ci,
+           p_name REGEXP '^[a-f]' AS starts_af,
+           p_name IREGEXP 'RED|GREEN' AS has_color_ci
+    FROM part
+    """,
+    oracle="""
     SELECT p_partkey,
            p_name LIKE '%gold%' AS has_gold,
            p_name ILIKE '%BLUE%' AS has_blue_ci,
            regexp_matches(p_name, '^[a-f]') AS starts_af,
            regexp_matches(p_name, '(?i)RED|GREEN') AS has_color_ci
     FROM part
-"""
-
-
-def _q_like(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_tables(spark, sf_dir)
-    return spark.sql(
-        translate(
-            """
-        SELECT p_partkey,
-               p_name LIKE '%gold%' AS has_gold,
-               p_name ILIKE '%BLUE%' AS has_blue_ci,
-               p_name REGEXP '^[a-f]' AS starts_af,
-               p_name IREGEXP 'RED|GREEN' AS has_color_ci
-        FROM part
-        """
-        )
-    )
-
-
-SPARK_QUERIES["expr_like_family"] = _q_like
-ORACLE_SQL["expr_like_family"] = _like_oracle
+""",
+)
 
 # IS [NOT] DISTINCT FROM / null-safe equality (BinaryPredicate.java:53-64).
 sql_query(
@@ -1176,26 +1108,19 @@ sql_query(
 
 # Conditional builtins: if/nvl/coalesce/nullif/zeroifnull
 # (Impala conditional functions; translated by parser.py).
-def _q_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_tables(spark, sf_dir)
-    return spark.sql(
-        translate(
-            """
-        SELECT c_custkey,
-               IF(c_acctbal > 5000, 'high', 'low') AS bal_class,
-               NVL(nullif(c_mktsegment, 'BUILDING'), 'none') AS seg_nvl,
-               COALESCE(nullif(c_mktsegment, 'BUILDING'), nullif(c_mktsegment, 'AUTOMOBILE'), 'both') AS seg_coal,
-               CAST(ZEROIFNULL(nullif(c_nationkey, 13)) AS BIGINT) AS nation_z,
-               CAST(NULLIFZERO(c_nationkey % 5) AS BIGINT) AS mod5_nz,
-               ISNULL(nullif(c_mktsegment, 'BUILDING'), 'was-building') AS seg_isnull
-        FROM customer
-        """
-        )
-    )
-
-
-SPARK_QUERIES["expr_conditional"] = _q_conditional
-ORACLE_SQL["expr_conditional"] = """
+sql_query(
+    "expr_conditional",
+    """
+    SELECT c_custkey,
+           IF(c_acctbal > 5000, 'high', 'low') AS bal_class,
+           NVL(nullif(c_mktsegment, 'BUILDING'), 'none') AS seg_nvl,
+           COALESCE(nullif(c_mktsegment, 'BUILDING'), nullif(c_mktsegment, 'AUTOMOBILE'), 'both') AS seg_coal,
+           CAST(ZEROIFNULL(nullif(c_nationkey, 13)) AS BIGINT) AS nation_z,
+           CAST(NULLIFZERO(c_nationkey % 5) AS BIGINT) AS mod5_nz,
+           ISNULL(nullif(c_mktsegment, 'BUILDING'), 'was-building') AS seg_isnull
+    FROM customer
+    """,
+    oracle="""
     SELECT c_custkey,
            CASE WHEN c_acctbal > 5000 THEN 'high' ELSE 'low' END AS bal_class,
            COALESCE(nullif(c_mktsegment, 'BUILDING'), 'none') AS seg_nvl,
@@ -1204,28 +1129,23 @@ ORACLE_SQL["expr_conditional"] = """
            CAST(NULLIF(c_nationkey % 5, 0) AS BIGINT) AS mod5_nz,
            COALESCE(nullif(c_mktsegment, 'BUILDING'), 'was-building') AS seg_isnull
     FROM customer
-"""
+""",
+)
 
 # Impala boolean-operator aliases && / || / ! (sql-scanner.flex:56).
-def _q_bool_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_tables(spark, sf_dir)
-    return spark.sql(
-        translate(
-            """
-        SELECT o_orderkey FROM orders
-        WHERE (o_totalprice > 300000 && o_orderstatus = 'O')
-           || (! (o_orderpriority != '1-URGENT') && o_totalprice < 50000)
-        """
-        )
-    )
-
-
-SPARK_QUERIES["expr_bool_aliases"] = _q_bool_alias
-ORACLE_SQL["expr_bool_aliases"] = """
+sql_query(
+    "expr_bool_aliases",
+    """
+    SELECT o_orderkey FROM orders
+    WHERE (o_totalprice > 300000 && o_orderstatus = 'O')
+       || (! (o_orderpriority != '1-URGENT') && o_totalprice < 50000)
+    """,
+    oracle="""
     SELECT o_orderkey FROM orders
     WHERE (o_totalprice > 300000 AND o_orderstatus = 'O')
        OR (NOT (o_orderpriority != '1-URGENT') AND o_totalprice < 50000)
-"""
+""",
+)
 
 # Nested collections: Unnest/Subplan — posexplode over array<float>
 # (planner/UnnestNode.java; Impala `item`/`pos` path fields).
@@ -1311,7 +1231,6 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(*) AS BIGINT) AS n_copies
     FROM documents GROUP BY 1
     """,
-    cache=True,
 )
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
@@ -1408,7 +1327,7 @@ _DUCK_JACCARD_PAIRS = (
 # next pair down is 0.11) a missed pair needs (1-s^2)^16 < 1e-11 — the
 # banded join's recall is exactly 1.0 here, and hashes are seeded, so the
 # result is stable across runs. Plan asserted cartesian-free in tests.
-@register("llm_minhash_lsh", oracle=_DUCK_JACCARD_PAIRS, cache=True)
+@register("llm_minhash_lsh", oracle=_DUCK_JACCARD_PAIRS)
 def q_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     return llm_ops.minhash_lsh_pairs_exact(d, threshold=0.5)
@@ -1525,7 +1444,6 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY dot / (ny * nx) DESC, vec_id
     LIMIT 10
     """,
-    cache=True,
 )
 def q_ann_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
@@ -1626,7 +1544,6 @@ def q_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 4) AS total_value
     FROM events GROUP BY 1, 2
     """,
-    cache=True,
 )
 def q_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
@@ -1863,7 +1780,6 @@ def q_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     (service/Frontend.java statement dispatch; SURVEY §2.1 rows 9-14, 62)
 # =====================================================================
 
-from impala_spark.engine import ImpalaEngine  # noqa: E402
 from impala_spark.functions import register_udfs  # noqa: E402
 
 
@@ -2948,8 +2864,8 @@ sql_query(
     # orders — small enough to BROADCAST into the lineitem probe (the
     # reference's DistributedPlanner broadcast choice; the explicit hint
     # is needed because non-CBO size estimates multiply through the
-    # subquery join, and it is scale-gated by gate_broadcast_hints
-    # above). The 30M-row (sf10) filtered-lineitem exchange disappears:
+    # subquery join, and the engine's broadcast-hint gate strips it at
+    # scale). The 30M-row (sf10) filtered-lineitem exchange disappears:
     # executed plan = 2 broadcast joins + the single partial-agg
     # exchange. Interleaved A/B (results identical): sf10 4.10 -> 1.04 s
     # (-75%); sf30 29.8 -> 3.04 s. vs-DuckDB ratios for this query vary
@@ -5299,7 +5215,6 @@ def q_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY bm25 DESC, tf.doc_id
     LIMIT 10
     """,
-    cache=True,
 )
 def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
@@ -5336,7 +5251,6 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM te JOIN be ON te.g = be.g
     GROUP BY te.doc_id
     """,
-    cache=True,
 )
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
@@ -5366,7 +5280,6 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY c.user_id
     ORDER BY c.user_id
     """,
-    cache=True,
 )
 def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
@@ -5404,7 +5317,6 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM e JOIN v USING (token) CROSS JOIN tot
     GROUP BY e.doc_id
     """,
-    cache=True,
 )
 def q_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
@@ -5435,7 +5347,6 @@ def q_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(len(words[start:start+63]) AS BIGINT) AS n_words
     FROM c WHERE len(words[start:start+63]) > 0
     """,
-    cache=True,
 )
 def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
@@ -5466,7 +5377,6 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE 0.0 END AS rep_ratio
     FROM s
     """,
-    cache=True,
 )
 def q_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
@@ -5492,7 +5402,6 @@ def q_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY source
     ORDER BY source
     """,
-    cache=True,
 )
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
@@ -5564,7 +5473,6 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(MAX(doc_id) AS BIGINT) AS surv_id_max
     FROM surv
     """,
-    cache=True,
 )
 def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
@@ -5705,7 +5613,6 @@ sql_query(
            COALESCE(o.n_events, 0) AS n_events
     FROM spine s LEFT JOIN obs o ON s.b = o.b AND s.event_type = o.event_type
     """,
-    cache=True,
 )
 def q_events_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
@@ -5767,7 +5674,6 @@ sql_query(
     GROUP BY a.d
     ORDER BY a.d
     """,
-    cache=True,
 )
 def q_events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
@@ -5819,7 +5725,6 @@ def q_events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST((SELECT COUNT(DISTINCT user_id) FROM vc) AS BIGINT) AS n_clicked_after_view,
            CAST((SELECT COUNT(*) FROM vcp) AS BIGINT) AS n_full_funnel
     """,
-    cache=True,
 )
 def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
@@ -5888,7 +5793,6 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE m.sigma > 0 AND ABS(b.n - m.mu) > 2 * m.sigma
     ORDER BY b.event_type, window_start
     """,
-    cache=True,
 )
 def q_events_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
@@ -5972,7 +5876,6 @@ sql_query(
         '\b\d{13,16}\b', '<ID>', 'g') AS text_redacted
     FROM seeded
     """,
-    cache=True,
 )
 def q_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
@@ -6025,7 +5928,6 @@ def q_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
            drop_reasons = '' AS keep
     FROM r
     """,
-    cache=True,
 )
 def q_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
@@ -6082,7 +5984,6 @@ def q_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
            COALESCE(s.text_deduped, '') AS text_deduped
     FROM tot t LEFT JOIN surv s USING (doc_id)
     """,
-    cache=True,
 )
 def q_block_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -6108,7 +6009,6 @@ def q_block_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) <= 500 AS kept
     FROM t
     """,
-    cache=True,
 )
 def q_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
@@ -6252,7 +6152,6 @@ sql_query(
     FROM h JOIN g USING (hash)
     GROUP BY h.doc_id
     """,
-    cache=True,
 )
 def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -6289,7 +6188,6 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM dg JOIN first f USING (gram)
     GROUP BY dg.doc_id
     """,
-    cache=True,
 )
 def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
@@ -6322,7 +6220,6 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(dim_max, 6) AS dim_max
     FROM s
     """,
-    cache=True,
 )
 def q_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
@@ -6351,7 +6248,6 @@ def q_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            t.n_words >= b.lo_words AND t.n_words <= b.hi_words AS kept
     FROM t JOIN b USING (grp)
     """,
-    cache=True,
 )
 def q_length_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
@@ -6382,7 +6278,6 @@ def q_length_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE a.src < b.src
     GROUP BY a.src, b.src
     """,
-    cache=True,
 )
 def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").select("doc_id", "text", "source")
@@ -6457,7 +6352,6 @@ sql_query(
       FROM scored
     ) WHERE rk <= 3
     """,
-    cache=True,
 )
 def q_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
@@ -6478,7 +6372,6 @@ def q_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY 1, 2
     """,
-    cache=True,
 )
 def q_two_level_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
@@ -6517,7 +6410,6 @@ def q_two_level_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) CROSS JOIN stats
     WHERE rk <= 5
     """,
-    cache=True,
 )
 def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
@@ -6541,7 +6433,6 @@ def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                  CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents
           FROM orders WHERE o_custkey <= 200) t
     """,
-    cache=True,
 )
 def q_global_prefix_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = (
@@ -6660,7 +6551,6 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE tok.source <> 'src0'
     GROUP BY tok.doc_id
     """,
-    cache=True,
 )
 def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance weights (llm_ops.dsir_importance_weights;
@@ -6934,7 +6824,6 @@ sql_query(
       FROM counts
     ) WHERE rk <= 5
     """,
-    cache=True,
 )
 def q_cluster_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 terms per embedding-sign cluster (llm_ops.cluster_topics) —
@@ -6966,7 +6855,6 @@ def q_cluster_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
            md5(decode(payload) || CAST(frame_idx AS VARCHAR)) AS frame_hash
     FROM f
     """,
-    cache=True,
 )
 def q_frame_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video frame sampling (llm_ops.sample_frames): narrow generate,

@@ -43,7 +43,7 @@ Any shape the rewrite cannot prove equivalent is returned unchanged and
 keeps Catalyst's default plan.
 
 The engine applies it above TWO_LEVEL_DISTINCT_MIN_INPUT_BYTES — the
-same input-size gating idea as queries.gate_broadcast_hints (the
+same input-size gating idea as the engine's broadcast-hint gate (the
 reference makes the equivalent choice from COMPUTE STATS row counts; a
 path-based catalog has total input bytes).
 """

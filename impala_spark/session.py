@@ -8,8 +8,10 @@ cost model, planner/RuntimeFilterGenerator.java runtime filters):
   relational statement under SINGLE_NODE_MAX_INPUT_BYTES (64 MB) plans
   with one shuffle partition, AQE and runtime bloom filters off — the
   reference's single-node plan for small queries (Planner.java:91-108).
-  ImpalaEngine sizes each query from the tables it scans (`posture_df`);
-  the registry sizes its fixture dir (`posture_session`).
+  ImpalaEngine sizes each query from the tables it scans (`posture_df`),
+  the registry's SQL entries included (they run through it); the
+  registry's DataFrame builders take the posture of their fixture dir's
+  bytes (`posture_session`).
 - AQE on at scale: runtime re-plan of shuffle partition counts,
   skew-join splitting, and broadcast-join demotion/promotion from
   observed sizes.
@@ -669,7 +671,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 #: every join in all three plans goes broadcast, zero fact exchanges)
 #: while the estimate grows linearly with scale, so at ~sf100 the same
 #: plans flip back to partitioned joins — the stats-driven version of
-#: queries.gate_broadcast_hints.
+#: the engine's broadcast-hint gate.
 STATS_BROADCAST_THRESHOLD_BYTES = 256 << 20
 
 #: types ANALYZE ... FOR COLUMNS accepts (complex types are skipped;
@@ -1076,11 +1078,10 @@ def posture_session(
     spark: SparkSession, input_bytes: int, family: str
 ) -> SparkSession:
     """Session whose SQLConf is PINNED to `posture(input_bytes, family)`
-    and the engine's required runtime conf — the registry's builders
-    plan in it (queries.sql_query passes its fixture dir's bytes). The
-    clone is cached (_pinned_clone), so a builder's DataFrames (and
-    queries._PLAN_CACHE entries) keep one session while `spark`'s conf
-    is unchanged."""
+    and the engine's required runtime conf — the registry's DataFrame
+    builders plan in it (queries.register passes the fixture dir's
+    bytes). The clone is cached (_pinned_clone), so a builder's
+    DataFrames keep one session while `spark`'s conf is unchanged."""
     conf = posture(input_bytes, family)
     if conf is None:
         return spark

@@ -172,6 +172,23 @@ def test_show_statement_routing(spark, sf_dir):
     assert ct.count() >= 1
 
 
+def test_show_create_table_of_a_fixture_view(spark, sf_dir, monkeypatch):
+    """A fixture table is a temp view, which Spark's SHOW CREATE TABLE
+    rejects (logging the failure): its external-table DDL is rebuilt
+    from the view's file without asking Spark."""
+    from impala_spark.engine import ImpalaEngine
+
+    eng = ImpalaEngine(spark, sf_dir)
+    sent, real_sql = [], spark.sql
+    monkeypatch.setattr(spark, "sql", lambda q, *a, **k: (sent.append(q), real_sql(q, *a, **k))[1])
+    ddl_text = eng.sql("SHOW CREATE TABLE nation").collect()[0][0]
+    assert ddl_text == (
+        "CREATE EXTERNAL TABLE nation (n_nationkey int, n_name string,"
+        f" n_regionkey int) STORED AS PARQUET LOCATION '{sf_dir}'"
+    )
+    assert not [q for q in sent if "SHOW CREATE" in q.upper()], sent
+
+
 def test_bare_set_lists_options(spark, sf_dir):
     from impala_spark.engine import ImpalaEngine
 

@@ -318,24 +318,33 @@ def test_global_sort_uses_range_partitioning(spark, sf_dir):
     assert "Sort " in plan or "Sort\n" in plan
 
 
-def test_sql_query_plan_cache_identity_and_isolation(spark, sf_dir):
-    """sql_query entries reuse the analyzed DataFrame per (session,
-    sf_dir, name) — prepared-plan behavior; different sf_dirs don't
-    cross-contaminate and results stay correct after caching."""
-    from impala_spark.queries import SPARK_QUERIES
+def test_sql_query_plan_reuse_and_isolation(spark, sf_dir):
+    """sql_query entries reuse the analyzed plan per (session, sf_dir)
+    through their engine's plan cache, as a new DataFrame on every call;
+    different sf_dirs don't cross-contaminate, in either order."""
+    from impala_spark import queries as Q
+    from impala_spark.session import _session_token, register_tables
 
-    fn = SPARK_QUERIES["join_three_way"]
+    fn = Q.SPARK_QUERIES["join_three_way"]
     a = fn(spark, sf_dir)
     b = fn(spark, sf_dir)
-    assert a is b  # cache hit: same analyzed plan object
+    assert a is not b  # a new DataFrame over the cached plan
+    eng = Q._PLAN_CACHE[(_session_token(spark), sf_dir)]
+    assert eng.plan_cache_info().hits >= 1
     r1 = sorted(map(tuple, a.collect()))
     r2 = sorted(map(tuple, b.collect()))
     assert r1 == r2 and len(r1) > 0
     other_dir = (
         "/root/testdata/sf0.01" if sf_dir != "/root/testdata/sf0.01" else "/root/testdata/sf0.001"
     )
-    other = fn(spark, other_dir)
-    assert other is not a  # per-sf_dir isolation
+    try:
+        other = sorted(map(tuple, fn(spark, other_dir).collect()))
+        assert Q._PLAN_CACHE[(_session_token(spark), other_dir)] is not eng
+        assert other != r1  # per-sf_dir isolation
+        # the first dir again: its engine re-points the session's views
+        assert sorted(map(tuple, fn(spark, sf_dir).collect())) == r1
+    finally:
+        register_tables(spark, sf_dir)
 
 
 def test_session_posture_pins_scale_safe_knobs(spark, sf_dir):

@@ -108,6 +108,36 @@ def test_hit_runs_every_stage(spark, interactive_engine, name):
     assert recollected[1] < planned[1], (recollected, planned)
 
 
+def test_registry_entry_takes_the_front_door(spark, sf_dir):
+    """A registry SQL entry is a statement through its engine's
+    ImpalaEngine.sql: the repeat is a plan-cache hit that runs as a new
+    DataFrame, with as many stages and tasks as the first call.
+    Clearing queries._PLAN_CACHE drops the engine, so the next call
+    plans again."""
+    from impala_spark import queries as Q
+    from impala_spark.session import _session_token
+
+    run = SPARK_QUERIES["tpch_q14_promo_revenue"]
+    key = (_session_token(spark), SF_01)
+    Q._PLAN_CACHE.clear()
+    try:
+        first = run(spark, SF_01)
+        eng = Q._PLAN_CACHE[key]
+        assert _counts(eng) == (0, 1)
+        planned = _stages_and_tasks(spark, first, "pc-registry-first")
+        second = run(spark, SF_01)
+        assert _counts(eng) == (1, 1)
+        assert second is not first
+        assert _stages_and_tasks(spark, second, "pc-registry-second") == planned
+        Q._PLAN_CACHE.clear()
+        run(spark, SF_01)
+        assert Q._PLAN_CACHE[key] is not eng
+        assert _counts(Q._PLAN_CACHE[key]) == (0, 1)
+    finally:
+        Q._PLAN_CACHE.clear()
+        register_tables(spark, sf_dir)  # the suite's fixture views again
+
+
 @pytest.fixture
 def eng(spark, sf_dir):
     return ImpalaEngine(spark, sf_dir)

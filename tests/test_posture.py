@@ -84,34 +84,49 @@ def test_escape_hatch_returns_parent(spark):
         os.environ.pop("SPARK_GRAFT_DISABLE_SMALL_POSTURE", None)
 
 
-def test_broadcast_hint_scale_gate(spark):
-    """gate_broadcast_hints strips /*+ BROADCAST */ above the input-size
-    budget (the DistributedPlanner broadcast-cost flip) and leaves it
-    below — Spark honors explicit hints unconditionally, so an un-gated
-    hint would OOM at cluster scale."""
-    from impala_spark import session as S
-    from impala_spark.queries import (
-        BROADCAST_HINT_MAX_INPUT_BYTES,
-        gate_broadcast_hints,
-    )
+#: hinted statements: a registry text (the hint inside a WITH view), a
+#: multi-hint list, and the hint comment without its spaces
+HINTED = (
+    "tpch_q3_shipping_priority",
+    "SELECT /*+ BROADCAST(n), BROADCAST(r) */ n_name, r_name, count(*) AS k"
+    " FROM supplier JOIN nation n ON s_nationkey = n_nationkey"
+    " JOIN region r ON n_regionkey = r_regionkey GROUP BY n_name, r_name",
+    "SELECT /*+BROADCAST(r)*/ r_name, count(*) AS k FROM nation"
+    " JOIN region r ON n_regionkey = r_regionkey GROUP BY r_name",
+)
 
-    sql = "SELECT /*+ BROADCAST(co) */ 1 FROM lineitem JOIN co ON a = b"
-    sql2 = "SELECT /*+ BROADCAST(a), BROADCAST(b) */ 1 FROM t"
-    small_dir, big_dir = "/tmp/gate_small_fixture", "/tmp/gate_big_fixture"
-    S._DIR_BYTES[small_dir] = 64 << 20
-    S._DIR_BYTES[big_dir] = BROADCAST_HINT_MAX_INPUT_BYTES + 1
+
+@pytest.mark.parametrize(
+    "text", HINTED, ids=("tpch_q3_shipping_priority", "hint_list", "hint_without_spaces"))
+def test_broadcast_hint_gate_per_statement(spark, monkeypatch, text):
+    """ImpalaEngine strips /*+ BROADCAST */ hints when the statement's
+    own input estimate is over BROADCAST_HINT_MAX_INPUT_BYTES (the
+    DistributedPlanner broadcast-cost flip) and keeps them up to it —
+    Spark honors explicit hints unconditionally, so an un-gated hint
+    would OOM at cluster scale. With size-based broadcasts off, only a
+    kept hint plans a broadcast join."""
+    from impala_spark import engine as E
+    from impala_spark.parser import scanned_tables
+
+    text = SPARK_QUERIES[text].__doc__ if text in SPARK_QUERIES else text
+    nbytes, _ = E.ImpalaEngine(spark, SF_TINY)._gate_input_bytes(scanned_tables(text))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
     try:
-        assert gate_broadcast_hints(sql, small_dir) == sql
-        assert "BROADCAST" not in gate_broadcast_hints(sql, big_dir)
-        assert "BROADCAST" not in gate_broadcast_hints(sql2, big_dir)
-        # the stripped text stays valid SQL (hint comment fully removed)
-        assert gate_broadcast_hints(sql, big_dir).split() == [
-            "SELECT", "1", "FROM", "lineitem", "JOIN", "co", "ON", "a",
-            "=", "b",
-        ]
+        plans, rows = [], []
+        for bound in (nbytes, nbytes - 1):
+            monkeypatch.setattr(E, "BROADCAST_HINT_MAX_INPUT_BYTES", bound)
+            df = E.ImpalaEngine(spark, SF_TINY).sql(text)  # its own plan cache
+            rows.append(sorted(map(tuple, df.collect())))
+            qe = df._jdf.queryExecution()
+            plans.append((qe.analyzed().toString(), qe.executedPlan().toString()))
     finally:
-        S._DIR_BYTES.pop(small_dir, None)
-        S._DIR_BYTES.pop(big_dir, None)
+        spark.conf.set(key, old)
+    (kept, kept_plan), (stripped, stripped_plan) = plans
+    assert "ResolvedHint" in kept and "BroadcastHashJoin" in kept_plan
+    assert "ResolvedHint" not in stripped and "BroadcastHashJoin" not in stripped_plan
+    assert rows[0] == rows[1] and rows[0]
 
 
 # ---------------------------------------------------------------------------

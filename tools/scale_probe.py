@@ -50,8 +50,8 @@ def main() -> None:
         times = []
         for sf in SFS:
             fn(spark, sf).count()  # warm (plans/JIT)
-            # fresh execution: the prepared-plan cache would otherwise let
-            # Spark skip shuffle map stages — that measures reuse, not growth
+            # fresh plan: the registry engines' plan caches would otherwise
+            # skip translate and analysis — that measures reuse, not growth
             _PLAN_CACHE.clear()
             t0 = time.time()
             fn(spark, sf).count()
