@@ -103,12 +103,13 @@ def _bump(name: str) -> None:
 
 def _unshadow_fixture(spark: SparkSession, name: str) -> None:
     """A managed table is about to shadow (or drop) a temp view whose name
-    collides with a fixture table: make the next register_tables on this
-    session re-point its views instead of trusting the skip-memo."""
-    from impala_spark.session import TABLES, invalidate_view_memo
+    collides with a fixture table: the session's fixture views no longer
+    all point at one dir, so the next register_tables, or statement of an
+    engine with a fixture dir, re-points them."""
+    from impala_spark.session import TABLES, _state
 
     if name in TABLES:
-        invalidate_view_memo(spark)
+        _state(spark).views_dir = None
 
 
 def _refresh_view(spark: SparkSession, t: ManagedTable) -> DataFrame:

@@ -24,16 +24,19 @@ from impala_spark import ddl
 from impala_spark import functions as ifn
 from impala_spark.parser import ImpalaUnsupportedError, scanned_tables, translate
 from impala_spark.session import (
+    TABLES,
     FixtureCopyInfo,
+    _state,
     bump_catalog_version,
     catalog_version,
     fixture_copy_info,
     fixture_files,
+    gate_small_queries,
     plan_df,
+    point_views,
     posture_df,
     posture_target,
     refresh_fixtures,
-    register_tables,
     same_state,
     session_state,
 )
@@ -667,9 +670,6 @@ class ImpalaEngine:
         #: stats the reference writes (AlterTableSetColumnStats.java).
         #: SHOW COLUMN STATS reads these over the computed numbers.
         self._manual_col_stats: dict[tuple[str, str], dict] = {}
-        #: session token -> function names already re-registered there
-        #: (routed session clones own an isolated FunctionRegistry)
-        self._synced_functions: dict[str, set[str]] = {}
         #: names created via CREATE VIEW in this engine (AlterTableStmt
         #: .java:76-79 needs to tell views from tables)
         self._views: set[str] = set()
@@ -700,15 +700,31 @@ class ImpalaEngine:
         #: analyzed plans of plain queries, for their repeats (sql())
         self._plans = _PlanCache(PLAN_CACHE_SIZE)
         if sf_dir:
-            register_tables(spark, sf_dir)
+            gate_small_queries(spark, sf_dir)
+            self._point_views()
         # Impala's fnv_hash/murmur_hash have no Spark builtin equivalent —
         # register the exact-value pandas UDFs once per session (guarded:
         # engines are constructed per statement batch in some callers).
-        if not getattr(spark, "_impala_hash_udfs", False):
+        st = _state(spark)
+        if not st.hash_udfs:
             from impala_spark.functions import register_hash_udfs
 
             register_hash_udfs(spark)
-            spark._impala_hash_udfs = True
+            st.hash_udfs = True
+
+    def _point_views(self) -> None:
+        """Point the session's fixture views at this engine's dir before a
+        statement (another engine or register_tables may have moved
+        them; no py4j call while they point here). A fixture name a
+        managed table owns keeps resolving to it: ddl's tables are the
+        process's, as _gate_input_bytes sizes them."""
+        if self._sf_dir is None or _state(self.spark).views_dir == self._sf_dir:
+            return
+        point_views(self.spark, self._sf_dir)
+        for name in TABLES:
+            t = ddl.table_info(name)
+            if t is not None:
+                ddl._read_table(self.spark, t).createOrReplaceTempView(name)
 
     # -- request pools / admission (util/RequestPoolService.java) ----------
     def configure_request_pools(
@@ -766,21 +782,15 @@ class ImpalaEngine:
         import os as _os
 
         from impala_spark.equivalence import colocation_advice
-        from impala_spark.session import TABLES
+        from impala_spark.session import _dir_total_bytes
 
-        sizes: dict[str, int] | None = None
+        sizes = None
         if self._sf_dir:
-            sizes = {}
-            for t in TABLES:
-                p = _os.path.join(self._sf_dir, f"{t}.parquet")
-                if _os.path.isfile(p):
-                    sizes[t] = _os.path.getsize(p)
-                elif _os.path.isdir(p):
-                    sizes[t] = sum(
-                        _os.path.getsize(_os.path.join(root, f))
-                        for root, _d, files in _os.walk(p)
-                        for f in files
-                    )
+            sizes = {
+                t: _dir_total_bytes(p)
+                for t in TABLES
+                if _os.path.exists(p := _os.path.join(self._sf_dir, f"{t}.parquet"))
+            }
         return colocation_advice(workload, table_bytes=sizes)
 
     # -- the main path (Frontend.createExecRequest analog) -----------------
@@ -797,6 +807,7 @@ class ImpalaEngine:
         statement bumps it), skips classify, translate and analysis: it
         is authorized and admitted again, and runs as a new DataFrame
         over its cached analyzed plan (_run_query)."""
+        self._point_views()
         q = query.strip().rstrip(";")
         q = q[_LEADING_COMMENTS_RE.match(q).end():]
         key = (q, self.spark.catalog.currentDatabase(), self.strict, self.appx_count_distinct)
@@ -1605,19 +1616,15 @@ class ImpalaEngine:
         every engine function there before the statement plans. DROP
         FUNCTION parity matches the default session (Spark has no
         udf.unregister; the engine-side catalog is the contract)."""
-        if not self._functions:
-            return
-        from impala_spark.session import _session_token
-
-        synced = self._synced_functions.setdefault(_session_token(sess), set())
+        synced = _state(sess).functions
         for name, symbol in self._functions.items():
-            if name in synced:
+            if (name, symbol) in synced:
                 continue
             entry = ifn.UDF_LIBRARY.get(symbol.strip().strip("'\""))
             ifn.create_function(
                 sess, name, symbol, aggregate=bool(entry and entry[0])
             )
-            synced.add(name)
+            synced.add((name, symbol))
 
     def _plan_rewrite(self, q: str, nbytes: int | None) -> str | None:
         """Input-size-gated plan rewrites on plain user SQL — the engine
@@ -1734,7 +1741,6 @@ class ImpalaEngine:
         import os as _os
 
         from impala_spark.session import (
-            TABLES,
             _dir_total_bytes,
             relation_bytes,
             table_stats_bytes,
@@ -1983,7 +1989,6 @@ class ImpalaEngine:
             raise ImpalaAnalysisError(
                 f"COMPUTE STATS not supported for view: {table.split('.')[-1]}")
         from impala_spark.session import (
-            TABLES,
             register_stats_managed,
             register_stats_table,
             stats_db_name,
@@ -2728,6 +2733,7 @@ class ImpalaEngine:
         exactly where the reference's DistributedPlanner would insert
         ExchangeNodes (shuffle boundaries).
         """
+        self._point_views()
         stmt = self.classify(query.strip().rstrip(";"))
         sink = self._explain_sink(stmt)
         # EXPLAIN plans through the same builder as execution: the same

@@ -29,7 +29,8 @@ from impala_spark.engine import ImpalaEngine
 from impala_spark.parser import translate
 from impala_spark.session import (
     _dir_total_bytes,
-    _session_token,
+    _state,
+    live_states,
     posture_session,
     register_tables,
     table,
@@ -39,17 +40,18 @@ SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
 
 
-def register(name: str, oracle: str | None = None):
-    """Register a DataFrame-built query; it is built anew on every call."""
+def register(name: str, oracle: str | None = None, family: str = "parallel"):
+    """Register a DataFrame-built query; it is built anew on every call,
+    in a session PINNED at the posture of its `family` for the fixture
+    dir's bytes (posture_session). Most builders are LLM ops, the
+    compute-parallel family: the shuffle-partition default rides their
+    DataFrames, so interleaved relational builds cannot narrow it to 1
+    (r8 ADVICE)."""
 
     def deco(fn):
         @wraps(fn)
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # DataFrame-built ops are the compute-parallel family: a
-            # session PINNED at the shuffle-partition default (the posture
-            # rides the DataFrame; interleaved relational builds can no
-            # longer narrow it to 1 — r8 ADVICE)
-            return fn(posture_session(spark, _dir_total_bytes(sf_dir), "parallel"), sf_dir)
+            return fn(posture_session(spark, _dir_total_bytes(sf_dir), family), sf_dir)
 
         SPARK_QUERIES[name] = run
         if oracle is not None:
@@ -59,35 +61,31 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-#: The registry's engines, one per (session token, fixture dir): every
-#: sql_query entry is a statement through ImpalaEngine.sql — the front
-#: door's sizing, admission, per-statement posture, broadcast-hint gate
-#: and plan cache (a repeat runs as a NEW DataFrame over the cached
-#: analyzed plan; nothing of an earlier execution is reused). Clearing
-#: it drops the engines and their plan caches, so the next call plans
-#: afresh.
-_PLAN_CACHE: dict[tuple[str, str], ImpalaEngine] = {}
+class _RegistryEngines:
+    """The registry's engines: each session's state holds one per fixture
+    dir (session._state(spark).engines), and every sql_query entry is a
+    statement through its ImpalaEngine.sql — the front door's sizing,
+    admission, per-statement posture, broadcast-hint gate and plan cache
+    (a repeat runs as a NEW DataFrame over the cached analyzed plan;
+    nothing of an earlier execution is reused). clear() drops the
+    engines of every live session, so the next call plans afresh."""
+
+    def clear(self) -> None:
+        for st in live_states():
+            st.engines.clear()
 
 
-def _engine(spark: SparkSession, sf_dir: str) -> ImpalaEngine:
-    """The registry engine over `sf_dir` in `spark`. A cached engine's
-    fixture views are re-pointed at `sf_dir` (a no-op while they point
-    there): the views are the session's, and another dir registered in
-    it since would answer for this one (last one wins)."""
-    key = (_session_token(spark), sf_dir)
-    eng = _PLAN_CACHE.get(key)
-    if eng is None:
-        eng = _PLAN_CACHE[key] = ImpalaEngine(spark, sf_dir)
-    else:
-        register_tables(spark, sf_dir)
-    return eng
+_PLAN_CACHE = _RegistryEngines()
 
 
 def sql_query(name: str, impala_sql: str, oracle: str | None = None) -> None:
     """Register an Impala-dialect SQL query; oracle defaults to same text."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return _engine(spark, sf_dir).sql(impala_sql)
+        engines = _state(spark).engines
+        if sf_dir not in engines:
+            engines[sf_dir] = ImpalaEngine(spark, sf_dir)
+        return engines[sf_dir].sql(impala_sql)
 
     run.__name__ = f"q_{name}"
     run.__doc__ = impala_sql
@@ -1816,7 +1814,7 @@ _PLAIN_MULTI_DISTINCT = """
 """
 
 
-@register("agg_multi_distinct_rewrite", oracle=_PLAIN_MULTI_DISTINCT)
+@register("agg_multi_distinct_rewrite", oracle=_PLAIN_MULTI_DISTINCT, family="relational")
 def q_multi_distinct_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The generalized two-phase multi-DISTINCT rewrite (r10;
     rewrites.two_level_distinct — the reference's AggregateInfo.java:
@@ -1829,7 +1827,6 @@ def q_multi_distinct_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver's scale too."""
     from impala_spark.rewrites import two_level_distinct
 
-    spark = posture_session(spark, _dir_total_bytes(sf_dir), "relational")
     register_tables(spark, sf_dir)
     rw = two_level_distinct(_PLAIN_MULTI_DISTINCT)
     assert rw is not None, "rewrite must fire on two distinct groups"
@@ -1951,7 +1948,7 @@ _MULTI_DISTINCT_HAVING_ORACLE = """
 """
 
 
-@register("agg_multi_distinct_having", oracle=_MULTI_DISTINCT_HAVING_ORACLE)
+@register("agg_multi_distinct_having", oracle=_MULTI_DISTINCT_HAVING_ORACLE, family="relational")
 def q_multi_distinct_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r11 widening of the two-level DISTINCT rewrite (A/AggregateInfo
     .java:42-78 applies per aggregation node regardless of HAVING; the
@@ -1961,7 +1958,6 @@ def q_multi_distinct_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     group on the tuple. Plan-asserted no-Expand, oracle-matched."""
     from impala_spark.rewrites import two_level_distinct
 
-    spark = posture_session(spark, _dir_total_bytes(sf_dir), "relational")
     register_tables(spark, sf_dir)
     rw = two_level_distinct(_MULTI_DISTINCT_HAVING)
     assert rw is not None, "rewrite must fire on HAVING + tuple-distinct"
@@ -1989,7 +1985,7 @@ _MULTI_DISTINCT_WITH = """
 """
 
 
-@register("agg_multi_distinct_with_cte", oracle=_MULTI_DISTINCT_WITH)
+@register("agg_multi_distinct_with_cte", oracle=_MULTI_DISTINCT_WITH, family="relational")
 def q_multi_distinct_with_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r11: the two-level DISTINCT rewrite through a WITH prefix — the
     reference plans per aggregation node regardless of the enclosing
@@ -1998,7 +1994,6 @@ def q_multi_distinct_with_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     see earlier ones). Plan-asserted no-Expand, oracle-matched."""
     from impala_spark.rewrites import two_level_distinct
 
-    spark = posture_session(spark, _dir_total_bytes(sf_dir), "relational")
     register_tables(spark, sf_dir)
     rw = two_level_distinct(_MULTI_DISTINCT_WITH)
     assert rw is not None, "rewrite must fire through the WITH prefix"
@@ -2027,7 +2022,7 @@ _SUM_AVG_DISTINCT = """
 """
 
 
-@register("agg_sum_avg_distinct_rewrite", oracle=_SUM_AVG_DISTINCT)
+@register("agg_sum_avg_distinct_rewrite", oracle=_SUM_AVG_DISTINCT, family="relational")
 def q_sum_avg_distinct_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r11 widening of the two-level DISTINCT rewrite beyond COUNT: a
     group is keyed by the distinct expr LIST and carries EVERY distinct
@@ -2038,7 +2033,6 @@ def q_sum_avg_distinct_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-matched; HAVING maps post-merge."""
     from impala_spark.rewrites import two_level_distinct
 
-    spark = posture_session(spark, _dir_total_bytes(sf_dir), "relational")
     register_tables(spark, sf_dir)
     rw = two_level_distinct(_SUM_AVG_DISTINCT)
     assert rw is not None, "rewrite must fire on SUM/AVG(DISTINCT)"
@@ -2062,7 +2056,7 @@ _EXPR_KEY_DISTINCT = """
 """
 
 
-@register("agg_expr_key_distinct_rewrite", oracle=_EXPR_KEY_DISTINCT)
+@register("agg_expr_key_distinct_rewrite", oracle=_EXPR_KEY_DISTINCT, family="relational")
 def q_expr_key_distinct_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r11: expression grouping keys in the two-level DISTINCT rewrite —
     ATOMIC call expressions (upper(k), YEAR(ts), CAST(...)) key the CTEs
@@ -2072,7 +2066,6 @@ def q_expr_key_distinct_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a token span). Plan-asserted no-Expand, oracle-matched."""
     from impala_spark.rewrites import two_level_distinct
 
-    spark = posture_session(spark, _dir_total_bytes(sf_dir), "relational")
     register_tables(spark, sf_dir)
     rw = two_level_distinct(_EXPR_KEY_DISTINCT)
     assert rw is not None, "rewrite must fire on an atomic expression key"
@@ -2097,7 +2090,7 @@ _OPEN_KEY_DISTINCT = """
 """
 
 
-@register("agg_open_key_distinct_rewrite", oracle=_OPEN_KEY_DISTINCT)
+@register("agg_open_key_distinct_rewrite", oracle=_OPEN_KEY_DISTINCT, family="relational")
 def q_open_key_distinct_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r12: OPEN expression grouping keys in the two-level DISTINCT
     rewrite — arbitrary expressions (arithmetic, CASE) key the CTEs and
@@ -2107,7 +2100,6 @@ def q_open_key_distinct_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-matched."""
     from impala_spark.rewrites import two_level_distinct
 
-    spark = posture_session(spark, _dir_total_bytes(sf_dir), "relational")
     register_tables(spark, sf_dir)
     rw = two_level_distinct(_OPEN_KEY_DISTINCT)
     assert rw is not None, "rewrite must fire on an open expression key"
@@ -2133,7 +2125,7 @@ _RANK_OVER_DISTINCT = """
 """
 
 
-@register("agg_rank_over_distinct_rewrite", oracle=_RANK_OVER_DISTINCT)
+@register("agg_rank_over_distinct_rewrite", oracle=_RANK_OVER_DISTINCT, family="relational")
 def q_rank_over_distinct_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r11: pure ranking windows (RANK/DENSE_RANK/ROW_NUMBER) ride the
     two-level DISTINCT rewrite — the OVER clause's aggregate refs
@@ -2143,7 +2135,6 @@ def q_rank_over_distinct_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-matched."""
     from impala_spark.rewrites import two_level_distinct
 
-    spark = posture_session(spark, _dir_total_bytes(sf_dir), "relational")
     register_tables(spark, sf_dir)
     rw = two_level_distinct(_RANK_OVER_DISTINCT)
     assert rw is not None, "rewrite must fire on a ranking window"
@@ -2170,7 +2161,7 @@ _WINDOW_AGG_OVER_DISTINCT = """
 """
 
 
-@register("agg_window_over_distinct_rewrite", oracle=_WINDOW_AGG_OVER_DISTINCT)
+@register("agg_window_over_distinct_rewrite", oracle=_WINDOW_AGG_OVER_DISTINCT, family="relational")
 def q_window_agg_over_distinct_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r12: window AGGREGATES (SUM/COUNT/AVG ... OVER) over the grouped
     result ride the two-level DISTINCT rewrite — the window call's
@@ -2180,7 +2171,6 @@ def q_window_agg_over_distinct_rewrite(spark: SparkSession, sf_dir: str) -> Data
     the merge aggregation). Plan-asserted no-Expand, oracle-matched."""
     from impala_spark.rewrites import two_level_distinct
 
-    spark = posture_session(spark, _dir_total_bytes(sf_dir), "relational")
     register_tables(spark, sf_dir)
     rw = two_level_distinct(_WINDOW_AGG_OVER_DISTINCT)
     assert rw is not None, "rewrite must fire on a window aggregate"
@@ -2209,7 +2199,7 @@ _GROUP_CONCAT_DISTINCT = """
 """
 
 
-@register("agg_group_concat_distinct_rewrite", oracle=_GROUP_CONCAT_DISTINCT)
+@register("agg_group_concat_distinct_rewrite", oracle=_GROUP_CONCAT_DISTINCT, family="relational")
 def q_group_concat_distinct_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r12 widening: GROUP_CONCAT(DISTINCT) splits like any distinct
     aggregate (AggregateInfo.java keys the second-level grouping on the
@@ -2218,7 +2208,6 @@ def q_group_concat_distinct_rewrite(spark: SparkSession, sf_dir: str) -> DataFra
     the LENGTH contract is order-invariant so the oracle hash-matches."""
     from impala_spark.rewrites import two_level_distinct
 
-    spark = posture_session(spark, _dir_total_bytes(sf_dir), "relational")
     register_tables(spark, sf_dir)
     rw = two_level_distinct(_GROUP_CONCAT_DISTINCT)
     assert rw is not None, "rewrite must fire on GROUP_CONCAT(DISTINCT)"
@@ -2244,7 +2233,7 @@ _GLOBAL_RANK_ORACLE = """
 """
 
 
-@register("analytic_global_rank_twopass", oracle=_GLOBAL_RANK_ORACLE)
+@register("analytic_global_rank_twopass", oracle=_GLOBAL_RANK_ORACLE, family="relational")
 def q_global_rank_twopass(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r12: two-pass global rank over the FACT table (the single-node
     sort the reference gets from planner/AnalyticPlanner.java, split for
@@ -2257,7 +2246,6 @@ def q_global_rank_twopass(spark: SparkSession, sf_dir: str) -> DataFrame:
     from impala_spark.functions import asc_impala, desc_impala
     from impala_spark.operators import global_rank
 
-    spark = posture_session(spark, _dir_total_bytes(sf_dir), "relational")
     register_tables(spark, sf_dir)
     lt = spark.table("lineitem")
     sort_cols = [
@@ -4192,12 +4180,11 @@ _STMT_RW_ORIG = """
 """
 
 
-@register("stmt_rewrite_predicates", oracle=_STMT_RW_ORIG)
+@register("stmt_rewrite_predicates", oracle=_STMT_RW_ORIG, family="relational")
 def q_stmt_rewrite_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Execute the splice-rewritten statement; oracle runs the original."""
     from impala_spark.stmtrewriter import rewrite_predicates_sql
 
-    spark = posture_session(spark, _dir_total_bytes(sf_dir), "relational")
     register_tables(spark, sf_dir)
     rewritten, n_changes = rewrite_predicates_sql(_STMT_RW_ORIG)
     assert n_changes > 0, "statement rewrite did not fire"
@@ -4294,11 +4281,10 @@ _EXPRRULES_SELECT = """
 @register(
     "expr_rewrite_rules",
     oracle=_EXPRRULES_SELECT.format(pred=_EXPRRULES_PRED_ORIG),
+    family="relational",
 )
 def q_expr_rewrite_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Execute the rule-rewritten predicate; oracle runs the original."""
-
-    spark = posture_session(spark, _dir_total_bytes(sf_dir), "relational")
     register_tables(spark, sf_dir)
     sql = _EXPRRULES_SELECT.format(pred=_exprrules_rewritten_pred())
     return spark.sql(translate(sql))

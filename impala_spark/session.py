@@ -44,8 +44,10 @@ from __future__ import annotations
 import os
 import re
 import threading
+import weakref
 from typing import NamedTuple
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
 #: Fixture tables generated by the driver (TESTDATA.md).
@@ -274,32 +276,83 @@ _REQUIRED_RUNTIME_CONF = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
 }
 
-def _session_token(spark: SparkSession) -> str:
-    """Stable cache key for a live session. id(spark) is unsafe — after a
-    session is garbage-collected a NEW session can reuse the same id and
-    silently inherit stale cached DataFrames bound to the dead session.
-    A uuid attached to the wrapper object can't collide; if the wrapper
-    is re-created for the same JVM session we merely miss the cache
-    (fails open, never stale)."""
-    tok = getattr(spark, "_impala_spark_token", None)
-    if tok is None:
-        import uuid
 
-        tok = uuid.uuid4().hex
-        try:
-            spark._impala_spark_token = tok
-        except AttributeError:
-            pass  # frozen wrapper: every call misses the cache, still correct
-    return tok
+class _SessionState:
+    """What the engine keeps for one SparkSession wrapper (_state): it is
+    stored on the wrapper, so it lives and dies with the session."""
+
+    def __init__(self) -> None:
+        #: ensure_session_conf has run
+        self.conformed = False
+        #: a posture or stats clone: gate_small_queries leaves its conf alone
+        self.pinned = False
+        #: the engine's fnv_hash/murmur_hash UDFs are registered
+        self.hash_udfs = False
+        #: fixture path -> its parquet read (immutable; safe to reuse)
+        self.fixtures: dict[str, DataFrame] = {}
+        #: sf_dir -> the fixture views register_tables made over it.
+        #: The fixtures are immutable, so registering a dir again only
+        #: re-points the views, without re-reading 10 footers (~0.5 s).
+        self.registered: dict[str, dict[str, DataFrame]] = {}
+        #: the sf_dir the session's fixture views point at; None after a
+        #: managed table replaced or dropped one of them (ddl). While it
+        #: is the dir asked for, point_views skips the 10
+        #: createOrReplaceTempView py4j calls (87 ms, measured r12).
+        self.views_dir: str | None = None
+        #: sf_dir -> the CBO-posture clone (stats_session)
+        self.stats: dict[str, SparkSession] = {}
+        #: pinned conf -> (this session's session_state when cloned, the
+        #: clone) (_pinned_clone)
+        self.clones: dict[tuple, tuple] = {}
+        #: (name, symbol) of the engine functions registered here: a
+        #: routed session clone owns its own FunctionRegistry
+        self.functions: set[tuple[str, str]] = set()
+        #: sf_dir -> the registry's ImpalaEngine over it (queries.sql_query)
+        self.engines: dict[str, object] = {}
 
 
-#: session tokens already conformed
-_CONFORMED: set[str] = set()
+class _ContextState:
+    """What the engine keeps for one SparkContext (_context)."""
+
+    def __init__(self) -> None:
+        #: fixture path -> the fixture's in-memory columnar copy (an
+        #: InMemoryRelation, JVM): one per file, shared by the fixture
+        #: views of every session of the context
+        self.copies: dict[str, object] = {}
+        #: the live sessions' states (refresh_fixtures re-points their
+        #: views; queries._PLAN_CACHE.clear() drops their engines)
+        self.sessions: weakref.WeakSet[_SessionState] = weakref.WeakSet()
+
+
+def _context(sc: SparkContext) -> _ContextState:
+    ctx = getattr(sc, "_impala_state", None)
+    if ctx is None:
+        ctx = sc._impala_state = _ContextState()
+    return ctx
+
+
+def _state(spark: SparkSession) -> _SessionState:
+    """The engine's state for the session wrapper `spark`, made on first
+    use. Not keyed by id(spark), which a later session can reuse: a new
+    wrapper, even over the same JVM session, starts empty (fails open,
+    never stale)."""
+    st = getattr(spark, "_impala_state", None)
+    if st is None:
+        st = spark._impala_state = _SessionState()
+        _context(spark.sparkContext).sessions.add(st)
+    return st
+
+
+def live_states() -> list[_SessionState]:
+    """The states of the live sessions of the active SparkContext."""
+    sc = SparkContext._active_spark_context
+    return [] if sc is None else list(_context(sc).sessions)
 
 
 def ensure_session_conf(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable conf posture to a foreign session."""
-    if _session_token(spark) in _CONFORMED:
+    st = _state(spark)
+    if st.conformed:
         return spark
     for k, v in _REQUIRED_RUNTIME_CONF.items():
         try:
@@ -307,22 +360,16 @@ def ensure_session_conf(spark: SparkSession) -> SparkSession:
                 spark.conf.set(k, v)
         except Exception:
             pass  # static conf on this build — keep going, reads may still work
-    _CONFORMED.add(_session_token(spark))
+    st.conformed = True
     return spark
-
-
-#: (session token, path) -> fixture DataFrame plan (immutable; safe to reuse)
-_FIXTURE_DFS: dict[tuple[str, str], DataFrame] = {}
 
 
 def _read_fixture(spark: SparkSession, path: str) -> DataFrame:
     ensure_session_conf(spark)
-    key = (_session_token(spark), path)
-    if key in _FIXTURE_DFS:
-        return _FIXTURE_DFS[key]
-    df = _read_fixture_uncached(spark, path)
-    _FIXTURE_DFS[key] = df
-    return df
+    fixtures = _state(spark).fixtures
+    if path not in fixtures:
+        fixtures[path] = _read_fixture_uncached(spark, path)
+    return fixtures[path]
 
 
 def _read_fixture_uncached(spark: SparkSession, path: str) -> DataFrame:
@@ -337,11 +384,6 @@ def _read_fixture_uncached(spark: SparkSession, path: str) -> DataFrame:
         )
     return df
 
-
-#: (SparkContext application id, fixture path) -> the fixture's in-memory
-#: columnar copy (an InMemoryRelation, JVM): one per file, shared by the
-#: fixture views of every session of the context
-_COPIES: dict[tuple[str, str], object] = {}
 
 #: Copy ceiling: a fixture file of fewer bytes is read through an
 #: in-memory copy (_fixture_view). Once filled, Catalyst sizes a copy by
@@ -384,8 +426,8 @@ def _fixture_view(spark: SparkSession, path: str, name: str) -> DataFrame:
     source = _read_fixture(spark, path)  # conforms `spark` before it is cloned
     if _dir_total_bytes(path) >= FIXTURE_COPY_MAX_BYTES:
         return source
-    key = (spark.sparkContext.applicationId, path)
-    rel = _COPIES.get(key)
+    copies = _context(spark.sparkContext).copies
+    rel = copies.get(path)
     if rel is None:
         jvm = spark._jvm
         build = _pinned_clone(spark, {"spark.sql.codegen.wholeStage": "false"})
@@ -396,20 +438,22 @@ def _fixture_view(spark: SparkSession, path: str, name: str) -> DataFrame:
             qe._jdf.queryExecution(),
             jvm.scala.Some(name),
         )
-        rel = _COPIES.setdefault(key, rel)
+        rel = copies.setdefault(path, rel)
     return plan_df(spark, rel)
 
 
 def _copied_path(spark: SparkSession, name: str) -> str | None:
     """The fixture file whose in-memory copy the view `name` reads in
     `spark` (in the dir register_tables last pointed its views at), or
-    None (not a view over a copy)."""
-    sf_dir = _CURRENT_SF.get(_session_token(spark))
+    None (not a view over a copy; a name a managed table owns is not)."""
+    from impala_spark.ddl import table_info
+
+    sf_dir = _state(spark).views_dir
     name = name.lower()
-    if sf_dir is None or name not in TABLES:
+    if sf_dir is None or name not in TABLES or table_info(name) is not None:
         return None
     path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
-    return path if (spark.sparkContext.applicationId, path) in _COPIES else None
+    return path if path in _context(spark.sparkContext).copies else None
 
 
 def fixture_files(spark: SparkSession, name: str) -> list[str] | None:
@@ -444,25 +488,26 @@ def refresh_fixtures(spark: SparkSession, name: str | None = None) -> bool:
     }
     if not paths:
         return False
-    app = spark.sparkContext.applicationId
+    ctx = _context(spark.sparkContext)
     stale = set(paths.values())
     dirs = {os.path.dirname(p) for p in stale}
-    old = [_COPIES.pop((app, p)) for p in stale]
+    old = [ctx.copies.pop(p) for p in stale]
     for cache, gone in ((_NANO_TS_CACHE, stale), (_DIR_BYTES, stale | dirs)):
         for key in [k for k in cache if os.path.abspath(k) in gone]:
             del cache[key]
-    for key in [k for k in _FIXTURE_DFS if os.path.abspath(k[1]) in stale]:
-        del _FIXTURE_DFS[key]
-    for (tok, sf_dir), dfs in list(_REGISTERED.items()):
-        if os.path.abspath(sf_dir) not in dirs:
-            continue
-        for n, path in paths.items():
-            sess = dfs[n].sparkSession if n in dfs else None
-            if sess is None or sess.sparkContext is not spark.sparkContext:
+    # the caller's views first: its session builds the new copies
+    caller = _state(spark)
+    for st in sorted(ctx.sessions, key=lambda st: st is not caller):
+        for key in [k for k in st.fixtures if os.path.abspath(k) in stale]:
+            del st.fixtures[key]
+        for sf_dir, dfs in st.registered.items():
+            if os.path.abspath(sf_dir) not in dirs:
                 continue
-            dfs[n] = _fixture_view(sess, path, n)
-            if _CURRENT_SF.get(tok) == sf_dir:
-                dfs[n].createOrReplaceTempView(n)
+            for n, path in paths.items():
+                if n in dfs:
+                    dfs[n] = _fixture_view(dfs[n].sparkSession, path, n)
+                    if st.views_dir == sf_dir:
+                        dfs[n].createOrReplaceTempView(n)
     for rel in old:
         rel.cacheBuilder().clearCache(False)
     bump_catalog_version()
@@ -473,8 +518,7 @@ def fixture_copy_info(spark: SparkSession) -> FixtureCopyInfo:
     """How many fixture copies `spark`'s SparkContext has, and the bytes
     the filled ones hold (Spark's storage info for their RDDs; 0 before
     a copy's first scan)."""
-    app = spark.sparkContext.applicationId
-    rels = [rel for (a, _path), rel in list(_COPIES.items()) if a == app]
+    rels = list(_context(spark.sparkContext).copies.values())
     filled = {
         rel.cacheBuilder().cachedColumnBuffers().id()
         for rel in rels if rel.cacheBuilder().isCachedColumnBuffersLoaded()
@@ -485,21 +529,6 @@ def fixture_copy_info(spark: SparkSession) -> FixtureCopyInfo:
         if info.id() in filled
     )
     return FixtureCopyInfo(len(rels), held)
-
-
-#: (session id, sf_dir) -> registered DataFrames. The fixtures are
-#: immutable, so re-registering the same dir in the same session would only
-#: re-read 10 parquet footers (~0.5 s) per query call — cache it.
-_REGISTERED: dict[tuple[str, str], dict[str, DataFrame]] = {}
-
-#: session token -> sf_dir whose fixture views are CURRENTLY pointed at.
-#: register_tables skips the 10 createOrReplaceTempView py4j calls when
-#: the session's views already point at the requested dir (measured r12:
-#: 87 ms/call warm — paid by EVERY registry query invocation). DDL that
-#: shadows or drops a fixture-named view calls invalidate_view_memo so
-#: the next register_tables re-points (the last-one-wins semantics are
-#: unchanged, only the redundant re-pointing is skipped).
-_CURRENT_SF: dict[str, str] = {}
 
 
 #: The catalog version, process-wide like what it versions (ddl's managed
@@ -522,13 +551,6 @@ def bump_catalog_version() -> None:
     global _CATALOG_VERSION
     with _CATALOG_LOCK:
         _CATALOG_VERSION += 1
-
-
-def invalidate_view_memo(spark: SparkSession) -> None:
-    """Force the next register_tables on this session to re-point the
-    fixture views (called by ddl when a managed table shadows/drops a
-    fixture-named temp view)."""
-    _CURRENT_SF.pop(_session_token(spark), None)
 
 
 #: fixture dir or table path -> its bytes (file-size sum; cached, footers
@@ -579,10 +601,6 @@ def _dir_total_bytes(sf_dir: str) -> int:
     return _DIR_BYTES[sf_dir]
 
 
-class _SkipConf(Exception):
-    """Internal: session owns its conf (posture-pinned clone)."""
-
-
 def register_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
     """Register every fixture parquet as a temp view named after the table.
 
@@ -592,61 +610,53 @@ def register_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[s
     batch-level filter pruning still apply), else the parquet scan.
     Idempotent and cached per (session, sf_dir); a different sf_dir in the
     same session re-registers the views (last one wins, like USE db).
-    Also applies the small-query fast path (see SMALL_QUERY_BYTES).
+    Also applies the small-query fast path (gate_small_queries).
     """
+    gate_small_queries(spark, sf_dir)
+    return point_views(spark, sf_dir)
+
+
+def gate_small_queries(spark: SparkSession, sf_dir: str) -> None:
+    """The small-query fast path: below SMALL_QUERY_BYTES of fixtures,
+    runtime bloom filters and AQE are off in `spark` — the reference's
+    small-query path (Planner.java:91-108: single-node, runtime filters
+    off). Posture clones own their conf (pinned at creation, keyed by
+    posture; see _pinned_clone) and are left alone: Spark reads conf at
+    EXECUTION time, so registering a second sf_dir on the other side of
+    SMALL_QUERY_BYTES before the first query collected would flip its
+    posture mid-flight (r9 ADVICE)."""
+    if _state(spark).pinned:
+        return
+    small = "false" if _dir_total_bytes(sf_dir) < SMALL_QUERY_BYTES else "true"
     try:
-        small = _dir_total_bytes(sf_dir) < SMALL_QUERY_BYTES
-        # posture clones own their bloom/AQE conf (pinned at creation,
-        # keyed by posture; see _pinned_clone) — mutating it here would
-        # reintroduce the build-vs-execution conf race the clone exists
-        # to fix (r9 ADVICE): Spark reads conf at EXECUTION time, so
-        # registering a second sf_dir on the other side of
-        # SMALL_QUERY_BYTES before the first query collected would flip
-        # its posture mid-flight.
-        if getattr(spark, "_impala_spark_pinned", False):
-            raise _SkipConf
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.enabled",
-            "false" if small else "true",
-        )
-        # Small inputs also skip AQE: its per-stage replan rounds cost
-        # ~20-60 ms each and re-plan nothing useful on KB-sized shuffles
-        # (A-B measured: ~0.25 s over the 13-query headline at sf0.1).
-        # Above the threshold AQE is back on — skew split + partition
-        # coalescing are load-bearing at the 100 TB design point. Same
-        # gating idea as the reference's small-query fast path
-        # (Planner.java:91-108: single-node, runtime filters off).
-        spark.conf.set("spark.sql.adaptive.enabled", "false" if small else "true")
-        # shuffle.partitions is NOT sized down here: it is per
-        # statement, not global (r6's global-8 experiment regressed the
-        # compute-parallel LLM ops): posture() below sets 1 for a
-        # relational statement reading under SINGLE_NODE_MAX_INPUT_BYTES
-        # and the session default for everything else.
+        spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", small)
+        # AQE's per-stage replan rounds cost ~20-60 ms each and re-plan
+        # nothing useful on KB-sized shuffles (A-B measured: ~0.25 s over
+        # the 13-query headline at sf0.1); above the threshold skew split
+        # and partition coalescing are load-bearing. shuffle.partitions
+        # is per statement instead (posture(); r6's global-8 experiment
+        # regressed the compute-parallel LLM ops).
+        spark.conf.set("spark.sql.adaptive.enabled", small)
     except Exception:
         pass  # static-conf build: keep whatever the session has
-    tok = _session_token(spark)
-    key = (tok, sf_dir)
-    cached = _REGISTERED.get(key)
-    if cached is not None:
-        if _CURRENT_SF.get(tok) == sf_dir:
-            return cached  # views already point here; skip the py4j calls
-        # views may have been replaced by a different sf_dir since; re-point
-        # them without re-reading footers
-        for name, df in cached.items():
-            df.createOrReplaceTempView(name)
-        _CURRENT_SF[tok] = sf_dir
-        bump_catalog_version()
-        return cached
-    dfs: dict[str, DataFrame] = {}
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if not os.path.exists(path):
-            continue
-        df = _fixture_view(spark, path, name)
+
+
+def point_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """Point the fixture views of `spark` at `sf_dir` (register_tables
+    without the conf gate). No py4j call while they already point there."""
+    st = _state(spark)
+    dfs = st.registered.get(sf_dir)
+    if dfs is not None and st.views_dir == sf_dir:
+        return dfs
+    if dfs is None:
+        dfs = st.registered[sf_dir] = {
+            name: _fixture_view(spark, path, name)
+            for name in TABLES
+            if os.path.exists(path := os.path.join(sf_dir, f"{name}.parquet"))
+        }
+    for name, df in dfs.items():
         df.createOrReplaceTempView(name)
-        dfs[name] = df
-    _REGISTERED[key] = dfs
-    _CURRENT_SF[tok] = sf_dir
+    st.views_dir = sf_dir
     bump_catalog_version()
     return dfs
 
@@ -685,10 +695,6 @@ _ANALYZABLE_TYPES = frozenset({
 #: catalog tables (unlike temp views) are visible from every session
 #: clone of the same SparkContext.
 _STATS_TABLES: dict[str, set[str]] = {}
-
-#: (parent session token, sf_dir) -> CBO-posture clone
-_STATS_SESSIONS: dict[tuple[str, str], SparkSession] = {}
-
 
 def stats_db_name(sf_dir: str) -> str:
     """Stable per-sf_dir database for the promoted fixture tables, so two
@@ -748,42 +754,47 @@ def register_stats_table(spark: SparkSession, sf_dir: str, name: str) -> bool:
         done.add(name)
         return True
     inferred = _read_fixture(spark, path).schema
-    cols = ", ".join(
-        "`{}` {}".format(
-            f.name,
-            "TIMESTAMP_LTZ"
-            if f.dataType.typeName() == "timestamp_ntz"
-            else f.dataType.simpleString(),
-        )
-        for f in inferred.fields
-    )
-    # explicit db location: the default warehouse dir is a static conf
-    # that can be cwd-relative on a foreign (driver) session — same
-    # anchoring as operators.write_bucketed
-    from impala_spark.ddl import WAREHOUSE
-
-    db_loc = os.path.join(WAREHOUSE, db)
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{db_loc}'")
+    _create_stats_db(spark, db)
     spark.sql(
-        f"CREATE TABLE IF NOT EXISTS {db}.`{name}` ({cols})"
+        f"CREATE TABLE IF NOT EXISTS {db}.`{name}` ({_catalog_cols(inferred)})"
         f" USING parquet LOCATION '{path}'"
     )
-    analyzable = [
-        f.name
-        for f in inferred.fields
-        if f.dataType.typeName().split("(")[0] in _ANALYZABLE_TYPES
-        or f.dataType.typeName().startswith("decimal")
-    ]
-    if analyzable:
-        spark.sql(
-            f"ANALYZE TABLE {db}.`{name}` COMPUTE STATISTICS FOR COLUMNS "
-            + ", ".join(f"`{c}`" for c in analyzable)
-        )
-    else:
-        spark.sql(f"ANALYZE TABLE {db}.`{name}` COMPUTE STATISTICS")
+    _analyze(spark, f"{db}.`{name}`", inferred)
     PROMOTION_MODE[(sf_dir, name)] = "analyzed"
     done.add(name)
     return True
+
+
+def _create_stats_db(spark: SparkSession, db: str) -> None:
+    """CREATE DATABASE with an explicit location: the default warehouse
+    dir is a static conf that can be cwd-relative on a foreign (driver)
+    session — same anchoring as operators.write_bucketed."""
+    from impala_spark.ddl import WAREHOUSE
+
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{os.path.join(WAREHOUSE, db)}'")
+
+
+def _catalog_cols(schema) -> str:
+    """A promoted table's column list: TIMESTAMP_NTZ declared as
+    TIMESTAMP_LTZ (see register_stats_table)."""
+    return ", ".join(
+        f"`{f.name}` "
+        + ("TIMESTAMP_LTZ" if f.dataType.typeName() == "timestamp_ntz" else f.dataType.simpleString())
+        for f in schema.fields
+    )
+
+
+def _analyze(spark: SparkSession, table: str, schema) -> None:
+    """ANALYZE a promoted table: row count and size, plus column stats
+    for the types ANALYZE ... FOR COLUMNS accepts."""
+    analyzable = [
+        f"`{f.name}`"
+        for f in schema.fields
+        if f.dataType.typeName().split("(")[0] in _ANALYZABLE_TYPES
+        or f.dataType.typeName().startswith("decimal")
+    ]
+    columns = " FOR COLUMNS " + ", ".join(analyzable) if analyzable else ""
+    spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS{columns}")
 
 
 #: (sf_dir, table) -> how the last promotion happened ("analyzed" |
@@ -845,19 +856,7 @@ def register_stats_managed(spark: SparkSession, sf_dir: str, t) -> bool:
            for f in schema.fields):
         return False  # defensive; Spark-written managed tables are never nanos
     db = stats_db_name(sf_dir)
-    from impala_spark.ddl import WAREHOUSE
-
-    db_loc = os.path.join(WAREHOUSE, db)
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{db_loc}'")
-    cols = ", ".join(
-        "`{}` {}".format(
-            f.name,
-            "TIMESTAMP_LTZ"
-            if f.dataType.typeName() == "timestamp_ntz"
-            else f.dataType.simpleString(),
-        )
-        for f in schema.fields
-    )
+    _create_stats_db(spark, db)
     part = ""
     if t.partition_cols:
         part = " PARTITIONED BY (" + ", ".join(
@@ -865,26 +864,14 @@ def register_stats_managed(spark: SparkSession, sf_dir: str, t) -> bool:
         ) + ")"
     spark.sql(f"DROP TABLE IF EXISTS {db}.`{t.name}`")
     spark.sql(
-        f"CREATE TABLE {db}.`{t.name}` ({cols}) USING parquet{part}"
+        f"CREATE TABLE {db}.`{t.name}` ({_catalog_cols(schema)}) USING parquet{part}"
         f" LOCATION '{t.path}'"
     )
     if t.partition_cols:
         # Hive-layout dirs -> catalog partitions (the fixture path never
         # needs this; managed partitioned writes do)
         spark.sql(f"MSCK REPAIR TABLE {db}.`{t.name}`")
-    analyzable = [
-        f.name
-        for f in schema.fields
-        if f.dataType.typeName().split("(")[0] in _ANALYZABLE_TYPES
-        or f.dataType.typeName().startswith("decimal")
-    ]
-    if analyzable:
-        spark.sql(
-            f"ANALYZE TABLE {db}.`{t.name}` COMPUTE STATISTICS FOR COLUMNS "
-            + ", ".join(f"`{c}`" for c in analyzable)
-        )
-    else:
-        spark.sql(f"ANALYZE TABLE {db}.`{t.name}` COMPUTE STATISTICS")
+    _analyze(spark, f"{db}.`{t.name}`", schema)
     # the managed table now owns this name in the stats db: drop any
     # fixture memo so a later fixture re-promotion re-creates the entry
     _STATS_TABLES.setdefault(sf_dir, set()).discard(t.name)
@@ -951,15 +938,10 @@ def stats_session(spark: SparkSession, sf_dir: str) -> SparkSession:
     the stats broadcast budget, LTZ literals (see register_stats_table),
     and the same small-input bloom/AQE gate as register_tables. Pinned
     at creation like posture_session clones."""
-    key = (_session_token(spark), sf_dir)
-    child = _STATS_SESSIONS.get(key)
+    stats = _state(spark).stats
+    child = stats.get(sf_dir)
     if child is None:
-        child = spark.newSession()
-        for k, v in _REQUIRED_RUNTIME_CONF.items():
-            try:
-                child.conf.set(k, v)
-            except Exception:
-                pass
+        child = ensure_session_conf(spark.newSession())
         small = _dir_total_bytes(sf_dir) < SMALL_QUERY_BYTES
         child.conf.set("spark.sql.timestampType", "TIMESTAMP_LTZ")
         child.conf.set("spark.sql.cbo.enabled", "true")
@@ -973,9 +955,9 @@ def stats_session(spark: SparkSession, sf_dir: str) -> SparkSession:
             "false" if small else "true",
         )
         child.conf.set("spark.sql.adaptive.enabled", "false" if small else "true")
-        child._impala_spark_pinned = True
+        _state(child).pinned = True
         child.catalog.setCurrentDatabase(stats_db_name(sf_dir))
-        _STATS_SESSIONS[key] = child
+        stats[sf_dir] = child
     return child
 
 
@@ -1035,11 +1017,6 @@ def same_state(a: tuple, b: tuple) -> bool:
     return a[1] == b[1] and a[0].equals(b[0])
 
 
-#: (parent session token, pinned conf) -> (the parent's session_state
-#: when cloned, the clone)
-_POSTURE_CLONES: dict[tuple[str, tuple], tuple] = {}
-
-
 def _pinned_clone(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
     """A clone of `spark` with `conf` pinned — the one home of both
     posture mechanisms (posture_session, posture_df).
@@ -1061,16 +1038,16 @@ def _pinned_clone(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
     plans the query, so a clone from before a USE would answer with
     the old database."""
     state = session_state(spark)
-    key = (_session_token(spark), tuple(sorted(conf.items())))
-    cached = _POSTURE_CLONES.get(key)
+    clones = _state(spark).clones
+    key = tuple(sorted(conf.items()))
+    cached = clones.get(key)
     if cached is None or not same_state(cached[0], state):
         jclone = spark._jsparkSession.cloneSession()
         for k, v in conf.items():
             jclone.conf().set(k, v)
         clone = SparkSession(spark.sparkContext, jclone)
-        clone._impala_spark_pinned = True  # register_tables: hands off
-        cached = (state, clone)
-        _POSTURE_CLONES[key] = cached
+        _state(clone).pinned = True  # gate_small_queries: hands off
+        cached = clones[key] = (state, clone)
     return cached[1]
 
 

@@ -323,13 +323,13 @@ def test_sql_query_plan_reuse_and_isolation(spark, sf_dir):
     through their engine's plan cache, as a new DataFrame on every call;
     different sf_dirs don't cross-contaminate, in either order."""
     from impala_spark import queries as Q
-    from impala_spark.session import _session_token, register_tables
+    from impala_spark.session import _state, register_tables
 
     fn = Q.SPARK_QUERIES["join_three_way"]
     a = fn(spark, sf_dir)
     b = fn(spark, sf_dir)
     assert a is not b  # a new DataFrame over the cached plan
-    eng = Q._PLAN_CACHE[(_session_token(spark), sf_dir)]
+    eng = _state(spark).engines[sf_dir]
     assert eng.plan_cache_info().hits >= 1
     r1 = sorted(map(tuple, a.collect()))
     r2 = sorted(map(tuple, b.collect()))
@@ -339,7 +339,7 @@ def test_sql_query_plan_reuse_and_isolation(spark, sf_dir):
     )
     try:
         other = sorted(map(tuple, fn(spark, other_dir).collect()))
-        assert Q._PLAN_CACHE[(_session_token(spark), other_dir)] is not eng
+        assert _state(spark).engines[other_dir] is not eng
         assert other != r1  # per-sf_dir isolation
         # the first dir again: its engine re-points the session's views
         assert sorted(map(tuple, fn(spark, sf_dir).collect())) == r1

@@ -115,14 +115,14 @@ def test_registry_entry_takes_the_front_door(spark, sf_dir):
     Clearing queries._PLAN_CACHE drops the engine, so the next call
     plans again."""
     from impala_spark import queries as Q
-    from impala_spark.session import _session_token
+    from impala_spark.session import _state
 
     run = SPARK_QUERIES["tpch_q14_promo_revenue"]
-    key = (_session_token(spark), SF_01)
+    engines = _state(spark).engines
     Q._PLAN_CACHE.clear()
     try:
         first = run(spark, SF_01)
-        eng = Q._PLAN_CACHE[key]
+        eng = engines[SF_01]
         assert _counts(eng) == (0, 1)
         planned = _stages_and_tasks(spark, first, "pc-registry-first")
         second = run(spark, SF_01)
@@ -131,8 +131,8 @@ def test_registry_entry_takes_the_front_door(spark, sf_dir):
         assert _stages_and_tasks(spark, second, "pc-registry-second") == planned
         Q._PLAN_CACHE.clear()
         run(spark, SF_01)
-        assert Q._PLAN_CACHE[key] is not eng
-        assert _counts(Q._PLAN_CACHE[key]) == (0, 1)
+        assert engines[SF_01] is not eng
+        assert _counts(engines[SF_01]) == (0, 1)
     finally:
         Q._PLAN_CACHE.clear()
         register_tables(spark, sf_dir)  # the suite's fixture views again

@@ -228,12 +228,12 @@ def test_stats_broadcast_budget_flips_at_scale(spark, monkeypatch):
     for t in TPCH:
         eng.sql(f"COMPUTE STATS {t}")
     # a fresh clone must exist for the patched budget to apply
-    S._STATS_SESSIONS.pop((S._session_token(spark), SF_01), None)
+    S._state(spark).stats.pop(SF_01, None)
     df = eng.sql(Q3)
     assert _stats_routed(df, SF_01)
     plan = _executed(df)
     assert "ShuffledHashJoin" in plan or "SortMergeJoin" in plan, plan
-    S._STATS_SESSIONS.pop((S._session_token(spark), SF_01), None)
+    S._state(spark).stats.pop(SF_01, None)
 
 
 def test_rewrite_composes_with_stats_routing(spark, monkeypatch):
