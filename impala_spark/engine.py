@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import re
 import threading
+import weakref
 from collections import OrderedDict
 from dataclasses import dataclass
 from functools import cached_property, wraps
@@ -22,7 +23,13 @@ from pyspark.sql import functions as F
 
 from impala_spark import ddl
 from impala_spark import functions as ifn
-from impala_spark.parser import ImpalaUnsupportedError, scanned_tables, translate
+from impala_spark.parser import (
+    ImpalaUnsupportedError,
+    _Analysis,
+    scanned_tables,
+    tokenize,
+    translate,
+)
 from impala_spark.session import (
     TABLES,
     FixtureCopyInfo,
@@ -218,12 +225,18 @@ class Stmt:
     plan_source: str | None = None
 
     @cached_property
+    def analysis(self) -> _Analysis:
+        """The analysis of its source, else its text, built once on
+        first use: `tables` reads it, and translating that text
+        (parser.translate's `analysis`) reuses it."""
+        return _Analysis(tokenize(self.source or self.text))
+
+    @cached_property
     def tables(self) -> frozenset[str]:
-        """The tables the statement reads (parser.scanned_tables over
-        its source, else its text), worked out once on first use:
+        """The tables the statement reads (parser._Analysis.scans):
         authorization, auditing, admission, the size gates and stats
         routing all read it."""
-        return scanned_tables(self.source or self.text)
+        return self.analysis.scans
 
 
 #: plain-query plans an engine keeps (a dashboard's distinct statements
@@ -276,8 +289,11 @@ class _Plan(NamedTuple):
     checked: Stmt  # the statement as authorized
     stmt: Stmt  # the statement as run (`default.<view>` refs stripped)
     sizes: tuple  # its _gate_input_bytes
-    routed: SparkSession  # the session it was analyzed in
-    target: SparkSession  # the session it plans in: routed or its posture clone
+    #: the session it was analyzed in, and the one it plans in (routed
+    #: or its posture clone), held weakly: a plan does not keep a
+    #: replaced clone alive, and a dead reference is a miss
+    routed: weakref.ref
+    target: weakref.ref
     state: tuple | None  # routed's session_state, when target is routed
     plan: object  # the analyzed plan (JVM), output casts included
 
@@ -907,8 +923,8 @@ class ImpalaEngine:
             target = posture_target(routed, bound)
             state = session_state(routed) if target is routed else None
             e = look.entry
-            if e is not None and e.sizes == (nbytes, bound) and e.routed is routed \
-                    and e.target is target and (state is None or same_state(state, e.state)):
+            if e is not None and e.sizes == (nbytes, bound) and e.routed() is routed \
+                    and e.target() is target and (state is None or same_state(state, e.state)):
                 self._plans.hit()
                 return plan_df(target, e.plan)
             df = self._run_query_stmt(stmt, nbytes, bound)
@@ -917,7 +933,8 @@ class ImpalaEngine:
             # would repeat its "random" values, so it is not kept
             keep = df.sparkSession is target and plan.deterministic()
             self._plans.miss(look, _Plan(
-                look.checked, stmt, (nbytes, bound), routed, target, state, plan,
+                look.checked, stmt, (nbytes, bound), weakref.ref(routed),
+                weakref.ref(target), state, plan,
             ) if keep else None)
             return df
         finally:
@@ -948,7 +965,8 @@ class ImpalaEngine:
 
             q = rewrite_appx_count_distinct(q)
         # strict-mode analysis always runs on the USER's text first
-        sql_text = translate(q, strict=self.strict)
+        sql_text = translate(q, strict=self.strict, analysis=stmt.analysis
+                             if q == (stmt.source or stmt.text) else None)
         if nbytes is not None and nbytes > BROADCAST_HINT_MAX_INPUT_BYTES:
             # the broadcast-hint gate (see the constant); the rewrites
             # below start from the stripped text too
@@ -1249,7 +1267,7 @@ class ImpalaEngine:
         col_list = f" ({cols})" if cols else ""
         self._sql_with_impala_errors(
             f"CREATE OR REPLACE TEMPORARY VIEW {vname}{col_list} AS "
-            + translate(stmt.source, strict=self.strict)
+            + translate(stmt.source, strict=self.strict, analysis=stmt.analysis)
         )
         self._views.add(vname)
         self._view_texts[vname] = stmt.source
@@ -1270,7 +1288,7 @@ class ImpalaEngine:
                 f"ALTER VIEW not allowed on a table: default.{vname}")
         self._sql_with_impala_errors(
             f"CREATE OR REPLACE TEMPORARY VIEW {vname} AS "
-            + translate(stmt.source, strict=self.strict)
+            + translate(stmt.source, strict=self.strict, analysis=stmt.analysis)
         )
         self._view_texts[vname] = stmt.source
         return ddl._ack(self.spark, f"view {vname} altered")

@@ -138,7 +138,11 @@ def _check_rejections(tokens: list[Token]) -> None:
                 raise ImpalaUnsupportedError("recursive CTEs are not in Impala 2.7")
 
 
-def _check_subquery_in_or(tokens: list[Token]) -> None:
+#: words ending the WHERE / HAVING region _check_subquery_in_or reads
+_OR_REGION_END = {"GROUP", "ORDER", "LIMIT", "UNION", "HAVING", "WINDOW", "WHERE"}
+
+
+def _check_subquery_in_or(ctx: _Analysis) -> None:
     """Impala's analyzer rejects subqueries under an OR predicate
     (analysis/StmtRewriter.java:135: "Subqueries in OR predicates are not
     supported"). Spark would happily plan them, so the compat surface must
@@ -152,154 +156,96 @@ def _check_subquery_in_or(tokens: list[Token]) -> None:
     subquery (its enclosing group IS the subquery parens), which Impala
     allows.
     """
-    stack: list[int] = []
-    groups: dict[int, tuple[int, int]] = {}  # open_idx -> (open, close)
-    depth_at: list[int] = []
-    d = 0
-    for idx, t in enumerate(tokens):
-        if t.kind == "op" and t.text == "(":
-            stack.append(idx)
-            d += 1
-        depth_at.append(d)
-        if t.kind == "op" and t.text == ")":
-            d -= 1
-            if stack:
-                o = stack.pop()
-                groups[o] = (o, idx)
+    opens = [s.open for s in ctx.subqueries if s.head == "SELECT"]
+    if not opens:
+        return
+    tokens, depth_at, groups = ctx.tokens, ctx.depth_at, ctx.close_of
+    between_ands = set(ctx.between_ands.values())
 
-    _CLAUSE_END = {"GROUP", "ORDER", "LIMIT", "UNION", "HAVING", "WINDOW", "WHERE"}
-    regions: list[tuple[int, int]] = []
-    for idx, t in enumerate(tokens):
-        if t.kind == "word" and t.upper in ("WHERE", "HAVING"):
-            dw = depth_at[idx]
-            end = len(tokens) - 1
-            for k in range(idx + 1, len(tokens)):
-                tk = tokens[k]
-                if depth_at[k] < dw or (
-                    depth_at[k] == dw and tk.kind == "word" and tk.upper in _CLAUSE_END
-                ):
-                    end = k - 1
-                    break
-            regions.append((idx, end))
+    def not_groups(idx: int) -> list[tuple[int, int]]:
+        """The paren groups around token idx that follow a NOT."""
+        return [
+            (a, b) for a, b in groups.items()
+            if a < idx <= b and _word_at(tokens, _significant(tokens, a, -1)) == "NOT"
+        ]
 
-    for lo_r, hi_r in regions:
-        subqueries = []  # (open_idx, depth)
-        for idx in range(lo_r, hi_r + 1):
-            t = tokens[idx]
-            if t.kind == "op" and t.text == "(":
-                j = _significant(tokens, idx)
-                if j != -1 and tokens[j].kind == "word" and tokens[j].upper == "SELECT":
-                    subqueries.append((idx, depth_at[idx]))
+    for lo_r, t in enumerate(tokens):
+        if t.kind != "word" or t.upper not in ("WHERE", "HAVING"):
+            continue
+        dw = depth_at[lo_r]
+        hi_r = next((
+            k - 1 for k in range(lo_r + 1, len(tokens))
+            if depth_at[k] < dw
+            or depth_at[k] == dw and _word_at(tokens, k) in _OR_REGION_END
+        ), len(tokens) - 1)
+        subqueries = [o for o in opens if lo_r <= o <= hi_r]
         if not subqueries:
             continue
         for idx in range(lo_r, hi_r + 1):
-            t = tokens[idx]
-            if not (t.kind == "word" and t.upper == "OR"):
+            if _word_at(tokens, idx) != "OR":
                 continue
             # Negation parity: the reference pushes negation to the leaf
             # operands BEFORE the disjunction check (StmtRewriter.java:
             # 104-111 pushNegationToOperands) — an OR under an odd number
             # of enclosing NOT(...) groups becomes an AND and is legal
             # (AnalyzeSubqueriesTest pins `not (id in (sq) or x)` as OK).
-            nots = 0
-            for o, (a, b) in groups.items():
-                if a < idx <= b:
-                    p = _significant(tokens, a, -1)
-                    if p != -1 and tokens[p].kind == "word" and tokens[p].upper == "NOT":
-                        nots += 1
-            if nots % 2 == 1:
+            if len(not_groups(idx)) % 2 == 1:
                 continue
             od = depth_at[idx]
             # smallest paren group at the OR's depth containing it; else clause
             lo, hi = lo_r, hi_r
-            for o, (a, b) in groups.items():
+            for a, b in groups.items():
                 if a < idx <= b and depth_at[a] == od and (b - a) < (hi - lo):
                     lo, hi = a, b
-            for s_idx, s_depth in subqueries:
-                if lo <= s_idx <= hi and s_depth >= od and s_idx != lo:
-                    # StmtRewriter quotes the whole OR predicate in
-                    # toSql form ("... not supported: t.id IN (...) OR
-                    # t.bool_col = FALSE")
-                    if lo == lo_r:
-                        frag = untokenize(tokens[lo_r + 1:hi_r + 1]).strip()
-                    else:
-                        frag = untokenize(tokens[lo + 1:hi]).strip()
-                    raise ImpalaUnsupportedError(
-                        "Subqueries in OR predicates are not supported: "
-                        + _expr_to_sql(frag)
-                    )
+            if any(lo <= o <= hi and depth_at[o] >= od and o != lo
+                   for o in subqueries):
+                # StmtRewriter quotes the whole OR predicate in
+                # toSql form ("... not supported: t.id IN (...) OR
+                # t.bool_col = FALSE")
+                frag = untokenize(
+                    tokens[lo_r + 1:hi_r + 1] if lo == lo_r else tokens[lo + 1:hi]
+                ).strip()
+                raise ImpalaUnsupportedError(
+                    "Subqueries in OR predicates are not supported: "
+                    + _expr_to_sql(frag)
+                )
         # NOT(A AND B) rewrites to (NOT A) OR (NOT B) before the OR
         # check (pushNegationToOperands), so an odd-NOT AND over a
         # subquery is the same error, quoted in its REWRITTEN form
         for idx in range(lo_r, hi_r + 1):
-            t = tokens[idx]
-            if not (t.kind == "word" and t.upper == "AND"):
+            if _word_at(tokens, idx) != "AND":
                 continue
-            not_groups = []
-            for o, (a, b) in groups.items():
-                if a < idx <= b:
-                    p = _significant(tokens, a, -1)
-                    if p != -1 and tokens[p].kind == "word" \
-                            and tokens[p].upper == "NOT":
-                        not_groups.append((a, b))
-            if len(not_groups) % 2 == 0:
+            ng = not_groups(idx)
+            if len(ng) % 2 == 0:
                 continue
-            ng = min(not_groups, key=lambda ab: ab[1] - ab[0])
-            if not any(ng[0] <= s <= ng[1] for s, _d in subqueries):
+            a0, b0 = min(ng, key=lambda ab: ab[1] - ab[0])
+            if not any(a0 <= o <= b0 for o in subqueries):
                 continue
             # split the group at its top-level ANDs (BETWEEN's AND kept)
-            conjs: list[tuple[int, int]] = []
-            lo2 = ng[0] + 1
-            d4 = 0
-            pend_between = 0
-            for k in range(ng[0] + 1, ng[1]):
-                tk = tokens[k]
-                if tk.kind == "op":
-                    if tk.text == "(":
-                        d4 += 1
-                    elif tk.text == ")":
-                        d4 -= 1
-                    continue
-                if d4 or tk.kind != "word":
-                    continue
-                if tk.upper == "BETWEEN":
-                    pend_between += 1
-                elif tk.upper == "AND":
-                    if pend_between:
-                        pend_between -= 1
-                    else:
-                        conjs.append((lo2, k - 1))
-                        lo2 = k + 1
-            conjs.append((lo2, ng[1] - 1))
-            if len(conjs) < 2:
+            lvl = depth_at[a0]
+            cuts = [a0] + [
+                k for k in range(a0 + 1, b0)
+                if depth_at[k] == lvl and _word_at(tokens, k) == "AND"
+                and k not in between_ands
+            ] + [b0]
+            if len(cuts) < 3:
                 continue
             flip = {"=": "!=", "==": "!=", "!=": "=", "<>": "=",
                     "<": ">=", ">": "<=", "<=": ">", ">=": "<"}
 
             def negate(a2: int, b2: int) -> str:
-                d5 = 0
                 for k in range(a2, b2 + 1):
                     tk = tokens[k]
-                    if tk.kind == "op":
-                        if tk.text == "(":
-                            d5 += 1
-                        elif tk.text == ")":
-                            d5 -= 1
-                        elif d5 == 0 and tk.text in flip:
-                            lhs = untokenize(tokens[a2:k]).strip()
-                            rhs = untokenize(tokens[k + 1:b2 + 1]).strip()
-                            return _expr_to_sql(
-                                f"{lhs} {flip[tk.text]} {rhs}"
-                            )
+                    if depth_at[k] != lvl:
                         continue
-                    if d5 == 0 and tk.kind == "word" and tk.upper == "IN":
+                    if tk.kind == "op" and tk.text in flip:
+                        lhs = untokenize(tokens[a2:k]).strip()
+                        rhs = untokenize(tokens[k + 1:b2 + 1]).strip()
+                        return _expr_to_sql(f"{lhs} {flip[tk.text]} {rhs}")
+                    if tk.kind == "word" and tk.upper == "IN":
                         pvk = _significant(tokens, k, -1)
-                        neg_in = (
-                            pvk != -1 and tokens[pvk].kind == "word"
-                            and tokens[pvk].upper == "NOT"
-                        )
-                        lhs_end = pvk if neg_in else k
-                        lhs = untokenize(tokens[a2:lhs_end]).strip()
+                        neg_in = _word_at(tokens, pvk) == "NOT"
+                        lhs = untokenize(tokens[a2:pvk if neg_in else k]).strip()
                         rhs = untokenize(tokens[k + 1:b2 + 1]).strip()
                         kw = "IN" if neg_in else "NOT IN"
                         return (
@@ -312,7 +258,9 @@ def _check_subquery_in_or(tokens: list[Token]) -> None:
 
             raise ImpalaUnsupportedError(
                 "Subqueries in OR predicates are not supported: "
-                + " OR ".join(negate(a2, b2) for a2, b2 in conjs)
+                + " OR ".join(
+                    negate(x + 1, y - 1) for x, y in zip(cuts, cuts[1:])
+                )
             )
 
 
@@ -1206,34 +1154,18 @@ _CLAUSE_BOUNDARY = {
 
 
 def _check_strict_subquery_clauses(ctx: _Analysis) -> None:
-    """Reject subqueries outside FROM/WHERE the way Impala's analyzer does."""
-    tokens = ctx.tokens
-    for idx, t in enumerate(tokens):
-        if t.kind != "word" or t.upper not in _STRICT_CLAUSE_MESSAGES:
-            continue
-        if t.upper in ("GROUP", "ORDER"):
-            j = _significant(tokens, idx)
-            if j == -1 or tokens[j].upper != "BY":
-                continue
-        d = 0
-        k = idx + 1
-        while k < len(tokens):
-            tk = tokens[k]
-            if tk.kind == "op" and tk.text == "(":
-                # a subquery at ANY nesting depth inside the clause is
-                # rejected (Impala rejects e.g. coalesce((SELECT ...), 0)
-                # in the select list, not just a top-level scalar subquery)
-                j = _significant(tokens, k)
-                if j != -1 and tokens[j].kind == "word" and tokens[j].upper == "SELECT":
-                    raise ImpalaUnsupportedError(_STRICT_CLAUSE_MESSAGES[t.upper])
-                d += 1
-            elif tk.kind == "op" and tk.text == ")":
-                d -= 1
-                if d < 0:
-                    break
-            elif d == 0 and tk.kind == "word" and tk.upper in _CLAUSE_BOUNDARY:
-                break
-            k += 1
+    """Reject subqueries outside FROM/WHERE the way Impala's analyzer
+    does: a subquery anywhere in a select list, HAVING, GROUP BY or
+    ORDER BY clause (also nested, e.g. coalesce((SELECT ...), 0) in the
+    select list) is rejected with the earliest such clause's message."""
+    at = [
+        s.clause_at for s in ctx.subqueries
+        if s.head == "SELECT" and s.clause in _STRICT_CLAUSE_MESSAGES
+    ]
+    if at:
+        raise ImpalaUnsupportedError(
+            _STRICT_CLAUSE_MESSAGES[ctx.tokens[min(at)].upper]
+        )
 
 
 #: Builtin aggregate function names (catalog/BuiltinsDb.java:666-950);
@@ -2629,283 +2561,38 @@ def _chain_span_fwd(tokens: list[Token], i: int) -> int:
     return end
 
 
-def _span_subquery_opens(tokens: list[Token], a: int, b: int) -> list[int]:
-    """Indices of every TOP-LEVEL '(' in [a, b] whose first significant
-    content token is SELECT (a subquery open paren). Subqueries nested
-    inside another subquery in the span are that subquery's own business
-    and are not reported."""
-    opens: list[int] = []
-    k = a
-    while k <= b:
-        if tokens[k].kind == "op" and tokens[k].text == "(":
-            j = _significant(tokens, k)
-            if j != -1 and tokens[j].kind == "word" \
-                    and tokens[j].upper == "SELECT":
-                opens.append(k)
-                close = _matching_paren(tokens, k)
-                if close == -1:
-                    break
-                k = close + 1
-                continue
-        k += 1
-    return opens
-
-
-def _outside_subqueries(tokens: list[Token], a: int, b: int) -> list[int]:
-    """Token indices in [a, b] that are not inside any top-level
-    subquery group of the span."""
-    out: list[int] = []
-    k = a
-    while k <= b:
-        if tokens[k].kind == "op" and tokens[k].text == "(":
-            j = _significant(tokens, k)
-            if j != -1 and tokens[j].kind == "word" \
-                    and tokens[j].upper == "SELECT":
-                close = _matching_paren(tokens, k)
-                if close != -1:
-                    k = close + 1
-                    continue
-        out.append(k)
-        k += 1
-    return out
-
-
-def _subquery_is_scalar(tokens: list[Token], open_idx: int) -> bool:
-    """Approximate Subquery.isScalarSubquery for the group opening at
-    open_idx: a single select-list item that is an aggregate call, and
-    no GROUP BY at the subquery's top level. Also recurses one level
-    into a directly-nested subquery (contains() is deep)."""
-    close = _matching_paren(tokens, open_idx)
-    if close == -1:
+def _subquery_clearly_multi_row(ctx: _Analysis, s: _Subquery) -> bool:
+    """True only when subquery s DEFINITELY returns more than one row
+    per SelectStmt.returnsSingleRow: a FROM clause, no LIMIT 1, and no
+    aggregate/analytic call anywhere (an unknown function name may be a
+    UDA, and aggregation/analytics route to the StmtRewriter error
+    family instead). Correlated subqueries are left to the correlation
+    checks — only uncorrelated ones count."""
+    if not s.has("FROM") or s.has("GROUP") or s.limit == "1" \
+            or s.correlation != "none":
         return False
-    sel = _significant(tokens, open_idx)
-    if sel == -1 or tokens[sel].kind != "word" or tokens[sel].upper != "SELECT":
-        return False
-    d = 0
-    from_idx = close
-    has_group = False
-    for k in range(sel + 1, close):
+    tokens = ctx.tokens
+    for k in range(s.open + 1, s.close):
         tk = tokens[k]
-        if tk.kind == "op" and tk.text == "(":
-            d += 1
-        elif tk.kind == "op" and tk.text == ")":
-            d -= 1
-        elif d == 0 and tk.kind == "word":
-            if tk.upper == "FROM" and from_idx == close:
-                from_idx = k
-            elif tk.upper == "GROUP":
-                has_group = True
-    if has_group:
-        return False
-    items = _split_top_level_commas(tokens, sel + 1, from_idx)
-    if len(items) != 1:
-        return False
-    a, b = items[0]
-    a2 = a
-    while a2 < b and tokens[a2].kind in ("ws", "line_comment", "block_comment"):
-        a2 += 1
-    if a2 >= b or tokens[a2].kind != "word":
-        return False
-    if tokens[a2].text.lower() not in _PLACEMENT_AGG_NAMES:
-        return False
-    j = _significant(tokens, a2)
-    return j != -1 and j < b and tokens[j].kind == "op" and tokens[j].text == "("
-
-
-def _subquery_clearly_multi_row(tokens: list[Token], open_idx: int) -> bool:
-    """True only when the subquery at open_idx DEFINITELY returns more
-    than one row per SelectStmt.returnsSingleRow: a FROM clause, no
-    LIMIT 1, and no aggregate/analytic call anywhere (an unknown
-    function name may be a UDA, and aggregation/analytics route to the
-    StmtRewriter error family instead). Correlated subqueries are left
-    to the correlation checks — only uncorrelated ones count."""
-    close = _matching_paren(tokens, open_idx)
-    if close == -1:
-        return False
-    d = 0
-    has_from = False
-    from_idx = -1
-    for k in range(open_idx + 1, close):
-        tk = tokens[k]
-        if tk.kind == "op" and tk.text == "(":
-            d += 1
-        elif tk.kind == "op" and tk.text == ")":
-            d -= 1
-        elif d == 0 and tk.kind == "word":
-            if tk.upper == "FROM" and from_idx == -1:
-                has_from = True
-                from_idx = k
-            elif tk.upper == "GROUP":
-                return False  # grouping -> StmtRewriter error family
-            elif tk.upper == "LIMIT":
-                j = _significant(tokens, k)
-                if j != -1 and tokens[j].kind == "number" \
-                        and tokens[j].text == "1":
-                    return False
-    if not has_from:
-        return False
-    inner_names: set[str] = set()
-    for k in range(open_idx + 1, close):
-        tk = tokens[k]
-        if tk.kind == "word":
-            if tk.upper == "OVER":
-                # a PARTITION BY analytic returns one row per partition
-                # — definitely multi-row; other analytics defer
-                j = _significant(tokens, k)
-                if j != -1 and tokens[j].kind == "op" and tokens[j].text == "(":
-                    inner0 = _significant(tokens, j)
-                    if inner0 != -1 and tokens[inner0].kind == "word" \
-                            and tokens[inner0].upper == "PARTITION":
-                        continue
-                return False  # analytic
-            nx = _significant(tokens, k)
-            if nx != -1 and nx < close and tokens[nx].kind == "op" \
-                    and tokens[nx].text == "(":
-                fname = tk.text.lower()
-                cl2 = _matching_paren(tokens, nx)
-                af2 = _significant(tokens, cl2) if cl2 != -1 else -1
-                fn_is_analytic = (
-                    af2 != -1 and tokens[af2].kind == "word"
-                    and tokens[af2].upper == "OVER"
-                )
-                if fname in _PLACEMENT_AGG_NAMES and not fn_is_analytic:
-                    return False  # aggregate -> single row / other family
-                if not fn_is_analytic and fname not in _FN_RETURN_TYPES \
-                        and fname not in _FN_SIGS:
-                    return False  # unknown call: may be a UDA
-    # declared FROM-clause names (table tail parts and aliases)
-    k = from_idx
-    while k != -1 and k < close:
-        tk = tokens[k]
-        if tk.kind == "word" and tk.upper in (
-            "WHERE", "GROUP", "ORDER", "LIMIT", "HAVING", "UNION",
-        ):
-            break
-        if tk.kind in ("word", "bident") and tk.upper not in (
-            "FROM", "JOIN", "INNER", "LEFT", "RIGHT", "FULL", "OUTER",
-            "CROSS", "SEMI", "ANTI", "ON", "USING", "AS",
-        ):
-            inner_names.add(tk.text.strip("`").lower())
-        if tk.kind == "op" and tk.text == "(":
-            k = _matching_paren(tokens, k)
-            if k == -1:
-                break
-        k += 1
-    # correlated? a dotted ref whose root is not declared inside
-    for k in range(open_idx + 1, close):
-        tk = tokens[k]
-        if tk.kind not in ("word", "bident"):
+        if tk.kind != "word":
             continue
         nx = _significant(tokens, k)
-        pv = _significant(tokens, k, -1)
-        if nx != -1 and nx < close and tokens[nx].kind == "op" \
-                and tokens[nx].text == ".":
-            if pv != -1 and tokens[pv].kind == "op" and tokens[pv].text == ".":
-                continue  # path tail
-            if tk.text.strip("`").lower() not in inner_names:
-                return False  # correlated: other checks own it
+        if tk.upper == "OVER":
+            # a PARTITION BY analytic returns one row per partition
+            # — definitely multi-row; other analytics defer
+            if tokens[nx].text != "(" \
+                    or _word_at(tokens, _significant(tokens, nx)) != "PARTITION":
+                return False
+        elif nx != -1 and nx < s.close and tokens[nx].kind == "op" \
+                and tokens[nx].text == "(":
+            fname = tk.text.lower()
+            if _word_at(tokens, _significant(tokens, ctx.close_of[nx])) == "OVER":
+                continue  # analytic
+            if fname in _PLACEMENT_AGG_NAMES:
+                return False  # aggregate -> single row / other family
+            if fname not in _FN_RETURN_TYPES and fname not in _FN_SIGS:
+                return False  # unknown call: may be a UDA
     return True
-
-
-def _subquery_inner_names(tokens: list[Token], open_idx: int, close: int) -> set[str]:
-    """Names declared by the subquery's own FROM clause (table tail
-    parts and aliases)."""
-    inner: set[str] = set()
-    d = 0
-    from_idx = -1
-    for k in range(open_idx + 1, close):
-        tk = tokens[k]
-        if tk.kind == "op" and tk.text == "(":
-            d += 1
-        elif tk.kind == "op" and tk.text == ")":
-            d -= 1
-        elif d == 0 and tk.kind == "word" and tk.upper == "FROM":
-            from_idx = k
-            break
-    k = from_idx
-    while k != -1 and k < close:
-        tk = tokens[k]
-        if tk.kind == "word" and tk.upper in (
-            "WHERE", "GROUP", "ORDER", "LIMIT", "HAVING", "UNION",
-        ):
-            break
-        if tk.kind in ("word", "bident") and tk.upper not in (
-            "FROM", "JOIN", "INNER", "LEFT", "RIGHT", "FULL", "OUTER",
-            "CROSS", "SEMI", "ANTI", "ON", "USING", "AS",
-        ):
-            inner.add(tk.text.strip("`").lower())
-        if tk.kind == "op" and tk.text == "(":
-            k = _matching_paren(tokens, k)
-            if k == -1:
-                break
-        k += 1
-    return inner
-
-
-def _subquery_correlation(tokens: list[Token], open_idx: int) -> str:
-    """'none' (uncorrelated), 'equi' (correlated with at least one
-    outer_slot = inner_slot conjunct — rewritable as a join), or
-    'nonequi' (correlated without one) for the subquery at open_idx."""
-    close = _matching_paren(tokens, open_idx)
-    if close == -1:
-        return "none"
-    inner = _subquery_inner_names(tokens, open_idx, close)
-    correlated = False
-    has_equi = False
-    for k in range(open_idx + 1, close):
-        tk = tokens[k]
-        if tk.kind in ("word", "bident"):
-            nx = _significant(tokens, k)
-            pv = _significant(tokens, k, -1)
-            if nx != -1 and nx < close and tokens[nx].kind == "op" \
-                    and tokens[nx].text == ".":
-                if pv != -1 and tokens[pv].kind == "op" \
-                        and tokens[pv].text == ".":
-                    continue
-                if tk.text.strip("`").lower() not in inner:
-                    correlated = True
-        elif tk.kind == "op" and tk.text == "=":
-            li = _significant(tokens, k, -1)
-            ri = _significant(tokens, k)
-
-            def _side_root(idx: int, back: bool) -> str | None:
-                if idx == -1 or idx >= close:
-                    return None
-                span = (_primary_span_back(tokens, idx) if back
-                        else idx)
-                end = idx if back else _primary_span_fwd(tokens, idx)
-                if span == -1 or end == -1:
-                    return None
-                head = span
-                if tokens[head].kind not in ("word", "bident"):
-                    return None
-                nx2 = _significant(tokens, head)
-                if nx2 != -1 and tokens[nx2].kind == "op" \
-                        and tokens[nx2].text == "(":
-                    return None  # call, not a slot
-                return tokens[head].text.strip("`").lower()
-
-            lroot = _side_root(li, True)
-            rroot = _side_root(ri, False)
-            if lroot is None or rroot is None:
-                continue
-
-            # a dotted ref with an undeclared root is an outer slot; a
-            # bare column or declared-root ref is an inner slot
-            def _is_outer(root: str, idx: int, back: bool) -> bool:
-                span = _primary_span_back(tokens, idx) if back else idx
-                nxt = _significant(tokens, span)
-                dotted = nxt != -1 and tokens[nxt].kind == "op" \
-                    and tokens[nxt].text == "."
-                if not dotted:
-                    return False  # bare column: inner
-                return root not in inner
-
-            if _is_outer(lroot, li, True) != _is_outer(rroot, ri, False):
-                has_equi = True
-    if not correlated:
-        return "none"
-    return "equi" if has_equi else "nonequi"
 
 
 def _expand_between(fragment: str) -> str:
@@ -2969,278 +2656,138 @@ def _check_strict_subquery_predicates(ctx: _Analysis) -> None:
       subquery; a correlated EXISTS needs at least one equi-join
       correlated conjunct.
     """
-    tokens = ctx.tokens
-    n = len(tokens)
+    tokens, depth_at, subs = ctx.tokens, ctx.depth_at, ctx.subqueries
 
     def tosql_span(a: int, b: int) -> str:
         return _expr_to_sql(untokenize(tokens[a:b + 1]).strip())
 
     # ---- expression-position subqueries: single select block + LIMIT --
-    for i, t in enumerate(tokens):
-        if t.kind != "op" or t.text != "(":
-            continue
-        j = _significant(tokens, i)
-        if j == -1 or tokens[j].kind != "word":
-            continue
-        head = tokens[j].upper
-        prev = _significant(tokens, i, -1)
-        if prev == -1:
-            continue
-        tp = tokens[prev]
-        is_limit = tp.kind == "word" and tp.upper == "LIMIT"
-        expr_pos = (
-            (tp.kind == "op" and tp.text in (
-                "=", "==", "!=", "<>", "<", ">", "<=", ">=", "<=>",
-                "+", "-", "*", "/", "%",
-            ))
-            or (tp.kind == "word" and tp.upper in ("IN", "EXISTS"))
-        )
-        if not (is_limit or expr_pos):
-            continue
-        close = _matching_paren(tokens, i)
-        if close == -1:
-            continue
-        if head == "VALUES" and expr_pos:
-            raise ImpalaUnsupportedError(
-                "A subquery must contain a single select block: "
-                + tosql_span(i, close)
-            )
-        if head != "SELECT":
-            continue
-        if is_limit:
+    for s in subs:
+        if s.context == "limit" and s.head == "SELECT":
             raise ImpalaUnsupportedError(
                 "LIMIT expression must be a constant expression: "
-                + tosql_span(i, close)
+                + tosql_span(s.open, s.close)
             )
-        d = 0
-        for k in range(i + 1, close):
-            tk = tokens[k]
-            if tk.kind == "op" and tk.text == "(":
-                d += 1
-            elif tk.kind == "op" and tk.text == ")":
-                d -= 1
-            elif d == 0 and tk.kind == "word" and tk.upper == "UNION":
-                raise ImpalaUnsupportedError(
-                    "A subquery must contain a single select block: "
-                    + tosql_span(i, close)
-                )
+        if s.context not in (None, "between", "limit") \
+                and (s.head == "VALUES" or s.has("UNION")):
+            raise ImpalaUnsupportedError(
+                "A subquery must contain a single select block: "
+                + tosql_span(s.open, s.close)
+            )
 
     # ---- correlated-ref visibility: an outer alias is only visible in
     #      a subquery's WHERE/ON — a qualified ref in its GROUP BY or
     #      ORDER BY, or a qualified star, does not resolve
     #      (Analyzer path resolution; AnalyzeSubqueriesTest pins
     #      "Could not resolve column/field reference: 't.test_id'") ----
-    for i, t in enumerate(tokens):
-        if t.kind != "op" or t.text != "(":
-            continue
-        hd = _significant(tokens, i)
-        if hd == -1 or tokens[hd].kind != "word" or tokens[hd].upper != "SELECT":
-            continue
-        prev = _significant(tokens, i, -1)
-        if prev == -1:
-            continue
-        tp = tokens[prev]
-        if not (
-            (tp.kind == "op" and tp.text in (
-                "=", "==", "!=", "<>", "<", ">", "<=", ">=", "<=>",
-            ))
-            or (tp.kind == "word" and tp.upper in ("IN", "EXISTS"))
+    for s in subs:
+        if s.head != "SELECT" or not s.scope or s.context not in (
+            "cmp", "in", "not in", "exists", "not exists",
         ):
             continue
-        close = _matching_paren(tokens, i)
-        if close == -1:
-            continue
-        inner = _subquery_inner_names(tokens, i, close)
-        if not inner:
-            continue
         # qualified star in the select list
-        d = 0
-        for k in range(hd + 1, close):
-            tk = tokens[k]
-            if tk.kind == "op" and tk.text == "(":
-                d += 1
-            elif tk.kind == "op" and tk.text == ")":
-                d -= 1
-            elif d == 0 and tk.kind == "word" and tk.upper == "FROM":
-                break
-            elif d == 0 and tk.kind in ("word", "bident"):
-                nx = _significant(tokens, k)
-                if nx != -1 and tokens[nx].kind == "op" and tokens[nx].text == ".":
-                    n2 = _significant(tokens, nx)
-                    if n2 != -1 and tokens[n2].kind == "op" \
-                            and tokens[n2].text == "*":
-                        root = tk.text.strip("`").lower()
-                        if root not in inner:
-                            raise ImpalaUnsupportedError(
-                                "Could not resolve star expression: "
-                                f"'{untokenize(tokens[k:n2 + 1]).strip()}'"
-                            )
-        # qualified refs inside GROUP BY / ORDER BY regions
-        d = 0
-        k = i + 1
-        while k < close:
-            tk = tokens[k]
-            if tk.kind == "op" and tk.text == "(":
-                d += 1
-            elif tk.kind == "op" and tk.text == ")":
-                d -= 1
-            elif d == 0 and tk.kind == "word" and tk.upper in ("GROUP", "ORDER"):
-                by = _significant(tokens, k)
-                if by == -1 or tokens[by].kind != "word" \
-                        or tokens[by].upper != "BY":
-                    k += 1
-                    continue
-                # region end: next same-depth clause keyword or close
-                end = close
-                d2 = 0
-                for m in range(by + 1, close):
-                    tm = tokens[m]
-                    if tm.kind == "op" and tm.text == "(":
-                        d2 += 1
-                    elif tm.kind == "op" and tm.text == ")":
-                        d2 -= 1
-                    elif d2 == 0 and tm.kind == "word" and tm.upper in (
-                        "LIMIT", "OFFSET", "HAVING", "UNION", "ORDER",
-                        "GROUP",
-                    ):
-                        end = m
-                        break
-                for m in range(by + 1, end):
-                    tm = tokens[m]
-                    if tm.kind not in ("word", "bident"):
-                        continue
-                    nx = _significant(tokens, m)
-                    pv = _significant(tokens, m, -1)
-                    if not (nx != -1 and nx < end and tokens[nx].kind == "op"
-                            and tokens[nx].text == "."):
-                        continue
-                    if pv != -1 and tokens[pv].kind == "op" \
-                            and tokens[pv].text == ".":
-                        continue
-                    root = tm.text.strip("`").lower()
-                    if root in inner:
-                        continue
-                    # full dotted path as written
-                    pe = m
-                    p2 = nx
-                    while p2 != -1 and p2 < end and tokens[p2].kind == "op" \
-                            and tokens[p2].text == ".":
-                        n3 = _significant(tokens, p2)
-                        if n3 == -1 or tokens[n3].kind not in ("word", "bident"):
-                            break
-                        pe = n3
-                        p2 = _significant(tokens, n3)
-                    raise ImpalaUnsupportedError(
-                        "Could not resolve column/field reference: "
-                        f"'{untokenize(tokens[m:pe + 1]).strip()}'"
-                    )
-                k = end
+        for k in range(s.items[0][0], s.items[-1][1]):
+            if depth_at[k] != depth_at[s.open] \
+                    or tokens[k].kind not in ("word", "bident"):
                 continue
-            k += 1
+            nx = _significant(tokens, k)
+            n2 = _significant(tokens, nx)
+            if tokens[nx].text == "." and tokens[n2].text == "*" \
+                    and tokens[k].text.strip("`").lower() not in s.scope:
+                raise ImpalaUnsupportedError(
+                    "Could not resolve star expression: "
+                    f"'{untokenize(tokens[k:n2 + 1]).strip()}'"
+                )
+        # qualified refs inside GROUP BY / ORDER BY regions: each runs to
+        # the next top-level LIMIT, OFFSET, HAVING, UNION, ORDER or GROUP
+        for x, (k, w) in enumerate(s.top):
+            by = _significant(tokens, k)
+            if w not in ("GROUP", "ORDER") or _word_at(tokens, by) != "BY":
+                continue
+            end = next((
+                k2 for k2, w2 in s.top[x + 1:]
+                if w2 in ("LIMIT", "OFFSET", "HAVING", "UNION", "ORDER", "GROUP")
+            ), s.close)
+            for m in range(by + 1, end):
+                if _dotted_root_at(tokens, m, end) in {None, *s.scope}:
+                    continue
+                # the dotted path as written
+                pe, p2 = m, _significant(tokens, m)
+                while p2 != -1 and p2 < end and tokens[p2].text == ".":
+                    n3 = _significant(tokens, p2)
+                    if n3 == -1 or tokens[n3].kind not in ("word", "bident"):
+                        break
+                    pe, p2 = n3, _significant(tokens, n3)
+                raise ImpalaUnsupportedError(
+                    "Could not resolve column/field reference: "
+                    f"'{untokenize(tokens[m:pe + 1]).strip()}'"
+                )
 
     # ---- StmtRewriter join-rewrite eligibility (:455-505): an IN whose
     #      left side is constant, and a correlated EXISTS without an
     #      equi-join conjunct, cannot be rewritten ----
-    for i, t in enumerate(tokens):
-        if t.kind != "word":
+    for s in subs:
+        if s.head != "SELECT":
             continue
-        up = t.upper
-        if up == "IN":
-            j = _significant(tokens, i)
-            if j == -1 or tokens[j].kind != "op" or tokens[j].text != "(":
-                continue
-            hd = _significant(tokens, j)
-            if hd == -1 or tokens[hd].kind != "word" \
-                    or tokens[hd].upper != "SELECT":
-                continue
-            close = _matching_paren(tokens, j)
-            if close == -1:
-                continue
+        i = _significant(tokens, s.open, -1)
+        if s.context in ("in", "not in"):
+            negated = s.context == "not in"
             li2 = _significant(tokens, i, -1)
-            negated = False
-            if li2 != -1 and tokens[li2].kind == "word" \
-                    and tokens[li2].upper == "NOT":
-                negated = True
+            if negated:
                 li2 = _significant(tokens, li2, -1)
             lhs2 = _chain_span_back(tokens, li2)
-            if lhs2 == -1 or li2 == -1:
+            if lhs2 == -1 or li2 == -1 \
+                    or not _span_is_constant_expr(tokens, lhs2, li2):
                 continue
-            if not _span_is_constant_expr(tokens, lhs2, li2):
-                continue
-            corr = _subquery_correlation(tokens, j)
             rendered = _expr_to_sql(
-                _expand_between(untokenize(tokens[lhs2:close + 1]).strip())
+                _expand_between(untokenize(tokens[lhs2:s.close + 1]).strip())
             )
-            if corr == "equi":
+            if s.correlation == "equi" or s.scalar:
                 if negated:
                     raise ImpalaUnsupportedError(
                         "Unsupported NOT IN predicate with subquery: "
                         + rendered
                     )
             else:
-                if _subquery_is_scalar(tokens, j):
-                    if negated:
-                        raise ImpalaUnsupportedError(
-                            "Unsupported NOT IN predicate with subquery: "
-                            + rendered
-                        )
-                else:
-                    raise ImpalaUnsupportedError(
-                        "Unsupported predicate with subquery: " + rendered
-                    )
-        elif up == "EXISTS":
-            j = _significant(tokens, i)
-            if j == -1 or tokens[j].kind != "op" or tokens[j].text != "(":
-                continue
-            hd = _significant(tokens, j)
-            if hd == -1 or tokens[hd].kind != "word" \
-                    or tokens[hd].upper != "SELECT":
-                continue
-            close = _matching_paren(tokens, j)
-            if close == -1:
-                continue
-            if _subquery_correlation(tokens, j) == "nonequi":
-                rendered = _expr_to_sql(_expand_between(
-                    untokenize(tokens[i:close + 1]).strip()
-                ))
                 raise ImpalaUnsupportedError(
                     "Unsupported predicate with subquery: " + rendered
                 )
+        elif s.context in ("exists", "not exists") \
+                and s.correlation == "nonequi":
+            raise ImpalaUnsupportedError(
+                "Unsupported predicate with subquery: " + _expr_to_sql(
+                    _expand_between(untokenize(tokens[i:s.close + 1]).strip())
+                )
+            )
 
     # ---- IS NULL over subquery-bearing exprs ----
     for i, t in enumerate(tokens):
         if t.kind != "word" or t.upper != "IS":
             continue
         j = _significant(tokens, i)
-        negated = False
-        if j != -1 and tokens[j].kind == "word" and tokens[j].upper == "NOT":
-            negated = True
+        negated = _word_at(tokens, j) == "NOT"
+        if negated:
             j = _significant(tokens, j)
-        if j == -1 or tokens[j].kind != "word" or tokens[j].upper != "NULL":
+        if _word_at(tokens, j) != "NULL":
             continue
         li = _significant(tokens, i, -1)
         lhs = _chain_span_back(tokens, li)
-        if lhs == -1:
-            continue
-        subqs = _span_subquery_opens(tokens, lhs, li)
-        if not subqs:
-            continue
+        subqs = ctx.subqueries_in(lhs, li) if lhs != -1 else []
         # legal iff the expr CONTAINS a scalar subquery
         # (IsNullPredicate.java:110 `contains(Expr.IS_SCALAR_SUBQUERY)`) —
         # approximate scalar-ness as single-aggregate select list with no
         # GROUP BY; only raise when NO subquery qualifies
-        if any(_subquery_is_scalar(tokens, o) for o in subqs):
-            continue
-        raise ImpalaUnsupportedError(
-            "Unsupported IS NULL predicate that contains a subquery: "
-            + tosql_span(lhs, li) + (" IS NOT NULL" if negated else " IS NULL")
-        )
+        if subqs and not any(s.scalar for s in subqs):
+            raise ImpalaUnsupportedError(
+                "Unsupported IS NULL predicate that contains a subquery: "
+                + tosql_span(lhs, li)
+                + (" IS NOT NULL" if negated else " IS NULL")
+            )
 
     # ---- binary predicates over subqueries ----
+    by_open = {s.open: s for s in subs if s.head == "SELECT"}
     for i, t in enumerate(tokens):
-        if not (t.kind == "op" and t.text in (
-            "=", "==", "!=", "<>", "<", ">", "<=", ">=", "<=>",
-        )):
+        if t.kind != "op" or t.text not in _COMPARISON_OPS:
             continue
         li = _significant(tokens, i, -1)
         ri = _significant(tokens, i)
@@ -3248,7 +2795,7 @@ def _check_strict_subquery_predicates(ctx: _Analysis) -> None:
         rhs = _chain_span_fwd(tokens, ri)
         if lhs == -1 or rhs == -1:
             continue
-        subqs = _span_subquery_opens(tokens, lhs, rhs)
+        subqs = ctx.subqueries_in(lhs, rhs)
         if not subqs:
             continue
         # BinaryPredicate.analyze order (BinaryPredicate.java:176-218):
@@ -3257,28 +2804,22 @@ def _check_strict_subquery_predicates(ctx: _Analysis) -> None:
         # type, failing the lookup with the single-row message; operands
         # of known incompatible types fail it with the comparability
         # message. Only then come the subquery-count/EXISTS/IN rules.
-        for op_lo, op_hi in ((lhs, li), (ri, rhs)):
-            if (
-                op_lo != -1 and op_hi != -1
-                and tokens[op_lo].kind == "op" and tokens[op_lo].text == "("
-                and _matching_paren(tokens, op_lo) == op_hi
-            ):
-                hd = _significant(tokens, op_lo)
-                if (
-                    hd != -1 and tokens[hd].kind == "word"
-                    and tokens[hd].upper == "SELECT"
-                    and _subquery_clearly_multi_row(tokens, op_lo)
-                ):
-                    raise ImpalaUnsupportedError(
-                        "Subquery must return a single row: "
-                        + tosql_span(op_lo, op_hi)
-                    )
+        operands = [
+            s if s is not None and s.close == op_hi else None
+            for s, op_hi in ((by_open.get(lhs), li), (by_open.get(ri), rhs))
+        ]
+        for s in operands:
+            if s is not None and _subquery_clearly_multi_row(ctx, s):
+                raise ImpalaUnsupportedError(
+                    "Subquery must return a single row: "
+                    + tosql_span(s.open, s.close)
+                )
         t1 = _expr_type(ctx, tokens, lhs, li)
         t2 = _expr_type(ctx, tokens, ri, rhs)
         if t1 is None:
-            t1 = _scalar_subquery_type(ctx, tokens, lhs, li)
+            t1 = _scalar_subquery_type(ctx, operands[0])
         if t2 is None:
-            t2 = _scalar_subquery_type(ctx, tokens, ri, rhs)
+            t2 = _scalar_subquery_type(ctx, operands[1])
         if t1 is not None and t2 is not None \
                 and _assignment_compatible(t1, t2) is None:
             raise ImpalaUnsupportedError(
@@ -3290,33 +2831,28 @@ def _check_strict_subquery_predicates(ctx: _Analysis) -> None:
                 "Multiple subqueries are not supported in binary "
                 "predicates: " + tosql_span(lhs, rhs)
             )
-        outside = _outside_subqueries(tokens, lhs, rhs)
+        outside = [
+            k for k in range(lhs, rhs + 1)
+            if not any(s.open <= k <= s.close for s in subqs)
+        ]
+        if any(_word_at(tokens, k) == "EXISTS" for k in outside):
+            raise ImpalaUnsupportedError(
+                "EXISTS subquery predicates are not supported in "
+                "binary predicates: " + tosql_span(lhs, rhs)
+            )
         for k in outside:
-            if tokens[k].kind == "word" and tokens[k].upper == "EXISTS":
+            if _word_at(tokens, k) != "IN" or k == lhs:
+                continue
+            j2 = _significant(tokens, k)
+            if j2 <= rhs and j2 in ctx.close_of and any(
+                j2 <= s.open < ctx.close_of[j2] for s in by_open.values()
+            ):
                 raise ImpalaUnsupportedError(
-                    "EXISTS subquery predicates are not supported in "
+                    "IN subquery predicates are not supported in "
                     "binary predicates: " + tosql_span(lhs, rhs)
                 )
-        for k in outside:
-            if tokens[k].kind == "word" and tokens[k].upper == "IN" \
-                    and k != lhs:
-                j2 = _significant(tokens, k)
-                if j2 != -1 and j2 <= rhs and tokens[j2].kind == "op" \
-                        and tokens[j2].text == "(":
-                    cl = _matching_paren(tokens, j2)
-                    hd = _significant(tokens, j2)
-                    is_subq = (
-                        hd != -1 and tokens[hd].kind == "word"
-                        and tokens[hd].upper == "SELECT"
-                    )
-                    if cl != -1 and (
-                        is_subq
-                        or _span_subquery_opens(tokens, j2 + 1, cl - 1)
-                    ):
-                        raise ImpalaUnsupportedError(
-                            "IN subquery predicates are not supported in "
-                            "binary predicates: " + tosql_span(lhs, rhs)
-                        )
+
+
 _FROM_KEYWORDS = frozenset({
     "ON", "USING", "JOIN", "INNER", "LEFT", "RIGHT", "FULL", "OUTER",
     "CROSS", "SEMI", "ANTI", "WHERE", "GROUP", "HAVING", "ORDER", "LIMIT",
@@ -3416,58 +2952,44 @@ _CONST_EXPR_WORDS = frozenset({
 })
 
 
-def _scalar_subquery_type(ctx: _Analysis, tokens: list[Token], lo: int, hi: int) -> str | None:
-    """Output type of a span that is exactly a parenthesized scalar
-    subquery of the canned-catalog shape `(select AGG(col) from tbl)` —
-    min/max take the column's type, count/ndv are BIGINT, avg DOUBLE.
-    None for every other shape (stay permissive)."""
-    if ctx.catalog is None or lo == -1 or hi == -1:
+def _scalar_subquery_type(ctx: _Analysis, s: _Subquery | None) -> str | None:
+    """Output type of subquery s when it has the canned-catalog shape
+    `(select AGG(col) from [db.]tbl)` — min/max take the column's type,
+    count/ndv are BIGINT, avg DOUBLE. None for every other shape (stay
+    permissive)."""
+    if ctx.catalog is None or s is None or s.block is None:
         return None
-    if not (tokens[lo].kind == "op" and tokens[lo].text == "("
-            and _matching_paren(tokens, lo) == hi):
+    tokens, blk = ctx.tokens, s.block
+    f = blk.from_clause
+    agg = _significant(tokens, blk.sel)
+    call = _significant(tokens, agg)
+    fn = tokens[agg].text.lower() if tokens[agg].kind == "word" else None
+    # the select list is the one call; the FROM clause joins nothing
+    if f is None or fn not in ("min", "max", "count", "ndv", "avg") \
+            or call not in ctx.close_of \
+            or _significant(tokens, ctx.close_of[call]) != f.at \
+            or not f.sources or any(
+                src.join_idx != -1 or src.kind == "view" for src in f.sources
+            ) or any(w in ("WHERE", "GROUP", "HAVING", "UNION") for _, w in s.top):
         return None
-    s = [
-        x for x in range(lo + 1, hi)
+    if fn in ("count", "ndv"):
+        return "BIGINT"
+    if len(s.top) != 1:
+        return None  # ORDER BY / LIMIT after the refs
+    col = [
+        x for x in range(call + 1, ctx.close_of[call])
         if tokens[x].kind not in ("ws", "line_comment", "block_comment")
     ]
-    # select AGG ( col ) from [db .] tbl
-    if len(s) < 7 or tokens[s[0]].upper != "SELECT":
+    if len(col) != 1 or tokens[col[0]].kind not in ("word", "bident"):
         return None
-    if tokens[s[1]].kind != "word":
-        return None
-    agg = tokens[s[1]].text.lower()
-    if agg not in ("min", "max", "count", "ndv", "avg"):
-        return None
-    if not (tokens[s[2]].kind == "op" and tokens[s[2]].text == "("):
-        return None
-    cl = _matching_paren(tokens, s[2])
-    inner = [x for x in s if s[2] < x < cl]
-    after = [x for x in s if x > cl]
-    if not after or tokens[after[0]].upper != "FROM":
-        return None
-    ref = [
-        tokens[x].text.strip("`").lower()
-        for x in after[1:]
-        if tokens[x].kind in ("word", "bident")
-    ]
-    if not ref or any(
-        tokens[x].kind == "word" and tokens[x].upper in (
-            "GROUP", "WHERE", "HAVING", "JOIN", "UNION",
-        ) for x in after[1:]
-    ):
-        return None
-    if agg in ("count", "ndv"):
-        return "BIGINT"
-    if len(inner) != 1 or tokens[inner[0]].kind not in ("word", "bident"):
-        return None
-    cols = ctx.catalog.get(ref[-1])
+    cols = ctx.catalog.get(f.sources[-1].name)
     if cols is None:
         return None
-    ty = cols.get(tokens[inner[0]].text.strip("`").lower())
+    ty = cols.get(tokens[col[0]].text.strip("`").lower())
     if ty is None or "<" in ty:
         return None
     base = ty.split("(")[0].upper()
-    if agg == "avg":
+    if fn == "avg":
         # AggregateFunction: AVG is DOUBLE for every numeric EXCEPT
         # DECIMAL (stays DECIMAL) and TIMESTAMP (stays TIMESTAMP) —
         # typing it unconditionally DOUBLE diverged from the reference
@@ -5124,135 +4646,47 @@ def _check_strict_reserved_idents(ctx: _Analysis) -> None:
 
 
 def _check_strict_between_subqueries(ctx: _Analysis) -> None:
-    """BetweenPredicate.analyze (BetweenPredicate.java:52-57): ANY
-    subquery in a BETWEEN predicate — lhs or either bound — is rejected,
-    with ': ' + the predicate's own SQL appended (toSqlImpl). Token
-    subset: a `(SELECT ...)` as the lhs, the first bound, or the bound
-    after the bounds-separator AND."""
-    tokens = ctx.tokens
-    for i, t in enumerate(tokens):
-        if t.kind != "word" or t.upper != "BETWEEN":
+    """BetweenPredicate.analyze (BetweenPredicate.java:52-57): a BETWEEN
+    whose compared value is a subquery and a bound is too is rejected,
+    with ': ' + the predicate's own SQL appended (toSqlImpl). A single
+    subquery anywhere is legal (AnalyzeSubqueriesTest AnalyzesOk pins
+    both `(select avg..) between 1 and 100` and `int_col between
+    (select min..) and 100`)."""
+    tokens, depth_at = ctx.tokens, ctx.depth_at
+    subs = {s.open: s for s in ctx.subqueries if s.head == "SELECT"}
+    for s in sorted(subs.values(), key=lambda s: s.close):
+        if s.follows != "between":
             continue
-        prev = _significant(tokens, i, -1)
-        if prev != -1 and tokens[prev].upper == "NOT":
-            prev = _significant(tokens, prev, -1)
-        if prev == -1:
+        i = _significant(tokens, s.close)
+        if _word_at(tokens, i) == "NOT":
+            i = _significant(tokens, i)
+        lo = _significant(tokens, i)
+        hi = _significant(tokens, ctx.between_ands[i]) \
+            if i in ctx.between_ands else -1
+        if lo not in subs and hi not in subs:
             continue
-        # lhs: if it ends in ')', walk back to the matching '(' and see
-        # whether it opens a subquery; otherwise scan back over the
-        # simple expression to its start for the error span.
-        lhs_subq = False
-        open_idx = -1
-        if tokens[prev].kind == "op" and tokens[prev].text == ")":
-            depth = 0
-            for k in range(prev, -1, -1):
-                if tokens[k].kind == "op":
-                    if tokens[k].text == ")":
-                        depth += 1
-                    elif tokens[k].text == "(":
-                        depth -= 1
-                        if depth == 0:
-                            open_idx = k
-                            break
-            if open_idx != -1:
-                head = _significant(tokens, open_idx)
-                lhs_subq = head != -1 and tokens[head].upper == "SELECT"
-        if open_idx == -1:
-            # simple-expr lhs: walk back to a top-level boundary
-            depth = 0
-            open_idx = prev
-            for k in range(prev, -1, -1):
+        # the predicate's SQL runs to the end of the high bound: its
+        # subquery's ')', or the next boundary at the BETWEEN's level
+        if hi == -1:
+            end = subs[lo].close if lo in subs else lo
+        elif hi in subs:
+            end = subs[hi].close
+        else:
+            end = hi
+            for k in range(hi, len(tokens)):
                 tk = tokens[k]
-                if tk.kind == "op":
-                    if tk.text == ")":
-                        depth += 1
-                    elif tk.text == "(":
-                        if depth == 0:
-                            break
-                        depth -= 1
-                    elif depth == 0 and tk.text == ",":
-                        break
-                elif (
-                    depth == 0
-                    and tk.kind == "word"
-                    and tk.upper in _CLAUSE_BOUNDARY
-                    | {"AND", "OR", "NOT", "JOIN", "ON", "WHERE", "THEN", "WHEN"}
+                if depth_at[k] == depth_at[i] and (
+                    tk.kind == "op" and tk.text in (")", ",")
+                    or _word_at(tokens, k) in _BETWEEN_STOPS | {"AND"}
                 ):
                     break
                 if tk.kind not in ("ws", "line_comment", "block_comment"):
-                    open_idx = k
-
-        def _is_subq(j: int) -> bool:
-            if j == -1 or not (tokens[j].kind == "op" and tokens[j].text == "("):
-                return False
-            h = _significant(tokens, j)
-            return h != -1 and tokens[h].upper == "SELECT"
-
-        lo = _significant(tokens, i)
-        # find the bounds-separator AND: first top-level AND after lo
-        # (works for subquery and simple-expr lo bounds alike)
-        hi = -1
-        depth0, k0 = 0, lo
-        while k0 != -1 and k0 < len(tokens):
-            tk = tokens[k0]
-            if tk.kind == "op":
-                if tk.text == "(":
-                    depth0 += 1
-                elif tk.text == ")":
-                    if depth0 == 0:
-                        break
-                    depth0 -= 1
-            elif depth0 == 0 and tk.kind == "word":
-                if tk.upper == "AND":
-                    hi = _significant(tokens, k0)
-                    break
-                if tk.upper in _CLAUSE_BOUNDARY | {"OR", "JOIN", "ON", "WHERE"}:
-                    break
-            k0 += 1
-        # BetweenPredicate.java:52-54: the error fires only when the
-        # COMPARAND is a subquery AND a bound is too ("comparison
-        # between subqueries"); a single subquery anywhere is legal
-        # (AnalyzeSubqueriesTest AnalyzesOk pins both
-        # `(select avg..) between 1 and 100` and
-        # `int_col between (select min..) and 100`)
-        if lhs_subq and (_is_subq(lo) or _is_subq(hi)):
-            # BetweenPredicate.java:55-56 appends ': ' + toSqlImpl() — the
-            # predicate's own SQL span (lhs BETWEEN lo AND hi). Scan to the
-            # end of the hi bound: its subquery close, or (simple-expr
-            # bound) the next top-level boundary token.
-            if hi == -1:
-                end = _matching_paren(tokens, lo) if _is_subq(lo) else lo
-            elif _is_subq(hi):
-                end = _matching_paren(tokens, hi)
-            else:
-                # simple-expr hi bound: scan to the next top-level boundary
-                end, depth, k = hi, 0, hi
-                while k < len(tokens):
-                    tk = tokens[k]
-                    if tk.kind == "op":
-                        if tk.text == "(":
-                            depth += 1
-                        elif tk.text == ")":
-                            if depth == 0:
-                                break
-                            depth -= 1
-                        elif depth == 0 and tk.text == ",":
-                            break
-                    elif (
-                        depth == 0
-                        and tk.kind == "word"
-                        and tk.upper in _CLAUSE_BOUNDARY
-                        | {"AND", "OR", "JOIN", "ON", "WHERE"}
-                    ):
-                        break
-                    if tk.kind not in ("ws", "line_comment", "block_comment"):
-                        end = k
-                    k += 1
-            span = _expr_to_sql(untokenize(tokens[open_idx:end + 1]).strip())
-            raise ImpalaUnsupportedError(
-                "Comparison between subqueries is not supported in a "
-                "BETWEEN predicate: " + span
-            )
+                    end = k
+        raise ImpalaUnsupportedError(
+            "Comparison between subqueries is not supported in a "
+            "BETWEEN predicate: "
+            + _expr_to_sql(untokenize(tokens[s.open:end + 1]).strip())
+        )
 
 
 def _check_strict_subquery_columns(ctx: _Analysis) -> None:
@@ -5260,90 +4694,46 @@ def _check_strict_subquery_columns(ctx: _Analysis) -> None:
     with IN must return a single column; one compared with a binary
     operator must return a scalar ('single row' text). Token subset:
     star-free select lists with >1 top-level items."""
-    tokens = ctx.tokens
-    for blk in ctx.blocks:
-        head, i = blk.sel, _significant(tokens, blk.sel, -1)
-        if i == -1 or tokens[i].kind != "op" or tokens[i].text != "(":
+    tokens, depth_at = ctx.tokens, ctx.depth_at
+    for s in ctx.subqueries:
+        if s.block is None or s.context not in ("in", "not in", "cmp"):
             continue
-        close = _matching_paren(tokens, i)
-        prev = _significant(tokens, i, -1)
-        if prev == -1:
-            continue
-        is_in = tokens[prev].kind == "word" and tokens[prev].upper == "IN"
-        is_cmp = tokens[prev].kind == "op" and tokens[prev].text in (
-            "=", "<", ">", "<=", ">=", "!=", "<>", "<=>",
-        )
-        if not (is_in or is_cmp):
-            continue
-        if is_in:
+        if s.context != "cmp":
             # tuple lhs: (a, b) IN (SELECT ...) — InPredicate.java:115
-            lhs = _significant(tokens, prev, -1)
-            if lhs != -1 and tokens[lhs].kind == "word" and tokens[lhs].upper == "NOT":
+            lhs = _significant(tokens, _significant(tokens, s.open, -1), -1)
+            if s.context == "not in":
                 lhs = _significant(tokens, lhs, -1)
-            if lhs != -1 and tokens[lhs].kind == "op" and tokens[lhs].text == ")":
-                d3 = 0
-                for b in range(lhs, -1, -1):
-                    tb = tokens[b]
-                    if tb.kind == "op" and tb.text == ")":
-                        d3 += 1
-                    elif tb.kind == "op" and tb.text == "(":
-                        d3 -= 1
-                        if d3 == 0:
-                            before = _significant(tokens, b, -1)
-                            if (
-                                before != -1
-                                and tokens[before].kind in ("word", "bident")
-                                and tokens[before].upper not in _NON_OPERAND_WORDS
-                            ):
-                                break  # function call f(a, b), not a tuple
-                            inner = tokens[b + 1:lhs]
-                            dd = 0
-                            for tk in inner:
-                                if tk.kind == "op" and tk.text == "(":
-                                    dd += 1
-                                elif tk.kind == "op" and tk.text == ")":
-                                    dd -= 1
-                                elif dd == 0 and tk.kind == "op" and tk.text == ",":
-                                    raise ImpalaUnsupportedError(
-                                        "Unsupported IN predicate with a subquery"
-                                    )
-                            break
+            b = ctx.open_of.get(lhs, -1)
+            before = _significant(tokens, b, -1) if b != -1 else -1
+            call = before != -1 and tokens[before].kind in ("word", "bident") \
+                and tokens[before].upper not in _NON_OPERAND_WORDS  # f(a, b)
+            if b != -1 and not call and any(
+                depth_at[k] == depth_at[b] and tokens[k].text == ","
+                for k in range(b + 1, lhs)
+            ):
+                raise ImpalaUnsupportedError(
+                    "Unsupported IN predicate with a subquery"
+                )
         # the subquery's select items: between SELECT and its FROM
-        from_idx = blk.from_idx if blk.from_idx < blk.end else close
-        d2 = 0
-        has_star = False
-        for k in range(head + 1, from_idx):
-            tk = tokens[k]
-            if tk.kind == "op" and tk.text == "(":
-                d2 += 1
-            elif tk.kind == "op" and tk.text == ")":
-                d2 -= 1
-            elif d2 == 0 and tk.kind == "op" and tk.text == "*":
-                has_star = True  # star item OR multiplication: defer
-        if has_star:
-            # `select * from (values(...)) v`: width = the first VALUES
-            # row's item count
-            n = -1
+        a, from_idx = s.items[0][0], s.items[-1][1]
+        if any(
+            depth_at[k] == depth_at[s.open] and tokens[k].kind == "op"
+            and tokens[k].text == "*" for k in range(a, from_idx)
+        ):
+            # a star item OR a multiplication: defer, but for
+            # `select * from (values(...)) v`, whose width is the first
+            # VALUES row's item count
             fk = _significant(tokens, from_idx)
-            if fk != -1 and tokens[fk].kind == "op" and tokens[fk].text == "(":
-                vh = _significant(tokens, fk)
-                if vh != -1 and tokens[vh].kind == "word" \
-                        and tokens[vh].upper == "VALUES":
-                    r0 = _significant(tokens, vh)
-                    if r0 != -1 and tokens[r0].kind == "op" \
-                            and tokens[r0].text == "(":
-                        rc = _matching_paren(tokens, r0)
-                        if rc != -1:
-                            n = len(_split_top_level_commas(
-                                tokens, r0 + 1, rc,
-                            ))
-            if n <= 1:
+            vh = _significant(tokens, fk) if fk in ctx.close_of else -1
+            r0 = _significant(tokens, vh) if _word_at(tokens, vh) == "VALUES" else -1
+            if r0 not in ctx.close_of:
                 continue
+            n = len(_split_top_level_commas(tokens, r0 + 1, ctx.close_of[r0]))
         else:
-            n = _countable_select_items(tokens, head + 1, from_idx)
+            n = len(s.items)
         if n > 1:
-            sub_sql = _expr_to_sql(untokenize(tokens[i:close + 1]).strip())
-            if is_in:
+            sub_sql = _expr_to_sql(untokenize(tokens[s.open:s.close + 1]).strip())
+            if s.context != "cmp":
                 raise ImpalaUnsupportedError(
                     "Subquery must return a single column: " + sub_sql
                 )
@@ -5355,25 +4745,22 @@ def _check_strict_subquery_columns(ctx: _Analysis) -> None:
 def _check_strict_where_requires_from(ctx: _Analysis) -> None:
     """Impala's grammar ties WHERE to a from_clause (sql-parser.cup
     select_stmt); Spark accepts `SELECT 1 WHERE true` over an implicit
-    one-row relation. Reject WHERE in a block with no FROM."""
-    tokens = ctx.tokens
-    depth = 0
-    saw_from: dict[int, bool] = {0: False}
-    for i, t in enumerate(tokens):
-        if t.kind == "op":
-            if t.text == "(":
-                depth += 1
-                saw_from[depth] = False
-            elif t.text == ")":
-                saw_from.pop(depth, None)
-                depth = max(0, depth - 1)
-        elif t.kind == "word":
-            if t.upper == "FROM":
-                saw_from[depth] = True
-            elif t.upper == "WHERE" and not saw_from.get(depth, False):
-                raise ImpalaUnsupportedError(
-                    "Syntax error: WHERE clause requires a FROM clause"
-                )
+    one-row relation. Reject WHERE in a block with no FROM, and a WHERE
+    outside any block (UPDATE's) with no FROM clause before it at its
+    level."""
+    depth_at = ctx.depth_at
+    for start, _end in ctx.wheres:
+        w, blk = start - 1, ctx.block_at(start - 1)
+        if blk is not None and blk.depth == depth_at[w]:
+            has_from = blk.from_clause is not None
+        else:
+            has_from = any(
+                f.at < w and depth_at[f.at] == depth_at[w] for f in ctx.froms
+            )
+        if not has_from:
+            raise ImpalaUnsupportedError(
+                "Syntax error: WHERE clause requires a FROM clause"
+            )
 
 
 #: scalar type keywords uppercased when rendering a type's toSql form
@@ -6357,229 +5744,76 @@ def _check_strict_correlated_subqueries(ctx: _Analysis) -> None:
     - correlated scalar subquery whose select item is an EXPRESSION over
       count()/ndv() (non-null on empty input) rather than the bare agg
     """
-    tokens = ctx.tokens
-    if not ctx.froms:
-        return
-
-    def bound_names(fc: _From | None) -> set[str]:
-        """names a FROM clause BINDS: aliases and table names — never the
-        head/middle parts of a dotted path (a relative ref
-        `t.struct_array_col a` binds 'a' and 'struct_array_col', not the
-        outer 't')."""
-        out: set[str] = set()
-        for src in fc.sources if fc is not None else ():
-            if src.name is not None:
-                out.add(src.name)
-            if src.raw:
-                out.add(src.parts[-1])
-        return out
-
-    for blk in ctx.blocks:
-        head, i = blk.sel, _significant(tokens, blk.sel, -1)
-        if i == -1 or tokens[i].kind != "op" or tokens[i].text != "(":
+    tokens, depth_at = ctx.tokens, ctx.depth_at
+    for s in ctx.subqueries:
+        if s.block is None:
             continue
-        close = _matching_paren(tokens, i)
-        # predicate kind from the token(s) before the '(' — or a
-        # comparison operator AFTER the ')' (left-side scalar subquery)
-        prev = _significant(tokens, i, -1)
-        if prev != -1 and tokens[prev].kind == "word" and tokens[prev].upper == "NOT":
-            prev = _significant(tokens, prev, -1)
-        if prev == -1:
+        # the predicate kind: the token before the '(', else a
+        # comparison after the ')' (a left-side scalar subquery)
+        kind = {"not in": "in", "not exists": "exists"}.get(s.context, s.context)
+        if kind not in ("in", "exists", "cmp"):
+            kind = "cmp" if s.follows == "cmp" else None
+        if kind is None:
             continue
-        pt = tokens[prev]
-        after_cl = _significant(tokens, close) if close != -1 else -1
-        if pt.kind == "word" and pt.upper == "IN":
-            kind = "in"
-        elif pt.kind == "word" and pt.upper == "EXISTS":
-            kind = "exists"
-        elif pt.kind == "op" and pt.text in _COMPARISON_OPS:
-            kind = "cmp"
-        elif (
-            after_cl != -1 and tokens[after_cl].kind == "op"
-            and tokens[after_cl].text in _COMPARISON_OPS
-        ):
-            kind = "cmp"
-        else:
+        # outer names: those the FROM clauses not around it bind; it is
+        # correlated when a dotted ref inside roots at one of them that
+        # its own FROM does not bind again
+        outer = set().union(*(
+            _from_binds(f) for f in ctx.froms if not f.at < s.open < f.end
+        ))
+        if not (s.refs & outer) - s.binds:
             continue
-        # outer aliases: FROM regions that do not contain this subquery
-        outer: set[str] = set()
-        for fc in ctx.froms:
-            if not (fc.at < i < fc.end):
-                outer |= bound_names(fc)
-        if not outer:
-            continue
-        # subquery's own FROM aliases and top-level clause map
-        inner_aliases = bound_names(blk.from_clause)
-        sel_end = blk.from_idx if blk.from_idx < blk.end else close
-        depth = 0
-        has_group = has_having = has_limit = has_over = False
-        agg_in_select = False
-        first_sig = _significant(tokens, head)
-        has_distinct = (
-            first_sig != -1 and tokens[first_sig].kind == "word"
-            and tokens[first_sig].upper == "DISTINCT"
+        a, sel_end = s.items[0][0], s.items[-1][1]
+        calls = [
+            tokens[k].text.lower() for k in range(a, sel_end)
+            if tokens[k].kind == "word"
+            and (nx := _significant(tokens, k)) in ctx.close_of and nx < sel_end
+        ]
+        aggs = [fn for fn in calls if fn in _AGG_FN_WORDS]
+        # expression-over-agg: a top-level arithmetic operator in the
+        # select list over count()/ndv() (CAST-wrapping alone stays legal)
+        expr_over_agg = any(fn in _NON_NULL_EMPTY_AGGS for fn in aggs) and any(
+            depth_at[k] == depth_at[s.open] and tokens[k].kind == "op"
+            and tokens[k].text in _ARITH_BIN_OPS for k in range(a, sel_end)
         )
-        for k in range(i + 1, close):
-            tk = tokens[k]
-            if tk.kind == "op":
-                if tk.text == "(":
-                    depth += 1
-                elif tk.text == ")":
-                    depth -= 1
-                continue
-            if depth != 0 or tk.kind != "word":
-                continue
-            up = tk.upper
-            if up == "GROUP":
-                has_group = True
-            elif up == "HAVING":
-                has_having = True
-            elif up == "LIMIT":
-                has_limit = True
-            elif up == "OVER":
-                has_over = True
-        # aggregate call in the select list?
-        item_is_expr_over_agg = False
-        nne_agg = False
-        for k in range(head + 1, sel_end):
-            tk = tokens[k]
-            if tk.kind == "word" and tk.text.lower() in _AGG_FN_WORDS:
-                nx = _significant(tokens, k)
-                if nx != -1 and nx < sel_end and tokens[nx].kind == "op" \
-                        and tokens[nx].text == "(":
-                    agg_in_select = True
-                    if tk.text.lower() in _NON_NULL_EMPTY_AGGS:
-                        nne_agg = True
-        if nne_agg:
-            # expression-over-agg: a top-level arithmetic operator in the
-            # single select item (CAST-wrapping alone stays legal)
-            d2 = 0
-            for k in range(head + 1, sel_end):
-                tk = tokens[k]
-                if tk.kind == "op":
-                    if tk.text == "(":
-                        d2 += 1
-                    elif tk.text == ")":
-                        d2 -= 1
-                    elif d2 == 0 and tk.text in ("+", "-", "*", "/", "%"):
-                        item_is_expr_over_agg = True
-        # correlated? an outer alias referenced as `alias.` inside,
-        # not shadowed by the subquery's own FROM
-        correlated = False
-        for k in range(i + 1, close):
-            tk = tokens[k]
-            if tk.kind not in ("word", "bident"):
-                continue
-            nx = k + 1
-            while nx < close and tokens[nx].kind in (
-                "ws", "line_comment", "block_comment",
-            ):
-                nx += 1
-            if not (nx < close and tokens[nx].kind == "op" and tokens[nx].text == "."):
-                continue
-            ref = tk.text.strip("`").lower()
-            if ref in outer and ref not in inner_aliases:
-                correlated = True
-                break
-        if not correlated:
-            continue
-        sub_sql = _expr_to_sql(untokenize(tokens[i + 1:close]).strip())
+        sub_sql = _expr_to_sql(untokenize(tokens[s.open + 1:s.close]).strip())
         # a canned UDA in the select list of a correlated subquery
         # (StmtRewriter.java: UDAs may return non-NULL on empty input)
-        for k in range(head + 1, sel_end):
-            tk = tokens[k]
-            if tk.kind == "word" and (
-                ("default", tk.text.lower()) in _TEST_USER_UDAS
-            ):
-                nx = _significant(tokens, k)
-                if nx != -1 and nx < sel_end and tokens[nx].kind == "op" \
-                        and tokens[nx].text == "(":
-                    raise ImpalaUnsupportedError(
-                        "UDAs are not supported in the select list of "
-                        "correlated subqueries: ("
-                        + _qualify_user_fns(sub_sql) + ")"
-                    )
+        if any(("default", fn) in _TEST_USER_UDAS for fn in calls):
+            raise ImpalaUnsupportedError(
+                "UDAs are not supported in the select list of "
+                "correlated subqueries: (" + _qualify_user_fns(sub_sql) + ")"
+            )
         # a top-level disjunction inside the subquery's WHERE with a
         # correlated operand (StmtRewriter.java:
         # "Disjunctions with correlated predicates")
-        wh = -1
-        d3 = 0
-        for k in range(i + 1, close):
-            tk = tokens[k]
-            if tk.kind == "op":
-                if tk.text == "(":
-                    d3 += 1
-                elif tk.text == ")":
-                    d3 -= 1
-            elif d3 == 0 and tk.kind == "word" and tk.upper == "WHERE":
-                wh = k
-                break
-        if wh != -1:
-            w_end = _clause_end(tokens, wh + 1, _CLAUSE_BOUNDARY, close)
-            d3 = 0
-            pending_between = 0
-            for k in range(wh + 1, w_end):
-                tk = tokens[k]
-                if tk.kind == "op":
-                    if tk.text == "(":
-                        d3 += 1
-                    elif tk.text == ")":
-                        d3 -= 1
-                    continue
-                if d3 or tk.kind != "word":
-                    continue
-                if tk.upper == "BETWEEN":
-                    pending_between += 1
-                elif tk.upper == "AND" and pending_between:
-                    pending_between -= 1
-                elif tk.upper == "OR":
-                    # correlated ref anywhere in the WHERE expr?
-                    corr_here = False
-                    for k2 in range(wh + 1, w_end):
-                        t2 = tokens[k2]
-                        if t2.kind not in ("word", "bident"):
-                            continue
-                        nx2 = _significant(tokens, k2)
-                        if nx2 == -1 or not (
-                            tokens[nx2].kind == "op"
-                            and tokens[nx2].text == "."
-                        ):
-                            continue
-                        r2 = t2.text.strip("`").lower()
-                        if r2 in outer and r2 not in inner_aliases:
-                            corr_here = True
-                            break
-                    if corr_here:
-                        frag = _expr_to_sql(
-                            untokenize(tokens[wh + 1:w_end]).strip()
-                        )
-                        raise ImpalaUnsupportedError(
-                            "Disjunctions with correlated predicates "
-                            "are not supported: " + frag
-                        )
-        if (
-            kind == "in"
-            and (agg_in_select or has_group or has_over or has_distinct)
-        ) or (
-            kind == "cmp" and (has_group or has_over)
-        ):
+        if s.where is not None and any(
+            depth_at[k] == depth_at[s.open] and _word_at(tokens, k) == "OR"
+            for k in range(*s.where)
+        ) and (_dotted_roots(tokens, *s.where) & outer) - s.binds:
+            raise ImpalaUnsupportedError(
+                "Disjunctions with correlated predicates are not "
+                "supported: " + _expr_to_sql(
+                    untokenize(tokens[slice(*s.where)]).strip()
+                )
+            )
+        if kind == "in" and (aggs or s.has("GROUP") or s.has("OVER") or s.distinct) \
+                or kind == "cmp" and (s.has("GROUP") or s.has("OVER")):
             raise ImpalaUnsupportedError(
                 "Unsupported correlated subquery with grouping and/or "
                 "aggregation: " + sub_sql
             )
-        if has_limit and (
-            kind == "in" or (kind == "cmp" and not agg_in_select)
-        ):
+        if s.has("LIMIT") and (kind == "in" or kind == "cmp" and not aggs):
             raise ImpalaUnsupportedError(
                 "Unsupported correlated subquery with a LIMIT clause: "
                 + sub_sql
             )
-        if kind == "exists" and has_having and not agg_in_select:
+        if kind == "exists" and s.has("HAVING") and not aggs:
             raise ImpalaUnsupportedError(
                 "Unsupported correlated EXISTS subquery with a HAVING "
                 "clause: " + sub_sql
             )
-        if kind == "cmp" and item_is_expr_over_agg:
+        if kind == "cmp" and expr_over_agg:
             raise ImpalaUnsupportedError(
                 "Aggregate function that returns non-null on an empty "
                 "input cannot be used in an expression in a correlated "
@@ -6869,6 +6103,122 @@ class _Cte:
     labels: list[str] | None  # the `name (c1, c2) AS (` label list
 
 
+@dataclass
+class _Subquery:
+    """One `( SELECT ...` / `( VALUES ...` group, read once: where it
+    sits, how the expression around it uses it, its top-level clauses
+    and what it correlates with — the analog of the reference's analyzed
+    Subquery expr, which the rewriter reads instead of re-deriving
+    (A/Subquery.java:77-81, A/StmtRewriter.java:455-505, 641-698).
+    Inline views and WITH bodies are groups too; nothing uses them as an
+    expression, so their context is None."""
+
+    open: int  # the '('
+    close: int  # its ')'
+    head: str  # SELECT or VALUES
+    block: _Block | None  # the block whose SELECT follows the '('
+    outer: _Block | None  # the innermost block holding the '('
+    #: the clause of `outer` (of the statement, outside any block) that
+    #: holds the group, by its keyword: SELECT (the select list), FROM
+    #: (also after JOIN), ON, WHERE, GROUP, HAVING, ORDER, LIMIT, OFFSET,
+    #: UNION, WINDOW; None when no clause word comes before it at that
+    #: level, or the last one is a GROUP / ORDER without BY
+    clause: str | None
+    clause_at: int  # the clause keyword's index; -1 for none
+    #: how the token before the '(' uses the group: "in", "not in",
+    #: "exists", "not exists", "cmp" (a comparison's right operand),
+    #: "arith", "limit", "between" (either bound); None otherwise
+    context: str | None
+    #: "cmp" / "between" when the group is a comparison's left operand
+    #: or the value a BETWEEN tests; None otherwise
+    follows: str | None
+    #: its top-level FROM, WHERE, GROUP, HAVING, ORDER, LIMIT, OFFSET,
+    #: UNION and OVER words (index, word), across its UNION arms
+    top: list[tuple[int, str]]
+    limit: str | None  # the token after its first top-level LIMIT
+    distinct: bool  # SELECT DISTINCT
+    where: tuple[int, int] | None  # its first top-level WHERE's body
+    #: its select-list items; the list runs to the block's FROM, else to
+    #: the ')' (through the UNION arms of a FROM-less first arm)
+    items: list[tuple[int, int]]
+    #: the names its FROM binds: each ref's name and its path's last
+    #: part — not a relative path's head (`t.struct_array_col a` binds
+    #: a and struct_array_col, not an outer t)
+    binds: frozenset[str]
+    #: binds and every path part: the roots a qualified ref inside may
+    #: name and stay inner (`functional.alltypes.id` over a FROM
+    #: `functional.alltypes`), as correlation reads them
+    scope: frozenset[str]
+    refs: frozenset[str]  # the roots of the dotted refs inside it
+    #: "none", "equi" (correlated with an outer = inner conjunct, so a
+    #: join can replace it) or "nonequi": a dotted ref whose root is not
+    #: in its scope is an outer ref
+    correlation: str
+    #: Subquery.isScalarSubquery, approximated: one select item, an
+    #: aggregate call, and no GROUP BY
+    scalar: bool
+
+    def has(self, word: str) -> bool:
+        """Whether `word` is one of its top-level words."""
+        return any(w == word for _, w in self.top)
+
+
+#: the keywords a subquery's clause is read from
+_SUBQUERY_CLAUSES = _CLAUSE_BOUNDARY | {"SELECT", "ON", "JOIN"}
+#: the top-level words a _Subquery keeps
+_SUBQUERY_TOP_WORDS = frozenset({
+    "FROM", "WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "OFFSET", "UNION",
+    "OVER",
+})
+#: words that end a BETWEEN's low bound (or its predicate) at its level
+_BETWEEN_STOPS = _CLAUSE_BOUNDARY | {"OR", "JOIN", "ON", "WHERE"}
+
+
+def _dotted_root_at(tokens: list[Token], k: int, b: int) -> str | None:
+    """The root of the dotted ref at token k (a word or bident followed
+    by a '.' before token b, not itself a path's tail), lower-cased;
+    None when no dotted ref starts there."""
+    if tokens[k].kind not in ("word", "bident"):
+        return None
+    nx, pv = _significant(tokens, k), _significant(tokens, k, -1)
+    if nx == -1 or nx >= b or tokens[nx].kind != "op" \
+            or tokens[nx].text != "." or pv != -1 \
+            and tokens[pv].kind == "op" and tokens[pv].text == ".":
+        return None
+    return tokens[k].text.strip("`").lower()
+
+
+def _dotted_roots(tokens: list[Token], a: int, b: int) -> set[str]:
+    """The roots of the dotted refs in tokens[a:b] (_dotted_root_at)."""
+    return {_dotted_root_at(tokens, k, b) for k in range(a, b)} - {None}
+
+
+def _word_at(tokens: list[Token], k: int) -> str | None:
+    """The upper-cased word at token k, else None (also for k = -1)."""
+    return tokens[k].upper if k != -1 and tokens[k].kind == "word" else None
+
+
+def _is_agg_call(tokens: list[Token], a: int, b: int) -> bool:
+    """Whether tokens[a:b] starts with an aggregate call's name and '('."""
+    k = _significant(tokens, a - 1)
+    if k == -1 or k >= b or tokens[k].kind != "word" \
+            or tokens[k].text.lower() not in _PLACEMENT_AGG_NAMES:
+        return False
+    j = _significant(tokens, k)
+    return j != -1 and j < b and tokens[j].kind == "op" and tokens[j].text == "("
+
+
+def _from_binds(f: _From | None, heads: bool = False) -> frozenset[str]:
+    """The names FROM clause f binds: each ref's name (its alias, else
+    its last part) and its path's last part; heads=True adds the other
+    parts of each path."""
+    return frozenset(
+        x for src in (f.sources if f is not None else ())
+        for x in (src.name, *(src.parts if heads else src.parts[-1:]))
+        if x is not None
+    )
+
+
 def _take_alias(tokens: list[Token], src: _Source, k: int, end: int) -> None:
     """Bind the optional `[AS] alias` at k (a significant index) to src."""
     if k != -1 and k < end and tokens[k].kind == "word" \
@@ -7067,11 +6417,12 @@ def _unquote(tok: Token) -> str:
 
 
 class _Analysis:
-    """One strict translate's analysis record: the statement's tokens and
-    the caller's catalog context, built once per translate() call and
-    handed to every strict check (the analog of the reference's
-    per-statement Analyzer). Nothing about a statement lives outside it,
-    so concurrent translates never see each other's context.
+    """One statement's analysis record: its tokens and the caller's
+    catalog context, built once per statement (by translate(), unless
+    handed one, as ImpalaEngine's Stmt.analysis is) and read by every
+    strict check (the analog of the reference's per-statement
+    Analyzer). Nothing about a statement lives outside it, so
+    concurrent translates never see each other's context.
 
     schema: column name (lowercase) -> rendered Impala type. With it the
     typed-operand helpers resolve bare and alias-qualified column refs,
@@ -7290,16 +6641,34 @@ class _Analysis:
             src.kind = "table"
 
     @cached_property
-    def depth_at(self) -> list[int]:
-        """Paren depth of every token (a '(' and its ')' count inside)."""
-        out, d = [], 0
-        for t in self.tokens:
+    def _parens(self) -> tuple[list[int], dict[int, int], dict[int, int]]:
+        """One pass over the parens: depth_at, close_of, open_of."""
+        depth_at, close_of, stack, d = [], {}, [], 0
+        for i, t in enumerate(self.tokens):
             if t.kind == "op" and t.text == "(":
                 d += 1
-            out.append(d)
+                stack.append(i)
+            depth_at.append(d)
             if t.kind == "op" and t.text == ")":
                 d -= 1
-        return out
+                if stack:
+                    close_of[stack.pop()] = i
+        return depth_at, close_of, {c: o for o, c in close_of.items()}
+
+    @property
+    def depth_at(self) -> list[int]:
+        """Paren depth of every token (a '(' and its ')' count inside)."""
+        return self._parens[0]
+
+    @property
+    def close_of(self) -> dict[int, int]:
+        """'(' index -> the index of its ')', for every closed group."""
+        return self._parens[1]
+
+    @property
+    def open_of(self) -> dict[int, int]:
+        """')' index -> the index of its '('."""
+        return self._parens[2]
 
     @cached_property
     def blocks(self) -> list[_Block]:
@@ -7380,22 +6749,159 @@ class _Analysis:
         ]
 
     @cached_property
+    def between_ands(self) -> dict[int, int]:
+        """BETWEEN index -> the AND separating its bounds: the first AND
+        at its level after the low bound, before the predicate ends."""
+        tokens, depth_at, out = self.tokens, self.depth_at, {}
+        for i, t in enumerate(tokens):
+            if t.kind != "word" or t.upper != "BETWEEN":
+                continue
+            lvl, lo = depth_at[i], _significant(tokens, i)
+            for k in range(lo, len(tokens)) if lo != -1 else ():
+                tk = tokens[k]
+                if depth_at[k] != lvl:
+                    continue
+                if tk.kind == "op" and tk.text == ")":
+                    break
+                if tk.kind == "word" and tk.upper == "AND":
+                    out[i] = k
+                    break
+                if tk.kind == "word" and tk.upper in _BETWEEN_STOPS:
+                    break
+        return out
+
+    @cached_property
+    def subqueries(self) -> list[_Subquery]:
+        """Every closed `( SELECT` / `( VALUES` group, in statement
+        order (_Subquery)."""
+        tokens, out = self.tokens, []
+        for o in sorted(self.close_of):
+            j = _significant(tokens, o)
+            if j != -1 and tokens[j].kind == "word" \
+                    and tokens[j].upper in ("SELECT", "VALUES"):
+                out.append(self._subquery(o, j))
+        return out
+
+    def subqueries_in(self, a: int, b: int) -> list[_Subquery]:
+        """The `( SELECT` groups opening in tokens[a..b], less those
+        nested in another of them."""
+        out: list[_Subquery] = []
+        for s in self.subqueries:
+            if a <= s.open <= b and s.head == "SELECT" \
+                    and (not out or s.open > out[-1].close):
+                out.append(s)
+        return out
+
+    def _subquery(self, o: int, j: int) -> _Subquery:
+        tokens, depth_at = self.tokens, self.depth_at
+        c, head = self.close_of[o], tokens[j].upper
+        block = next((b for b in self.blocks if b.sel == j), None)
+        outer = self.block_at(o)
+        # the clause: the last clause word before the '(' at the outer
+        # block's level (an IS DISTINCT FROM is no FROM clause)
+        lvl = outer.depth if outer else 0
+        froms = {f.at for f in self.froms}
+        clause, clause_at = None, -1
+        for k in range(o - 1, (outer.sel if outer else 0) - 1, -1):
+            w = _word_at(tokens, k)
+            if depth_at[k] == lvl and w in _SUBQUERY_CLAUSES \
+                    and (w != "FROM" or k in froms):
+                clause_at, clause = k, "FROM" if w == "JOIN" else w
+                if w in ("GROUP", "ORDER") \
+                        and _word_at(tokens, _significant(tokens, k)) != "BY":
+                    clause = None
+                break
+        # the context: the token before the '(', else the one after ')'
+        p, nx = _significant(tokens, o, -1), _significant(tokens, c)
+        before, after = _word_at(tokens, p), _word_at(tokens, nx)
+        context = follows = None
+        if before in ("IN", "EXISTS"):
+            negated = _word_at(tokens, _significant(tokens, p, -1)) == "NOT"
+            context = "not " * negated + before.lower()
+        elif before == "LIMIT":
+            context = "limit"
+        elif before == "BETWEEN" or p in self.between_ands.values():
+            context = "between"
+        elif p != -1 and tokens[p].text in _COMPARISON_OPS:
+            context = "cmp"
+        elif p != -1 and tokens[p].text in _ARITH_BIN_OPS:
+            context = "arith"
+        if nx != -1 and tokens[nx].text in _COMPARISON_OPS:
+            follows = "cmp"
+        elif after == "BETWEEN" or after == "NOT" and _word_at(
+            tokens, _significant(tokens, nx),
+        ) == "BETWEEN":
+            follows = "between"
+        top = [
+            (k, tokens[k].upper) for k in range(o + 1, c)
+            if depth_at[k] == depth_at[o] and tokens[k].kind == "word"
+            and tokens[k].upper in _SUBQUERY_TOP_WORDS
+        ]
+        limit = next((
+            tokens[_significant(tokens, k)].text for k, w in top
+            if w == "LIMIT"
+        ), None)
+        where = next((
+            (k + 1, _clause_end(tokens, k + 1, _CLAUSE_BOUNDARY, c))
+            for k, w in top if w == "WHERE"
+        ), None)
+        items: list[tuple[int, int]] = []
+        distinct = False
+        if block is not None:
+            sel_end = block.from_idx if block.from_idx < block.end else c
+            items = _split_top_level_commas(tokens, block.sel + 1, sel_end)
+            distinct = tokens[_significant(tokens, block.sel)].upper \
+                == "DISTINCT"
+        f = block.from_clause if block else None
+        scope = _from_binds(f, heads=True)
+        refs = frozenset(_dotted_roots(tokens, o + 1, c))
+        return _Subquery(
+            o, c, head, block, outer, clause, clause_at, context, follows,
+            top, limit, distinct, where, items, _from_binds(f), scope, refs,
+            self._correlation(o, c, scope, refs),
+            not any(w == "GROUP" for _, w in top) and len(items) == 1
+            and _is_agg_call(tokens, *items[0]),
+        )
+
+    def _correlation(
+        self, o: int, c: int, scope: frozenset[str], refs: frozenset[str],
+    ) -> str:
+        """_Subquery.correlation of the group tokens[o..c]: an equi
+        conjunct is an `=` between a ref to an outer slot (a dotted ref
+        whose root is not in `scope`) and an inner one."""
+        if refs <= scope:
+            return "none"
+        tokens = self.tokens
+
+        def side(idx: int, back: bool) -> bool | None:
+            """Whether the slot ref ending (back) or starting at idx is
+            outer; None when no slot ref is there (a call, a literal)."""
+            if idx == -1 or idx >= c:
+                return None
+            head = _primary_span_back(tokens, idx) if back else idx
+            if head == -1 or not back and _primary_span_fwd(tokens, idx) == -1 \
+                    or tokens[head].kind not in ("word", "bident"):
+                return None
+            nxt = _significant(tokens, head)
+            if nxt != -1 and tokens[nxt].kind == "op" and tokens[nxt].text == "(":
+                return None
+            return nxt != -1 and tokens[nxt].kind == "op" \
+                and tokens[nxt].text == "." \
+                and tokens[head].text.strip("`").lower() not in scope
+
+        for k in range(o + 1, c):
+            if tokens[k].kind == "op" and tokens[k].text == "=":
+                sides = (side(_significant(tokens, k, -1), True),
+                         side(_significant(tokens, k), False))
+                if None not in sides and sides[0] != sides[1]:
+                    return "equi"
+        return "nonequi"
+
+    @cached_property
     def ctes(self) -> list[_Cte]:
         """The WITH-clause views (`name AS (` and `name (c1, ..) AS (`
         before a SELECT / WITH / VALUES body) in statement order."""
-        tokens, n = self.tokens, len(self.tokens)
-        # group_end[i]: index of the ')' closing the innermost group open at i
-        group_end = [n] * n
-        open_of: dict[int, int] = {}  # ')' index -> its '(' index
-        stack: list[int] = []
-        for i, t in enumerate(tokens):
-            if t.kind == "op" and t.text == "(":
-                stack.append(i)
-            elif t.kind == "op" and t.text == ")" and stack:
-                o = open_of[i] = stack.pop()
-                for k in range(o, i + 1):
-                    if group_end[k] == n:
-                        group_end[k] = i
+        tokens, n, depth_at = self.tokens, len(self.tokens), self.depth_at
         out: list[_Cte] = []
         for i, t in enumerate(tokens):
             if t.kind != "word" or t.upper != "AS":
@@ -7412,7 +6918,7 @@ class _Analysis:
             if name != -1 and tokens[name].kind == "op" \
                     and tokens[name].text == ")":
                 # `name (c1, c2) AS (`: the name sits before the labels
-                lbl_open = open_of.get(name, -1)
+                lbl_open = self.open_of.get(name, -1)
                 if lbl_open == -1:
                     continue
                 labels = [
@@ -7423,9 +6929,19 @@ class _Analysis:
                 name = _significant(tokens, lbl_open, -1)
             if name == -1 or tokens[name].kind not in ("word", "bident"):
                 continue
+            if body not in self.close_of:
+                raise ImpalaUnsupportedError("unbalanced parentheses")
+            # the group around the name (its last '(' at the name's depth)
+            # bounds the view's scope
+            d = depth_at[name]
+            around = next((
+                o for o in range(name - 1, -1, -1)
+                if depth_at[o] == d and tokens[o].kind == "op"
+                and tokens[o].text == "("
+            ), None)
             out.append(_Cte(
                 tokens[name].text.strip("`").lower(), body,
-                _matching_paren(tokens, body), group_end[name], labels,
+                self.close_of[body], self.close_of.get(around, n), labels,
             ))
         return out
 
@@ -13108,6 +12624,7 @@ def translate(
     catalog: dict[str, dict[str, str]] | None = None,
     session_db: str | None = None,
     unregistered_fns: frozenset | None = None,
+    analysis: _Analysis | None = None,
 ) -> str:
     """Impala-dialect SQL -> Spark SQL.
 
@@ -13137,20 +12654,21 @@ def translate(
     reference pins BOTH AnalyzesOk and AnalysisError for the SAME text
     under different session dbs (AnalyzeStmtsTest
     TestTableRefPathAmbiguity, :1199-1211). None = unknown (permissive).
+
+    analysis: an _Analysis of `sql` built with no catalog context (an
+    ImpalaEngine statement's, which answered its table reads), used in
+    place of a new one.
     """
-    tokens = tokenize(sql)
+    ctx = analysis
+    if ctx is None:
+        tokens = tokenize(sql)
+        ctx = _Analysis(
+            tokens, schema, catalog, session_db, unregistered_fns,
+        ) if strict else _Analysis(tokens)
+    tokens = ctx.tokens
     _check_rejections(tokens)
-    _check_subquery_in_or(tokens)
-    ctx = None
+    _check_subquery_in_or(ctx)
     if strict:
-        ctx = _Analysis(tokens, schema, catalog, session_db, unregistered_fns)
-    return _translate_checked(tokens, sql, ctx)
-
-
-def _translate_checked(
-    tokens: list[Token], sql: str, ctx: _Analysis | None,
-) -> str:
-    if ctx is not None:
         # FROM-clause analysis precedes everything in SelectStmt.analyze
         _check_strict_ddl(ctx)
         _check_strict_table_path_refs(ctx)
@@ -13203,7 +12721,7 @@ def _translate_checked(
         _check_strict_where_requires_from(ctx)
         _check_strict_between_subqueries(ctx)
         _check_strict_subquery_columns(ctx)
-    tokens = _rewrite_collection_refs(tokens, (ctx or _Analysis(tokens)).froms)
+    tokens = _rewrite_collection_refs(tokens, ctx.froms)
     tokens = _rewrite_bool_aliases(tokens)
     tokens = _rewrite_iregexp(tokens)
     tokens = _rewrite_hints(tokens)

@@ -2400,3 +2400,85 @@ def test_from_ref_path():
     assert from_ref_path("x", "orders o") is None
     # a word ahead of the alias that is no table ref is not the target
     assert from_ref_path("o", "(SELECT 1 AS k) o") is None
+
+
+#: (statement, the subquery as written, its record's fields: context,
+#: follows, clause, correlation, scalar, top-level words, LIMIT value,
+#: DISTINCT, select items, FROM binds)
+_SUBQUERY_RECORDS = [
+    ("SELECT a FROM t WHERE a IN (SELECT b FROM u GROUP BY b)",
+     "(SELECT b FROM u GROUP BY b)",
+     ("in", None, "WHERE", "none", False, ["FROM", "GROUP"], None, False, 1, {"u"})),
+    ("SELECT a FROM t WHERE a NOT IN (SELECT DISTINCT b FROM u x WHERE x.c = t.c)",
+     "(SELECT DISTINCT b FROM u x WHERE x.c = t.c)",
+     ("not in", None, "WHERE", "equi", False, ["FROM", "WHERE"], None, True, 1, {"x", "u"})),
+    ("SELECT a FROM t WHERE EXISTS (SELECT 1 FROM u WHERE u.c < t.c HAVING count(*) > 1)",
+     "(SELECT 1 FROM u WHERE u.c < t.c HAVING count(*) > 1)",
+     ("exists", None, "WHERE", "nonequi", False, ["FROM", "WHERE", "HAVING"], None, False, 1,
+      {"u"})),
+    ("SELECT a FROM t WHERE NOT EXISTS (SELECT b FROM u UNION SELECT c FROM v)",
+     "(SELECT b FROM u UNION SELECT c FROM v)",
+     ("not exists", None, "WHERE", "none", False, ["FROM", "UNION", "FROM"], None, False, 1,
+      {"u"})),
+    ("SELECT a FROM t WHERE a = (SELECT max(b) FROM u LIMIT 1)",
+     "(SELECT max(b) FROM u LIMIT 1)",
+     ("cmp", None, "WHERE", "none", True, ["FROM", "LIMIT"], "1", False, 1, {"u"})),
+    ("SELECT a FROM t WHERE (SELECT count(*) FROM u) < a",
+     "(SELECT count(*) FROM u)",
+     (None, "cmp", "WHERE", "none", True, ["FROM"], None, False, 1, {"u"})),
+    ("SELECT a FROM t WHERE (SELECT min(b) FROM u) NOT BETWEEN 1 AND 5",
+     "(SELECT min(b) FROM u)",
+     (None, "between", "WHERE", "none", True, ["FROM"], None, False, 1, {"u"})),
+    ("SELECT a FROM t WHERE a BETWEEN (SELECT min(b) FROM u) AND 5",
+     "(SELECT min(b) FROM u)",
+     ("between", None, "WHERE", "none", True, ["FROM"], None, False, 1, {"u"})),
+    ("SELECT a FROM t WHERE a BETWEEN 1 AND (SELECT max(b) FROM u)",
+     "(SELECT max(b) FROM u)",
+     ("between", None, "WHERE", "none", True, ["FROM"], None, False, 1, {"u"})),
+    ("SELECT a FROM t WHERE a = 1 AND (SELECT max(b) FROM u) > 2",
+     "(SELECT max(b) FROM u)",
+     (None, "cmp", "WHERE", "none", True, ["FROM"], None, False, 1, {"u"})),
+    ("SELECT a FROM t WHERE a > 1 + (SELECT max(b) FROM u)",
+     "(SELECT max(b) FROM u)",
+     ("arith", None, "WHERE", "none", True, ["FROM"], None, False, 1, {"u"})),
+    ("SELECT a FROM t LIMIT (SELECT 1)",
+     "(SELECT 1)",
+     ("limit", None, "LIMIT", "none", False, [], None, False, 1, set())),
+    ("SELECT a, coalesce((SELECT max(b) OVER (ORDER BY b) FROM u), 0) FROM t",
+     "(SELECT max(b) OVER (ORDER BY b) FROM u)",
+     (None, None, "SELECT", "none", True, ["OVER", "FROM"], None, False, 1, {"u"})),
+    ("SELECT a FROM t WHERE a IN (SELECT b FROM u WHERE c IN (SELECT d FROM db.v w))",
+     "(SELECT d FROM db.v w)",
+     ("in", None, "WHERE", "none", False, ["FROM"], None, False, 1, {"w", "v"})),
+    ("WITH w AS (SELECT a FROM t WHERE a IN (SELECT b, c FROM u)) SELECT * FROM w",
+     "(SELECT b, c FROM u)",
+     ("in", None, "WHERE", "none", False, ["FROM"], None, False, 2, {"u"})),
+    ("WITH w AS (SELECT a FROM t WHERE a IN (SELECT b, c FROM u)) SELECT * FROM w",
+     "(SELECT a FROM t WHERE a IN (SELECT b, c FROM u))",
+     (None, None, None, "none", False, ["FROM", "WHERE"], None, False, 1, {"t"})),
+    ("SELECT * FROM t JOIN s j ON t.a = j.a WHERE t.b IN (SELECT c FROM u WHERE u.d = j.d)",
+     "(SELECT c FROM u WHERE u.d = j.d)",
+     ("in", None, "WHERE", "equi", False, ["FROM", "WHERE"], None, False, 1, {"u"})),
+    ("SELECT * FROM (SELECT a FROM t) v JOIN u ON v.a IN (VALUES (1))",
+     "(VALUES (1))",
+     ("in", None, "ON", "none", False, [], None, False, 0, set())),
+]
+
+
+@pytest.mark.parametrize("sql,sub,want", _SUBQUERY_RECORDS)
+def test_subquery_record(sql, sub, want):
+    """Each `( SELECT` / `( VALUES` group is analyzed once into a
+    _Subquery: its predicate context, its clause, its top-level facts
+    and its correlation."""
+    from impala_spark.parser import _Analysis, tokenize, untokenize
+
+    ctx = _Analysis(tokenize(sql))
+    s = next(
+        s for s in ctx.subqueries
+        if untokenize(ctx.tokens[s.open:s.close + 1]) == sub
+    )
+    got = (
+        s.context, s.follows, s.clause, s.correlation, s.scalar,
+        [w for _, w in s.top], s.limit, s.distinct, len(s.items), set(s.binds),
+    )
+    assert got == want

@@ -108,6 +108,29 @@ def test_hit_runs_every_stage(spark, interactive_engine, name):
     assert recollected[1] < planned[1], (recollected, planned)
 
 
+def test_a_miss_analyzes_once_and_a_hit_never(interactive_engine, monkeypatch):
+    """A strict miss builds one parser._Analysis: the tables it reads
+    (authorization, admission, the size gates) and its translation
+    share it. A hit builds none."""
+    from impala_spark import parser as P
+
+    built = []
+    init = P._Analysis.__init__
+
+    def counted(self, *args, **kwargs):
+        built.append(args[0])
+        init(self, *args, **kwargs)
+
+    monkeypatch.setattr(P._Analysis, "__init__", counted)
+    for name in INTERACTIVE:
+        text = SPARK_QUERIES[name].__doc__
+        built.clear()
+        _read(interactive_engine, text, hit=False)
+        assert len(built) == 1, name
+        _read(interactive_engine, text, hit=True)
+        assert len(built) == 1, name
+
+
 def test_registry_entry_takes_the_front_door(spark, sf_dir):
     """A registry SQL entry is a statement through its engine's
     ImpalaEngine.sql: the repeat is a plan-cache hit that runs as a new

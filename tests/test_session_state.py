@@ -131,11 +131,10 @@ def test_soak_keeps_session_state_flat(spark, restore_views):
     rounds for three more rounds (a leak of one object per round would
     cross it), and the dropped clone sessions are collected.
 
-    The mark is not one exact count: a replaced posture clone lives on
-    while an engine's plan cache holds a plan made in it (until that
-    engine's next statement), PySpark keeps the last session wrapper it
-    made, and the session whose view is re-pointed first after a REFRESH
-    (weak-set order) holds the clone that rebuilds the copy."""
+    The mark is not one exact count: PySpark keeps the last session
+    wrapper it made, and the session whose view is re-pointed first
+    after a REFRESH (weak-set order) holds the clone that rebuilds the
+    copy."""
     engines = [ImpalaEngine(spark, d) for d in (SF_TINY, SF_01, SF_TINY)]
     builder = Q.SPARK_QUERIES["agg_multi_distinct_rewrite"]
     entry = Q.SPARK_QUERIES["join_three_way"]
@@ -179,3 +178,26 @@ def test_soak_keeps_session_state_flat(spark, restore_views):
     gc.collect()
     alive = [ref for ref in clones[:-1] if ref() is not None]
     assert not alive, f"{len(alive)} dropped clone sessions are still alive"
+
+
+def test_idle_engine_does_not_pin_a_replaced_posture_clone(spark, restore_views):
+    """Engine B plans a query in a posture clone; engine A's SET then
+    replaces that clone. B's plan cache holds the clone weakly, so it
+    is collected while B sits idle, and B's next run plans again."""
+    a, b = ImpalaEngine(spark, SF_TINY), ImpalaEngine(spark, SF_TINY)
+    q = "SELECT n_regionkey, count(*) AS n FROM nation GROUP BY n_regionkey"
+    df = b.sql(q)
+    want = sorted(df.collect())
+    clone = weakref.ref(df.sparkSession)
+    assert clone() is not spark
+    del df
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        a.sql("SET BROADCAST_THRESHOLD=12345678")
+        a.sql(q).collect()  # plans in a new clone, which replaces B's
+        gc.collect()
+        assert clone() is None
+        assert sorted(b.sql(q).collect()) == want
+        assert b.plan_cache_info().misses == 2
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)

@@ -69,6 +69,17 @@ def test_strict_verdicts_replay():
     assert not changed, f"{len(changed)} verdicts changed; first: {changed[:3]}"
 
 
+
+def test_corpus_covers_test_literals():
+    """Every statement the corpus is built from has an entry, so the
+    replay covers new test literals too."""
+    have = {json.loads(line)["sql"] for line in CORPUS.read_text().splitlines()}
+    missing = [sql for sql in _statements() if sql not in have]
+    assert not missing, (
+        f"{len(missing)} statements have no corpus entry (regenerate with "
+        f"`python -m tests.test_strict_corpus`); first: {missing[:3]}"
+    )
+
 if __name__ == "__main__":
     before = {
         rec["sql"]: rec["verdicts"]
