@@ -92,6 +92,11 @@ def _significant(tokens: list[Token], i: int, step: int = 1) -> int:
     return -1
 
 
+def _is_open(tokens: list[Token], k: int) -> bool:
+    """Whether token k (-1: none) is a '('."""
+    return k != -1 and tokens[k].kind == "op" and tokens[k].text == "("
+
+
 def _matching_paren(tokens: list[Token], open_idx: int) -> int:
     """Index of the `)` matching the `(` at open_idx."""
     depth = 0
@@ -138,10 +143,6 @@ def _check_rejections(tokens: list[Token]) -> None:
                 raise ImpalaUnsupportedError("recursive CTEs are not in Impala 2.7")
 
 
-#: words ending the WHERE / HAVING region _check_subquery_in_or reads
-_OR_REGION_END = {"GROUP", "ORDER", "LIMIT", "UNION", "HAVING", "WINDOW", "WHERE"}
-
-
 def _check_subquery_in_or(ctx: _Analysis) -> None:
     """Impala's analyzer rejects subqueries under an OR predicate
     (analysis/StmtRewriter.java:135: "Subqueries in OR predicates are not
@@ -169,15 +170,12 @@ def _check_subquery_in_or(ctx: _Analysis) -> None:
             if a < idx <= b and _word_at(tokens, _significant(tokens, a, -1)) == "NOT"
         ]
 
-    for lo_r, t in enumerate(tokens):
-        if t.kind != "word" or t.upper not in ("WHERE", "HAVING"):
-            continue
-        dw = depth_at[lo_r]
-        hi_r = next((
-            k - 1 for k in range(lo_r + 1, len(tokens))
-            if depth_at[k] < dw
-            or depth_at[k] == dw and _word_at(tokens, k) in _OR_REGION_END
-        ), len(tokens) - 1)
+    # each WHERE / HAVING clause: its keyword and its body's last token
+    regions = sorted([(a - 1, b - 1) for a, b in ctx.wheres] + [
+        (c.at, c.hi - 1) for b in ctx.blocks
+        if (c := b.clauses.get("HAVING")) is not None
+    ])
+    for lo_r, hi_r in regions:
         subqueries = [o for o in opens if lo_r <= o <= hi_r]
         if not subqueries:
             continue
@@ -1226,40 +1224,44 @@ _ANALYTIC_FUNC_NAMES = frozenset({
 })
 
 
-def _find_analytic_in_region(
-    tokens: list[Token], start: int, end: int
-) -> str | None:
+def _find_analytic_in_region(ctx: _Analysis, start: int, end: int) -> str | None:
     """toSql of the first `fn(...) OVER (...)` analytic expr inside
     [start, end), skipping subqueries (their analytics are legal in the
     nested block). ANY call followed by OVER counts — rank/row_number
     are not aggregate names but are still analytic."""
-    k = start
+    tokens, k = ctx.tokens, start
     while k < end:
-        t = tokens[k]
-        if t.kind == "op" and t.text == "(":
-            j = _significant(tokens, k)
-            if j != -1 and tokens[j].kind == "word" and tokens[j].upper == "SELECT":
-                k = _matching_paren(tokens, k) + 1  # skip subquery
-                continue
-        if t.kind in ("word", "bident"):
-            j = _significant(tokens, k)
-            if j != -1 and j < end and tokens[j].kind == "op" and tokens[j].text == "(":
-                close = _matching_paren(tokens, j)
-                after = _significant(tokens, close)
-                if (
-                    after != -1
-                    and after < end
-                    and tokens[after].kind == "word"
-                    and tokens[after].upper == "OVER"
-                ):
-                    op = _significant(tokens, after)
-                    stop = _matching_paren(tokens, op) if (
-                        op != -1 and tokens[op].kind == "op"
-                        and tokens[op].text == "("
-                    ) else after
-                    return _expr_to_sql(untokenize(tokens[k:stop + 1]).strip())
+        j = _significant(tokens, k)
+        if _is_open(tokens, k) and _word_at(tokens, j) == "SELECT":
+            k = ctx.close(k) + 1  # skip subquery
+            continue
+        if tokens[k].kind in ("word", "bident") and j < end and _is_open(tokens, j):
+            after = _significant(tokens, ctx.close(j))
+            if after != -1 and after < end and _word_at(tokens, after) == "OVER":
+                op = _significant(tokens, after)
+                stop = ctx.close(op) if _is_open(tokens, op) else after
+                return _expr_to_sql(untokenize(tokens[k:stop + 1]).strip())
         k += 1
     return None
+
+
+def _agg_in_region(ctx: _Analysis, start: int, end: int, names) -> bool:
+    """Whether a plain aggregate call (a name in `names`, '(' and no
+    OVER after its ')') sits in [start, end), outside subqueries."""
+    tokens, k = ctx.tokens, start
+    while k < end:
+        j = _significant(tokens, k)
+        if _is_open(tokens, k) and _word_at(tokens, j) == "SELECT":
+            k = ctx.close(k) + 1
+            continue
+        if tokens[k].kind == "word" and j < end and _is_open(tokens, j) \
+                and tokens[k].text.lower() in names:
+            after = _significant(tokens, ctx.close(j))
+            if not (after != -1 and after < end
+                    and _word_at(tokens, after) == "OVER"):
+                return True
+        k += 1
+    return False
 
 
 def _check_strict_where_exprs(ctx: _Analysis) -> None:
@@ -1267,32 +1269,12 @@ def _check_strict_where_exprs(ctx: _Analysis) -> None:
     (analysis/SelectStmt.java:236-246; aggregate check first). Aggregates
     inside a subquery that happens to sit in WHERE are legal and
     skipped."""
-    tokens = ctx.tokens
     for start, end in ctx.wheres:
-        k = start
-        while k < end:
-            t = tokens[k]
-            if t.kind == "op" and t.text == "(":
-                j = _significant(tokens, k)
-                if j != -1 and tokens[j].kind == "word" and tokens[j].upper == "SELECT":
-                    k = _matching_paren(tokens, k) + 1  # skip subquery
-                    continue
-            if t.kind == "word" and t.upper.lower() in _AGG_FUNC_NAMES:
-                j = _significant(tokens, k)
-                if j != -1 and j < end and tokens[j].kind == "op" and tokens[j].text == "(":
-                    close = _matching_paren(tokens, j)
-                    after = _significant(tokens, close)
-                    if not (
-                        after != -1
-                        and after < end
-                        and tokens[after].kind == "word"
-                        and tokens[after].upper == "OVER"
-                    ):
-                        raise ImpalaUnsupportedError(
-                            "aggregate function not allowed in WHERE clause"
-                        )
-            k += 1
-        expr = _find_analytic_in_region(tokens, start, end)
+        if _agg_in_region(ctx, start, end, _AGG_FUNC_NAMES):
+            raise ImpalaUnsupportedError(
+                "aggregate function not allowed in WHERE clause"
+            )
+        expr = _find_analytic_in_region(ctx, start, end)
         if expr is not None:
             raise ImpalaUnsupportedError(
                 f"WHERE clause must not contain analytic expressions: {expr}"
@@ -1316,140 +1298,53 @@ def _check_strict_join_clauses(ctx: _Analysis) -> None:
     - OUTER/SEMI/ANTI joins require an ON or USING clause (:515-518)
     Plus SelectStmt.analyzeHaving's analytic rejection
     (SelectStmt.java:545-548)."""
-    tokens, depth_at = ctx.tokens, ctx.depth_at
-    n = len(tokens)
-    for i, t in enumerate(tokens):
-        if t.kind != "word":
-            continue
-        up = t.upper
-        if up == "JOIN":
+    tokens = ctx.tokens
+    # each clause to check, in statement order: (keyword index, kind,
+    # body start, body end)
+    found = [(c.at, "HAVING", c.lo, c.hi) for b in ctx.blocks
+             if (c := b.clauses.get("HAVING")) is not None]
+    for f in ctx.froms:
+        found += [(k, "ON", k + 1, e) for k, e in f.ons]
+        for x, src in enumerate(f.sources):
+            if src.join_idx == -1:
+                continue
             # canonical operator name from the preceding modifiers
-            p = _significant(tokens, i, -1)
+            p = _significant(tokens, src.join_idx, -1)
             mods: list[str] = []
-            while p != -1 and tokens[p].kind == "word" and tokens[p].upper in (
+            while _word_at(tokens, p) in (
                 "LEFT", "RIGHT", "FULL", "OUTER", "INNER", "CROSS",
                 "SEMI", "ANTI",
             ):
                 mods.insert(0, tokens[p].upper)
                 p = _significant(tokens, p, -1)
-            if not mods or mods == ["INNER"] or mods == ["CROSS"]:
+            if not mods or mods[0] not in ("LEFT", "RIGHT", "FULL"):
                 continue
-            side = mods[0] if mods[0] in ("LEFT", "RIGHT", "FULL") else ""
             kind = mods[-1] if mods[-1] in ("SEMI", "ANTI") else "OUTER"
-            if not side:
-                continue
-            op_name = f"{side} {kind} JOIN"
-            # scan forward past the joined table ref for ON/USING at the
-            # same depth
-            dw = depth_at[i]
-            k = _significant(tokens, i)
-            found = False
-            ended = False
-            hops = 0
-            while k != -1 and k < n and hops < 64:
-                tk = tokens[k]
-                if depth_at[k] < dw:
-                    ended = True
-                    break
-                if tk.kind == "op" and tk.text == "(":
-                    k = _matching_paren(tokens, k)
-                    if k == -1:
-                        ended = True
-                        break
-                    k = _significant(tokens, k)
-                    hops += 1
-                    continue
-                if tk.kind == "word" and depth_at[k] == dw:
-                    if tk.upper in ("ON", "USING"):
-                        found = True
-                        break
-                    if tk.upper in (
-                        "JOIN", "INNER", "LEFT", "RIGHT", "FULL", "CROSS",
-                        "SEMI", "ANTI", "WHERE", "GROUP", "ORDER",
-                        "HAVING", "LIMIT", "UNION", "STRAIGHT_JOIN",
-                    ):
-                        ended = True
-                        break
-                if tk.kind == "op" and tk.text == "," and depth_at[k] == dw:
-                    ended = True
-                    break
-                k = _significant(tokens, k)
-                hops += 1
-            if not found and (ended or k == -1 or k >= n):
-                raise ImpalaUnsupportedError(
-                    f"{op_name} requires an ON or USING clause"
-                )
-        elif up == "ON":
-            # region: to the next same-depth clause boundary
-            dw = depth_at[i]
-            start = _significant(tokens, i)
-            if start == -1:
-                continue
-            end = n
-            for k in range(start, n):
-                if depth_at[k] < dw:
-                    end = k
-                    break
-                tk = tokens[k]
-                if (
-                    depth_at[k] == dw and k > start and tk.kind == "word"
-                    and tk.upper in _BOOL_CLAUSE_ENDS
-                ):
-                    end = k
-                    break
+            if f.join_clause(x) == -1:
+                found.append((src.join_idx, f"{mods[0]} {kind} JOIN", 0, 0))
+    for _at, kind, lo, hi in sorted(found):
+        start = _significant(tokens, lo - 1)
+        if kind == "ON" and start != -1:
             # aggregate check first (TableRef.java:494-496)
-            k = start
-            while k < end:
-                tk = tokens[k]
-                if tk.kind == "op" and tk.text == "(":
-                    j = _significant(tokens, k)
-                    if j != -1 and tokens[j].kind == "word" \
-                            and tokens[j].upper == "SELECT":
-                        k = _matching_paren(tokens, k) + 1
-                        continue
-                if tk.kind == "word" and tk.text.lower() in _PLACEMENT_AGG_NAMES:
-                    j = _significant(tokens, k)
-                    if j != -1 and j < end and tokens[j].kind == "op" \
-                            and tokens[j].text == "(":
-                        close = _matching_paren(tokens, j)
-                        after = _significant(tokens, close)
-                        if not (
-                            after != -1 and after < end
-                            and tokens[after].kind == "word"
-                            and tokens[after].upper == "OVER"
-                        ):
-                            raise ImpalaUnsupportedError(
-                                "aggregate function not allowed in ON clause"
-                            )
-                k += 1
-            if _find_analytic_in_region(tokens, start, end) is not None:
+            if _agg_in_region(ctx, start, hi, _PLACEMENT_AGG_NAMES):
+                raise ImpalaUnsupportedError(
+                    "aggregate function not allowed in ON clause"
+                )
+            if _find_analytic_in_region(ctx, start, hi) is not None:
                 raise ImpalaUnsupportedError(
                     "analytic expression not allowed in ON clause"
                 )
-        elif up == "HAVING":
-            dw = depth_at[i]
-            start = _significant(tokens, i)
-            if start == -1:
-                continue
-            end = n
-            for k in range(start, n):
-                if depth_at[k] < dw:
-                    end = k
-                    break
-                tk = tokens[k]
-                if (
-                    depth_at[k] == dw and k > start and tk.kind == "word"
-                    and tk.upper in ("GROUP", "ORDER", "LIMIT", "UNION",
-                                     "WINDOW", "OFFSET")
-                ):
-                    end = k
-                    break
-            expr = _find_analytic_in_region(tokens, start, end)
+        elif kind == "HAVING" and start != -1:
+            expr = _find_analytic_in_region(ctx, start, hi)
             if expr is not None:
                 raise ImpalaUnsupportedError(
                     "HAVING clause must not contain analytic expressions: "
                     + expr
                 )
+        elif kind.endswith("JOIN"):
+            raise ImpalaUnsupportedError(
+                f"{kind} requires an ON or USING clause"
+            )
 
 
 def _split_top_level_commas(tokens: list[Token], start: int, end: int) -> list[tuple[int, int]]:
@@ -1515,171 +1410,91 @@ def _check_strict_ungrouped_select(ctx: _Analysis) -> None:
     expressions over grouped columns are left to Spark's own analyzer."""
     tokens = ctx.tokens
     for blk in ctx.blocks:
-        sel_idx, from_idx, end = blk.sel, blk.from_idx, blk.end
-        list_start = _significant(tokens, sel_idx)
-        if list_start == -1:
-            continue
-        is_distinct = (
-            tokens[list_start].kind == "word" and tokens[list_start].upper == "DISTINCT"
-        )
-        if tokens[list_start].kind == "word" and tokens[list_start].upper in ("DISTINCT", "ALL"):
-            list_start = _significant(tokens, list_start)
+        end, items, clauses = blk.end, blk.items, blk.clauses
+        list_start, sel_end = items[0][0], items[-1][1]
         # SELECT DISTINCT + analytic function (SelectStmt.java:230-232) —
         # checked before the aggregation gate: it applies to any block.
-        if is_distinct:
-            for k2 in range(list_start, from_idx):
-                t2 = tokens[k2]
-                if t2.kind == "word" and t2.upper == "OVER":
-                    j2 = _significant(tokens, k2)
-                    if (
-                        j2 != -1 and j2 < from_idx
-                        and tokens[j2].kind == "op" and tokens[j2].text == "("
-                    ):
-                        raise ImpalaUnsupportedError(
-                            "cannot combine SELECT DISTINCT with analytic functions"
-                        )
-        # block's GROUP BY region + whether any aggregate call appears
+        if blk.distinct:
+            for k2 in range(list_start, sel_end):
+                if _word_at(tokens, k2) == "OVER" \
+                        and _is_open(tokens, _significant(tokens, k2)):
+                    raise ImpalaUnsupportedError(
+                        "cannot combine SELECT DISTINCT with analytic functions"
+                    )
+        # block's GROUP BY items + whether any aggregate call appears
         group_exprs: set[str] | None = None
         group_spans: list[tuple[int, int]] = []
-        k = from_idx
-        block_has_group = False
-        while k < end:
-            t = tokens[k]
-            if t.kind == "op" and t.text == "(":
-                k = _matching_paren(tokens, k) + 1
-                continue
-            if t.kind == "word" and t.upper == "GROUP":
-                j = _significant(tokens, k)
-                if j != -1 and tokens[j].upper == "BY":
-                    g_end = _clause_end(tokens, j + 1, _CLAUSE_BOUNDARY, end)
-                    block_has_group = True
-                    group_exprs = set()
-                    group_spans = []
-                    for a, b in _split_top_level_commas(tokens, j + 1, g_end):
-                        text = untokenize(tokens[a:b]).strip().strip("`").lower()
-                        group_exprs.add(re.sub(r"\s+", "", text))
-                        group_spans.append((a, b))
-                    k = g_end
-                    continue
-            k += 1
+        block_has_group = "GROUP" in clauses
+        if block_has_group:
+            c = clauses["GROUP"]
+            group_spans = _split_top_level_commas(tokens, c.lo, c.hi)
+            group_exprs = {
+                re.sub(r"\s+", "", untokenize(tokens[a:b]).strip().strip("`").lower())
+                for a, b in group_spans
+            }
         # any aggregate call in the select list? (aggs INSIDE a window
         # spec are the analytic's business, not the block's)
         has_agg = False
         k = list_start
-        while k < from_idx:
-            t = tokens[k]
-            if t.kind == "word" and t.upper == "OVER":
-                j = _significant(tokens, k)
-                if j != -1 and j < from_idx and tokens[j].kind == "op" \
-                        and tokens[j].text == "(":
-                    k = _matching_paren(tokens, j) + 1
-                    continue
-            if t.kind == "word" and t.upper.lower() in _AGG_FUNC_NAMES:
-                j = _significant(tokens, k)
-                if j != -1 and j < from_idx and tokens[j].kind == "op" and tokens[j].text == "(":
-                    close = _matching_paren(tokens, j)
-                    after = _significant(tokens, close)
-                    is_analytic = (
-                        after != -1 and tokens[after].kind == "word" and tokens[after].upper == "OVER"
-                    )
-                    if not is_analytic:
-                        has_agg = True
-                        break
+        while k < sel_end:
+            j = _significant(tokens, k)
+            if _word_at(tokens, k) == "OVER" and j < sel_end and _is_open(tokens, j):
+                k = ctx.close(j) + 1
+                continue
+            if _word_at(tokens, k) and tokens[k].text.lower() in _AGG_FUNC_NAMES \
+                    and j < sel_end and _is_open(tokens, j) and _word_at(
+                        tokens, _significant(tokens, ctx.close(j))) != "OVER":
+                has_agg = True
+                break
             k += 1
-        if from_idx >= end:
+        if blk.from_clause is None:
             # analytic expr / star without a FROM clause
             # (SelectStmt.java:568-580, AnalyzeExprsTest.java:822-823
             # "select 1, count(*) over()"; AnalyzeStmtsTest pins
             # "select *" -> "'*' expression in select list requires
             # FROM clause.")
+            starts = {_significant(tokens, a - 1) for a, _ in items}
             k2 = list_start
-            depth2 = 0
             while k2 < end:
-                t2 = tokens[k2]
-                if t2.kind == "op" and t2.text == "(":
-                    nxt = _significant(tokens, k2)
-                    if (
-                        nxt != -1 and tokens[nxt].kind == "word"
-                        and tokens[nxt].upper == "SELECT"
-                    ):
-                        k2 = _matching_paren(tokens, k2) + 1
-                        continue
-                    depth2 += 1
-                elif t2.kind == "op" and t2.text == ")":
-                    depth2 -= 1
-                elif t2.kind == "word" and t2.upper == "OVER":
+                if _is_open(tokens, k2) \
+                        and _word_at(tokens, _significant(tokens, k2)) == "SELECT":
+                    k2 = ctx.close(k2) + 1
+                    continue
+                if _word_at(tokens, k2) == "OVER":
                     raise ImpalaUnsupportedError(
                         "Analytic expressions require FROM clause"
                     )
-                elif depth2 == 0 and t2.kind == "op" and t2.text == "*":
-                    # top-level star item (not multiplication: a star
-                    # select item is preceded by start/comma)
-                    pv = _significant(tokens, k2, -1)
-                    if pv == -1 or (
-                        tokens[pv].kind == "op" and tokens[pv].text == ","
-                    ) or (
-                        tokens[pv].kind == "word"
-                        and tokens[pv].upper in ("SELECT", "DISTINCT")
-                    ):
-                        raise ImpalaUnsupportedError(
-                            "'*' expression in select list requires FROM "
-                            "clause."
-                        )
+                if k2 in starts and tokens[k2].kind == "op" \
+                        and tokens[k2].text == "*":
+                    raise ImpalaUnsupportedError(
+                        "'*' expression in select list requires FROM "
+                        "clause."
+                    )
                 k2 += 1
-        # aggregate call anywhere in this block's HAVING clause (part of
-        # the reference's aggregation gate: SelectStmt.java:571-575)
-        having_has_agg = False
-        kh = from_idx
-        while kh < end:
-            th = tokens[kh]
-            if th.kind == "op" and th.text == "(":
-                kh = _matching_paren(tokens, kh) + 1
-                continue
-            if th.kind == "word" and th.upper == "HAVING":
-                h_end2 = _clause_end(tokens, kh + 1, _CLAUSE_BOUNDARY, end)
-                for x in range(kh + 1, h_end2):
-                    if _agg_call_at(tokens, x, h_end2) != -1:
-                        having_has_agg = True
-                        break
-                kh = h_end2
-                continue
-            kh += 1
-        # aggregate call in this block's ORDER BY (SelectStmt.java: an
+        # an aggregate call in this block's HAVING or ORDER BY (part of
+        # the reference's aggregation gate: SelectStmt.java:571-575; an
         # ordering aggregate makes the whole block an agg query)
-        orderby_has_agg = False
-        ko = from_idx
-        while ko < end:
-            to = tokens[ko]
-            if to.kind == "op" and to.text == "(":
-                ko = _matching_paren(tokens, ko) + 1
-                continue
-            if to.kind == "word" and to.upper == "ORDER":
-                jo = _significant(tokens, ko)
-                if jo != -1 and tokens[jo].upper == "BY":
-                    o_end = _clause_end(tokens, jo + 1, _CLAUSE_BOUNDARY, end)
-                    for x in range(jo + 1, o_end):
-                        if _agg_call_at(tokens, x, o_end) != -1:
-                            orderby_has_agg = True
-                            break
-                    ko = o_end
-                    continue
-            ko += 1
+        having_has_agg, orderby_has_agg = (
+            w in clauses and any(
+                _agg_call_at(ctx, x, clauses[w].hi) != -1
+                for x in range(clauses[w].lo, clauses[w].hi)
+            ) for w in ("HAVING", "ORDER")
+        )
         if not (block_has_group or has_agg or having_has_agg
                 or orderby_has_agg):
             continue
         # aggregation without a FROM clause (SelectStmt.java:568)
-        if has_agg and from_idx >= end:
+        if has_agg and blk.from_clause is None:
             raise ImpalaUnsupportedError(
                 "aggregation without a FROM clause is not allowed"
             )
         # SELECT DISTINCT cannot be combined with the aggregation path
         # (SelectStmt.java:571-578)
-        if is_distinct:
+        if blk.distinct:
             raise ImpalaUnsupportedError(
                 "cannot combine SELECT DISTINCT with aggregate functions "
                 "or GROUP BY"
             )
-        items = _split_top_level_commas(tokens, list_start, from_idx)
         # '*' select item with grouping or aggregation
         # (SelectStmt.java:583-591); the HAVING-only path doesn't trip it
         if block_has_group or has_agg:
@@ -1734,7 +1549,7 @@ def _check_strict_ungrouped_select(ctx: _Analysis) -> None:
                     "expressions: " + _frag_sql(tokens, ia, ib)
                 )
             for x in range(ia, ib):
-                if _agg_call_at(tokens, x, ib) != -1:
+                if _agg_call_at(ctx, x, ib) != -1:
                     raise ImpalaUnsupportedError(
                         "GROUP BY expression must not contain aggregate "
                         "functions: " + untokenize(tokens[ga:gb]).strip()
@@ -1781,7 +1596,7 @@ def _check_strict_ungrouped_select(ctx: _Analysis) -> None:
                         hd = _significant(tokens, x)
                         if hd != -1 and tokens[hd].kind == "word" \
                                 and tokens[hd].upper == "SELECT":
-                            x = _matching_paren(tokens, x) + 1
+                            x = ctx.close(x) + 1
                             continue
                         x += 1
                         continue
@@ -1789,9 +1604,9 @@ def _check_strict_ungrouped_select(ctx: _Analysis) -> None:
                         j2 = _significant(tokens, x)
                         if j2 != -1 and j2 < b and tokens[j2].kind == "op" \
                                 and tokens[j2].text == "(":
-                            x = _matching_paren(tokens, j2) + 1
+                            x = ctx.close(j2) + 1
                             continue
-                    close_agg = _agg_call_at(tokens, x, b)
+                    close_agg = _agg_call_at(ctx, x, b)
                     if close_agg != -1:
                         x = close_agg + 1
                         continue
@@ -1822,7 +1637,7 @@ def _check_strict_ungrouped_select(ctx: _Analysis) -> None:
                     # somewhere (otherwise the bare-column rule below
                     # owns the verdict and its suffix)
                     has_inner_agg = any(
-                        _agg_call_at(tokens, x2, b) != -1
+                        _agg_call_at(ctx, x2, b) != -1
                         for x2 in range(a, b)
                     )
                     if has_inner_agg:
@@ -1898,130 +1713,99 @@ def _check_strict_ungrouped_select(ctx: _Analysis) -> None:
                     prev = tokens[sig[-2]]
                     if not (prev.kind == "op" and prev.text == "."):
                         aliases.add(last.text.strip("`").lower())
-        k = from_idx
-        while k < end:
-            t = tokens[k]
-            if t.kind == "op" and t.text == "(":
-                k = _matching_paren(tokens, k) + 1
-                continue
-            if t.kind == "word" and t.upper == "HAVING" and (block_has_group or has_agg):
-                # SelectStmt.java:746-752: every slot in the HAVING
-                # predicate must bind to the aggregation output. Token
-                # subset: bare (possibly dotted) column refs outside
-                # aggregate calls must appear in GROUP BY (full text or
-                # last path segment) or be select-list aliases.
-                h_end = _clause_end(tokens, k + 1, _CLAUSE_BOUNDARY, end)
-                grp = group_exprs or set()
-                grp_last = {g.rsplit(".", 1)[-1] for g in grp}
-                j2 = k + 1
-                while j2 < h_end:
-                    t2 = tokens[j2]
-                    if t2.kind == "op" and t2.text == "(":
-                        j2 = _matching_paren(tokens, j2) + 1
-                        continue
-                    close = _agg_call_at(tokens, j2, h_end)
-                    if close != -1:
-                        j2 = close + 1  # agg-call contents always bind
-                        continue
-                    if t2.kind in ("word", "bident"):
-                        if t2.kind == "word" and (
-                            t2.upper in _NON_OPERAND_WORDS
-                            or t2.upper in (
-                                "NULL", "TRUE", "FALSE", "END", "EXISTS",
-                                "INTERVAL", "CAST", "ESCAPE", "UNKNOWN",
-                            )
-                        ):
-                            j2 += 1
-                            continue
-                        nxt = _significant(tokens, j2)
-                        if nxt != -1 and nxt < h_end and tokens[nxt].kind == "op" and tokens[nxt].text == "(":
-                            j2 += 1  # function name, args checked in place
-                            continue
-                        prev = _significant(tokens, j2, -1)
-                        if prev != -1 and tokens[prev].kind == "op" and tokens[prev].text == ".":
-                            j2 += 1  # path tail, handled at its head
-                            continue
-                        # consume the dotted path from its head
-                        parts = [t2.text.strip("`").lower()]
-                        p = _significant(tokens, j2)
-                        while (
-                            p != -1 and p < h_end
-                            and tokens[p].kind == "op" and tokens[p].text == "."
-                        ):
-                            p2 = _significant(tokens, p)
-                            if p2 == -1 or tokens[p2].kind not in ("word", "bident"):
-                                break
-                            parts.append(tokens[p2].text.strip("`").lower())
-                            p = _significant(tokens, p2)
-                        full_ref = ".".join(parts)
-                        if not (
-                            full_ref in grp
-                            or parts[-1] in grp_last
-                            or parts[-1] in aliases
-                        ):
-                            raise ImpalaUnsupportedError(
-                                "HAVING clause not produced by aggregation "
-                                "output (missing from GROUP BY clause?): "
-                                + untokenize(tokens[k + 1:h_end]).strip()
-                            )
-                        j2 = (p if p != -1 else h_end)
-                        continue
-                    j2 += 1
-                k = h_end
-                continue
-            if t.kind == "word" and t.upper == "ORDER":
-                j = _significant(tokens, k)
-                if j == -1 or tokens[j].upper != "BY":
-                    k += 1
+        c = clauses.get("HAVING")
+        if c is not None and (block_has_group or has_agg):
+            # SelectStmt.java:746-752: every slot in the HAVING
+            # predicate must bind to the aggregation output. Token
+            # subset: bare (possibly dotted) column refs outside
+            # aggregate calls must appear in GROUP BY (full text or
+            # last path segment) or be select-list aliases.
+            h_end = c.hi
+            grp = group_exprs or set()
+            grp_last = {g.rsplit(".", 1)[-1] for g in grp}
+            j2 = c.lo
+            while j2 < h_end:
+                t2 = tokens[j2]
+                if _is_open(tokens, j2):
+                    j2 = ctx.close(j2) + 1
                     continue
-                o_end = j + 1
-                d = 0
-                while o_end < end:
-                    tg = tokens[o_end]
-                    if tg.kind == "op" and tg.text == "(":
-                        d += 1
-                    elif tg.kind == "op" and tg.text == ")":
-                        d -= 1
-                        if d < 0:
-                            break
-                    elif d == 0 and tg.kind == "word" and tg.upper in ("LIMIT", "OFFSET", "UNION"):
-                        break
-                    o_end += 1
-                for a, b in _split_top_level_commas(tokens, j + 1, o_end):
-                    sig = [
-                        x for x in range(a, b)
-                        if tokens[x].kind not in ("ws", "line_comment", "block_comment")
-                    ]
-                    # strip ASC/DESC and NULLS FIRST/LAST suffixes
-                    while sig and tokens[sig[-1]].kind == "word" and tokens[sig[-1]].upper in (
-                        "ASC", "DESC", "FIRST", "LAST", "NULLS"
+                close = _agg_call_at(ctx, j2, h_end)
+                if close != -1:
+                    j2 = close + 1  # agg-call contents always bind
+                    continue
+                if t2.kind in ("word", "bident"):
+                    if t2.kind == "word" and (
+                        t2.upper in _NON_OPERAND_WORDS
+                        or t2.upper in (
+                            "NULL", "TRUE", "FALSE", "END", "EXISTS",
+                            "INTERVAL", "CAST", "ESCAPE", "UNKNOWN",
+                        )
                     ):
-                        sig = sig[:-1]
-                    if not sig:
+                        j2 += 1
                         continue
-                    col = _bare_column_of(tokens, sig[0], sig[-1] + 1)
-                    if col is None or col in aliases:
+                    nxt = _significant(tokens, j2)
+                    if nxt != -1 and nxt < h_end and _is_open(tokens, nxt):
+                        j2 += 1  # function name, args checked in place
                         continue
-                    if group_exprs and re.sub(r"\s+", "", col) in group_exprs:
+                    prev = _significant(tokens, j2, -1)
+                    if prev != -1 and tokens[prev].kind == "op" and tokens[prev].text == ".":
+                        j2 += 1  # path tail, handled at its head
                         continue
-                    raise ImpalaUnsupportedError(
-                        "ORDER BY expression not produced by aggregation output "
-                        f"(missing from GROUP BY clause?): {untokenize(tokens[sig[0]:sig[-1] + 1]).strip()}"
-                    )
-                k = o_end
+                    # consume the dotted path from its head
+                    parts = [t2.text.strip("`").lower()]
+                    p = _significant(tokens, j2)
+                    while (
+                        p != -1 and p < h_end
+                        and tokens[p].kind == "op" and tokens[p].text == "."
+                    ):
+                        p2 = _significant(tokens, p)
+                        if p2 == -1 or tokens[p2].kind not in ("word", "bident"):
+                            break
+                        parts.append(tokens[p2].text.strip("`").lower())
+                        p = _significant(tokens, p2)
+                    full_ref = ".".join(parts)
+                    if not (
+                        full_ref in grp
+                        or parts[-1] in grp_last
+                        or parts[-1] in aliases
+                    ):
+                        raise ImpalaUnsupportedError(
+                            "HAVING clause not produced by aggregation "
+                            "output (missing from GROUP BY clause?): "
+                            + untokenize(tokens[c.lo:h_end]).strip()
+                        )
+                    j2 = (p if p != -1 else h_end)
+                    continue
+                j2 += 1
+        c = clauses.get("ORDER")
+        for sig in c.items(tokens) if c is not None else ():
+            col = _bare_column_of(tokens, sig[0], sig[-1] + 1)
+            if col is None or col in aliases:
                 continue
-            k += 1
+            if group_exprs and re.sub(r"\s+", "", col) in group_exprs:
+                continue
+            raise ImpalaUnsupportedError(
+                "ORDER BY expression not produced by aggregation output "
+                f"(missing from GROUP BY clause?): {untokenize(tokens[sig[0]:sig[-1] + 1]).strip()}"
+            )
 
 
 def _check_strict_limit_offset(ctx: _Analysis) -> None:
     """Impala's LIMIT/OFFSET analysis (QueryStmt.java:162-165,
     LimitElement.java:167-169): OFFSET requires ORDER BY in the same
     block; LIMIT/OFFSET literals must be non-negative."""
-    tokens, depth_at = ctx.tokens, ctx.depth_at
-    for idx, t in enumerate(tokens):
-        if t.kind != "word" or t.upper not in ("LIMIT", "OFFSET"):
-            continue
-        d0 = depth_at[idx]
+    tokens = ctx.tokens
+    arms = {b.sel for so in ctx.setops for b in so.blocks if b is not None}
+    # each LIMIT / OFFSET with its query's clauses, and whether the query
+    # is nested: in parens, or a union operand
+    found = sorted((
+        (c.at, cl, nested) for cl, nested in [
+            (b.clauses, b.depth > 0 or b.sel in arms) for b in ctx.blocks
+        ] + [(so.clauses, so.depth > 0) for so in ctx.setops]
+        for w, c in cl.items() if w in ("LIMIT", "OFFSET")
+    ), key=lambda x: x[0])
+    for idx, clauses, nested in found:
+        word = tokens[idx].upper
         j = _significant(tokens, idx)
         # negative literal check
         if j != -1 and tokens[j].kind == "op" and tokens[j].text == "-":
@@ -2029,13 +1813,13 @@ def _check_strict_limit_offset(ctx: _Analysis) -> None:
             if k2 != -1 and tokens[k2].kind == "number":
                 v = f"-{tokens[k2].text}"
                 raise ImpalaUnsupportedError(
-                    f"{t.upper} must be a non-negative integer: {v} = {v}"
+                    f"{word} must be a non-negative integer: {v} = {v}"
                 )
         # wrong-type / non-constant operands (LimitElement.java:108-136
         # exact texts)
         if j != -1 and tokens[j].kind == "string":
             raise ImpalaUnsupportedError(
-                f"{t.upper} expression must be an integer type but is "
+                f"{word} expression must be an integer type but is "
                 f"'STRING': {tokens[j].text}"
             )
         if j != -1 and tokens[j].kind == "number" and "." in tokens[j].text:
@@ -2043,85 +1827,53 @@ def _check_strict_limit_offset(ctx: _Analysis) -> None:
             scale = len(tokens[j].text.split(".")[1])
             dec = f"DECIMAL({max(len(digits), scale)},{scale})"
             raise ImpalaUnsupportedError(
-                f"{t.upper} expression must be an integer type but is "
+                f"{word} expression must be an integer type but is "
                 f"'{dec}': {tokens[j].text}"
             )
         if (
             j != -1
             and tokens[j].kind in ("word", "bident")
             and tokens[j].upper not in ("NULL", "TRUE", "FALSE")
+            and not _is_open(tokens, _significant(tokens, j))
         ):
             # a bare identifier (column ref) is not a constant expression;
             # function calls are left to the engine (may be const-foldable)
-            after = _significant(tokens, j)
-            if not (after != -1 and tokens[after].kind == "op" and tokens[after].text == "("):
-                raise ImpalaUnsupportedError(
-                    f"{t.upper} expression must be a constant expression: "
-                    f"{tokens[j].text}"
-                )
-        if t.upper != "OFFSET":
+            raise ImpalaUnsupportedError(
+                f"{word} expression must be a constant expression: "
+                f"{tokens[j].text}"
+            )
+        if word != "OFFSET":
             continue
-        # OFFSET: require an ORDER at the same depth earlier in the block
-        has_order = False
-        for k2 in range(idx - 1, -1, -1):
-            if depth_at[k2] < d0:
-                break  # left the block
-            tk = tokens[k2]
-            if depth_at[k2] == d0 and tk.kind == "word" and tk.upper == "ORDER":
-                has_order = True
-                break
-        if not has_order:
-            # reconstruct the limit element text for the pinned message
-            start = idx
-            for k2 in range(idx - 1, -1, -1):
-                if depth_at[k2] < d0:
-                    break
-                if depth_at[k2] == d0 and tokens[k2].kind == "word" and tokens[k2].upper == "LIMIT":
-                    start = k2
-                    break
-            end = _significant(tokens, idx)
-            end = end if end != -1 else idx
+        limit = clauses.get("LIMIT")
+        if "ORDER" not in clauses:
+            # the reference quotes toSql (uppercase keywords):
+            # "OFFSET requires an ORDER BY clause: OFFSET 5"
+            start = limit.at if limit is not None and limit.at < idx else idx
             raise ImpalaUnsupportedError(
                 "OFFSET requires an ORDER BY clause: "
-                # the reference quotes toSql (uppercase keywords):
-                # "OFFSET requires an ORDER BY clause: OFFSET 5"
-                + _expr_to_sql(untokenize(tokens[start:end + 1]).strip())
+                + _expr_to_sql(untokenize(tokens[start:max(j, idx) + 1]).strip())
             )
-        # OFFSET without LIMIT inside a nested query (a union operand or
-        # parenthesized subquery) — QueryStmt.java:162-165
-        has_limit = False
-        pv = _significant(tokens, idx, -1)
-        if pv != -1 and tokens[pv].kind == "number":
-            pv2 = _significant(tokens, pv, -1)
-            if pv2 != -1 and tokens[pv2].kind == "word" \
-                    and tokens[pv2].upper == "LIMIT":
-                has_limit = True
-        if not has_limit:
-            # nested = inside parens, or belonging to a union operand
-            # (a depth-0 UNION follows it); the statement-level ORDER BY
-            # after the LAST operand is not nested
-            nested = depth_at[idx] > 0 or any(
-                tk.kind == "word" and tk.upper == "UNION"
-                and depth_at[k3] == 0
-                for k3, tk in enumerate(tokens[idx + 1:], idx + 1)
+        # OFFSET without LIMIT in a nested query (QueryStmt.java:162-165);
+        # the ORDER BY after a top-level union's last operand is not
+        # nested
+        if limit is None and nested:
+            raise ImpalaUnsupportedError(
+                "Order-by with offset without limit not supported "
+                "in nested queries."
             )
-            if nested:
-                raise ImpalaUnsupportedError(
-                    "Order-by with offset without limit not supported "
-                    "in nested queries."
-                )
 
 
-def _agg_call_at(tokens: list[Token], k: int, end: int) -> int:
-    """If tokens[k] starts a plain aggregate call (agg name + '(' with no
+def _agg_call_at(ctx: _Analysis, k: int, end: int) -> int:
+    """If token k starts a plain aggregate call (agg name + '(' with no
     trailing OVER), return the index of its closing paren; else -1."""
+    tokens = ctx.tokens
     t = tokens[k]
     if t.kind != "word" or t.upper.lower() not in _AGG_FUNC_NAMES:
         return -1
     j = _significant(tokens, k)
     if j == -1 or j >= end or tokens[j].kind != "op" or tokens[j].text != "(":
         return -1
-    close = _matching_paren(tokens, j)
+    close = ctx.close(j)
     after = _significant(tokens, close)
     if (
         after != -1 and after < end
@@ -2136,88 +1888,37 @@ def _check_strict_group_by_exprs(ctx: _Analysis) -> None:
     expressions must not contain aggregates or analytic expressions, and
     '*' in the select list cannot be combined with grouping."""
     tokens = ctx.tokens
-    for idx, t in enumerate(tokens):
-        if t.kind != "word" or t.upper != "GROUP":
+    for blk in ctx.blocks:
+        c = blk.clauses.get("GROUP")
+        if c is None:
             continue
-        j = _significant(tokens, idx)
-        if j == -1 or tokens[j].upper != "BY":
-            continue
-        end = _clause_end(tokens, j + 1, _CLAUSE_BOUNDARY)
-        # '*' with grouping: this block's select list
-        blk = ctx.block_at(idx)
-        if blk is not None:
-            sel, from_i = blk.sel, min(blk.from_idx, idx)
-            d3 = 0
-            for s in range(sel + 1, from_i):
-                ts = tokens[s]
-                if ts.kind == "op" and ts.text == "(":
-                    d3 += 1
-                elif ts.kind == "op" and ts.text == ")":
-                    d3 -= 1
-                elif d3 == 0 and ts.kind == "op" and ts.text == "*":
-                    prev = [
-                        x for x in range(sel + 1, s)
-                        if tokens[x].kind not in ("ws", "line_comment", "block_comment")
-                    ]
-                    # `t.*` is fine; `a * b` (an operand before *) is
-                    # arithmetic; bare `*` combined with grouping is not.
-                    if prev:
-                        tp = tokens[prev[-1]]
-                        if tp.kind == "op" and tp.text == ".":
-                            continue
-                        if tp.kind == "word" and tp.upper in ("DISTINCT", "ALL"):
-                            pass  # SELECT DISTINCT * — still a bare star
-                        elif tp.kind in ("word", "number", "string", "bident") or (
-                            tp.kind == "op" and tp.text == ")"
-                        ):
-                            continue  # multiplication operand
-                    raise ImpalaUnsupportedError(
-                        "cannot combine '*' in select list with grouping or "
-                        "aggregation"
-                    )
+        end = c.hi
+        # '*' with grouping: a bare star item (`t.*` is fine)
+        if any(_is_star(tokens, a, b) for a, b in blk.items):
+            raise ImpalaUnsupportedError(
+                "cannot combine '*' in select list with grouping or "
+                "aggregation"
+            )
         # aggregates / analytics inside the grouping expressions
-        k = j + 1
+        k = c.lo
         while k < end:
-            tk = tokens[k]
-            if tk.kind == "op" and tk.text == "(":
-                nxt = _significant(tokens, k)
-                if nxt != -1 and tokens[nxt].kind == "word" and tokens[nxt].upper == "SELECT":
-                    k = _matching_paren(tokens, k) + 1
-                    continue
-            if tk.kind == "word" and tk.upper.lower() in _ANALYTIC_FUNC_NAMES:
-                j2 = _significant(tokens, k)
-                if j2 != -1 and j2 < end and tokens[j2].kind == "op" and tokens[j2].text == "(":
-                    close = _matching_paren(tokens, j2)
-                    after = _significant(tokens, close)
-                    if (
-                        after != -1 and after < end
-                        and tokens[after].kind == "word" and tokens[after].upper == "OVER"
-                    ):
-                        op = _significant(tokens, after)
-                        stop = _matching_paren(tokens, op) if (
-                            op != -1 and tokens[op].kind == "op" and tokens[op].text == "("
-                        ) else after
-                        raise ImpalaUnsupportedError(
-                            "GROUP BY expression must not contain analytic expressions: "
-                            + _frag_sql(tokens, k, stop + 1)
-                        )
-            if tk.kind == "word" and tk.upper.lower() in _AGG_FUNC_NAMES:
-                j2 = _significant(tokens, k)
-                if j2 != -1 and j2 < end and tokens[j2].kind == "op" and tokens[j2].text == "(":
-                    close = _matching_paren(tokens, j2)
-                    after = _significant(tokens, close)
-                    if (
-                        after != -1 and after < end
-                        and tokens[after].kind == "word" and tokens[after].upper == "OVER"
-                    ):
-                        op = _significant(tokens, after)
-                        stop = _matching_paren(tokens, op) if (
-                            op != -1 and tokens[op].kind == "op" and tokens[op].text == "("
-                        ) else after
-                        raise ImpalaUnsupportedError(
-                            "GROUP BY expression must not contain analytic expressions: "
-                            + _frag_sql(tokens, k, stop + 1)
-                        )
+            j = _significant(tokens, k)
+            if _is_open(tokens, k) and _word_at(tokens, j) == "SELECT":
+                k = ctx.close(k) + 1
+                continue
+            fn = tokens[k].text.lower() if tokens[k].kind == "word" else None
+            if (fn in _ANALYTIC_FUNC_NAMES or fn in _AGG_FUNC_NAMES) \
+                    and j < end and _is_open(tokens, j):
+                close = ctx.close(j)
+                after = _significant(tokens, close)
+                if after < end and _word_at(tokens, after) == "OVER":
+                    op = _significant(tokens, after)
+                    stop = ctx.close(op) if _is_open(tokens, op) else after
+                    raise ImpalaUnsupportedError(
+                        "GROUP BY expression must not contain analytic expressions: "
+                        + _frag_sql(tokens, k, stop + 1)
+                    )
+                if fn in _AGG_FUNC_NAMES:
                     raise ImpalaUnsupportedError(
                         "GROUP BY expression must not contain aggregate functions: "
                         + untokenize(tokens[k:close + 1]).strip()
@@ -2243,9 +1944,9 @@ def _check_strict_distinct_agg_params(ctx: _Analysis) -> None:
                     nxt != -1 and tokens[nxt].kind == "word"
                     and tokens[nxt].upper == "SELECT"
                 ):
-                    k = _matching_paren(tokens, k) + 1
+                    k = ctx.close(k) + 1
                     continue
-            close = _agg_call_at(tokens, k, end)
+            close = _agg_call_at(ctx, k, end)
             if close == -1:
                 k += 1
                 continue
@@ -2297,7 +1998,7 @@ def _check_strict_nested_aggs(ctx: _Analysis) -> None:
     tokens = ctx.tokens
     n = len(tokens)
     for k in range(n):
-        close = _agg_call_at(tokens, k, n)
+        close = _agg_call_at(ctx, k, n)
         if close == -1:
             continue
         j = _significant(tokens, k)  # the '('
@@ -2307,9 +2008,9 @@ def _check_strict_nested_aggs(ctx: _Analysis) -> None:
             if ti.kind == "op" and ti.text == "(":
                 nxt = _significant(tokens, i)
                 if nxt != -1 and tokens[nxt].kind == "word" and tokens[nxt].upper == "SELECT":
-                    i = _matching_paren(tokens, i) + 1
+                    i = ctx.close(i) + 1
                     continue
-            inner_close = _agg_call_at(tokens, i, close)
+            inner_close = _agg_call_at(ctx, i, close)
             if inner_close != -1:
                 raise ImpalaUnsupportedError(
                     "aggregate function must not contain aggregate parameters: "
@@ -2362,7 +2063,7 @@ def _check_strict_interval_units(ctx: _Analysis) -> None:
         if j == -1:
             continue
         if tokens[j].kind == "op" and tokens[j].text == "(":
-            j = _matching_paren(tokens, j)
+            j = ctx.close(j)
         elif tokens[j].kind not in ("number", "string"):
             continue
         u = _significant(tokens, j)
@@ -2402,7 +2103,7 @@ def _check_strict_interval_units(ctx: _Analysis) -> None:
                     if name_i != -1 and tokens[name_i].kind == "word" and tokens[
                         name_i
                     ].upper in ("DATE_ADD", "DATE_SUB", "ADDDATE", "SUBDATE"):
-                        close_p = _matching_paren(tokens, open_p)
+                        close_p = ctx.close(open_p)
                         frag = _frag_sql(tokens, name_i, close_p + 1)
                         fn_len = len(tokens[name_i].text)
                         rendered = frag[:fn_len].upper() + frag[fn_len:]
@@ -2568,10 +2269,11 @@ def _subquery_clearly_multi_row(ctx: _Analysis, s: _Subquery) -> bool:
     UDA, and aggregation/analytics route to the StmtRewriter error
     family instead). Correlated subqueries are left to the correlation
     checks — only uncorrelated ones count."""
-    if not s.has("FROM") or s.has("GROUP") or s.limit == "1" \
-            or s.correlation != "none":
-        return False
     tokens = ctx.tokens
+    limit = s.clauses("LIMIT")
+    if not s.has("FROM") or s.has("GROUP") or s.correlation != "none" \
+            or limit and tokens[_significant(tokens, limit[0].at)].text == "1":
+        return False
     for k in range(s.open + 1, s.close):
         tk = tokens[k]
         if tk.kind != "word":
@@ -2686,7 +2388,7 @@ def _check_strict_subquery_predicates(ctx: _Analysis) -> None:
         ):
             continue
         # qualified star in the select list
-        for k in range(s.items[0][0], s.items[-1][1]):
+        for k in range(s.block.items[0][0], s.block.items[-1][1]):
             if depth_at[k] != depth_at[s.open] \
                     or tokens[k].kind not in ("word", "bident"):
                 continue
@@ -2698,17 +2400,10 @@ def _check_strict_subquery_predicates(ctx: _Analysis) -> None:
                     "Could not resolve star expression: "
                     f"'{untokenize(tokens[k:n2 + 1]).strip()}'"
                 )
-        # qualified refs inside GROUP BY / ORDER BY regions: each runs to
-        # the next top-level LIMIT, OFFSET, HAVING, UNION, ORDER or GROUP
-        for x, (k, w) in enumerate(s.top):
-            by = _significant(tokens, k)
-            if w not in ("GROUP", "ORDER") or _word_at(tokens, by) != "BY":
-                continue
-            end = next((
-                k2 for k2, w2 in s.top[x + 1:]
-                if w2 in ("LIMIT", "OFFSET", "HAVING", "UNION", "ORDER", "GROUP")
-            ), s.close)
-            for m in range(by + 1, end):
+        # qualified refs inside its GROUP BY / ORDER BY clauses
+        for c in s.clauses("GROUP", "ORDER"):
+            end = c.hi
+            for m in range(c.lo, end):
                 if _dotted_root_at(tokens, m, end) in {None, *s.scope}:
                     continue
                 # the dotted path as written
@@ -2879,7 +2574,7 @@ def _check_strict_duplicate_aliases(ctx: _Analysis) -> None:
             if j != -1 and tokens[j].kind == "op" and tokens[j].text == "(":
                 nxt = _significant(tokens, j)
                 if nxt != -1 and tokens[nxt].upper != "SELECT":
-                    j = _significant(tokens, _matching_paren(tokens, j))  # (cols)
+                    j = _significant(tokens, ctx.close(j))  # (cols)
             if j == -1 or tokens[j].kind != "word" or tokens[j].upper != "AS":
                 break
             body = _significant(tokens, j)
@@ -2888,7 +2583,7 @@ def _check_strict_duplicate_aliases(ctx: _Analysis) -> None:
             if name in seen:
                 raise ImpalaUnsupportedError(f"Duplicate table alias: '{name}'")
             seen.add(name)
-            after = _significant(tokens, _matching_paren(tokens, body))
+            after = _significant(tokens, ctx.close(body))
             if after == -1 or tokens[after].text != ",":
                 break
             k = _significant(tokens, after)
@@ -2970,11 +2665,11 @@ def _scalar_subquery_type(ctx: _Analysis, s: _Subquery | None) -> str | None:
             or _significant(tokens, ctx.close_of[call]) != f.at \
             or not f.sources or any(
                 src.join_idx != -1 or src.kind == "view" for src in f.sources
-            ) or any(w in ("WHERE", "GROUP", "HAVING", "UNION") for _, w in s.top):
+            ) or s.words & {"WHERE", "GROUP", "HAVING", "UNION"}:
         return None
     if fn in ("count", "ndv"):
         return "BIGINT"
-    if len(s.top) != 1:
+    if s.words != {"FROM"}:
         return None  # ORDER BY / LIMIT after the refs
     col = [
         x for x in range(call + 1, ctx.close_of[call])
@@ -3032,8 +2727,7 @@ def _check_strict_analytic_exprs(ctx: _Analysis) -> None:
     # substitution (AnalyticExpr.java:539)
     analytic_aliases: set[str] = set()
     for blk in ctx.blocks:
-        sel_idx, from_idx = blk.sel, blk.from_idx
-        for a, b in _split_top_level_commas(tokens, sel_idx + 1, from_idx):
+        for a, b in blk.items:
             if not any(
                 tokens[x].kind == "word" and tokens[x].upper == "OVER"
                 for x in range(a, b)
@@ -3058,7 +2752,7 @@ def _check_strict_analytic_exprs(ctx: _Analysis) -> None:
         spec_open = _significant(tokens, idx)
         if spec_open == -1 or tokens[spec_open].text != "(":
             continue
-        spec_close = _matching_paren(tokens, spec_open)
+        spec_close = ctx.close(spec_open)
         args_close = _significant(tokens, idx, -1)
         if args_close == -1 or tokens[args_close].text != ")":
             continue
@@ -3171,22 +2865,13 @@ def _check_strict_analytic_exprs(ctx: _Analysis) -> None:
         # an ORDER BY analytic whose spec references a select-list alias
         # bound to another analytic nests after alias substitution
         if analytic_aliases:
-            # is this call inside a statement-level ORDER BY clause?
-            in_order_by = False
-            for b in range(name_idx - 1, -1, -1):
-                tb = tokens[b]
-                if tb.kind != "word":
-                    continue
-                if tb.upper == "BY":
-                    p2 = _significant(tokens, b, -1)
-                    if p2 != -1 and tokens[p2].kind == "word" \
-                            and tokens[p2].upper == "ORDER":
-                        in_order_by = True
-                    break
-                if tb.upper in ("SELECT", "FROM", "WHERE", "HAVING",
-                                "GROUP", "OVER", "LIMIT"):
-                    break
-            if in_order_by:
+            # is this call inside a query's ORDER BY clause?
+            if any(
+                c.lo <= name_idx < c.hi
+                for cl in [b.clauses for b in ctx.blocks]
+                + [u.clauses for u in ctx.setops]
+                if (c := cl.get("ORDER")) is not None
+            ):
                 for k in range(spec_open + 1, spec_close):
                     tk = tokens[k]
                     if tk.kind not in ("word", "bident"):
@@ -3610,10 +3295,11 @@ def _check_window_frame(
                 )
 
 
-def _countable_select_items(tokens: list[Token], list_start: int, from_idx: int) -> int:
-    """Number of select-list items, or -1 if uncountable (contains a star
+def _countable_select_items(
+    tokens: list[Token], items: list[tuple[int, int]],
+) -> int:
+    """Number of select items, or -1 if uncountable (contains a star
     expansion whose width depends on the schema)."""
-    items = _split_top_level_commas(tokens, list_start, from_idx)
     for a, b in items:
         d = 0
         for k in range(a, b):
@@ -3628,24 +3314,30 @@ def _countable_select_items(tokens: list[Token], list_start: int, from_idx: int)
                     tokens[prev].kind == "op" and tokens[prev].text == "."
                 ):
                     return -1  # `*` or `t.*`
-                if tokens[prev].kind == "word" and tokens[prev].upper in ("DISTINCT", "ALL"):
-                    return -1
     return len(items)
 
 
-def _star_list_width(ctx: _Analysis, blk: _Block, list_start: int) -> int:
+def _is_star(tokens: list[Token], a: int, b: int) -> bool:
+    """Whether tokens[a:b] is exactly `*`."""
+    sig = [
+        k for k in range(a, b)
+        if tokens[k].kind not in ("ws", "line_comment", "block_comment")
+    ]
+    return len(sig) == 1 and tokens[sig[0]].kind == "op" \
+        and tokens[sig[0]].text == "*"
+
+
+def _is_star_list(tokens: list[Token], blk: _Block) -> bool:
+    """Whether block blk's select list is exactly `*`."""
+    return _is_star(tokens, blk.items[0][0], blk.items[-1][1])
+
+
+def _star_list_width(ctx: _Analysis, blk: _Block) -> int:
     """Expanded width of a select list that is exactly `*`, when every
     FROM source is countable: a cataloged table contributes its scalar
     columns, a single inline view its select-item count. -1 = unknown."""
     tokens = ctx.tokens
-    sig = [
-        k for k in range(list_start, blk.from_idx)
-        if tokens[k].kind not in ("ws", "line_comment", "block_comment")
-    ]
-    if not (
-        len(sig) == 1
-        and tokens[sig[0]].kind == "op" and tokens[sig[0]].text == "*"
-    ):
+    if not _is_star_list(tokens, blk):
         return -1
     amap, unknown, _names = ctx.catalog_sources(blk.from_clause)
     total = 0
@@ -3670,40 +3362,18 @@ def _star_list_width(ctx: _Analysis, blk: _Block, list_start: int) -> int:
     nxt = _significant(tokens, src.alias_idx)
     if nxt != -1 and nxt < f.end:
         return -1  # joins after the view: give up
-    inner_sel = _significant(tokens, src.lo)
-    if inner_sel == -1 or tokens[inner_sel].kind != "word" \
-            or tokens[inner_sel].upper != "SELECT":
-        return -1
-    close = src.hi
-    inner_from = len(tokens)
-    d = 0
-    for x in range(inner_sel + 1, close):
-        tx = tokens[x]
-        if tx.kind == "op" and tx.text == "(":
-            d += 1
-        elif tx.kind == "op" and tx.text == ")":
-            d -= 1
-        elif d == 0 and tx.kind == "word" and tx.upper == "FROM":
-            inner_from = x
-            break
-    ls = _significant(tokens, inner_sel)
-    if ls == -1:
-        return -1
-    if tokens[ls].kind == "word" and tokens[ls].upper in ("DISTINCT", "ALL"):
-        ls = _significant(tokens, ls)
-    return _countable_select_items(tokens, ls, min(inner_from, close))
+    inner = ctx.block_of(_significant(tokens, src.lo))
+    return -1 if inner is None else _countable_select_items(tokens, inner.items)
 
 
 def _select_item_labels(
-    tokens: list[Token], list_start: int, from_idx: int,
+    tokens: list[Token], items: list[tuple[int, int]],
 ) -> list[tuple[str, str]]:
     """(label, normalized expr text) per select item: explicit alias
     (with or without AS), else the bare column path's last part, else
     the positional _cN label Impala assigns unnamed exprs."""
     labels: list[tuple[str, str]] = []
-    for pos, (a, b) in enumerate(
-        _split_top_level_commas(tokens, list_start, from_idx)
-    ):
+    for pos, (a, b) in enumerate(items):
         sig = [
             k for k in range(a, b)
             if tokens[k].kind not in ("ws", "line_comment", "block_comment")
@@ -3760,80 +3430,33 @@ def _check_strict_label_ambiguity(ctx: _Analysis) -> None:
     that is a single identifier matching SEVERAL select-list labels is
     ambiguous ("Column 'a' in ORDER BY clause is ambiguous")."""
     tokens = ctx.tokens
-    n = len(tokens)
-    for blk in ctx.blocks:
-        sel_idx, from_idx, end = blk.sel, blk.from_idx, blk.end
-        list_start = _significant(tokens, sel_idx)
-        if list_start == -1:
-            continue
-        if tokens[list_start].kind == "word" and tokens[list_start].upper in (
-            "DISTINCT", "ALL",
-        ):
-            list_start = _significant(tokens, list_start)
-        labels = _select_item_labels(tokens, list_start, from_idx)
+    for blk, c in ctx.sorts():
+        labels = _select_item_labels(tokens, blk.items)
         # a duplicated label is ambiguous iff it names DIFFERENT exprs
         # (QueryStmt.getFirstAmbiguousAlias: identical duplicate items
-        # collapse to one slot) — except across UNION operands, where
-        # each output position is its own slot
+        # collapse to one slot) — except for a union's ORDER BY (labels
+        # from the first operand), where each output position is its
+        # own slot
         by_label: dict[str, set[str]] = {}
         for lbl, expr in labels:
             by_label.setdefault(lbl, set()).add(expr)
         dup = {lbl for lbl, exprs in by_label.items() if len(exprs) > 1}
-        union_dup = {
-            lbl for lbl, _ in labels
-            if sum(1 for l2, _e in labels if l2 == lbl) > 1
-        }
-        # this block's ORDER BY / GROUP BY, plus a statement-level
-        # ORDER BY after a UNION (labels come from the first operand)
-        scan_end = end
-        if end < n and tokens[end].kind == "word" \
-                and tokens[end].upper == "UNION" and blk is ctx.blocks[0]:
-            scan_end = n
-            dup = dup | union_dup
-        if not dup:
-            continue
-        k = from_idx
-        d = 0
-        while k < scan_end:
-            t = tokens[k]
-            if t.kind == "op" and t.text == "(":
-                d += 1
-            elif t.kind == "op" and t.text == ")":
-                d -= 1
-            elif (
-                d <= 0 and t.kind == "word"
-                and t.upper in ("ORDER", "GROUP")
+        clause = tokens[c.at].upper
+        if blk.clauses.get(clause) is not c:
+            dup |= {
+                lbl for lbl, _ in labels
+                if sum(1 for l2, _e in labels if l2 == lbl) > 1
+            }
+        for sig in c.items(tokens):
+            if (
+                len(sig) == 1
+                and tokens[sig[0]].kind in ("word", "bident")
+                and tokens[sig[0]].text.strip("`").lower() in dup
             ):
-                j = _significant(tokens, k)
-                if j == -1 or tokens[j].upper != "BY":
-                    k += 1
-                    continue
-                clause = t.upper + " BY"
-                body_end = _clause_end(tokens, j + 1, _CLAUSE_BOUNDARY, scan_end)
-                for a, b in _split_top_level_commas(tokens, j + 1, body_end):
-                    sig = [
-                        x for x in range(a, b)
-                        if tokens[x].kind not in (
-                            "ws", "line_comment", "block_comment",
-                        )
-                    ]
-                    while sig and tokens[sig[-1]].kind == "word" \
-                            and tokens[sig[-1]].upper in (
-                                "ASC", "DESC", "FIRST", "LAST", "NULLS",
-                            ):
-                        sig = sig[:-1]
-                    if (
-                        len(sig) == 1
-                        and tokens[sig[0]].kind in ("word", "bident")
-                        and tokens[sig[0]].text.strip("`").lower() in dup
-                    ):
-                        raise ImpalaUnsupportedError(
-                            f"Column '{tokens[sig[0]].text.strip('`').lower()}'"
-                            f" in {clause} clause is ambiguous"
-                        )
-                k = body_end
-                continue
-            k += 1
+                raise ImpalaUnsupportedError(
+                    f"Column '{tokens[sig[0]].text.strip('`').lower()}'"
+                    f" in {clause} BY clause is ambiguous"
+                )
 
 
 def _check_strict_using_columns(ctx: _Analysis) -> None:
@@ -3909,22 +3532,12 @@ def _inline_view_labels(ctx: _Analysis, open_idx: int) -> list[str] | None:
     None when they cannot be known statically (stars, WITH, VALUES,
     unions whose first operand is unknowable)."""
     tokens = ctx.tokens
-    head = _significant(tokens, open_idx)
-    if head == -1 or tokens[head].kind != "word" \
-            or tokens[head].upper != "SELECT":
+    # a union's output labels come from operand #1
+    blk = ctx.block_of(_significant(tokens, open_idx))
+    if blk is None:
         return None
-    list_start = _significant(tokens, head)
-    if list_start == -1:
-        return None
-    if tokens[list_start].kind == "word" and tokens[list_start].upper in (
-        "DISTINCT", "ALL",
-    ):
-        list_start = _significant(tokens, list_start)
-    # the select list ends at the block's FROM or set operator — a
-    # union's output labels come from operand #1
-    inner_from = ctx.block_at(head).from_idx
     # stars make the width/labels unknowable at the token level
-    for a, b in _split_top_level_commas(tokens, list_start, inner_from):
+    for a, b in blk.items:
         for x in range(a, b):
             if tokens[x].kind == "op" and tokens[x].text == "*":
                 pv = _significant(tokens, x, -1)
@@ -3945,14 +3558,10 @@ def _inline_view_labels(ctx: _Analysis, open_idx: int) -> list[str] | None:
         if len(sig) == 1 and tokens[sig[0]].kind == "op" \
                 and tokens[sig[0]].text == "*":
             return None
-    labels = [
-        l for l, _e in _select_item_labels(tokens, list_start, inner_from)
-    ]
+    labels = [l for l, _e in _select_item_labels(tokens, blk.items)]
     # unnamed non-column items are referenceable BOTH as _cN and by
     # their toSql text (`int_col * 1`, `NOT bool_col` in backticks)
-    for pos, (a, b) in enumerate(
-        _split_top_level_commas(tokens, list_start, inner_from)
-    ):
+    for pos, (a, b) in enumerate(blk.items):
         if pos < len(labels) and labels[pos] == f"_c{pos}":
             raw = untokenize(tokens[a:b]).strip()
             raw = re.sub(r"!(?!=)\s*", "NOT ", raw)
@@ -3994,7 +3603,6 @@ def _check_strict_column_resolution(ctx: _Analysis) -> None:
 
     # per-block (alias, known labels) sources; the FROM-clause tokens
     # that name sources, aliases and USING columns are not refs
-    n = len(tokens)
     block_sources: dict[int, list[tuple[str, frozenset | None]]] = {}
     consumed: set[int] = set()
     for blk in ctx.blocks:
@@ -4025,18 +3633,9 @@ def _check_strict_column_resolution(ctx: _Analysis) -> None:
             src for anc in ctx.ancestors(blk) for src in block_sources[anc.sel]
         ]
         own_known = all(lbls is not None for _a, lbls in own)
-        list_start = _significant(tokens, sel_idx)
-        if list_start == -1:
-            continue
-        if tokens[list_start].kind == "word" and tokens[list_start].upper in (
-            "DISTINCT", "ALL", "STRAIGHT_JOIN",
-        ):
-            list_start = _significant(tokens, list_start)
-        labels_here = {
-            l for l, _e in _select_item_labels(tokens, list_start, from_idx)
-        }
+        labels_here = {l for l, _e in _select_item_labels(tokens, blk.items)}
         # exclude select-item alias tails from ref scanning
-        for a, b in _split_top_level_commas(tokens, list_start, from_idx):
+        for a, b in blk.items:
             sig = [
                 x for x in range(a, b)
                 if tokens[x].kind not in ("ws", "line_comment", "block_comment")
@@ -4057,7 +3656,7 @@ def _check_strict_column_resolution(ctx: _Analysis) -> None:
                 hd = _significant(tokens, k)
                 if hd != -1 and tokens[hd].kind == "word" \
                         and tokens[hd].upper in ("SELECT", "WITH", "VALUES"):
-                    cl2 = _matching_paren(tokens, k)
+                    cl2 = ctx.close(k)
                     k = (cl2 + 1) if cl2 != -1 else k + 1
                     continue
                 k += 1
@@ -4098,7 +3697,7 @@ def _check_strict_column_resolution(ctx: _Analysis) -> None:
                 continue
             nx = _significant(tokens, k)
             if nx != -1 and tokens[nx].kind == "op" and tokens[nx].text == "(":
-                cl2 = _matching_paren(tokens, nx)
+                cl2 = ctx.close(nx)
                 k = k + 1  # function name; args scanned normally
                 continue
             # collect the dotted path
@@ -4233,131 +3832,65 @@ def _check_strict_column_resolution(ctx: _Analysis) -> None:
             )
     # ---- top-level VALUES statements: rows can reference no slots,
     # and a trailing ORDER BY resolves against the first row's aliases
-    if ctx.word(0) == "VALUES":
-        open0 = _significant(tokens, ctx.sig[0])
-        if open0 != -1 and tokens[open0].kind == "op" \
-                and tokens[open0].text == "(":
-            outer_close = _matching_paren(tokens, open0)
-            # the group holds either one row's exprs, or `(row), (row)`
-            row_spans: list[tuple[int, int]] = []
-            if outer_close != -1:
-                outer_items = _split_top_level_commas(
-                    tokens, open0 + 1, outer_close,
+    u = next((
+        u for u in ctx.setops
+        if ctx.word(0) == "VALUES"
+        and u.arms[:1] and u.arms[0][0] == _significant(tokens, ctx.sig[0])
+    ), None)
+    if u is None:
+        return
+    # each group holds either one row's exprs, or `(row), (row)`
+    rows: list[tuple[int, int]] = []
+    for a, b in u.arms:
+        if not _is_open(tokens, _significant(tokens, a)):
+            rows.append((a + 1, b - 1))
+            continue
+        for x, y in _split_top_level_commas(tokens, a + 1, b - 1):
+            ra = _significant(tokens, x - 1)
+            if ra < y and _is_open(tokens, ra):
+                rows.append((ra + 1, ctx.close(ra)))
+    # scan all rows for identifier refs (alias tails excluded)
+    labels0: list[str] = []
+    for row, (row_a, row_b) in enumerate(rows):
+        for a, b in _split_top_level_commas(tokens, row_a, row_b):
+            sig = [
+                x for x in range(a, b)
+                if tokens[x].kind not in ("ws", "line_comment", "block_comment")
+            ]
+            if not sig:
+                continue
+            scan_hi = sig[-1] + 1
+            if (
+                len(sig) >= 2
+                and tokens[sig[-1]].kind in ("word", "bident")
+                and (
+                    _word_at(tokens, sig[-2]) == "AS"
+                    or tokens[sig[-2]].kind in ("number", "string")
+                    or tokens[sig[-2]].kind == "op" and tokens[sig[-2]].text == ")"
                 )
-                fi0 = _significant(tokens, open0)
-                if fi0 != -1 and tokens[fi0].kind == "op" \
-                        and tokens[fi0].text == "(":
-                    for a0, b0 in outer_items:
-                        ra = a0
-                        while ra < b0 and tokens[ra].kind in (
-                            "ws", "line_comment", "block_comment",
-                        ):
-                            ra += 1
-                        if ra < b0 and tokens[ra].kind == "op" \
-                                and tokens[ra].text == "(":
-                            rc = _matching_paren(tokens, ra)
-                            if rc != -1:
-                                row_spans.append((ra + 1, rc))
-                else:
-                    row_spans.append((open0 + 1, outer_close))
-            # scan all rows for identifier refs (alias tails excluded)
-            labels0: list[str] = []
-            first_row = True
-            for row_a, row_b in row_spans:
-                if True:
-                    for a, b in _split_top_level_commas(tokens, row_a, row_b):
-                        sig = [
-                            x for x in range(a, b)
-                            if tokens[x].kind not in (
-                                "ws", "line_comment", "block_comment",
-                            )
-                        ]
-                        if not sig:
-                            continue
-                        scan_hi = sig[-1] + 1
-                        if (
-                            len(sig) >= 2
-                            and tokens[sig[-1]].kind in ("word", "bident")
-                            and (
-                                (tokens[sig[-2]].kind == "word"
-                                 and tokens[sig[-2]].upper == "AS")
-                                or tokens[sig[-2]].kind in (
-                                    "number", "string",
-                                )
-                                or (tokens[sig[-2]].kind == "op"
-                                    and tokens[sig[-2]].text == ")")
-                            )
-                        ):
-                            if first_row:
-                                labels0.append(
-                                    tokens[sig[-1]].text.strip("`").lower()
-                                )
-                            scan_hi = sig[-1]
-                        for x in range(sig[0], scan_hi):
-                            tx = tokens[x]
-                            if tx.kind == "op" and tx.text == "(":
-                                x2 = _matching_paren(tokens, x)
-                                continue
-                            if tx.kind not in ("word", "bident"):
-                                continue
-                            if tx.kind == "word" \
-                                    and tx.upper in _RESOLVER_SKIP_WORDS:
-                                continue
-                            nx3 = _significant(tokens, x)
-                            if nx3 != -1 and tokens[nx3].kind == "op" \
-                                    and tokens[nx3].text == "(":
-                                continue
-                            raise ImpalaUnsupportedError(
-                                "Could not resolve column/field "
-                                f"reference: '{tx.text.strip('`').lower()}'"
-                            )
-                first_row = False
-            # trailing ORDER BY resolves against the first row's aliases
-            k = (outer_close + 1) if outer_close != -1 else n
-            while k < n:
-                t = tokens[k]
-                if t.kind == "word" and t.upper == "ORDER":
-                    j = _significant(tokens, k)
-                    if j != -1 and tokens[j].upper == "BY":
-                        o_end = n
-                        for a, b in _split_top_level_commas(
-                            tokens, j + 1, o_end,
-                        ):
-                            sig = [
-                                x for x in range(a, b)
-                                if tokens[x].kind not in (
-                                    "ws", "line_comment", "block_comment",
-                                )
-                            ]
-                            while sig and tokens[sig[-1]].kind == "word" \
-                                    and tokens[sig[-1]].upper in (
-                                        "ASC", "DESC", "NULLS", "FIRST",
-                                        "LAST",
-                                    ):
-                                sig = sig[:-1]
-                            # stop at LIMIT/OFFSET keywords
-                            sig = [
-                                x for x in sig
-                                if not (
-                                    tokens[x].kind == "word"
-                                    and tokens[x].upper in (
-                                        "LIMIT", "OFFSET",
-                                    )
-                                ) and tokens[x].kind != "number"
-                            ]
-                            if (
-                                len(sig) == 1
-                                and tokens[sig[0]].kind in ("word", "bident")
-                                and tokens[sig[0]].text.strip("`").lower()
-                                not in labels0
-                            ):
-                                raise ImpalaUnsupportedError(
-                                    "Could not resolve column/field "
-                                    "reference: "
-                                    f"'{tokens[sig[0]].text.strip('`').lower()}'"
-                                )
-                        break
-                k += 1
+            ):
+                if row == 0:
+                    labels0.append(tokens[sig[-1]].text.strip("`").lower())
+                scan_hi = sig[-1]
+            for x in range(sig[0], scan_hi):
+                tx = tokens[x]
+                if tx.kind not in ("word", "bident") or tx.kind == "word" \
+                        and tx.upper in _RESOLVER_SKIP_WORDS \
+                        or _is_open(tokens, _significant(tokens, x)):
+                    continue
+                raise ImpalaUnsupportedError(
+                    "Could not resolve column/field "
+                    f"reference: '{tx.text.strip('`').lower()}'"
+                )
+    # a trailing ORDER BY resolves against the first row's aliases
+    order = u.clauses.get("ORDER")
+    for sig in order.items(tokens) if order is not None else ():
+        name = tokens[sig[0]].text.strip("`").lower()
+        if len(sig) == 1 and tokens[sig[0]].kind in ("word", "bident") \
+                and name not in labels0:
+            raise ImpalaUnsupportedError(
+                f"Could not resolve column/field reference: '{name}'"
+            )
 
 
 def _check_strict_ordinals(ctx: _Analysis) -> None:
@@ -4365,63 +3898,32 @@ def _check_strict_ordinals(ctx: _Analysis) -> None:
     ORDER BY / GROUP BY item is an ordinal into the select list and must
     be within [1, #items]."""
     tokens = ctx.tokens
-    for blk in ctx.blocks:
-        sel_idx, from_idx, end = blk.sel, blk.from_idx, blk.end
-        list_start = _significant(tokens, sel_idx)
-        if list_start == -1:
-            continue
-        if tokens[list_start].kind == "word" and tokens[list_start].upper in ("DISTINCT", "ALL"):
-            list_start = _significant(tokens, list_start)
-        n_items = _countable_select_items(tokens, list_start, from_idx)
+    for blk, c in ctx.sorts():
+        n_items = _countable_select_items(tokens, blk.items)
         if n_items < 0:
-            n_items = _star_list_width(ctx, blk, list_start)
+            n_items = _star_list_width(ctx, blk)
         if n_items < 0:
             continue
-        k = from_idx
-        while k < end:
-            t = tokens[k]
-            if t.kind == "op" and t.text == "(":
-                k = _matching_paren(tokens, k) + 1
+        prefix = tokens[c.at].upper + " BY"
+        for sig in c.items(tokens):
+            lit = _is_pure_literal(tokens, sig[0], sig[-1] + 1)
+            if lit is None:
                 continue
-            if t.kind == "word" and t.upper in ("ORDER", "GROUP"):
-                j = _significant(tokens, k)
-                if j == -1 or tokens[j].upper != "BY":
-                    k += 1
-                    continue
-                prefix = "ORDER BY" if t.upper == "ORDER" else "GROUP BY"
-                body_end = _clause_end(tokens, j + 1, _CLAUSE_BOUNDARY, end)
-                for a, b in _split_top_level_commas(tokens, j + 1, body_end):
-                    sig = [
-                        x for x in range(a, b)
-                        if tokens[x].kind not in ("ws", "line_comment", "block_comment")
-                    ]
-                    while sig and tokens[sig[-1]].kind == "word" and tokens[sig[-1]].upper in (
-                        "ASC", "DESC", "FIRST", "LAST", "NULLS",
-                    ):
-                        sig = sig[:-1]
-                    if not sig:
-                        continue
-                    lit = _is_pure_literal(tokens, sig[0], sig[-1] + 1)
-                    if lit is None:
-                        continue
-                    try:
-                        v = float(lit)
-                    except ValueError:
-                        continue
-                    if not v.is_integer():
-                        continue
-                    if v < 1:
-                        raise ImpalaUnsupportedError(
-                            f"{prefix}: ordinal must be >= 1: {lit}"
-                        )
-                    if v > n_items:
-                        raise ImpalaUnsupportedError(
-                            f"{prefix}: ordinal exceeds number of items in "
-                            f"select list: {lit}"
-                        )
-                k = body_end
+            try:
+                v = float(lit)
+            except ValueError:
                 continue
-            k += 1
+            if not v.is_integer():
+                continue
+            if v < 1:
+                raise ImpalaUnsupportedError(
+                    f"{prefix}: ordinal must be >= 1: {lit}"
+                )
+            if v > n_items:
+                raise ImpalaUnsupportedError(
+                    f"{prefix}: ordinal exceeds number of items in "
+                    f"select list: {lit}"
+                )
 
 
 def _check_strict_union_columns(ctx: _Analysis) -> None:
@@ -4429,137 +3931,103 @@ def _check_strict_union_columns(ctx: _Analysis) -> None:
     same number of columns. Token subset: arms whose select lists are
     star-free; star-bearing arms defer to the engine's analyzer."""
     tokens = ctx.tokens
-    # depth-0 UNION positions split the statement into arms
-    bounds = [
-        k for k, t in enumerate(tokens)
-        if ctx.depth_at[k] == 0 and t.kind == "word" and t.upper == "UNION"
-    ]
-    if not bounds:
-        return
-    arm_starts = [0]
-    for k in bounds:
-        j = _significant(tokens, k)
-        if j != -1 and tokens[j].kind == "word" and tokens[j].upper in ("ALL", "DISTINCT"):
-            k = j
-        arm_starts.append(k + 1)
-    first_n = first_sql = None
-    prev_items: list[tuple[str | None, str]] | None = None
-    for i, a in enumerate(arm_starts):
-        b = bounds[i] if i < len(bounds) else len(tokens)
-        sel = -1
-        for k in range(a, b):
-            tk = tokens[k]
-            if tk.kind in ("ws", "line_comment", "block_comment"):
+
+    def to_sql(a: int, b: int) -> str:
+        return _expr_to_sql(untokenize(tokens[a:b]).strip())
+
+    for u in ctx.setops:
+        first = prev_items = None
+        for (a, b), blk in zip(u.arms, u.blocks):
+            if blk is None:
+                continue  # parenthesized arms deferred
+            n = _countable_select_items(tokens, blk.items)
+            if n < 0:
                 continue
-            if tk.kind == "word" and tk.upper == "SELECT":
-                sel = k
-            break  # only a bare leading SELECT (parenthesized arms deferred)
-        if sel == -1:
-            continue
-        list_start = _significant(tokens, sel)
-        if list_start == -1:
-            continue
-        if tokens[list_start].kind == "word" and tokens[list_start].upper in ("DISTINCT", "ALL"):
-            list_start = _significant(tokens, list_start)
-        from_idx = b
-        d2 = 0
-        for k in range(list_start, b):
-            tk = tokens[k]
-            if tk.kind == "op" and tk.text == "(":
-                d2 += 1
-            elif tk.kind == "op" and tk.text == ")":
-                d2 -= 1
-            elif d2 == 0 and tk.kind == "word" and tk.upper in ("FROM", "WHERE", "ORDER", "LIMIT"):
-                from_idx = k
-                break
-        n = _countable_select_items(tokens, list_start, from_idx)
-        if n < 0:
-            continue
-        # UnionStmt.analyze quotes each operand in toSql form
-        sql = _expr_to_sql(untokenize(tokens[a:b]).strip())
-        if first_n is None:
-            first_n, first_sql = n, sql
-        elif n != first_n:
-            raise ImpalaUnsupportedError(
-                "Operands have unequal number of columns:\n"
-                f"'{first_sql}' has {first_n} column(s)\n"
-                f"'{sql}' has {n} column(s)"
-            )
-        # per-position operand typing (StatementBase.createCompatible-
-        # Exprs via Analyzer.getCompatibleType): adjacent arms with
-        # statically-known incompatible types raise, quoting each expr's
-        # toSql (LEAD/LAG print their defaults expanded)
-        arm_items: list[tuple[str | None, str]] = []
-        for ia, ib in _split_top_level_commas(tokens, list_start, from_idx):
-            sig = [
-                x for x in range(ia, ib)
-                if tokens[x].kind not in ("ws", "line_comment", "block_comment")
-            ]
-            if not sig:
-                arm_items.append((None, ""))
-                continue
-            # strip trailing [AS] alias
-            if len(sig) >= 2 and tokens[sig[-1]].kind in ("word", "bident") \
-                    and (
-                        (tokens[sig[-2]].kind == "word"
-                         and tokens[sig[-2]].upper == "AS")
-                        or tokens[sig[-2]].kind in (
-                            "word", "bident", "number", "string")
-                        or (tokens[sig[-2]].kind == "op"
-                            and tokens[sig[-2]].text == ")")
-                    ) and not (
-                        tokens[sig[-2]].kind == "word"
-                        and tokens[sig[-2]].upper in _NON_OPERAND_WORDS
-                    ):
-                sig = sig[:-2] if (
-                    tokens[sig[-2]].kind == "word"
-                    and tokens[sig[-2]].upper == "AS"
-                ) else sig[:-1]
-            if not sig:
-                arm_items.append((None, ""))
-                continue
-            lo2, hi2 = sig[0], sig[-1]
-            ty = _expr_type(ctx, tokens, lo2, hi2)
-            # render: the call part only for analytics, with LEAD/LAG
-            # defaults expanded
-            rend_hi = hi2
-            for x in sig:
-                if tokens[x].kind == "word" and tokens[x].upper == "OVER":
-                    pvx = _significant(tokens, x, -1)
-                    if pvx != -1 and tokens[pvx].kind == "op" \
-                            and tokens[pvx].text == ")":
-                        rend_hi = pvx
-                    break
-            rendered = untokenize(tokens[lo2:rend_hi + 1]).strip()
-            m = re.match(r"(?is)^(lag|lead)\s*\((.*)\)$", rendered)
-            if m:
-                args = m.group(2).strip()
-                depth3 = 0
-                n_args = 1 if args else 0
-                for ch in args:
-                    if ch == "(":
-                        depth3 += 1
-                    elif ch == ")":
-                        depth3 -= 1
-                    elif ch == "," and depth3 == 0:
-                        n_args += 1
-                if n_args == 1:
-                    rendered = f"{m.group(1).lower()}({args}, 1, NULL)"
-                elif n_args == 2:
-                    rendered = f"{m.group(1).lower()}({args}, NULL)"
-            arm_items.append((ty, _expr_to_sql(rendered)))
-        if i == 0 or prev_items is None:
-            prev_items = arm_items
-        else:
-            for (t1, e1), (t2, e2) in zip(prev_items, arm_items):
-                if t1 is None or t2 is None:
+            # UnionStmt.analyze quotes each operand in toSql form
+            if first is None:
+                first = (n, a, b)
+            elif n != first[0]:
+                raise ImpalaUnsupportedError(
+                    "Operands have unequal number of columns:\n"
+                    f"'{to_sql(*first[1:])}' has {first[0]} column(s)\n"
+                    f"'{to_sql(a, b)}' has {n} column(s)"
+                )
+            # per-position operand typing (StatementBase.createCompatible-
+            # Exprs via Analyzer.getCompatibleType): adjacent arms with
+            # statically-known incompatible types raise, quoting each expr's
+            # toSql (LEAD/LAG print their defaults expanded)
+            arm_items: list[tuple[str | None, str]] = []
+            for ia, ib in blk.items:
+                sig = [
+                    x for x in range(ia, ib)
+                    if tokens[x].kind not in ("ws", "line_comment", "block_comment")
+                ]
+                if not sig:
+                    arm_items.append((None, ""))
                     continue
-                if _assignment_compatible(t1, t2) is None:
-                    raise ImpalaUnsupportedError(
-                        f"Incompatible return types '{t1}' and '{t2}' "
-                        f"of exprs '{e1}' and '{e2}'."
-                    )
-            prev_items = arm_items
+                # strip trailing [AS] alias
+                if len(sig) >= 2 and tokens[sig[-1]].kind in ("word", "bident") \
+                        and (
+                            (tokens[sig[-2]].kind == "word"
+                             and tokens[sig[-2]].upper == "AS")
+                            or tokens[sig[-2]].kind in (
+                                "word", "bident", "number", "string")
+                            or (tokens[sig[-2]].kind == "op"
+                                and tokens[sig[-2]].text == ")")
+                        ) and not (
+                            tokens[sig[-2]].kind == "word"
+                            and tokens[sig[-2]].upper in _NON_OPERAND_WORDS
+                        ):
+                    sig = sig[:-2] if (
+                        tokens[sig[-2]].kind == "word"
+                        and tokens[sig[-2]].upper == "AS"
+                    ) else sig[:-1]
+                if not sig:
+                    arm_items.append((None, ""))
+                    continue
+                lo2, hi2 = sig[0], sig[-1]
+                ty = _expr_type(ctx, tokens, lo2, hi2)
+                # render: the call part only for analytics, with LEAD/LAG
+                # defaults expanded
+                rend_hi = hi2
+                for x in sig:
+                    if tokens[x].kind == "word" and tokens[x].upper == "OVER":
+                        pvx = _significant(tokens, x, -1)
+                        if pvx != -1 and tokens[pvx].kind == "op" \
+                                and tokens[pvx].text == ")":
+                            rend_hi = pvx
+                        break
+                rendered = untokenize(tokens[lo2:rend_hi + 1]).strip()
+                m = re.match(r"(?is)^(lag|lead)\s*\((.*)\)$", rendered)
+                if m:
+                    args = m.group(2).strip()
+                    depth3 = 0
+                    n_args = 1 if args else 0
+                    for ch in args:
+                        if ch == "(":
+                            depth3 += 1
+                        elif ch == ")":
+                            depth3 -= 1
+                        elif ch == "," and depth3 == 0:
+                            n_args += 1
+                    if n_args == 1:
+                        rendered = f"{m.group(1).lower()}({args}, 1, NULL)"
+                    elif n_args == 2:
+                        rendered = f"{m.group(1).lower()}({args}, NULL)"
+                arm_items.append((ty, rendered))
+            if prev_items is None:
+                prev_items = arm_items
+            else:
+                for (t1, e1), (t2, e2) in zip(prev_items, arm_items):
+                    if t1 is None or t2 is None:
+                        continue
+                    if _assignment_compatible(t1, t2) is None:
+                        raise ImpalaUnsupportedError(
+                            f"Incompatible return types '{t1}' and '{t2}' "
+                            f"of exprs '{_expr_to_sql(e1)}' and "
+                            f"'{_expr_to_sql(e2)}'."
+                        )
+                prev_items = arm_items
 
 
 #: Impala 2.7 reserved words that cannot appear as bare identifiers
@@ -4582,7 +4050,13 @@ def _check_strict_reserved_idents(ctx: _Analysis) -> None:
     `select a, 2 where a > 2`, CROSS JOIN with ON/USING). Back-quoted
     identifiers are legal (`` `union` `` tokenizes as bident)."""
     tokens = ctx.tokens
-    n = len(tokens)
+    # each CROSS modifier -> the ON / USING keyword of its join
+    cross = {
+        p: f.join_clause(x) for f in ctx.froms
+        for x, src in enumerate(f.sources)
+        if src.join_idx != -1
+        and _word_at(tokens, p := _significant(tokens, src.join_idx, -1)) == "CROSS"
+    }
     for i, t in enumerate(tokens):
         if t.kind != "word":
             continue
@@ -4596,13 +4070,10 @@ def _check_strict_reserved_idents(ctx: _Analysis) -> None:
                         f"Syntax error: reserved word {nxt} used as "
                         f"identifier after {up}"
                     )
-        elif up == "SELECT":
-            j = _significant(tokens, i)
-            if j != -1 and tokens[j].kind == "word":
-                head = tokens[j].upper
-                if head in ("ALL", "DISTINCT"):
-                    j = _significant(tokens, j)
-                    head = tokens[j].upper if j != -1 and tokens[j].kind == "word" else ""
+        elif up == "SELECT" and (blk := ctx.block_of(i)) is not None:
+            j = _significant(tokens, blk.items[0][0] - 1)
+            head = _word_at(tokens, j)
+            if head is not None:
                 if head == "FROM":
                     raise ImpalaUnsupportedError(
                         "Syntax error: empty select list (Encountered: FROM)"
@@ -4620,29 +4091,11 @@ def _check_strict_reserved_idents(ctx: _Analysis) -> None:
                             f"Syntax error: reserved word {head} used as "
                             "identifier in select list"
                         )
-        elif up == "CROSS":
-            j = _significant(tokens, i)
-            if j != -1 and tokens[j].upper == "JOIN":
-                # find the end of the table ref, check for ON/USING
-                k = _significant(tokens, j)
-                scan = k
-                depth = 0
-                while scan != -1 and scan < n:
-                    tk = tokens[scan]
-                    if tk.kind == "op" and tk.text == "(":
-                        scan = _matching_paren(tokens, scan) + 1
-                        continue
-                    if tk.kind == "word" and tk.upper in ("ON", "USING"):
-                        raise ImpalaUnsupportedError(
-                            "Syntax error: CROSS JOIN cannot have an "
-                            f"{tk.upper} clause"
-                        )
-                    if tk.kind == "word" and tk.upper in _CLAUSE_BOUNDARY | {
-                        "JOIN", "INNER", "LEFT", "RIGHT", "FULL", "CROSS", "WHERE",
-                    }:
-                        break
-                    scan += 1
-                continue
+        elif cross.get(i, -1) != -1:
+            raise ImpalaUnsupportedError(
+                "Syntax error: CROSS JOIN cannot have an "
+                f"{tokens[cross[i]].upper} clause"
+            )
 
 
 def _check_strict_between_subqueries(ctx: _Analysis) -> None:
@@ -4715,7 +4168,7 @@ def _check_strict_subquery_columns(ctx: _Analysis) -> None:
                     "Unsupported IN predicate with a subquery"
                 )
         # the subquery's select items: between SELECT and its FROM
-        a, from_idx = s.items[0][0], s.items[-1][1]
+        a, from_idx = s.block.items[0][0], s.block.items[-1][1]
         if any(
             depth_at[k] == depth_at[s.open] and tokens[k].kind == "op"
             and tokens[k].text == "*" for k in range(a, from_idx)
@@ -4730,7 +4183,7 @@ def _check_strict_subquery_columns(ctx: _Analysis) -> None:
                 continue
             n = len(_split_top_level_commas(tokens, r0 + 1, ctx.close_of[r0]))
         else:
-            n = len(s.items)
+            n = len(s.block.items)
         if n > 1:
             sub_sql = _expr_to_sql(untokenize(tokens[s.open:s.close + 1]).strip())
             if s.context != "cmp":
@@ -4805,7 +4258,7 @@ def _check_strict_type_defs(ctx: _Analysis) -> None:
             j = _significant(tokens, i)
             if j == -1 or tokens[j].text != "(":
                 continue
-            close = _matching_paren(tokens, j)
+            close = ctx.close(j)
             # top-level AS inside the cast parens
             d, as_idx, comma = 0, -1, False
             for k in range(j + 1, close):
@@ -4915,7 +4368,7 @@ def _check_strict_type_defs(ctx: _Analysis) -> None:
             j = _significant(tokens, i)
             if j == -1 or tokens[j].text != "(":
                 continue
-            close = _matching_paren(tokens, j)
+            close = ctx.close(j)
             nums = [
                 int(x.text)
                 for x in tokens[j + 1:close]
@@ -5440,7 +4893,7 @@ def _check_strict_grammar_extras(ctx: _Analysis) -> None:
     # reserved type keywords (`(int COMMENT 'x')` is a ParserError) ---
     d = ctx.ddl
     if d is not None and d.kind == "VIEW" and d.columns != -1:
-        for it in _sig_items(tokens, d.columns):
+        for it in _sig_items(ctx, d.columns):
             if it and tokens[it[0]].kind == "word" \
                     and tokens[it[0]].text.lower() in _TYPE_WORDS:
                 raise ImpalaUnsupportedError(
@@ -5450,26 +4903,16 @@ def _check_strict_grammar_extras(ctx: _Analysis) -> None:
 
     # --- ORDER BY / LIMIT on a FROM-less SELECT (sql-parser.cup binds
     # both to a select_stmt with a from_clause) ---
-    if head == "SELECT":
-        depth = 0
-        saw_from = False
-        bad = None
-        for s in sig:
-            t = tokens[s]
-            if t.kind == "op":
-                if t.text == "(":
-                    depth += 1
-                elif t.text == ")":
-                    depth -= 1
-            elif depth == 0 and t.kind == "word":
-                if t.upper == "FROM":
-                    saw_from = True
-                elif t.upper in ("ORDER", "LIMIT") and bad is None:
-                    bad = t.upper
-        if bad and not saw_from:
-            raise ImpalaUnsupportedError(
-                f"Syntax error: {bad} requires a FROM clause"
-            )
+    top = [b for b in ctx.blocks if b.depth == 0]
+    bad = sorted(
+        (c.at, w) for cl in [b.clauses for b in top]
+        + [u.clauses for u in ctx.setops if u.depth == 0]
+        for w, c in cl.items() if w in ("ORDER", "LIMIT")
+    )
+    if head == "SELECT" and bad and not any(b.from_clause for b in top):
+        raise ImpalaUnsupportedError(
+            f"Syntax error: {bad[0][1]} requires a FROM clause"
+        )
 
     # --- CREATE TABLE option-clause order / formats / partition defs ---
     if head == "CREATE" and word_at(1) == "TABLE":
@@ -5562,7 +5005,7 @@ def _check_create_table_tail(ctx: _Analysis) -> None:
                 and po != -1 and tokens[po].kind == "op"
                 and tokens[po].text == "("
             ):
-                close = _matching_paren(tokens, po)
+                close = ctx.close(po)
                 # complex-typed partition column (PartitionDef analysis)
                 for k in range(po + 1, close):
                     tk = tokens[k]
@@ -5614,7 +5057,7 @@ def _check_create_table_tail(ctx: _Analysis) -> None:
                     "Syntax error: PRIMARY KEY must follow the column "
                     "definitions"
                 )
-            close = _matching_paren(tokens, s)
+            close = ctx.close(s)
             for a, b in _split_top_level_commas(tokens, s + 1, close):
                 c0 = _significant(tokens, a - 1)
                 if (
@@ -5630,37 +5073,16 @@ def _check_create_table_tail(ctx: _Analysis) -> None:
 
 def _check_strict_stmt_shapes(ctx: _Analysis) -> None:
     """AnalyzeStmtsTest statement-shape errors needing no schema:
-    nested OFFSET without LIMIT (QueryStmt.java:202-205), duplicate
-    partition-clause columns (InsertStmt.java:330-334), and the
-    GROUP_CONCAT(DISTINCT) constant separator (FunctionCallExpr.java:
-    468-475)."""
+    duplicate partition-clause columns (InsertStmt.java:330-334), and
+    the GROUP_CONCAT(DISTINCT) constant separator (FunctionCallExpr.java:
+    468-475). (A nested OFFSET without LIMIT is the LIMIT/OFFSET
+    check's.)"""
     tokens = ctx.tokens
     for i, t in enumerate(tokens):
-        # nested query: '(' SELECT ... ORDER BY ... OFFSET n [no LIMIT] ')'
-        if t.kind == "op" and t.text == "(":
-            head = _significant(tokens, i)
-            if head == -1 or tokens[head].upper != "SELECT":
-                continue
-            close = _matching_paren(tokens, i)
-            d = 0
-            has_offset = has_limit = False
-            for k in range(i + 1, close):
-                tk = tokens[k]
-                if tk.kind == "op":
-                    if tk.text == "(":
-                        d += 1
-                    elif tk.text == ")":
-                        d -= 1
-                elif d == 0 and tk.kind == "word":
-                    if tk.upper == "OFFSET":
-                        has_offset = True
-                    elif tk.upper == "LIMIT":
-                        has_limit = True
-            if has_offset and not has_limit:
-                raise ImpalaUnsupportedError(
-                    "Order-by with offset without limit not supported in "
-                    "nested queries."
-                )
+        # a nested query must close
+        if _is_open(tokens, i) \
+                and _word_at(tokens, _significant(tokens, i)) == "SELECT":
+            ctx.close(i)
         if t.kind != "word":
             continue
         # INSERT ... PARTITION (col[=v], ...): duplicate columns
@@ -5677,7 +5099,7 @@ def _check_strict_stmt_shapes(ctx: _Analysis) -> None:
                 "ADD", "DROP",
             ):
                 continue
-            close = _matching_paren(tokens, nx)
+            close = ctx.close(nx)
             seen: set[str] = set()
             for a, b in _split_top_level_commas(tokens, nx + 1, close):
                 c0 = _significant(tokens, a - 1)
@@ -5695,7 +5117,7 @@ def _check_strict_stmt_shapes(ctx: _Analysis) -> None:
                 tokens[nx].kind == "op" and tokens[nx].text == "("
             ):
                 continue
-            close = _matching_paren(tokens, nx)
+            close = ctx.close(nx)
             first = _significant(tokens, nx)
             if first == -1 or tokens[first].upper != "DISTINCT":
                 continue
@@ -5763,7 +5185,7 @@ def _check_strict_correlated_subqueries(ctx: _Analysis) -> None:
         ))
         if not (s.refs & outer) - s.binds:
             continue
-        a, sel_end = s.items[0][0], s.items[-1][1]
+        a, sel_end = s.block.items[0][0], s.block.items[-1][1]
         calls = [
             tokens[k].text.lower() for k in range(a, sel_end)
             if tokens[k].kind == "word"
@@ -5787,17 +5209,18 @@ def _check_strict_correlated_subqueries(ctx: _Analysis) -> None:
         # a top-level disjunction inside the subquery's WHERE with a
         # correlated operand (StmtRewriter.java:
         # "Disjunctions with correlated predicates")
-        if s.where is not None and any(
+        where = next(((c.lo, c.hi) for c in s.clauses("WHERE")), None)
+        if where is not None and any(
             depth_at[k] == depth_at[s.open] and _word_at(tokens, k) == "OR"
-            for k in range(*s.where)
-        ) and (_dotted_roots(tokens, *s.where) & outer) - s.binds:
+            for k in range(*where)
+        ) and (_dotted_roots(tokens, *where) & outer) - s.binds:
             raise ImpalaUnsupportedError(
                 "Disjunctions with correlated predicates are not "
                 "supported: " + _expr_to_sql(
-                    untokenize(tokens[slice(*s.where)]).strip()
+                    untokenize(tokens[slice(*where)]).strip()
                 )
             )
-        if kind == "in" and (aggs or s.has("GROUP") or s.has("OVER") or s.distinct) \
+        if kind == "in" and (aggs or s.has("GROUP") or s.has("OVER") or s.block.distinct) \
                 or kind == "cmp" and (s.has("GROUP") or s.has("OVER")):
             raise ImpalaUnsupportedError(
                 "Unsupported correlated subquery with grouping and/or "
@@ -5848,7 +5271,7 @@ def _check_strict_ddl_values(ctx: _Analysis) -> None:
             nx = sig[p + 1] if p + 1 < len(sig) else -1
             if nx == -1 or not (tokens[nx].kind == "op" and tokens[nx].text == "("):
                 continue
-            close = _matching_paren(tokens, nx)
+            close = ctx.close(nx)
             for a, b in _split_top_level_commas(tokens, nx + 1, close):
                 strs = [
                     k for k in range(a, b) if tokens[k].kind == "string"
@@ -6074,11 +5497,75 @@ class _From:
     usings: list[tuple[int, int]]  # (USING keyword, its list's ')')
     hints: list[tuple[int, int]]  # ('[', ']') of each join hint
 
+    def join_clause(self, x: int) -> int:
+        """The ON / USING keyword after ref x, before the next ref; -1
+        for none."""
+        src = self.sources[x]
+        nxt = self.sources[x + 1] if x + 1 < len(self.sources) else None
+        stop = self.end if nxt is None else (
+            nxt.lo if nxt.join_idx == -1 else nxt.join_idx
+        )
+        return min((
+            k for k, _e in self.ons + self.usings if src.end <= k < stop
+        ), default=-1)
+
+
+#: the words opening a query block's or set operation's clauses
+_QUERY_CLAUSE_WORDS = frozenset({
+    "WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "OFFSET", "WINDOW",
+})
+#: the words a sort item may end with
+_SORT_SUFFIX_WORDS = frozenset({"ASC", "DESC", "NULLS", "FIRST", "LAST"})
+
+
+def _clause_map(tokens: list[Token], heads: list[int], end: int) -> dict:
+    """The clauses the clause words at `heads` (one level, in order)
+    open, by keyword: each body runs to the next clause word, or `end`.
+    GROUP and ORDER open one only before BY; WINDOW opens none."""
+    out: dict[str, _Clause] = {}
+    for k, nxt in zip(heads, heads[1:] + [end]):
+        w, body = tokens[k].upper, k + 1
+        if w in ("GROUP", "ORDER"):
+            body = _significant(tokens, k)
+            if _word_at(tokens, body) != "BY":
+                continue
+            body += 1
+        if w != "WINDOW":
+            out.setdefault(w, _Clause(k, body, nxt))
+    return out
+
+
+@dataclass
+class _Clause:
+    """One clause of a query block or set operation: its keyword and
+    the body after it (after BY for GROUP BY / ORDER BY)."""
+
+    at: int  # the clause keyword
+    lo: int  # the body's first token
+    hi: int  # the body's end (exclusive): the next clause, or the query's end
+
+    def items(self, tokens: list[Token]) -> list[list[int]]:
+        """The significant tokens of each comma item of the body, less
+        a sort item's ASC / DESC / NULLS FIRST / LAST suffix; empty
+        items dropped."""
+        out = []
+        for a, b in _split_top_level_commas(tokens, self.lo, self.hi):
+            sig = [
+                x for x in range(a, b)
+                if tokens[x].kind not in ("ws", "line_comment", "block_comment")
+            ]
+            while sig and _word_at(tokens, sig[-1]) in _SORT_SUFFIX_WORDS:
+                sig.pop()
+            if sig:
+                out.append(sig)
+        return out
+
 
 @dataclass
 class _Block:
-    """One SELECT block: from its SELECT keyword to the ')' closing its
-    nesting level, a set operator, or the statement end."""
+    """One SELECT block, read once: from its SELECT keyword to the ')'
+    closing its nesting level, a set operator, or the statement end (the
+    reference's analyzed SelectStmt)."""
 
     sel: int
     from_idx: int  # the block's own FROM, or the select-list end
@@ -6086,6 +5573,35 @@ class _Block:
     depth: int  # paren depth of the SELECT keyword
     parent: int | None  # index of the innermost enclosing block
     from_clause: _From | None
+    distinct: bool = False  # SELECT DISTINCT
+    #: the select items, past SELECT [DISTINCT | ALL] [STRAIGHT_JOIN],
+    #: to its FROM, else to its first clause
+    items: list[tuple[int, int]] = field(default_factory=list)
+    #: its WHERE, GROUP (BY), HAVING, ORDER (BY), LIMIT and OFFSET
+    #: clauses by keyword; a set operation's last arm leaves its ORDER
+    #: BY, LIMIT and OFFSET to the set operation
+    clauses: dict[str, _Clause] = field(default_factory=dict)
+
+
+@dataclass
+class _SetOp:
+    """One set operation: the UNION operands at one nesting level (the
+    reference's UnionStmt, A/UnionStmt.java:275-287), or the rows of a
+    VALUES list (ValuesStmt, a UnionStmt of one-row operands)."""
+
+    depth: int
+    #: each operand's (first token, end): a SELECT block, or a '(' ... ')'
+    #: query; the last one ends before the trailing clauses
+    arms: list[tuple[int, int]]
+    #: each operand's block: its own for a bare SELECT, else None
+    blocks: list[_Block | None]
+    ops: list[str]  # the operator before each later arm: UNION [ALL|DISTINCT]
+    #: the trailing ORDER (BY), LIMIT and OFFSET, which apply to the
+    #: whole union
+    clauses: dict[str, _Clause]
+    #: the block whose select list names the union's output: the first
+    #: block in its first operand
+    first: _Block | None
 
 
 @dataclass
@@ -6132,15 +5648,10 @@ class _Subquery:
     #: "cmp" / "between" when the group is a comparison's left operand
     #: or the value a BETWEEN tests; None otherwise
     follows: str | None
-    #: its top-level FROM, WHERE, GROUP, HAVING, ORDER, LIMIT, OFFSET,
-    #: UNION and OVER words (index, word), across its UNION arms
-    top: list[tuple[int, str]]
-    limit: str | None  # the token after its first top-level LIMIT
-    distinct: bool  # SELECT DISTINCT
-    where: tuple[int, int] | None  # its first top-level WHERE's body
-    #: its select-list items; the list runs to the block's FROM, else to
-    #: the ')' (through the UNION arms of a FROM-less first arm)
-    items: list[tuple[int, int]]
+    setop: _SetOp | None  # the union its group holds
+    #: FROM, UNION and OVER when its top level holds them, and the
+    #: clause words of its UNION arms
+    words: frozenset[str]
     #: the names its FROM binds: each ref's name and its path's last
     #: part — not a relative path's head (`t.struct_array_col a` binds
     #: a and struct_array_col, not an outer t)
@@ -6160,16 +5671,22 @@ class _Subquery:
 
     def has(self, word: str) -> bool:
         """Whether `word` is one of its top-level words."""
-        return any(w == word for _, w in self.top)
+        return word in self.words
+
+    def clauses(self, *words: str) -> list[_Clause]:
+        """Its arms' clauses and its union's trailing ones of the given
+        keywords, in statement order."""
+        arms = self.setop.blocks if self.setop else [self.block]
+        found = [b.clauses for b in arms if b is not None]
+        found.append(self.setop.clauses if self.setop else {})
+        return sorted(
+            (c for cl in found for w, c in cl.items() if w in words),
+            key=lambda c: c.at,
+        )
 
 
 #: the keywords a subquery's clause is read from
 _SUBQUERY_CLAUSES = _CLAUSE_BOUNDARY | {"SELECT", "ON", "JOIN"}
-#: the top-level words a _Subquery keeps
-_SUBQUERY_TOP_WORDS = frozenset({
-    "FROM", "WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "OFFSET", "UNION",
-    "OVER",
-})
 #: words that end a BETWEEN's low bound (or its predicate) at its level
 _BETWEEN_STOPS = _CLAUSE_BOUNDARY | {"OR", "JOIN", "ON", "WHERE"}
 
@@ -6235,11 +5752,12 @@ def _take_alias(tokens: list[Token], src: _Source, k: int, end: int) -> None:
         src.end = k + 1
 
 
-def _walk_from(tokens: list[Token], at: int, end: int) -> _From:
+def _walk_from(ctx: _Analysis, at: int, end: int) -> _From:
     """The FROM-clause walker: the refs of tokens[at + 1:end] in order,
     each with its alias, and the ON / USING operands between them. A
     path directly followed by '(' is a call (`EXTRACT(y FROM now())`),
     not a ref."""
+    tokens = ctx.tokens
     f = _From(at, end, [], [], [], [])
     k, expecting, join_idx = at + 1, True, -1
     while k < end:
@@ -6248,7 +5766,7 @@ def _walk_from(tokens: list[Token], at: int, end: int) -> _From:
             k += 1
             continue
         if t.kind == "op" and t.text == "(":
-            close = _matching_paren(tokens, k)
+            close = ctx.close(k)
             if expecting:
                 src = _Source(k, close, (), join_idx, close + 1, kind="view")
                 _take_alias(tokens, src, _significant(tokens, close), end)
@@ -6279,7 +5797,7 @@ def _walk_from(tokens: list[Token], at: int, end: int) -> _From:
         elif t.kind == "word" and t.upper == "USING":
             op = _significant(tokens, k)
             if op != -1 and tokens[op].kind == "op" and tokens[op].text == "(":
-                close = _matching_paren(tokens, op)
+                close = ctx.close(op)
                 f.usings.append((k, close))
                 k = close + 1
                 continue
@@ -6299,7 +5817,7 @@ def _walk_from(tokens: list[Token], at: int, end: int) -> _From:
             expecting = False
             if p != -1 and p < end and tokens[p].kind == "op" \
                     and tokens[p].text == "(":
-                k = _matching_paren(tokens, p) + 1
+                k = ctx.close(p) + 1
                 continue
             src = _Source(k, hi, tuple(raw), join_idx, hi + 1)
             _take_alias(tokens, src, p, end)
@@ -6492,7 +6010,7 @@ class _Analysis:
                     and tokens[prev].upper == "DISTINCT":
                 continue
             f = _walk_from(
-                tokens, i, _clause_end(tokens, i + 1, _FROM_CLAUSE_STOPS),
+                self, i, _clause_end(tokens, i + 1, _FROM_CLAUSE_STOPS),
             )
             for src in f.sources:
                 self._classify(src)
@@ -6601,10 +6119,10 @@ class _Analysis:
             q = words.index("PARTITION", ref.end)
             d.part = _PartSpec(q, -1, [])
             if self.op_at(q + 1, "("):
-                d.part.close = _matching_paren(tokens, sig[q + 1])
+                d.part.close = self.close(sig[q + 1])
                 d.part.items = [
                     _PartItem.of(tokens, it)
-                    for it in _sig_items(tokens, sig[q + 1])
+                    for it in _sig_items(self, sig[q + 1])
                 ]
         depth = 0
         for q in range(end, len(sig)):
@@ -6670,9 +6188,16 @@ class _Analysis:
         """')' index -> the index of its '('."""
         return self._parens[2]
 
+    def close(self, k: int) -> int:
+        """The ')' of the '(' at token k; raises on an unclosed one."""
+        if k not in self.close_of:
+            raise ImpalaUnsupportedError("unbalanced parentheses")
+        return self.close_of[k]
+
     @cached_property
-    def blocks(self) -> list[_Block]:
-        """The SELECT blocks in statement order."""
+    def _queries(self) -> tuple[list[_Block], list[_SetOp]]:
+        """The SELECT blocks in statement order, each read in one walk at
+        its own depth, and the set operations at every level."""
         tokens, n, depth_at = self.tokens, len(self.tokens), self.depth_at
         froms = {f.at: f for f in self.froms}
         blocks: list[_Block] = []
@@ -6681,6 +6206,7 @@ class _Analysis:
                 continue
             d0 = depth_at[idx]
             from_idx = end = n
+            heads: list[int] = []
             for k in range(idx + 1, n):
                 tk = tokens[k]
                 if depth_at[k] != d0:
@@ -6693,10 +6219,23 @@ class _Analysis:
                     break
                 # (`IS [NOT] DISTINCT FROM` is an operator: not in froms)
                 if k in froms and from_idx == n:
-                    from_idx = k
+                    from_idx, heads = k, []
+                elif tk.kind == "word" and tk.upper in _QUERY_CLAUSE_WORDS:
+                    heads.append(k)
+            from_idx = min(from_idx, end)
+            ls = _significant(tokens, idx)
+            distinct = _word_at(tokens, ls) == "DISTINCT"
+            if _word_at(tokens, ls) in ("DISTINCT", "ALL"):
+                ls = _significant(tokens, ls)
+            if _word_at(tokens, ls) == "STRAIGHT_JOIN":
+                ls = _significant(tokens, ls)
+            sel_end = from_idx if from_idx < end or not heads else heads[0]
+            ls = sel_end if ls == -1 else min(ls, sel_end)
             blocks.append(_Block(
-                idx, min(from_idx, end), end, d0, None,
-                froms.get(from_idx) if from_idx < end else None,
+                idx, from_idx, end, d0, None,
+                froms.get(from_idx) if from_idx < end else None, distinct,
+                _split_top_level_commas(tokens, ls, sel_end),
+                _clause_map(tokens, heads, end),
             ))
         for b in blocks:
             b.parent = max(
@@ -6704,7 +6243,109 @@ class _Analysis:
                  if o.sel < b.sel and b.end <= o.end),
                 key=lambda j: blocks[j].sel, default=None,
             )
-        return blocks
+        # the UNION words of each level, by the '(' enclosing it (-1:
+        # none), and each VALUES word with its level's '('
+        levels: dict[int, list[int]] = {}
+        values: list[tuple[int, int]] = []
+        stack: list[int] = []
+        for k, t in enumerate(tokens):
+            if t.kind == "op" and t.text in ("(", ")"):
+                if t.text == "(":
+                    stack.append(k)
+                elif stack:
+                    stack.pop()
+            elif t.kind == "word" and t.upper in ("UNION", "VALUES"):
+                o = stack[-1] if stack else -1
+                p = _significant(tokens, k, -1)
+                if t.upper == "UNION":
+                    levels.setdefault(o, []).append(k)
+                elif p == -1 or p == o or _word_at(tokens, p) in (
+                    "UNION", "ALL", "DISTINCT", "AS",
+                ):
+                    values.append((k, o))  # a VALUES query, not a call
+        by_end = {b.end: b for b in blocks}
+        by_sel = {b.sel: b for b in blocks}
+        setops: list[_SetOp] = []
+
+        def clauses_in(a: int, b: int, d: int) -> dict[str, _Clause]:
+            return _clause_map(tokens, [
+                k for k in range(a, b) if depth_at[k] == d
+                and _word_at(tokens, k) in _QUERY_CLAUSE_WORDS
+            ], b)
+
+        for o, unions in levels.items():
+            d, close = depth_at[unions[0]], self.close_of.get(o, n)
+            first = by_end.get(unions[0])
+            p = _significant(tokens, unions[0], -1)
+            lo = first.sel if first is not None else self.open_of.get(p, p)
+            arms, ops = [], []
+            for u in unions:
+                arms.append((lo, u))
+                q = _significant(tokens, u)
+                op = "UNION"
+                if _word_at(tokens, q) in ("ALL", "DISTINCT"):
+                    op, u = f"UNION {tokens[q].upper}", q
+                ops.append(op)
+                lo = _significant(tokens, u)
+                lo = close if lo == -1 else min(lo, close)
+            # the last operand: its trailing ORDER BY / LIMIT / OFFSET
+            # belong to the union
+            last = by_sel.get(lo)
+            if last is not None:
+                clauses = {
+                    w: last.clauses.pop(w) for w in ("ORDER", "LIMIT", "OFFSET")
+                    if w in last.clauses
+                }
+            else:
+                clauses = clauses_in(self.close_of.get(lo, close), close, d)
+            arms.append((lo, min((c.at for c in clauses.values()), default=close)))
+            setops.append(_SetOp(
+                d, arms, [by_sel.get(a) for a, _ in arms], ops, clauses,
+                next((b for b in blocks if b.sel >= arms[0][0]), None),
+            ))
+        # a VALUES list: its operands are its '(' ... ')' groups
+        for v, o in values:
+            d, close = depth_at[v], self.close_of.get(o, n)
+            arms, k = [], _significant(tokens, v)
+            while k in self.close_of:
+                arms.append((k, self.close_of[k] + 1))
+                k = _significant(tokens, self.close_of[k])
+                if k == -1 or tokens[k].text != ",":
+                    break
+                k = _significant(tokens, k)
+            end = next((
+                k for k in range(v, close) if depth_at[k] == d
+                and _word_at(tokens, k) == "UNION"
+            ), close)
+            setops.append(_SetOp(
+                d, arms, [None] * len(arms), ["UNION ALL"] * (len(arms) - 1),
+                clauses_in(arms[-1][1] if arms else v, end, d), None,
+            ))
+        return blocks, setops
+
+    @property
+    def blocks(self) -> list[_Block]:
+        """The SELECT blocks in statement order (_Block)."""
+        return self._queries[0]
+
+    @property
+    def setops(self) -> list[_SetOp]:
+        """The set operations: one per level holding a UNION, and one
+        per VALUES list (_SetOp)."""
+        return self._queries[1]
+
+    def sorts(self) -> list[tuple[_Block, _Clause]]:
+        """Each GROUP BY and ORDER BY with the block whose select list
+        its ordinals and aliases name: a block's own, and a union's
+        ORDER BY with its first operand's block; by block, then clause."""
+        out = [
+            (b, c) for b in self.blocks
+            for w, c in b.clauses.items() if w in ("GROUP", "ORDER")
+        ] + [
+            (u.first, u.clauses["ORDER"]) for u in self.setops
+            if u.first is not None and "ORDER" in u.clauses
+        ]
+        return sorted(out, key=lambda bc: (bc[0].sel, bc[1].at))
 
     @cached_property
     def scans(self) -> frozenset[str]:
@@ -6724,6 +6365,10 @@ class _Analysis:
                 if src.kind in ("path", "table") and src not in nested
             )
         return frozenset(out)
+
+    def block_of(self, sel: int) -> _Block | None:
+        """The block whose SELECT keyword is token sel."""
+        return next((b for b in self.blocks if b.sel == sel), None)
 
     def ancestors(self, b: _Block) -> list[_Block]:
         out = []
@@ -6832,35 +6477,29 @@ class _Analysis:
             tokens, _significant(tokens, nx),
         ) == "BETWEEN":
             follows = "between"
-        top = [
-            (k, tokens[k].upper) for k in range(o + 1, c)
-            if depth_at[k] == depth_at[o] and tokens[k].kind == "word"
-            and tokens[k].upper in _SUBQUERY_TOP_WORDS
-        ]
-        limit = next((
-            tokens[_significant(tokens, k)].text for k, w in top
-            if w == "LIMIT"
+        setop = next((
+            u for u in self.setops if u.first is not None  # not a VALUES list
+            and o < u.arms[0][0] and u.arms[-1][1] <= c and u.depth == depth_at[o]
         ), None)
-        where = next((
-            (k + 1, _clause_end(tokens, k + 1, _CLAUSE_BOUNDARY, c))
-            for k, w in top if w == "WHERE"
-        ), None)
-        items: list[tuple[int, int]] = []
-        distinct = False
-        if block is not None:
-            sel_end = block.from_idx if block.from_idx < block.end else c
-            items = _split_top_level_commas(tokens, block.sel + 1, sel_end)
-            distinct = tokens[_significant(tokens, block.sel)].upper \
-                == "DISTINCT"
+        arms = [b for b in (setop.blocks if setop else [block]) if b]
+        words = {w for b in arms for w in b.clauses}
+        words.update(setop.clauses if setop else ())
+        if setop:
+            words.add("UNION")
+        if any(b.from_clause for b in arms):
+            words.add("FROM")
+        if any(depth_at[k] == depth_at[o] and _word_at(tokens, k) == "OVER"
+               for k in range(o + 1, c)):
+            words.add("OVER")
         f = block.from_clause if block else None
         scope = _from_binds(f, heads=True)
         refs = frozenset(_dotted_roots(tokens, o + 1, c))
         return _Subquery(
             o, c, head, block, outer, clause, clause_at, context, follows,
-            top, limit, distinct, where, items, _from_binds(f), scope, refs,
+            setop, frozenset(words), _from_binds(f), scope, refs,
             self._correlation(o, c, scope, refs),
-            not any(w == "GROUP" for _, w in top) and len(items) == 1
-            and _is_agg_call(tokens, *items[0]),
+            block is not None and "GROUP" not in words
+            and len(block.items) == 1 and _is_agg_call(tokens, *block.items[0]),
         )
 
     def _correlation(
@@ -7133,16 +6772,17 @@ _TEST_WAREHOUSE_BARE_NAMES = frozenset({
 })
 
 
-def _sig_items(tokens: list[Token], open_idx: int) -> list[list[int]]:
+def _sig_items(ctx: _Analysis, open_idx: int) -> list[list[int]]:
     """The significant tokens of each top-level comma item of the group
     opened at open_idx."""
+    tokens = ctx.tokens
     return [
         [
             x for x in range(a, b)
             if tokens[x].kind not in ("ws", "line_comment", "block_comment")
         ]
         for a, b in _split_top_level_commas(
-            tokens, open_idx + 1, _matching_paren(tokens, open_idx),
+            tokens, open_idx + 1, ctx.close(open_idx),
         )
     ]
 
@@ -7326,7 +6966,7 @@ def _ddl_drop_function(ctx: _Analysis, d: _Ddl) -> None:
         if has_parens:
             o = ctx.sig[ref.end]
             inner = untokenize(
-                ctx.tokens[o + 1:_matching_paren(ctx.tokens, o)],
+                ctx.tokens[o + 1:ctx.close(o)],
             ).strip()
             sig_disp = "(" + (", ".join(
                 re.sub(r"\s+", "", x.upper()).replace(",", ", ")
@@ -7676,7 +7316,7 @@ def _ddl_alter_columns(ctx: _Analysis, d: _Ddl) -> None:
     db, tname, a, nxt = ref.db, ref.table, d.action, word(ref.end + 1)
     qual = f"{db or 'functional'}.{tname}"
     cols = ctx.catalog.get(tname)
-    col_items = _sig_items(tokens, d.cols) if d.cols != -1 else []
+    col_items = _sig_items(ctx, d.cols) if d.cols != -1 else []
 
     # Kudu-backed tables: storage-attribute and schema-change rules
     if db == "functional_kudu":
@@ -7832,7 +7472,7 @@ def _ddl_alter_columns(ctx: _Analysis, d: _Ddl) -> None:
         if any(
             tokens[x].kind == "string" and tokens[x].text[1:-1]
             == "storage_handler"
-            for x in range(o + 1, _matching_paren(tokens, o))
+            for x in range(o + 1, ctx.close(o))
         ):
             raise ImpalaUnsupportedError(
                 "Changing the 'storage_handler' table property is not "
@@ -7875,7 +7515,7 @@ def _ddl_column_stats(
         )
     if not ctx.op_at(q + 1, "("):
         return
-    for it in _sig_items(tokens, ctx.sig[q + 1]):
+    for it in _sig_items(ctx, ctx.sig[q + 1]):
         strs = [x for x in it if tokens[x].kind == "string"]
         if len(strs) < 2:
             continue
@@ -7906,20 +7546,19 @@ def _ddl_column_stats(
 
 
 def _ddl_column_names(
-    tokens: list[Token], open_idx: int, seen: set[str],
-    partition: bool = False,
+    ctx: _Analysis, open_idx: int, seen: set[str], partition: bool = False,
 ) -> None:
     """The names heading the items of the list opened at open_idx must
     be valid (a backquoted name passes MetaStore validation) and
     distinct from each other and from `seen`, which collects them;
     partition columns may not be TIMESTAMPs."""
-    close = _matching_paren(tokens, open_idx)
+    tokens, close = ctx.tokens, ctx.close(open_idx)
     if any(
         tokens[x].kind == "op" and tokens[x].text == "<"
         for x in range(open_idx + 1, close)
     ):
         return  # generic-type commas: stay silent
-    for it in _sig_items(tokens, open_idx):
+    for it in _sig_items(ctx, open_idx):
         if not it or tokens[it[0]].kind not in ("word", "bident") \
                 or tokens[it[0]].upper == "PRIMARY":
             continue
@@ -7991,7 +7630,7 @@ def _ddl_storage(ctx: _Analysis, d: _Ddl) -> None:
             f"caching: {desc} UNCACHED"
         )
     if d.cols != -1:
-        _ddl_column_names(tokens, d.cols, set())
+        _ddl_column_names(ctx, d.cols, set())
     q = d.column + 1
     if d.action == "CHANGE" and q < len(sig) \
             and tokens[sig[q]].kind == "bident" \
@@ -8024,7 +7663,7 @@ def _ddl_storage(ctx: _Analysis, d: _Ddl) -> None:
             o = sig[p + 1]
             nums = [
                 int(tokens[x].text)
-                for x in range(o + 1, _matching_paren(tokens, o))
+                for x in range(o + 1, ctx.close(o))
                 if tokens[x].kind == "number" and tokens[x].text.isdigit()
             ]
             if nums:
@@ -8089,7 +7728,7 @@ def _ddl_create_table(ctx: _Analysis, d: _Ddl) -> None:
             _check_avro_schema_url(props["avro.schema.url"])
     # inline column options are Kudu-only: other formats reject them
     if fmt in _FILE_FORMATS and fmt != "KUDU" and d.columns != -1:
-        for it in _sig_items(tokens, d.columns):
+        for it in _sig_items(ctx, d.columns):
             if len(it) < 3 or tokens[it[0]].kind not in ("word", "bident") \
                     or tokens[it[0]].upper == "PRIMARY":
                 continue
@@ -8116,7 +7755,7 @@ def _ddl_create_table(ctx: _Analysis, d: _Ddl) -> None:
     # column names, then PARTITIONED BY columns against them
     names: set[str] = set()
     if d.columns != -1:
-        _ddl_column_names(tokens, d.columns, names)
+        _ddl_column_names(ctx, d.columns, names)
     p = d.clauses.get("PARTITIONED", -1)
     po = sig[p + 2] if p != -1 and ctx.op_at(p + 2, "(") else -1
     # CTAS: PARTITIONED BY names must be the TRAILING select columns, in
@@ -8124,15 +7763,13 @@ def _ddl_create_table(ctx: _Analysis, d: _Ddl) -> None:
     if po != -1 and "SELECT" in d.clauses and ctx.blocks:
         pnames = [
             tokens[x].text.strip("`").lower()
-            for x in range(po + 1, _matching_paren(tokens, po))
+            for x in range(po + 1, ctx.close(po))
             if tokens[x].kind in ("word", "bident")
         ]
-        blk = ctx.blocks[0]
-        ls = _significant(tokens, blk.sel)
-        labels = [] if ls == -1 else [
-            l for l, _e in _select_item_labels(tokens, ls, blk.from_idx)
+        labels = [
+            l for l, _e in _select_item_labels(tokens, ctx.blocks[0].items)
         ]
-        if pnames and ls != -1 and not any(l.startswith("_c") for l in labels):
+        if pnames and labels and not any(l.startswith("_c") for l in labels):
             if len(pnames) >= len(labels):
                 raise ImpalaUnsupportedError(
                     f"Number of partition columns ({len(pnames)}) must be "
@@ -8145,7 +7782,7 @@ def _ddl_create_table(ctx: _Analysis, d: _Ddl) -> None:
                         f"Partition column name mismatch: {pn} != {tl}"
                     )
     if po != -1:
-        _ddl_column_names(tokens, po, names, partition=True)
+        _ddl_column_names(ctx, po, names, partition=True)
     if "PARTITION" in d.clauses and fmt != "KUDU":
         raise ImpalaUnsupportedError(
             "Only Kudu tables can use the PARTITION BY clause."
@@ -8162,7 +7799,7 @@ def _ddl_pk_markers(ctx: _Analysis, d: _Ddl) -> int:
     if d.columns == -1:
         return 0
     depth_at = ctx.depth_at
-    close = _matching_paren(ctx.tokens, d.columns)
+    close = ctx.close(d.columns)
     return sum(
         1 for p, s in enumerate(ctx.sig)
         if d.columns < s < close and depth_at[s] == depth_at[d.columns]
@@ -8248,7 +7885,7 @@ def _ddl_kudu(ctx: _Analysis, d: _Ddl) -> None:
             "Table partitioning must be specified for managed Kudu tables."
         )
     # column defs: complex types, nullable key columns, key existence
-    items = _sig_items(tokens, d.columns) if d.columns != -1 else []
+    items = _sig_items(ctx, d.columns) if d.columns != -1 else []
     pk_list: list[str] = []
     names: set[str] = set()
     defs: list[list[int]] = []  # the column definitions
@@ -8263,7 +7900,7 @@ def _ddl_kudu(ctx: _Analysis, d: _Ddl) -> None:
             if po != -1:
                 pk_list.extend(
                     tokens[x].text.strip("`").lower()
-                    for x in range(po + 1, _matching_paren(tokens, po))
+                    for x in range(po + 1, ctx.close(po))
                     if tokens[x].kind in ("word", "bident")
                 )
             continue
@@ -8292,7 +7929,7 @@ def _ddl_kudu(ctx: _Analysis, d: _Ddl) -> None:
         ct = tokens[it[1]].upper if tokens[it[1]].kind == "word" else "?"
         j = 2
         if j < len(it) and tokens[it[j]].kind == "op" and tokens[it[j]].text == "(":
-            cl = _matching_paren(tokens, it[j])
+            cl = ctx.close(it[j])
             ct += "(" + re.sub(r"\s+", "", untokenize(tokens[it[j] + 1:cl])) + ")"
             while j < len(it) and it[j] <= cl:
                 j += 1
@@ -8415,8 +8052,8 @@ def _ddl_create_view(ctx: _Analysis, d: _Ddl) -> None:
     _ddl_storage(ctx, d)
     width = None
     if d.columns != -1:
-        _ddl_column_names(ctx.tokens, d.columns, set())
-        width = len(_sig_items(ctx.tokens, d.columns))
+        _ddl_column_names(ctx, d.columns, set())
+        width = len(_sig_items(ctx, d.columns))
     _ddl_select_labels(ctx, d, width)
 
 
@@ -8428,19 +8065,11 @@ def _ddl_select_labels(
     tokens, sel = ctx.tokens, d.clauses.get("SELECT", -1)
     if ctx.word(sel) != "SELECT":
         return
-    blk = next((b for b in ctx.blocks if b.sel == ctx.sig[sel]), None)
-    ls = _significant(tokens, blk.sel) if blk is not None else -1
-    if ls == -1:
+    blk = ctx.block_of(ctx.sig[sel])
+    if blk is None:
         return
-    if tokens[ls].kind == "word" and tokens[ls].upper in ("DISTINCT", "ALL"):
-        ls = _significant(tokens, ls)
-    items = [
-        x for x in range(ls, blk.from_idx)
-        if tokens[x].kind not in ("ws", "line_comment", "block_comment")
-    ]
     labels: list[str] = []
-    if len(items) == 1 and tokens[items[0]].kind == "op" \
-            and tokens[items[0]].text == "*":
+    if _is_star_list(tokens, blk):
         # star lists expand over known sources
         amap, unknown, _al = ctx.catalog_sources(blk.from_clause)
         if unknown or not amap:
@@ -8452,9 +8081,9 @@ def _ddl_select_labels(
                 break
             labels.extend(cols)
     else:
-        labels = [l for l, _e in _select_item_labels(tokens, ls, blk.from_idx)]
+        labels = [l for l, _e in _select_item_labels(tokens, blk.items)]
         # a backquoted junk alias is invalid
-        for a, b in _split_top_level_commas(tokens, ls, blk.from_idx):
+        for a, b in blk.items:
             last = _significant(tokens, b, -1)
             if last >= a and tokens[last].kind == "bident" \
                     and not _VALID_NAME_RE.match(_unquote(tokens[last])):
@@ -8501,7 +8130,7 @@ def _ddl_create_function(ctx: _Analysis, d: _Ddl) -> None:
                 o = sig[p + 1]
                 inner = re.sub(
                     r"\s+", "",
-                    untokenize(tokens[o + 1:_matching_paren(tokens, o)]),
+                    untokenize(tokens[o + 1:ctx.close(o)]),
                 )
                 bad_ty = f"{w}({inner})"
             elif w == "DECIMAL":
@@ -8551,7 +8180,7 @@ def _ddl_create_function(ctx: _Analysis, d: _Ddl) -> None:
     nargs, args = None, ""
     if d.target is not None and ctx.op_at(d.target.end, "("):
         o = sig[d.target.end]
-        inner = untokenize(tokens[o + 1:_matching_paren(tokens, o)]).strip()
+        inner = untokenize(tokens[o + 1:ctx.close(o)]).strip()
         nargs = len(inner.split(",")) if inner else 0
         args = ", ".join(
             re.sub(r"\s+", "", x.upper()).replace(",", ", ")
@@ -9091,7 +8720,7 @@ def _check_kudu_range_partitions(
         if ctx.word(p) != "RANGE" or not ctx.op_at(p + 1, "("):
             continue
         po = sig[p + 1]
-        pc = _matching_paren(tokens, po)
+        pc = ctx.close(po)
         rcols = [
             tokens[x].text.strip("`").lower()
             for x in range(po + 1, pc)
@@ -9105,7 +8734,7 @@ def _check_kudu_range_partitions(
         items: list[str] = []  # rendered 'PARTITION VALUE = x' items
         checks: list[tuple[str, list[int]]] = []
         all_eq_form = True
-        for s3 in _sig_items(tokens, lo):
+        for s3 in _sig_items(ctx, lo):
             if len(s3) < 4 or not (
                 tokens[s3[0]].kind == "word"
                 and tokens[s3[0]].upper == "PARTITION"
@@ -9141,9 +8770,7 @@ def _check_kudu_range_partitions(
             if tokens[vspan[0]].kind == "op" \
                     and tokens[vspan[0]].text == "(":
                 nvals = len(list(_split_top_level_commas(
-                    tokens, vspan[0] + 1, _matching_paren(
-                        tokens, vspan[0],
-                    ),
+                    tokens, vspan[0] + 1, ctx.close(vspan[0]),
                 )))
                 if nvals != len(rcols):
                     raise ImpalaUnsupportedError(
@@ -9285,22 +8912,11 @@ def _check_strict_union_arm_types(ctx: _Analysis) -> None:
     tokens = ctx.tokens
     if ctx.catalog is None:
         return
-    blocks = ctx.blocks
-    if len(blocks) < 2:
-        return
 
     def arm_item_types(blk: _Block) -> list[tuple[str, str]] | None:
-        from_idx = blk.from_idx
-        ls = _significant(tokens, blk.sel)
-        if ls == -1:
-            return None
-        if tokens[ls].kind == "word" and tokens[ls].upper in (
-            "DISTINCT", "ALL",
-        ):
-            ls = _significant(tokens, ls)
         amap, unknown, _al = ctx.catalog_sources(blk.from_clause)
         out: list[tuple[str, str]] = []
-        for a, b in _split_top_level_commas(tokens, ls, from_idx):
+        for a, b in blk.items:
             s2 = [
                 x for x in range(a, b)
                 if tokens[x].kind not in (
@@ -9323,20 +8939,11 @@ def _check_strict_union_arm_types(ctx: _Analysis) -> None:
             out.append((ty.upper(), txt))
         return out
 
-    # consecutive select blocks separated only by UNION [ALL|DISTINCT]
-    for i in range(len(blocks) - 1):
-        a_blk, b_blk = blocks[i], blocks[i + 1]
-        gap = [
-            x for x in range(a_blk.end, b_blk.sel)
-            if tokens[x].kind not in (
-                "ws", "line_comment", "block_comment",
-            )
-        ]
-        if not gap or not all(
-            tokens[x].kind == "word"
-            and tokens[x].upper in ("UNION", "ALL", "DISTINCT")
-            for x in gap
-        ):
+    # adjacent bare SELECT operands of each union
+    for a_blk, b_blk in (
+        pair for u in ctx.setops for pair in zip(u.blocks, u.blocks[1:])
+    ):
+        if a_blk is None or b_blk is None:
             continue
         ta = arm_item_types(a_blk)
         tb = arm_item_types(b_blk)
@@ -9407,16 +9014,9 @@ def _check_strict_inline_view_labels(ctx: _Analysis) -> None:
         return
     for f in ctx.froms:
         for src in f.sources:
-            inner_sel = _significant(tokens, src.lo)
-            blk = next((b for b in ctx.blocks if b.sel == inner_sel), None)
-            if src.kind != "view" or src.alias is None or blk is None:
-                continue
-            sigl = [
-                x for x in range(_significant(tokens, inner_sel), blk.from_idx)
-                if tokens[x].kind not in ("ws", "line_comment", "block_comment")
-            ]
-            if len(sigl) != 1 or tokens[sigl[0]].kind != "op" \
-                    or tokens[sigl[0]].text != "*":
+            blk = ctx.block_of(_significant(tokens, src.lo))
+            if src.kind != "view" or src.alias is None or blk is None \
+                    or not _is_star_list(tokens, blk):
                 continue
             # only the sources before the first ON: all join sources
             # precede it anyway (JOIN t2 b ON ...)
@@ -9719,7 +9319,7 @@ def _check_strict_table_path_refs(ctx: _Analysis) -> None:
             spans.append((b.sel, b.end))
         prev = _significant(tokens, b.sel, -1)
         if prev != -1 and tokens[prev].kind == "op" and tokens[prev].text == "(":
-            spans.append((b.sel, _matching_paren(tokens, prev)))
+            spans.append((b.sel, ctx.close(prev)))
     for sel, end in sorted(spans, key=lambda b: (b[0], -(b[1]))):
         corr_ref = None
         abs_ref = None
@@ -9919,16 +9519,20 @@ def _check_strict_complex_types(ctx: _Analysis) -> None:
     tokens = ctx.tokens
     if ctx.schema is None:
         return
+
+    def check_order(c: _Clause | None) -> None:
+        for sig in c.items(tokens) if c is not None else ():
+            bp = _bare_path_of(tokens, sig[0], sig[-1] + 1)
+            res = None if bp is None else _slot_path_resolve(ctx, bp[0])
+            if res is not None and res[0] == "ok" and _is_complex_type(res[1]):
+                raise ImpalaUnsupportedError(
+                    f"ORDER BY expression '{bp[1]}' with complex "
+                    f"type '{res[1]}' is not supported."
+                )
+
     for blk in ctx.blocks:
         sel_idx, from_idx, end = blk.sel, blk.from_idx, blk.end
-        list_start = _significant(tokens, sel_idx)
-        if list_start == -1:
-            continue
-        if tokens[list_start].kind == "word" and tokens[list_start].upper in (
-            "DISTINCT", "ALL",
-        ):
-            list_start = _significant(tokens, list_start)
-        if from_idx >= end:
+        if blk.from_clause is None:
             continue
         amap, src_unknown, from_aliases = ctx.catalog_sources(
             blk.from_clause,
@@ -9952,7 +9556,7 @@ def _check_strict_complex_types(ctx: _Analysis) -> None:
 
         star_expansions: list[int | None] = []
         nonstar_items = 0
-        for a, b in _split_top_level_commas(tokens, list_start, from_idx):
+        for a, b in blk.items:
             sig = [
                 k for k in range(a, b)
                 if tokens[k].kind not in ("ws", "line_comment", "block_comment")
@@ -10131,17 +9735,18 @@ def _check_strict_complex_types(ctx: _Analysis) -> None:
             if t2.kind == "word" and t2.upper == "OVER":
                 op = _significant(tokens, k2)
                 if op != -1 and op < end and tokens[op].kind == "op" and tokens[op].text == "(":
-                    _check_window_spec_complex(ctx, tokens, op, _matching_paren(tokens, op))
-        # block-level ORDER BY + IS NULL
-        k = from_idx
-        while k < end:
+                    _check_window_spec_complex(ctx, tokens, op, ctx.close(op))
+        # block-level IS NULL, before its ORDER BY
+        order = blk.clauses.get("ORDER")
+        k, stop = from_idx, end if order is None else order.at
+        while k < stop:
             t = tokens[k]
             if t.kind == "op" and t.text == "(":
                 nxt = _significant(tokens, k)
                 if nxt != -1 and tokens[nxt].kind == "word" and tokens[nxt].upper in (
                     "SELECT", "WITH",
                 ):
-                    k = _matching_paren(tokens, k) + 1
+                    k = ctx.close(k) + 1
                     continue
                 k += 1
                 continue
@@ -10166,49 +9771,10 @@ def _check_strict_complex_types(ctx: _Analysis) -> None:
                                 )
                 k = j + 1 if j != -1 else k + 1
                 continue
-            if t.kind == "word" and t.upper == "ORDER":
-                j = _significant(tokens, k)
-                if j == -1 or tokens[j].upper != "BY":
-                    k += 1
-                    continue
-                o_end = j + 1
-                d = 0
-                while o_end < end:
-                    tg = tokens[o_end]
-                    if tg.kind == "op" and tg.text == "(":
-                        d += 1
-                    elif tg.kind == "op" and tg.text == ")":
-                        d -= 1
-                        if d < 0:
-                            break
-                    elif d == 0 and tg.kind == "word" and tg.upper in (
-                        "LIMIT", "OFFSET", "UNION",
-                    ):
-                        break
-                    o_end += 1
-                for oa, ob in _split_top_level_commas(tokens, j + 1, o_end):
-                    sig = [
-                        x for x in range(oa, ob)
-                        if tokens[x].kind not in ("ws", "line_comment", "block_comment")
-                    ]
-                    while sig and tokens[sig[-1]].kind == "word" and tokens[sig[-1]].upper in (
-                        "ASC", "DESC", "FIRST", "LAST", "NULLS",
-                    ):
-                        sig = sig[:-1]
-                    if not sig:
-                        continue
-                    bp = _bare_path_of(tokens, sig[0], sig[-1] + 1)
-                    if bp is None:
-                        continue
-                    res = _slot_path_resolve(ctx, bp[0])
-                    if res is not None and res[0] == "ok" and _is_complex_type(res[1]):
-                        raise ImpalaUnsupportedError(
-                            f"ORDER BY expression '{bp[1]}' with complex "
-                            f"type '{res[1]}' is not supported."
-                        )
-                k = o_end
-                continue
             k += 1
+        check_order(order)
+    for u in ctx.setops:
+        check_order(u.clauses.get("ORDER"))
 
 
 def _check_window_spec_complex(ctx: _Analysis, tokens: list[Token], spec_open: int, spec_close: int) -> None:
@@ -10436,7 +10002,7 @@ def _check_strict_typed_exprs(ctx: _Analysis) -> None:
         if t.kind == "word" and t.upper in ("EXTRACT", "DATE_PART"):
             j = _significant(tokens, i)
             if j != -1 and tokens[j].kind == "op" and tokens[j].text == "(":
-                close = _matching_paren(tokens, j)
+                close = ctx.close(j)
                 d, from_idx = 0, -1
                 for k in range(j + 1, close):
                     tk = tokens[k]
@@ -11199,7 +10765,7 @@ def _expr_type(ctx: _Analysis, tokens: list[Token], lo: int, hi: int) -> str | N
 
     def skip_group() -> None:
         """Consume a '(' ... ')' group starting at the current token."""
-        close = _matching_paren(tokens, cur_idx())
+        close = ctx.close(cur_idx())
         if close == -1 or close > hi:
             raise _TypeBail
         advance_past(close)
@@ -11230,7 +10796,7 @@ def _expr_type(ctx: _Analysis, tokens: list[Token], lo: int, hi: int) -> str | N
                 skip_group()  # scalar subquery: type unknown
                 return (None, False)
             open_idx = cur_idx()
-            close = _matching_paren(tokens, open_idx)
+            close = ctx.close(open_idx)
             if close == -1 or close > hi:
                 raise _TypeBail
             inner = _expr_type(ctx, tokens, open_idx + 1, close - 1)
@@ -11267,7 +10833,7 @@ def _expr_type(ctx: _Analysis, tokens: list[Token], lo: int, hi: int) -> str | N
             if j == -1 or tokens[j].kind != "op" or tokens[j].text != "(":
                 raise _TypeBail
             r = _cast_target_type(tokens, j)
-            close = _matching_paren(tokens, j)
+            close = ctx.close(j)
             if close == -1 or close > hi:
                 raise _TypeBail
             advance_past(close)
@@ -11300,7 +10866,7 @@ def _expr_type(ctx: _Analysis, tokens: list[Token], lo: int, hi: int) -> str | N
                 and sig[pos[0] + 1] == _significant(tokens, cur_idx()):
             fn = t.text.lower()
             open_idx = sig[pos[0] + 1]
-            close = _matching_paren(tokens, open_idx)
+            close = ctx.close(open_idx)
             if close == -1 or close > hi:
                 raise _TypeBail
             ret = _FN_RETURN_TYPES.get(fn)
@@ -11558,77 +11124,23 @@ def _expr_type(ctx: _Analysis, tokens: list[Token], lo: int, hi: int) -> str | N
     return ty
 
 
-#: clause keywords that terminate a WHERE/HAVING/ON expression at the
-#: same paren depth
-_BOOL_CLAUSE_ENDS = frozenset({
-    "GROUP", "ORDER", "HAVING", "LIMIT", "OFFSET", "UNION", "WINDOW",
-    "WHERE", "JOIN", "INNER", "LEFT", "RIGHT", "FULL", "CROSS", "ON",
-    "USING", "WHEN", "THEN", "ELSE", "END", "SELECT", "FROM",
-})
-
-
 def _bool_clause_regions(ctx: _Analysis) -> list[tuple[str, int, int]]:
     """(clause_keyword, start, end) inclusive expression regions for
-    every WHERE, HAVING and join-ON clause in the statement."""
+    every WHERE, HAVING and join-ON clause in the statement, in order:
+    the WHERE bodies, the blocks' HAVING clauses and the FROM model's
+    ON operands."""
+    tokens = ctx.tokens
+    spans = [(a - 1, b) for a, b in ctx.wheres] + [
+        (k, e) for f in ctx.froms for k, e in f.ons
+    ] + [
+        (c.lo - 1, c.hi) for b in ctx.blocks
+        if (c := b.clauses.get("HAVING")) is not None
+    ]
     regions: list[tuple[str, int, int]] = []
-    tokens, depth_at = ctx.tokens, ctx.depth_at
-    n = len(tokens)
-    for i, t in enumerate(tokens):
-        if t.kind != "word":
-            continue
-        up = t.upper
-        if up not in ("WHERE", "HAVING", "ON"):
-            continue
-        if up == "ON":
-            # only join ON: walk back for a JOIN at the same depth with
-            # nothing but a table ref (+hints) in between
-            p = _significant(tokens, i, -1)
-            hops = 0
-            is_join_on = False
-            while p != -1 and hops < 12:
-                tp = tokens[p]
-                if tp.kind == "word" and tp.upper == "JOIN" \
-                        and depth_at[p] == depth_at[i]:
-                    is_join_on = True
-                    break
-                # table ref between JOIN and ON: identifiers, dots,
-                # closing parens (inline view), AS
-                if not (
-                    tp.kind in ("word", "bident")
-                    or (tp.kind == "op" and tp.text in (".", ")"))
-                ):
-                    break
-                if tp.kind == "word" and tp.upper in (
-                    "SELECT", "WHERE", "FROM", "UNION",
-                ):
-                    break
-                p = _significant(tokens, p, -1)
-                hops += 1
-            if not is_join_on:
-                continue
-        dw = depth_at[i]
-        start = _significant(tokens, i)
-        if start == -1:
-            continue
-        end = n - 1
-        for k in range(start, n):
-            if depth_at[k] < dw:
-                end = k - 1
-                break
-            tk = tokens[k]
-            if (
-                depth_at[k] == dw and k > start and tk.kind == "word"
-                and tk.upper in _BOOL_CLAUSE_ENDS
-            ):
-                end = k - 1
-                break
-        while end >= start and tokens[end].kind in (
-            "ws", "line_comment", "block_comment",
-        ):
-            end -= 1
-        if end < start:
-            continue
-        regions.append((up, start, end))
+    for at, hi in sorted(spans):
+        start, end = _significant(tokens, at), _significant(tokens, hi, -1)
+        if start != -1 and start <= end:
+            regions.append((tokens[at].upper, start, end))
     return regions
 
 
@@ -11750,7 +11262,7 @@ def _check_strict_compound_operands(ctx: _Analysis) -> None:
         while k <= b:
             t = tokens[k]
             if t.kind == "op" and t.text == "(":
-                close = _matching_paren(tokens, k)
+                close = ctx.close(k)
                 if close == -1 or close > b:
                     return []
                 k = close + 1
@@ -11791,7 +11303,7 @@ def _check_strict_compound_operands(ctx: _Analysis) -> None:
         # strip a fully-enclosing paren group
         while (
             tokens[a].kind == "op" and tokens[a].text == "("
-            and _matching_paren(tokens, a) == b
+            and ctx.close(a) == b
         ):
             a, b = trim(a + 1, b - 1)
             if a > b:
@@ -11842,19 +11354,10 @@ def _check_strict_compound_operands(ctx: _Analysis) -> None:
 
 
     for blk in ctx.blocks:
-        sel, from_idx = blk.sel, blk.from_idx
-        first = _significant(tokens, sel)
-        items = _split_top_level_commas(tokens, sel + 1, from_idx)
-        for a, b in items:
+        for a, b in blk.items:
             a, b = trim(a, b - 1)
             if a > b:
                 continue
-            if tokens[a].kind == "word" and tokens[a].upper in (
-                "DISTINCT", "ALL", "STRAIGHT_JOIN",
-            ) and a == first:
-                a = _significant(tokens, a)
-                if a == -1 or a > b:
-                    continue
             # strip a trailing [AS] alias so it can't poison the typer
             sig = [
                 k for k in range(a, b + 1)
@@ -11924,7 +11427,7 @@ def _check_strict_user_functions(ctx: _Analysis) -> None:
         is_uda = key in _TEST_USER_UDAS
         if not is_uda and key not in _TEST_USER_FNS:
             continue
-        close = _matching_paren(tokens, j)
+        close = ctx.close(j)
         if close == -1:
             continue
         first = _significant(tokens, j)
@@ -12075,7 +11578,7 @@ def _check_strict_function_calls(ctx: _Analysis) -> None:
         known_agg = fn in _AGG_FUNC_NAMES
         if not (known_scalar or known_agg or fn in _FN_SIGS or fn in _ANALYTIC_ONLY_FNS):
             continue
-        close = _matching_paren(tokens, j)
+        close = ctx.close(j)
         first = _significant(tokens, j)
         has_distinct = (
             first != -1 and first < close
@@ -12330,12 +11833,12 @@ def _check_strict_values_rows(ctx: _Analysis) -> None:
     j = _significant(tokens, sig0)
     if j == -1 or tokens[j].kind != "op" or tokens[j].text != "(":
         return
-    close = _matching_paren(tokens, j)
+    close = ctx.close(j)
     items = _split_call_args(tokens, j, close)
     # multi-row form: every top-level item is itself parenthesized
     multi_row = bool(items) and all(
         tokens[lo].kind == "op" and tokens[lo].text == "("
-        and _matching_paren(tokens, lo) == hi
+        and ctx.close(lo) == hi
         for lo, hi in items
     )
     rows = (
@@ -12352,7 +11855,7 @@ def _check_strict_values_rows(ctx: _Analysis) -> None:
         for lo, hi in cells:
             k = lo
             while k != -1 and k <= hi:
-                if _agg_call_at(tokens, k, hi + 1) != -1:
+                if _agg_call_at(ctx, k, hi + 1) != -1:
                     raise ImpalaUnsupportedError(
                         "aggregation without a FROM clause is not allowed"
                     )
@@ -12444,7 +11947,7 @@ def _check_strict_inlist_between_types(ctx: _Analysis) -> None:
             j = _significant(tokens, i)
             if j == -1 or tokens[j].kind != "op" or tokens[j].text != "(":
                 continue
-            close = _matching_paren(tokens, j)
+            close = ctx.close(j)
             first = _significant(tokens, j)
             if (
                 first != -1 and tokens[first].kind == "word"
@@ -12728,11 +12231,15 @@ def translate(
     # Structural call rewrites (decode -> CASE, *_add -> interval math)
     # splice whole expressions in as single tokens; re-tokenize and re-run
     # until fixpoint so calls NESTED inside rewritten arguments are seen.
+    # The ORDER BY NULLS pass reads the token list of the fixpoint's last
+    # round (both passes copy their input, so it is theirs to share).
     text = untokenize(_rewrite_functions(tokens))
     for _ in range(8):
-        new = untokenize(_rewrite_functions(tokenize(text)))
+        tokens = tokenize(text)
+        new = untokenize(_rewrite_functions(tokens))
         if new == text:
             break
         text = new
-    tokens = _rewrite_order_by_nulls(tokenize(text))
-    return untokenize(tokens)
+    else:
+        tokens = tokenize(text)
+    return untokenize(_rewrite_order_by_nulls(tokens))

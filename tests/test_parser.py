@@ -2414,11 +2414,11 @@ _SUBQUERY_RECORDS = [
      ("not in", None, "WHERE", "equi", False, ["FROM", "WHERE"], None, True, 1, {"x", "u"})),
     ("SELECT a FROM t WHERE EXISTS (SELECT 1 FROM u WHERE u.c < t.c HAVING count(*) > 1)",
      "(SELECT 1 FROM u WHERE u.c < t.c HAVING count(*) > 1)",
-     ("exists", None, "WHERE", "nonequi", False, ["FROM", "WHERE", "HAVING"], None, False, 1,
+     ("exists", None, "WHERE", "nonequi", False, ["FROM", "HAVING", "WHERE"], None, False, 1,
       {"u"})),
     ("SELECT a FROM t WHERE NOT EXISTS (SELECT b FROM u UNION SELECT c FROM v)",
      "(SELECT b FROM u UNION SELECT c FROM v)",
-     ("not exists", None, "WHERE", "none", False, ["FROM", "UNION", "FROM"], None, False, 1,
+     ("not exists", None, "WHERE", "none", False, ["FROM", "UNION"], None, False, 1,
       {"u"})),
     ("SELECT a FROM t WHERE a = (SELECT max(b) FROM u LIMIT 1)",
      "(SELECT max(b) FROM u LIMIT 1)",
@@ -2446,7 +2446,7 @@ _SUBQUERY_RECORDS = [
      ("limit", None, "LIMIT", "none", False, [], None, False, 1, set())),
     ("SELECT a, coalesce((SELECT max(b) OVER (ORDER BY b) FROM u), 0) FROM t",
      "(SELECT max(b) OVER (ORDER BY b) FROM u)",
-     (None, None, "SELECT", "none", True, ["OVER", "FROM"], None, False, 1, {"u"})),
+     (None, None, "SELECT", "none", True, ["FROM", "OVER"], None, False, 1, {"u"})),
     ("SELECT a FROM t WHERE a IN (SELECT b FROM u WHERE c IN (SELECT d FROM db.v w))",
      "(SELECT d FROM db.v w)",
      ("in", None, "WHERE", "none", False, ["FROM"], None, False, 1, {"w", "v"})),
@@ -2477,8 +2477,13 @@ def test_subquery_record(sql, sub, want):
         s for s in ctx.subqueries
         if untokenize(ctx.tokens[s.open:s.close + 1]) == sub
     )
+    limit = next((
+        untokenize(ctx.tokens[c.lo:c.hi]).strip() for c in s.clauses("LIMIT")
+    ), None)
+    blk = s.block
     got = (
         s.context, s.follows, s.clause, s.correlation, s.scalar,
-        [w for _, w in s.top], s.limit, s.distinct, len(s.items), set(s.binds),
+        sorted(s.words), limit, blk is not None and blk.distinct,
+        len(blk.items) if blk else 0, set(s.binds),
     )
     assert got == want

@@ -131,6 +131,31 @@ def test_a_miss_analyzes_once_and_a_hit_never(interactive_engine, monkeypatch):
         assert len(built) == 1, name
 
 
+def test_a_miss_tokenizes_twice(interactive_engine, monkeypatch):
+    """A strict miss tokenizes its text once for the analysis and once
+    in translate's function-rewrite fixpoint, whose last token list the
+    ORDER BY NULLS pass reuses. A hit tokenizes nothing."""
+    # (the modules the engine loads lazily bind the unpatched tokenize)
+    from impala_spark import parser as P, rewrites, tosql  # noqa: F401
+
+    calls = []
+    tokenize = P.tokenize
+
+    def counted(sql):
+        calls.append(sql)
+        return tokenize(sql)
+
+    for mod in (P, E):  # translate's and the statement analysis's
+        monkeypatch.setattr(mod, "tokenize", counted)
+    for name in INTERACTIVE:
+        text = SPARK_QUERIES[name].__doc__
+        calls.clear()
+        _read(interactive_engine, text, hit=False)
+        assert len(calls) == 2, (name, len(calls))
+        _read(interactive_engine, text, hit=True)
+        assert len(calls) == 2, name
+
+
 def test_registry_entry_takes_the_front_door(spark, sf_dir):
     """A registry SQL entry is a statement through its engine's
     ImpalaEngine.sql: the repeat is a plan-cache hit that runs as a new

@@ -542,6 +542,11 @@ def test_clause_bool_type_errors_pin_reference_texts():
          "join functional.alltypes b on a.int_col * b.float_col",
          "ON clause 'a.int_col * b.float_col' requires return type "
          "'BOOLEAN'. Actual type is 'DOUBLE'."),
+        # the ON after an inline view is a join ON too
+        ("select 1 from functional.alltypes a "
+         "join (select id from functional.alltypes) v on 1",
+         "ON clause '1' requires return type 'BOOLEAN'. "
+         "Actual type is 'TINYINT'."),
     ]
     for sql, msg in neg:
         with pytest.raises(ImpalaUnsupportedError) as ei:
@@ -611,6 +616,13 @@ def test_typed_operand_and_rendering_parity_round7():
          "'SELECT int_col FROM functional.alltypes' has 1 column(s)\n"
          "'SELECT int_col, float_col FROM functional.alltypes' has "
          "2 column(s)"),
+        # a union in an inline view or a WITH view is checked too
+        ("select * from (select 1 a union select 1, 2) v",
+         "Operands have unequal number of columns:\n"
+         "'SELECT 1 a' has 1 column(s)\n'SELECT 1, 2' has 2 column(s)"),
+        ("with v as (select 1 a union all select 1, 2) select * from v",
+         "Operands have unequal number of columns:\n"
+         "'SELECT 1 a' has 1 column(s)\n'SELECT 1, 2' has 2 column(s)"),
     ]
     for sql, msg in neg:
         with pytest.raises(ImpalaUnsupportedError) as ei:
