@@ -1245,22 +1245,24 @@ def _find_analytic_in_region(ctx: _Analysis, start: int, end: int) -> str | None
     return None
 
 
-def _agg_in_region(ctx: _Analysis, start: int, end: int, names) -> bool:
-    """Whether a plain aggregate call (a name in `names`, '(' and no
-    OVER after its ')') sits in [start, end), outside subqueries."""
+def _agg_in_region(
+    ctx: _Analysis, start: int, end: int, names=None, windows: bool = False,
+) -> bool:
+    """Whether a plain aggregate call (_agg_call_at) sits in [start,
+    end), outside subqueries and, with windows, outside OVER (...)
+    specs."""
     tokens, k = ctx.tokens, start
     while k < end:
         j = _significant(tokens, k)
         if _is_open(tokens, k) and _word_at(tokens, j) == "SELECT":
             k = ctx.close(k) + 1
-            continue
-        if tokens[k].kind == "word" and j < end and _is_open(tokens, j) \
-                and tokens[k].text.lower() in names:
-            after = _significant(tokens, ctx.close(j))
-            if not (after != -1 and after < end
-                    and _word_at(tokens, after) == "OVER"):
-                return True
-        k += 1
+        elif windows and _word_at(tokens, k) == "OVER" and j < end \
+                and _is_open(tokens, j):
+            k = ctx.close(j) + 1
+        elif _agg_call_at(ctx, k, end, names) != -1:
+            return True
+        else:
+            k += 1
     return False
 
 
@@ -1270,7 +1272,7 @@ def _check_strict_where_exprs(ctx: _Analysis) -> None:
     inside a subquery that happens to sit in WHERE are legal and
     skipped."""
     for start, end in ctx.wheres:
-        if _agg_in_region(ctx, start, end, _AGG_FUNC_NAMES):
+        if _agg_in_region(ctx, start, end):
             raise ImpalaUnsupportedError(
                 "aggregate function not allowed in WHERE clause"
             )
@@ -1434,19 +1436,7 @@ def _check_strict_ungrouped_select(ctx: _Analysis) -> None:
             }
         # any aggregate call in the select list? (aggs INSIDE a window
         # spec are the analytic's business, not the block's)
-        has_agg = False
-        k = list_start
-        while k < sel_end:
-            j = _significant(tokens, k)
-            if _word_at(tokens, k) == "OVER" and j < sel_end and _is_open(tokens, j):
-                k = ctx.close(j) + 1
-                continue
-            if _word_at(tokens, k) and tokens[k].text.lower() in _AGG_FUNC_NAMES \
-                    and j < sel_end and _is_open(tokens, j) and _word_at(
-                        tokens, _significant(tokens, ctx.close(j))) != "OVER":
-                has_agg = True
-                break
-            k += 1
+        has_agg = _agg_in_region(ctx, list_start, sel_end, windows=True)
         if blk.from_clause is None:
             # analytic expr / star without a FROM clause
             # (SelectStmt.java:568-580, AnalyzeExprsTest.java:822-823
@@ -1797,11 +1787,14 @@ def _check_strict_limit_offset(ctx: _Analysis) -> None:
     tokens = ctx.tokens
     arms = {b.sel for so in ctx.setops for b in so.blocks if b is not None}
     # each LIMIT / OFFSET with its query's clauses, and whether the query
-    # is nested: in parens, or a union operand
+    # is nested: in parens, or a union operand (also the clauses after a
+    # parenthesized operand that is not the last)
     found = sorted((
         (c.at, cl, nested) for cl, nested in [
             (b.clauses, b.depth > 0 or b.sel in arms) for b in ctx.blocks
-        ] + [(so.clauses, so.depth > 0) for so in ctx.setops]
+        ] + [(so.clauses, so.depth > 0) for so in ctx.setops] + [
+            (cl, True) for so in ctx.setops for cl in so.stray
+        ]
         for w, c in cl.items() if w in ("LIMIT", "OFFSET")
     ), key=lambda x: x[0])
     for idx, clauses, nested in found:
@@ -1863,12 +1856,13 @@ def _check_strict_limit_offset(ctx: _Analysis) -> None:
             )
 
 
-def _agg_call_at(ctx: _Analysis, k: int, end: int) -> int:
-    """If token k starts a plain aggregate call (agg name + '(' with no
-    trailing OVER), return the index of its closing paren; else -1."""
+def _agg_call_at(ctx: _Analysis, k: int, end: int, names=None) -> int:
+    """If token k starts a plain aggregate call (a name in `names`,
+    default _AGG_FUNC_NAMES, + '(' with no trailing OVER), return the
+    index of its closing paren; else -1."""
     tokens = ctx.tokens
     t = tokens[k]
-    if t.kind != "word" or t.upper.lower() not in _AGG_FUNC_NAMES:
+    if t.kind != "word" or t.upper.lower() not in (names or _AGG_FUNC_NAMES):
         return -1
     j = _significant(tokens, k)
     if j == -1 or j >= end or tokens[j].kind != "op" or tokens[j].text != "(":
@@ -5079,10 +5073,6 @@ def _check_strict_stmt_shapes(ctx: _Analysis) -> None:
     check's.)"""
     tokens = ctx.tokens
     for i, t in enumerate(tokens):
-        # a nested query must close
-        if _is_open(tokens, i) \
-                and _word_at(tokens, _significant(tokens, i)) == "SELECT":
-            ctx.close(i)
         if t.kind != "word":
             continue
         # INSERT ... PARTITION (col[=v], ...): duplicate columns
@@ -5602,6 +5592,10 @@ class _SetOp:
     #: the block whose select list names the union's output: the first
     #: block in its first operand
     first: _Block | None
+    #: ORDER (BY) / LIMIT / OFFSET written after a '(' ... ')' operand
+    #: that is not the last (a syntax error in the reference's grammar),
+    #: one map per such operand
+    stray: list[dict[str, _Clause]] = field(default_factory=list)
 
 
 @dataclass
@@ -6159,19 +6153,29 @@ class _Analysis:
             src.kind = "table"
 
     @cached_property
-    def _parens(self) -> tuple[list[int], dict[int, int], dict[int, int]]:
-        """One pass over the parens: depth_at, close_of, open_of."""
-        depth_at, close_of, stack, d = [], {}, [], 0
+    def _parens(self) -> tuple[
+        list[int], list[int], dict[int, int], dict[int, int], bool,
+    ]:
+        """One pass over the parens: depth_at, outer_at, close_of,
+        open_of, and whether every '(' and ')' has its match."""
+        depth_at, outer_at, close_of, stack, d = [], [], {}, [], 0
+        balanced = True
         for i, t in enumerate(self.tokens):
             if t.kind == "op" and t.text == "(":
                 d += 1
                 stack.append(i)
             depth_at.append(d)
+            outer_at.append(stack[-1] if stack else -1)
             if t.kind == "op" and t.text == ")":
                 d -= 1
                 if stack:
                     close_of[stack.pop()] = i
-        return depth_at, close_of, {c: o for o, c in close_of.items()}
+                else:
+                    balanced = False
+        return (
+            depth_at, outer_at, close_of, {c: o for o, c in close_of.items()},
+            balanced and not stack,
+        )
 
     @property
     def depth_at(self) -> list[int]:
@@ -6179,14 +6183,26 @@ class _Analysis:
         return self._parens[0]
 
     @property
+    def outer_at(self) -> list[int]:
+        """The '(' of the innermost group holding each token (a '(' and
+        its ')' count inside), -1 at the top level."""
+        return self._parens[1]
+
+    @property
     def close_of(self) -> dict[int, int]:
         """'(' index -> the index of its ')', for every closed group."""
-        return self._parens[1]
+        return self._parens[2]
 
     @property
     def open_of(self) -> dict[int, int]:
         """')' index -> the index of its '('."""
-        return self._parens[2]
+        return self._parens[3]
+
+    def check_balanced(self) -> None:
+        """Raise on an unmatched '(' or ')': the parser's rejection,
+        which precedes every analysis error."""
+        if not self._parens[4]:
+            raise ImpalaUnsupportedError("unbalanced parentheses")
 
     def close(self, k: int) -> int:
         """The ')' of the '(' at token k; raises on an unclosed one."""
@@ -6195,7 +6211,7 @@ class _Analysis:
         return self.close_of[k]
 
     @cached_property
-    def _queries(self) -> tuple[list[_Block], list[_SetOp]]:
+    def _queries(self) -> tuple[list[_Block], list[_SetOp], dict[int, _Block]]:
         """The SELECT blocks in statement order, each read in one walk at
         its own depth, and the set operations at every level."""
         tokens, n, depth_at = self.tokens, len(self.tokens), self.depth_at
@@ -6247,15 +6263,9 @@ class _Analysis:
         # none), and each VALUES word with its level's '('
         levels: dict[int, list[int]] = {}
         values: list[tuple[int, int]] = []
-        stack: list[int] = []
         for k, t in enumerate(tokens):
-            if t.kind == "op" and t.text in ("(", ")"):
-                if t.text == "(":
-                    stack.append(k)
-                elif stack:
-                    stack.pop()
-            elif t.kind == "word" and t.upper in ("UNION", "VALUES"):
-                o = stack[-1] if stack else -1
+            if t.kind == "word" and t.upper in ("UNION", "VALUES"):
+                o = self.outer_at[k]
                 p = _significant(tokens, k, -1)
                 if t.upper == "UNION":
                     levels.setdefault(o, []).append(k)
@@ -6278,9 +6288,11 @@ class _Analysis:
             first = by_end.get(unions[0])
             p = _significant(tokens, unions[0], -1)
             lo = first.sel if first is not None else self.open_of.get(p, p)
-            arms, ops = [], []
+            arms, ops, stray = [], [], []
             for u in unions:
                 arms.append((lo, u))
+                if lo in self.close_of:
+                    stray.append(clauses_in(self.close_of[lo], u, d))
                 q = _significant(tokens, u)
                 op = "UNION"
                 if _word_at(tokens, q) in ("ALL", "DISTINCT"):
@@ -6302,6 +6314,7 @@ class _Analysis:
             setops.append(_SetOp(
                 d, arms, [by_sel.get(a) for a, _ in arms], ops, clauses,
                 next((b for b in blocks if b.sel >= arms[0][0]), None),
+                [c for c in stray if c],
             ))
         # a VALUES list: its operands are its '(' ... ')' groups
         for v, o in values:
@@ -6321,7 +6334,7 @@ class _Analysis:
                 d, arms, [None] * len(arms), ["UNION ALL"] * (len(arms) - 1),
                 clauses_in(arms[-1][1] if arms else v, end, d), None,
             ))
-        return blocks, setops
+        return blocks, setops, by_sel
 
     @property
     def blocks(self) -> list[_Block]:
@@ -6368,7 +6381,7 @@ class _Analysis:
 
     def block_of(self, sel: int) -> _Block | None:
         """The block whose SELECT keyword is token sel."""
-        return next((b for b in self.blocks if b.sel == sel), None)
+        return self._queries[2].get(sel)
 
     def ancestors(self, b: _Block) -> list[_Block]:
         out = []
@@ -6386,12 +6399,19 @@ class _Analysis:
 
     @cached_property
     def wheres(self) -> list[tuple[int, int]]:
-        """(start, end) of every WHERE clause body (any statement)."""
-        return [
-            (i + 1, _clause_end(self.tokens, i + 1, _CLAUSE_BOUNDARY))
-            for i, t in enumerate(self.tokens)
-            if t.kind == "word" and t.upper == "WHERE"
-        ]
+        """(start, end) of every WHERE clause body, in statement order:
+        each block's, and any other WHERE (an UPDATE's or a DELETE's),
+        whose body runs to the end of its level."""
+        out = {
+            c.at: (c.lo, c.hi) for b in self.blocks
+            if (c := b.clauses.get("WHERE")) is not None
+        }
+        for i, t in enumerate(self.tokens):
+            if t.kind == "word" and t.upper == "WHERE" and i not in out:
+                out[i] = (
+                    i + 1, self.close_of.get(self.outer_at[i], len(self.tokens)),
+                )
+        return sorted(out.values())
 
     @cached_property
     def between_ands(self) -> dict[int, int]:
@@ -6440,7 +6460,7 @@ class _Analysis:
     def _subquery(self, o: int, j: int) -> _Subquery:
         tokens, depth_at = self.tokens, self.depth_at
         c, head = self.close_of[o], tokens[j].upper
-        block = next((b for b in self.blocks if b.sel == j), None)
+        block = self.block_of(j)
         outer = self.block_at(o)
         # the clause: the last clause word before the '(' at the outer
         # block's level (an IS DISTINCT FROM is no FROM clause)
@@ -12172,6 +12192,7 @@ def translate(
     _check_rejections(tokens)
     _check_subquery_in_or(ctx)
     if strict:
+        ctx.check_balanced()
         # FROM-clause analysis precedes everything in SelectStmt.analyze
         _check_strict_ddl(ctx)
         _check_strict_table_path_refs(ctx)

@@ -440,6 +440,29 @@ def test_strict_offset_requires_order_by():
         )
 
 
+def test_strict_unbalanced_parentheses_rejected_first():
+    """An unmatched '(' or ')' is the parser's rejection: it wins over
+    every analysis error, whether or not some check reads that paren."""
+    from impala_spark.testcatalog import TABLE_SCHEMAS
+
+    for sql in [
+        "select 1 from functional.alltypes)",
+        "compute stats t (see the notes",
+        "select id from functional.alltypes where id in "
+        "(select 1 from functional.alltypes where (id = 2)",
+    ]:
+        with _pytest.raises(_Unsupported, match="^unbalanced parentheses$"):
+            translate(sql, strict=True)
+    # the Avro schema check would fire first; the open '(' wins
+    with _pytest.raises(_Unsupported, match="^unbalanced parentheses$"):
+        translate(
+            "CREATE TABLE av STORED AS AVRO TBLPROPERTIES "
+            "('avro.schema.url'='file://",
+            strict=True, catalog=TABLE_SCHEMAS,
+        )
+    translate("select (1) from functional.alltypes", strict=True)
+
+
 def test_strict_negative_limit_offset_rejected():
     with _pytest.raises(
         _Unsupported, match=r"LIMIT must be a non-negative integer: -1 = -1"

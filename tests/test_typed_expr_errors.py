@@ -1428,6 +1428,12 @@ def test_aggregation_gate_and_subquery_width_errors():
          "functional.alltypessmall) ",
          "Order-by with offset without limit not supported in nested "
          "queries"),
+        # clauses after a parenthesized operand that is not the last
+        ("select int_col from functional.alltypes union (select "
+         "tinyint_col from functional.alltypessmall) order by int_col "
+         "offset 5 union all select int_col from functional.alltypes",
+         "Order-by with offset without limit not supported in nested "
+         "queries"),
     ]
     for sql, msg in neg:
         with pytest.raises(ImpalaUnsupportedError) as ei:
