@@ -1670,16 +1670,12 @@ class ImpalaEngine:
         single-node analytic sort (planner/AnalyticPlanner.java), which
         has no distributed equivalent without this split. Gated on
         statement input size like the distinct rewrite."""
-        if nbytes is None:
-            return None
-        from impala_spark.rewrites import parse_global_rank
-
-        plan = parse_global_rank(q)
-        if plan is None:
-            return None
         import impala_spark.rewrites as _rw_mod
 
-        if nbytes < _rw_mod.GLOBAL_RANK_MIN_INPUT_BYTES:
+        if nbytes is None or nbytes < _rw_mod.GLOBAL_RANK_MIN_INPUT_BYTES:
+            return None
+        plan = _rw_mod.parse_global_rank(q)
+        if plan is None:
             return None
         from pyspark.sql import functions as F
 

@@ -26,7 +26,9 @@ passed through untouched — Catalyst is the analyzer and planner.
 
 from __future__ import annotations
 
+import os
 import re
+import socket
 from dataclasses import dataclass, field
 from functools import cached_property
 
@@ -370,14 +372,10 @@ def _rewrite_iregexp(tokens: list[Token]) -> list[Token]:
                 out.append(Token("string", f"'(?i){inner}'"))
                 i = j + 1
                 continue
-            if tokens[j].kind == "op" and tokens[j].text == "(":
-                close = _matching_paren(tokens, j)
-                operand = untokenize(tokens[j : close + 1])
-                i = close + 1
-            else:
-                operand = tokens[j].text
-                i = j + 1
-            out.append(Token("word", f"concat('(?i)', {operand})"))
+            # the operand's own tokens, so the later passes reach inside it
+            end = _matching_paren(tokens, j) if _is_open(tokens, j) else j
+            out += [Token("word", "concat('(?i)', "), *tokens[j:end + 1], Token("word", ")")]
+            i = end + 1
             continue
         out.append(t)
         i += 1
@@ -488,13 +486,157 @@ def _rewrite_hints(tokens: list[Token]) -> list[Token]:
 
 
 # ---------------------------------------------------------------------------
-# Builtin alias table (catalog/BuiltinsDb.java:666-1054 + ScalarBuiltins).
-# Simple name->name renames happen token-level; the few with argument
-# rewrites get structural treatment.
+# Builtin call rewrites (catalog/BuiltinsDb.java:666-1054 + ScalarBuiltins):
+# one table, applied to each call after its arguments (A/Expr.java analyze
+# resolves a FunctionCallExpr's children first).
 # ---------------------------------------------------------------------------
 
-#: fn-name renames where arity and argument order match Spark exactly.
-FUNCTION_RENAMES = {
+#: Impala timestamp builtins years_add(ts, n) ... (generated ScalarBuiltins,
+#: catalog/BuiltinsDb.java init path): unit -> make_interval arg position.
+_TS_UNIT_SLOT = {
+    "years": 0, "months": 1, "weeks": 2, "days": 3,
+    "hours": 4, "minutes": 5, "seconds": 6,
+    "milliseconds": 7, "microseconds": 8,
+}
+
+
+def _ts_add_expr(unit: str, ts: str, n: str, sign: str) -> str:
+    slot = _TS_UNIT_SLOT[unit]
+    args = ["0"] * 7
+    if slot <= 6:
+        args[slot] = f"({n})"
+    else:  # sub-second units express as fractional seconds
+        div = "1000" if unit == "milliseconds" else "1000000"
+        args[6] = f"(({n}) / {div})"
+    return f"(({ts}) {sign} make_interval({', '.join(args)}))"
+
+
+def _histogram(args: list[str]) -> str:
+    # BuiltinsDb.java:741-751 — equi-height histogram as a string of
+    # bucket boundaries; we surface the boundary list. The optional
+    # second argument is the bucket count (default 10 deciles).
+    buckets = 10
+    if len(args) == 2:
+        try:
+            buckets = int(args[1])
+        except ValueError:
+            raise ImpalaUnsupportedError(
+                f"histogram() bucket count must be an integer literal, got {args[1]!r}"
+            ) from None
+    fracs = ",".join(str(round(b / buckets, 6)) for b in range(1, buckets))
+    return f"percentile_approx({args[0]}, array({fracs}))"
+
+
+def _decode(args: list[str]) -> str | None:
+    # analysis/CaseExpr.java:37-60 — DECODE(e, s1, r1, ..., [def]) is CASE
+    # with NULL-SAFE comparison; left untranslated it would bind Spark's
+    # binary decode(bin, charset) and fail or corrupt. The 2-arg
+    # decode(bin, charset) is Spark's own — pass through.
+    if len(args) < 3:
+        return None
+    expr, rest = args[0], args[1:]
+    default = rest.pop() if len(rest) % 2 == 1 else None
+    whens = "".join(
+        f" WHEN ({expr}) <=> ({rest[k]}) THEN {rest[k + 1]}"
+        for k in range(0, len(rest), 2)
+    )
+    else_part = f" ELSE {default}" if default is not None else ""
+    return f"CASE{whens}{else_part} END"
+
+
+def _cast(args: list[str]) -> str | None:
+    # Impala CAST enforces CHAR(n)/VARCHAR(n) length semantics at cast
+    # time — CHAR pads/truncates to exactly n, VARCHAR truncates to at
+    # most n (analysis/CastExpr.java + Type length rules). Spark's CAST
+    # treats both as plain STRING in expressions (length applies only on
+    # table writes), so rewrite to rpad/left which reproduce Impala's
+    # semantics.
+    m = re.match(r"(?is)^(.*\S)\s+AS\s+(VAR)?CHAR\s*\(\s*(\d+)\s*\)$", args[0]) \
+        if len(args) == 1 else None
+    if m is None:
+        return None
+    expr, n = m.group(1), int(m.group(3))
+    if m.group(2):
+        return f"left(CAST(({expr}) AS STRING), {n})"
+    return f"rpad(CAST(({expr}) AS STRING), {n}, ' ')"
+
+
+#: ScalarBuiltins truncate(x[, d]): numeric truncation toward zero to d
+#: decimal places. Spark has no numeric truncate; CAST to BIGINT
+#: truncates toward zero (ANSI off).
+_TRUNCATE = {
+    1: "CAST(({0}) AS BIGINT)",
+    2: "(CAST(({0}) * POW(10, {1}) AS BIGINT) / POW(10, {1}))",
+}
+
+#: Oracle-style trunc() unit strings -> date_trunc units.
+_TRUNC_UNITS = {
+    "SYYYY": "YEAR", "YYYY": "YEAR", "YEAR": "YEAR", "SYEAR": "YEAR",
+    "YYY": "YEAR", "YY": "YEAR", "Y": "YEAR",
+    "Q": "QUARTER",
+    "MONTH": "MONTH", "MON": "MONTH", "MM": "MONTH", "RM": "MONTH",
+    "WW": "WEEK", "W": "WEEK",
+    "DDD": "DAY", "DD": "DAY", "J": "DAY",
+    "DAY": "WEEK", "DY": "WEEK", "D": "WEEK",  # start of week
+    "HH": "HOUR", "HH12": "HOUR", "HH24": "HOUR",
+    "MI": "MINUTE",
+}
+
+
+def _trunc(args: list[str]) -> str | None:
+    # Impala trunc(ts, 'UNIT') truncates a TIMESTAMP and returns TIMESTAMP
+    # (ScalarBuiltins TruncForTimestamp); Spark's trunc returns DATE. Map
+    # the unit strings onto date_trunc, which keeps the timestamp type.
+    # Without a unit string it is numeric trunc(x[, d]), an alias of
+    # truncate(); d may be negative or an expression.
+    if len(args) == 2 and args[1].startswith(("'", '"')):
+        unit = _TRUNC_UNITS.get(args[1].strip("'\" ").upper())
+        return unit and f"date_trunc('{unit}', {args[0]})"
+    template = _TRUNCATE.get(len(args))
+    return template and template.format(*args)
+
+
+def _countset(args: list[str]) -> str | None:
+    # countset(x[, v]): count of set (v=1, default) bits. The cleared-bit
+    # count (v=0) depends on the argument's TYPE WIDTH, which a
+    # text-level rewrite cannot know — raise rather than guess a width.
+    if len(args) == 1 or (len(args) == 2 and args[1] == "1"):
+        return f"bit_count({args[0]})"
+    if len(args) == 2:
+        raise ImpalaUnsupportedError(
+            "countset(x, 0) (cleared-bit count) depends on the"
+            " argument's type width and is not supported; use"
+            " <width> - countset(x) explicitly"
+        )
+    return None
+
+
+def _days_add(sign: str):
+    # Impala date_add(ts, n) adds DAYS and returns a timestamp; Spark's
+    # date_add returns DATE (type corruption, not an error). The
+    # date_add(ts, INTERVAL n unit) form is left as written; INTERVAL is
+    # matched as a word, since a rewritten argument may hold make_interval.
+    def rewrite(args: list[str]) -> str | None:
+        if len(args) == 2 and not re.search(r"(?i)\binterval\b", args[1]):
+            return _ts_add_expr("days", args[0], args[1], sign)
+        return None
+    return rewrite
+
+
+_TS_A, _TS_B = "CAST(({0}) AS TIMESTAMP)", "CAST(({1}) AS TIMESTAMP)"
+_MICROS = "CAST(date_format(CAST(({0}) AS TIMESTAMP), 'SSSSSS') AS INT)"
+
+#: Impala builtin name -> its Spark rewrite, one of:
+#: - a name: a plain rename (same arity and argument order as Spark);
+#: - (name, {arity: tail}): a rename that keeps the written arguments and
+#:   appends `tail` before the ')', or leaves the call when tail is None;
+#: - {arity: template}: the whole call becomes the template with the
+#:   argument texts at {0}, {1}, ...;
+#: - a function of the argument texts returning the call's text, or None
+#:   to leave the call as written.
+#: An arity with no entry leaves the call as written; arity None stands
+#: for every arity. Arguments are rewritten before their call.
+CALL_REWRITES = {
     "ndv": "approx_count_distinct",          # BuiltinsDb.java:752-760 (HLL)
     "distinctpc": "approx_count_distinct",   # BuiltinsDb.java:772-781 (legacy PC sketch)
     "distinctpcsa": "approx_count_distinct", # BuiltinsDb.java:782-791
@@ -522,507 +664,181 @@ FUNCTION_RENAMES = {
     "le_dst": "levenshtein",
     "database": "current_database",
     "localtime": "localtimestamp",
+    # BuiltinsDb.java:928-951 — default separator is ', '.
+    "group_concat": ("listagg", {1: ", ', '", None: ""}),
+    # BuiltinsDb.java:731-740 — approximate median.
+    "appx_median": ("percentile_approx", {None: ", 0.5"}),
+    "zeroifnull": ("coalesce", {None: ", 0"}),
+    "nullifzero": ("nullif", {None: ", 0"}),
+    # Impala isnull(a, b) is 2-arg NVL (ScalarBuiltins); Spark's isnull(a)
+    # is 1-arg, so rename only the 2-arg form.
+    "isnull": ("nvl", {0: None, 1: None, None: ""}),
+    "histogram": _histogram,
+    "decode": _decode,
+    **{
+        f"{unit}_{op}": {2: _ts_add_expr(unit, "{0}", "{1}", sign)}
+        for unit in _TS_UNIT_SLOT for op, sign in (("add", "+"), ("sub", "-"))
+    },
+    "nanoseconds_add": {2: _ts_add_expr("microseconds", "{0}", "({1}) / 1000", "+")},
+    "nanoseconds_sub": {2: _ts_add_expr("microseconds", "{0}", "({1}) / 1000", "-")},
+    "date_add": _days_add("+"),
+    "adddate": _days_add("+"),
+    "date_sub": _days_add("-"),
+    "subdate": _days_add("-"),
+    # BuiltinsDb.java:721-730 reservoir sample aggregate; our
+    # deterministic stand-in (functions.sample) for the SQL path.
+    "sample": {
+        1: "array_join(slice(array_sort(collect_list({0})), 1, 20), ', ')",
+        2: "array_join(slice(array_sort(collect_list({0})), 1, {1}), ', ')",
+    },
+    "truncate": _TRUNCATE,
+    "dtrunc": _TRUNCATE,
+    "trunc": _trunc,
+    "cast": _cast,
+    # ConditionalFunctions boolean tests: NULL-safe three-valued checks —
+    # istrue(NULL) = false, isnottrue(NULL) = true.
+    "istrue": {1: "(({0}) IS TRUE)"},
+    "isfalse": {1: "(({0}) IS FALSE)"},
+    "isnottrue": {1: "(({0}) IS NOT TRUE)"},
+    "isnotfalse": {1: "(({0}) IS NOT FALSE)"},
+    "nullvalue": {1: "(({0}) IS NULL)"},
+    "nonnullvalue": {1: "(({0}) IS NOT NULL)"},
+    # ScalarBuiltins timeofday(): current time as a string.
+    "timeofday": {None: "date_format(current_timestamp(), 'EEE MMM dd HH:mm:ss yyyy zzz')"},
+    # ScalarBuiltins quotient(a, b): integer division.
+    "quotient": {2: "(({0}) DIV ({1}))"},
+    # ScalarBuiltins day/month name of a timestamp.
+    "dayname": {1: "date_format({0}, 'EEEE')"},
+    "monthname": {1: "date_format({0}, 'MMMM')"},
+    # MathFunctions bit ops as named functions; Spark only has the
+    # operators.
+    "bitand": {2: "(({0}) & ({1}))"},
+    "bitor": {2: "(({0}) | ({1}))"},
+    "bitxor": {2: "(({0}) ^ ({1}))"},
+    "bitnot": {1: "(~({0}))"},
+    # getbit(x, pos): the bit at position pos (0 = LSB), TINYINT.
+    "getbit": {2: "CAST(shiftright(CAST(({0}) AS BIGINT), ({1})) & 1 AS TINYINT)"},
+    # setbit(x, pos[, v]): set (default) or clear bit pos.
+    "setbit": {
+        2: "(({0}) | shiftleft(1, ({1})))",
+        3: "(CASE WHEN ({2}) = 0 THEN ({0}) & ~shiftleft(1, ({1}))"
+           " ELSE ({0}) | shiftleft(1, ({1})) END)",
+    },
+    "countset": _countset,
+    # 64-BIT rotate (the rewrite cannot see the argument's type width, so
+    # the BIGINT contract is documented): left rotate by n = (x << n) |
+    # (x >>> 64-n); n=0 degenerates to x | x = x (Java shifts are mod 64).
+    "rotateleft": {
+        2: "(shiftleft(CAST(({0}) AS BIGINT), ({1}))"
+           " | shiftrightunsigned(CAST(({0}) AS BIGINT), 64 - ({1})))",
+    },
+    "rotateright": {
+        2: "(shiftrightunsigned(CAST(({0}) AS BIGINT), ({1}))"
+           " | shiftleft(CAST(({0}) AS BIGINT), 64 - ({1})))",
+    },
+    # timestamp_cmp(t1, t2): -1/0/1, NULL when either side is NULL
+    "timestamp_cmp": {
+        2: f"(CASE WHEN {_TS_A} = {_TS_B} THEN 0 WHEN {_TS_A} < {_TS_B} THEN -1"
+           f" WHEN {_TS_A} > {_TS_B} THEN 1 ELSE CAST(NULL AS INT) END)",
+    },
+    # from_timestamp(ts, fmt): format a timestamp as a string (the Impala
+    # pattern letters used in practice — yyyy MM dd HH mm ss SSS — mean
+    # the same in Spark's date_format).
+    "from_timestamp": {2: "date_format(CAST(({0}) AS TIMESTAMP), {1})"},
+    # sub-second parts; Spark timestamps are micro-precision, so
+    # nanosecond is the micro value scaled.
+    "microsecond": {1: _MICROS},
+    "nanosecond": {1: f"({_MICROS} * 1000)"},
+    # ScalarBuiltins millisecond(ts): the milliseconds part.
+    "millisecond": {1: "CAST(date_format(CAST(({0}) AS TIMESTAMP), 'SSS') AS INT)"},
+    # typed integer bounds (MathFunctions); min_bigint spelled as an
+    # expression because the bare literal overflows the parser
+    "max_tinyint": {None: "CAST(127 AS TINYINT)"},
+    "min_tinyint": {None: "CAST(-128 AS TINYINT)"},
+    "max_smallint": {None: "CAST(32767 AS SMALLINT)"},
+    "min_smallint": {None: "CAST(-32768 AS SMALLINT)"},
+    "max_int": {None: "CAST(2147483647 AS INT)"},
+    "min_int": {None: "CAST(-2147483648 AS INT)"},
+    "max_bigint": {None: "CAST(9223372036854775807 AS BIGINT)"},
+    "min_bigint": {None: "CAST(-9223372036854775807 - 1 AS BIGINT)"},
+    # ScalarBuiltins MathFunctions is_inf/is_nan. Impala propagates NULL;
+    # Spark's isnan(NULL) is false and it has no isinf, so spell both
+    # explicitly. is_nan re-evaluates the argument once in the NULL test
+    # (same duplication pattern as truncate's decimal-places arg).
+    "is_inf": {1: "(abs(CAST(({0}) AS DOUBLE)) = CAST('Infinity' AS DOUBLE))"},
+    "is_nan": {1: "IF(({0}) IS NULL, CAST(NULL AS BOOLEAN), isnan(CAST(({0}) AS DOUBLE)))"},
+    # ScalarBuiltins regexp_escape = RE2::QuoteMeta: every char outside
+    # [A-Za-z0-9_] gets a backslash prefix.
+    "regexp_escape": {1: "regexp_replace({0}, '([^a-zA-Z0-9_])', '\\\\\\\\$1')"},
+    # ScalarBuiltins int_months_between: months_between truncated toward
+    # zero (CAST double->INT truncates, ANSI off).
+    "int_months_between": {
+        2: "CAST(months_between(CAST(({0}) AS TIMESTAMP),"
+           " CAST(({1}) AS TIMESTAMP)) AS INT)",
+    },
+    # ScalarBuiltins utc_timestamp(): now() shifted to UTC.
+    "utc_timestamp": {None: "to_utc_timestamp(current_timestamp(), current_timezone())"},
+    # Sentry-era user identity builtins: without an authorization layer
+    # they all resolve to the connected user, like user().
+    "effective_user": {None: "current_user()"},
+    "logged_in_user": {None: "current_user()"},
+    # session identity: stable for the process lifetime, like the
+    # reference's session handle
+    "current_session": lambda args: f"'session-{os.getpid()}'",
+    # UtilityFunctions pid(): the coordinator process id — here the Spark
+    # driver (the coordinator analog). Bound at translate time; a constant
+    # for the statement's lifetime, exactly like the reference (one
+    # coordinator per query).
+    "pid": lambda args: f"CAST({os.getpid()} AS INT)",
+    # UtilityFunctions coordinator(): hostname of the node coordinating
+    # the query — the Spark driver host.
+    "coordinator": lambda args: f"'{socket.gethostname()}'",
 }
 
 
-def _arg_count(tokens: list[Token], open_idx: int, close_idx: int) -> int:
-    depth = 0
-    commas = 0
-    empty = True
-    for k in range(open_idx, close_idx + 1):
-        tk = tokens[k]
-        if tk.kind == "op" and tk.text == "(":
-            depth += 1
-        elif tk.kind == "op" and tk.text == ")":
-            depth -= 1
-        elif tk.kind == "op" and tk.text == "," and depth == 1:
-            commas += 1
-        elif depth >= 1 and tk.kind not in ("ws", "line_comment", "block_comment"):
-            empty = False
-    return 0 if (empty and commas == 0) else commas + 1
-
-
-def _split_args(tokens: list[Token], open_idx: int, close_idx: int) -> list[str]:
-    """Argument texts of the call whose parens sit at open_idx/close_idx."""
-    args: list[str] = []
-    depth = 0
-    buf: list[str] = []
-    for k in range(open_idx, close_idx + 1):
-        tk = tokens[k]
-        if tk.kind == "op" and tk.text == "(":
-            depth += 1
-            if depth == 1:
-                continue
-        elif tk.kind == "op" and tk.text == ")":
-            depth -= 1
-            if depth == 0:
-                continue
-        if tk.kind == "op" and tk.text == "," and depth == 1:
-            args.append("".join(buf).strip())
-            buf = []
+def _rewrite_functions(tokens: list[Token], lo: int = 0, hi: int | None = None) -> list[Token]:
+    """tokens[lo:hi] with each call named in CALL_REWRITES rewritten, its
+    arguments first, so a call nested at any depth is reached in one pass."""
+    hi = len(tokens) if hi is None else hi
+    out: list[Token] = []
+    i = lo
+    while i < hi:
+        t = tokens[i]
+        rule = CALL_REWRITES.get(t.text.lower()) if t.kind == "word" else None
+        j = -1 if rule is None else _significant(tokens, i)
+        if not _is_open(tokens, j):
+            out.append(t)
+            i += 1
+            continue
+        if isinstance(rule, str):
+            out.append(Token("word", rule))
+            i += 1
+            continue
+        close = _matching_paren(tokens, j)
+        args = _rewrite_functions(tokens, j + 1, close)
+        spans = _split_top_level_commas(args, 0, len(args))
+        texts = [untokenize(args[a:b]).strip() for a, b in spans]
+        if texts == [""]:
+            texts = []
+        name, tail, text = t, None, None
+        if isinstance(rule, tuple):
+            to, tails = rule
+            tail = tails.get(len(texts), tails.get(None))
+            if tail is not None:
+                name = Token("word", to)
+        elif isinstance(rule, dict):
+            template = rule.get(len(texts), rule.get(None))
+            text = template and template.format(*texts)
         else:
-            buf.append(tk.text)
-    tail = "".join(buf).strip()
-    if tail or args:
-        args.append(tail)
-    return args
-
-
-def _replace_call(tokens: list[Token], i: int, close: int, text: str) -> None:
-    """Replace tokens[i..close] (a function call) with a single word token."""
-    tokens[i:close + 1] = [Token("word", text)]
-
-
-#: Impala timestamp builtins years_add(ts, n) ... (generated ScalarBuiltins,
-#: catalog/BuiltinsDb.java init path): unit -> make_interval arg position.
-_TS_UNIT_SLOT = {
-    "years": 0, "months": 1, "weeks": 2, "days": 3,
-    "hours": 4, "minutes": 5, "seconds": 6,
-    "milliseconds": 7, "microseconds": 8,
-}
-
-
-def _ts_add_expr(unit: str, ts: str, n: str, sign: str) -> str:
-    slot = _TS_UNIT_SLOT[unit]
-    if slot <= 6:
-        args = ["0"] * 7
-        args[slot] = f"({n})"
-    else:  # sub-second units express as fractional seconds
-        args = ["0"] * 7
-        div = "1000" if unit == "milliseconds" else "1000000"
-        args[6] = f"(({n}) / {div})"
-    return f"(({ts}) {sign} make_interval({', '.join(args)}))"
-
-
-def _rewrite_functions(tokens: list[Token]) -> list[Token]:
-    out = list(tokens)
-    i = 0
-    while i < len(out):
-        t = out[i]
-        if t.kind != "word":
-            i += 1
-            continue
-        j = _significant(out, i)
-        is_call = j != -1 and out[j].kind == "op" and out[j].text == "("
-        if not is_call:
-            i += 1
-            continue
-        name = t.text.lower()
-        if name in FUNCTION_RENAMES:
-            repl = FUNCTION_RENAMES[name]
-            if repl is None:
-                raise ImpalaUnsupportedError(f"function {name}() is not supported")
-            out[i] = Token("word", repl)
-        elif name == "group_concat":
-            # BuiltinsDb.java:928-951 — default separator is ', '.
-            close = _matching_paren(out, j)
-            out[i] = Token("word", "listagg")
-            if _arg_count(out, j, close) == 1:
-                out.insert(close, Token("word", ", ', '"))
-        elif name == "appx_median":
-            # BuiltinsDb.java:731-740 — approximate median.
-            close = _matching_paren(out, j)
-            out[i] = Token("word", "percentile_approx")
-            out.insert(close, Token("word", ", 0.5"))
-        elif name == "histogram":
-            # BuiltinsDb.java:741-751 — equi-height histogram as a string of
-            # bucket boundaries; we surface the boundary list. The optional
-            # second argument is the bucket count (default 10 deciles).
-            close = _matching_paren(out, j)
-            args = _split_args(out, j, close)
-            buckets = 10
-            if len(args) == 2:
-                try:
-                    buckets = int(args[1])
-                except ValueError:
-                    raise ImpalaUnsupportedError(
-                        f"histogram() bucket count must be an integer literal, got {args[1]!r}"
-                    ) from None
-            fracs = ",".join(str(round(b / buckets, 6)) for b in range(1, buckets))
-            _replace_call(out, i, close, f"percentile_approx({args[0]}, array({fracs}))")
-        elif name == "decode":
-            # analysis/CaseExpr.java:37-60 — DECODE(e, s1, r1, ..., [def])
-            # is CASE with NULL-SAFE comparison; left untranslated it would
-            # bind Spark's binary decode(bin, charset) and fail or corrupt.
-            close = _matching_paren(out, j)
-            args = _split_args(out, j, close)
-            if len(args) >= 3:
-                expr, rest = args[0], args[1:]
-                default = rest.pop() if len(rest) % 2 == 1 else None
-                whens = "".join(
-                    f" WHEN ({expr}) <=> ({rest[k]}) THEN {rest[k + 1]}"
-                    for k in range(0, len(rest), 2)
-                )
-                else_part = f" ELSE {default}" if default is not None else ""
-                _replace_call(out, i, close, f"CASE{whens}{else_part} END")
-            # 2-arg decode(bin, charset) is Spark's own — pass through.
-        elif name.endswith(("_add", "_sub")) and name[: -len("_add")] in _TS_UNIT_SLOT:
-            close = _matching_paren(out, j)
-            args = _split_args(out, j, close)
-            if len(args) == 2:
-                sign = "+" if name.endswith("_add") else "-"
-                _replace_call(
-                    out, i, close,
-                    _ts_add_expr(name[: -len("_add")], args[0], args[1], sign),
-                )
-        elif name == "sample":
-            # BuiltinsDb.java:721-730 reservoir sample aggregate; our
-            # deterministic stand-in (functions.sample) for the SQL path.
-            close = _matching_paren(out, j)
-            args = _split_args(out, j, close)
-            if len(args) in (1, 2):
-                n = args[1] if len(args) == 2 else "20"
-                _replace_call(
-                    out, i, close,
-                    f"array_join(slice(array_sort(collect_list({args[0]})), 1, {n}), ', ')",
-                )
-        elif name in ("truncate", "dtrunc"):
-            # ScalarBuiltins truncate(x[, d]): numeric truncation toward
-            # zero to d decimal places. Spark has no numeric truncate;
-            # CAST to BIGINT truncates toward zero (ANSI off).
-            close = _matching_paren(out, j)
-            args = _split_args(out, j, close)
-            if len(args) == 1:
-                _replace_call(out, i, close, f"CAST(({args[0]}) AS BIGINT)")
-            elif len(args) == 2:
-                _replace_call(
-                    out, i, close,
-                    f"(CAST(({args[0]}) * POW(10, {args[1]}) AS BIGINT) / POW(10, {args[1]}))",
-                )
-        elif name in ("istrue", "isfalse", "isnottrue", "isnotfalse"):
-            # ConditionalFunctions boolean tests: NULL-safe three-valued
-            # checks — istrue(NULL) = false, isnottrue(NULL) = true.
-            close = _matching_paren(out, j)
-            args = _split_args(out, j, close)
-            if len(args) == 1:
-                op = {
-                    "istrue": "IS TRUE", "isfalse": "IS FALSE",
-                    "isnottrue": "IS NOT TRUE", "isnotfalse": "IS NOT FALSE",
-                }[name]
-                _replace_call(out, i, close, f"(({args[0]}) {op})")
-        elif name in ("nullvalue", "nonnullvalue"):
-            close = _matching_paren(out, j)
-            args = _split_args(out, j, close)
-            if len(args) == 1:
-                op = "IS NULL" if name == "nullvalue" else "IS NOT NULL"
-                _replace_call(out, i, close, f"(({args[0]}) {op})")
-        elif name == "timeofday":
-            # ScalarBuiltins timeofday(): current time as a string.
-            close = _matching_paren(out, j)
-            _replace_call(
-                out, i, close,
-                "date_format(current_timestamp(), 'EEE MMM dd HH:mm:ss yyyy zzz')",
-            )
-        elif name in ("nanoseconds_add", "nanoseconds_sub"):
-            close = _matching_paren(out, j)
-            args = _split_args(out, j, close)
-            if len(args) == 2:
-                sign = "+" if name.endswith("_add") else "-"
-                _replace_call(
-                    out, i, close,
-                    _ts_add_expr("microseconds", args[0], f"({args[1]}) / 1000", sign),
-                )
-        elif name == "cast":
-            # Impala CAST enforces CHAR(n)/VARCHAR(n) length semantics at
-            # cast time — CHAR pads/truncates to exactly n, VARCHAR
-            # truncates to at most n (analysis/CastExpr.java + Type
-            # length rules). Spark's CAST treats both as plain STRING in
-            # expressions (length applies only on table writes), so
-            # rewrite to rpad/left which reproduce Impala's semantics.
-            close = _matching_paren(out, j)
-            args = _split_args(out, j, close)
-            m_char = re.match(r"(?is)^(.*\S)\s+AS\s+CHAR\s*\(\s*(\d+)\s*\)$", args[0]) if len(args) == 1 else None
-            m_vchar = re.match(r"(?is)^(.*\S)\s+AS\s+VARCHAR\s*\(\s*(\d+)\s*\)$", args[0]) if len(args) == 1 else None
-            if m_char:
-                expr, n = m_char.group(1), int(m_char.group(2))
-                _replace_call(out, i, close, f"rpad(CAST(({expr}) AS STRING), {n}, ' ')")
-            elif m_vchar:
-                expr, n = m_vchar.group(1), int(m_vchar.group(2))
-                _replace_call(out, i, close, f"left(CAST(({expr}) AS STRING), {n})")
-        elif name == "trunc":
-            # Impala trunc(ts, 'UNIT') truncates a TIMESTAMP and returns
-            # TIMESTAMP (ScalarBuiltins TruncForTimestamp); Spark's trunc
-            # returns DATE. Map the Oracle-style unit strings onto
-            # date_trunc, which keeps the timestamp type.
-            close = _matching_paren(out, j)
-            args = _split_args(out, j, close)
-            unit_map = {
-                "SYYYY": "YEAR", "YYYY": "YEAR", "YEAR": "YEAR", "SYEAR": "YEAR",
-                "YYY": "YEAR", "YY": "YEAR", "Y": "YEAR",
-                "Q": "QUARTER",
-                "MONTH": "MONTH", "MON": "MONTH", "MM": "MONTH", "RM": "MONTH",
-                "WW": "WEEK", "W": "WEEK",
-                "DDD": "DAY", "DD": "DAY", "J": "DAY",
-                "DAY": "WEEK", "DY": "WEEK", "D": "WEEK",  # start of week
-                "HH": "HOUR", "HH12": "HOUR", "HH24": "HOUR",
-                "MI": "MINUTE",
-            }
-            is_unit = len(args) == 2 and args[1].strip().startswith(("'", '"'))
-            if is_unit and args[1].strip("'\" ").upper() in unit_map:
-                unit = unit_map[args[1].strip("'\" ").upper()]
-                _replace_call(out, i, close, f"date_trunc('{unit}', {args[0]})")
-            elif len(args) == 2 and not is_unit:
-                # numeric trunc(x, d) — alias of truncate(); d may be
-                # negative or an expression
-                _replace_call(
-                    out, i, close,
-                    f"(CAST(({args[0]}) * POW(10, {args[1]}) AS BIGINT) / POW(10, {args[1]}))",
-                )
-            elif len(args) == 1:
-                _replace_call(out, i, close, f"CAST(({args[0]}) AS BIGINT)")
-        elif name == "quotient":
-            # ScalarBuiltins quotient(a, b): integer division.
-            close = _matching_paren(out, j)
-            args = _split_args(out, j, close)
-            if len(args) == 2:
-                _replace_call(out, i, close, f"(({args[0]}) DIV ({args[1]}))")
-        elif name in ("dayname", "monthname"):
-            # ScalarBuiltins day/month name of a timestamp.
-            close = _matching_paren(out, j)
-            args = _split_args(out, j, close)
-            if len(args) == 1:
-                fmt = "EEEE" if name == "dayname" else "MMMM"
-                _replace_call(out, i, close, f"date_format({args[0]}, '{fmt}')")
-        elif name in ("date_add", "date_sub", "adddate", "subdate"):
-            # Impala date_add(ts, n) adds DAYS and returns a timestamp;
-            # Spark's date_add returns DATE (type corruption, not an error).
-            close = _matching_paren(out, j)
-            args = _split_args(out, j, close)
-            if len(args) == 2 and "interval" not in args[1].lower():
-                sign = "-" if name in ("date_sub", "subdate") else "+"
-                _replace_call(out, i, close, _ts_add_expr("days", args[0], args[1], sign))
-        elif name == "zeroifnull":
-            close = _matching_paren(out, j)
-            out[i] = Token("word", "coalesce")
-            out.insert(close, Token("word", ", 0"))
-        elif name == "nullifzero":
-            close = _matching_paren(out, j)
-            out[i] = Token("word", "nullif")
-            out.insert(close, Token("word", ", 0"))
-        elif name in ("bitand", "bitor", "bitxor"):
-            # MathFunctions bit ops as named functions; Spark only has
-            # the operators.
-            close = _matching_paren(out, j)
-            args = _split_args(out, j, close)
-            if len(args) == 2:
-                op = {"bitand": "&", "bitor": "|", "bitxor": "^"}[name]
-                _replace_call(out, i, close, f"(({args[0]}) {op} ({args[1]}))")
-        elif name == "bitnot":
-            close = _matching_paren(out, j)
-            args = _split_args(out, j, close)
-            if len(args) == 1:
-                _replace_call(out, i, close, f"(~({args[0]}))")
-        elif name == "getbit":
-            # getbit(x, pos): the bit at position pos (0 = LSB), TINYINT.
-            close = _matching_paren(out, j)
-            args = _split_args(out, j, close)
-            if len(args) == 2:
-                _replace_call(
-                    out, i, close,
-                    f"CAST(shiftright(CAST(({args[0]}) AS BIGINT),"
-                    f" ({args[1]})) & 1 AS TINYINT)",
-                )
-        elif name == "setbit":
-            # setbit(x, pos[, v]): set (default) or clear bit pos.
-            close = _matching_paren(out, j)
-            args = _split_args(out, j, close)
-            if len(args) == 2:
-                _replace_call(
-                    out, i, close,
-                    f"(({args[0]}) | shiftleft(1, ({args[1]})))",
-                )
-            elif len(args) == 3:
-                _replace_call(
-                    out, i, close,
-                    f"(CASE WHEN ({args[2]}) = 0"
-                    f" THEN ({args[0]}) & ~shiftleft(1, ({args[1]}))"
-                    f" ELSE ({args[0]}) | shiftleft(1, ({args[1]})) END)",
-                )
-        elif name == "countset":
-            # countset(x[, v]): count of set (v=1, default) bits. The
-            # cleared-bit count (v=0) depends on the argument's TYPE
-            # WIDTH, which a text-level rewrite cannot know — raise
-            # rather than guess a width.
-            close = _matching_paren(out, j)
-            args = _split_args(out, j, close)
-            if len(args) == 1 or (len(args) == 2 and args[1].strip() == "1"):
-                _replace_call(out, i, close, f"bit_count({args[0]})")
-            elif len(args) == 2:
-                raise ImpalaUnsupportedError(
-                    "countset(x, 0) (cleared-bit count) depends on the"
-                    " argument's type width and is not supported; use"
-                    " <width> - countset(x) explicitly"
-                )
-        elif name in ("rotateleft", "rotateright"):
-            # 64-BIT rotate (the rewrite cannot see the argument's type
-            # width, so the BIGINT contract is documented): left rotate by
-            # n = (x << n) | (x >>> 64-n); n=0 degenerates to x | x = x
-            # (Java shifts are mod 64).
-            close = _matching_paren(out, j)
-            args = _split_args(out, j, close)
-            if len(args) == 2:
-                x = f"CAST(({args[0]}) AS BIGINT)"
-                n = f"({args[1]})"
-                if name == "rotateleft":
-                    repl = (f"(shiftleft({x}, {n})"
-                            f" | shiftrightunsigned({x}, 64 - {n}))")
-                else:
-                    repl = (f"(shiftrightunsigned({x}, {n})"
-                            f" | shiftleft({x}, 64 - {n}))")
-                _replace_call(out, i, close, repl)
-        elif name == "timestamp_cmp":
-            # timestamp_cmp(t1, t2): -1/0/1, NULL when either side is NULL
-            close = _matching_paren(out, j)
-            args = _split_args(out, j, close)
-            if len(args) == 2:
-                a = f"CAST(({args[0]}) AS TIMESTAMP)"
-                b = f"CAST(({args[1]}) AS TIMESTAMP)"
-                _replace_call(
-                    out, i, close,
-                    f"(CASE WHEN {a} = {b} THEN 0 WHEN {a} < {b} THEN -1"
-                    f" WHEN {a} > {b} THEN 1 ELSE CAST(NULL AS INT) END)",
-                )
-        elif name == "from_timestamp":
-            # from_timestamp(ts, fmt): format a timestamp as a string
-            # (the Impala pattern letters used in practice — yyyy MM dd
-            # HH mm ss SSS — mean the same in Spark's date_format).
-            close = _matching_paren(out, j)
-            args = _split_args(out, j, close)
-            if len(args) == 2:
-                _replace_call(
-                    out, i, close,
-                    f"date_format(CAST(({args[0]}) AS TIMESTAMP), {args[1]})",
-                )
-        elif name in ("microsecond", "nanosecond"):
-            # sub-second parts; Spark timestamps are micro-precision, so
-            # nanosecond is the micro value scaled.
-            close = _matching_paren(out, j)
-            args = _split_args(out, j, close)
-            if len(args) == 1:
-                base = (f"CAST(date_format(CAST(({args[0]}) AS TIMESTAMP),"
-                        " 'SSSSSS') AS INT)")
-                repl = base if name == "microsecond" else f"({base} * 1000)"
-                _replace_call(out, i, close, repl)
-        elif name in (
-            "max_tinyint", "min_tinyint", "max_smallint", "min_smallint",
-            "max_int", "min_int", "max_bigint", "min_bigint",
-        ):
-            # typed integer bounds (MathFunctions); min_bigint spelled as
-            # an expression because the bare literal overflows the parser
-            close = _matching_paren(out, j)
-            bounds = {
-                "max_tinyint": "CAST(127 AS TINYINT)",
-                "min_tinyint": "CAST(-128 AS TINYINT)",
-                "max_smallint": "CAST(32767 AS SMALLINT)",
-                "min_smallint": "CAST(-32768 AS SMALLINT)",
-                "max_int": "CAST(2147483647 AS INT)",
-                "min_int": "CAST(-2147483648 AS INT)",
-                "max_bigint": "CAST(9223372036854775807 AS BIGINT)",
-                "min_bigint": "CAST(-9223372036854775807 - 1 AS BIGINT)",
-            }
-            _replace_call(out, i, close, bounds[name])
-        elif name == "current_session":
-            # session identity: stable for the process lifetime, like the
-            # reference's session handle
-            import os as _os
-
-            close = _matching_paren(out, j)
-            _replace_call(out, i, close, f"'session-{_os.getpid()}'")
-        elif name in ("is_inf", "is_nan"):
-            # ScalarBuiltins MathFunctions is_inf/is_nan. Impala
-            # propagates NULL; Spark's isnan(NULL) is false and it has no
-            # isinf, so spell both explicitly. is_nan re-evaluates the
-            # argument once in the NULL test (same duplication pattern as
-            # truncate's decimal-places arg).
-            close = _matching_paren(out, j)
-            args = _split_args(out, j, close)
-            if len(args) == 1:
-                if name == "is_inf":
-                    repl = (
-                        f"(abs(CAST(({args[0]}) AS DOUBLE))"
-                        " = CAST('Infinity' AS DOUBLE))"
-                    )
-                else:
-                    repl = (
-                        f"IF(({args[0]}) IS NULL, CAST(NULL AS BOOLEAN),"
-                        f" isnan(CAST(({args[0]}) AS DOUBLE)))"
-                    )
-                _replace_call(out, i, close, repl)
-        elif name == "regexp_escape":
-            # ScalarBuiltins regexp_escape = RE2::QuoteMeta: every char
-            # outside [A-Za-z0-9_] gets a backslash prefix.
-            close = _matching_paren(out, j)
-            args = _split_args(out, j, close)
-            if len(args) == 1:
-                _replace_call(
-                    out, i, close,
-                    f"regexp_replace({args[0]}, '([^a-zA-Z0-9_])', '\\\\\\\\$1')",
-                )
-        elif name == "int_months_between":
-            # ScalarBuiltins int_months_between: months_between truncated
-            # toward zero (CAST double->INT truncates, ANSI off).
-            close = _matching_paren(out, j)
-            args = _split_args(out, j, close)
-            if len(args) == 2:
-                _replace_call(
-                    out, i, close,
-                    f"CAST(months_between(CAST(({args[0]}) AS TIMESTAMP),"
-                    f" CAST(({args[1]}) AS TIMESTAMP)) AS INT)",
-                )
-        elif name == "millisecond":
-            # ScalarBuiltins millisecond(ts): the milliseconds part.
-            close = _matching_paren(out, j)
-            args = _split_args(out, j, close)
-            if len(args) == 1:
-                _replace_call(
-                    out, i, close,
-                    f"CAST(date_format(CAST(({args[0]}) AS TIMESTAMP), 'SSS') AS INT)",
-                )
-        elif name == "utc_timestamp":
-            # ScalarBuiltins utc_timestamp(): now() shifted to UTC.
-            close = _matching_paren(out, j)
-            _replace_call(
-                out, i, close,
-                "to_utc_timestamp(current_timestamp(), current_timezone())",
-            )
-        elif name in ("effective_user", "logged_in_user"):
-            # Sentry-era user identity builtins: without an authorization
-            # layer they all resolve to the connected user, like user().
-            close = _matching_paren(out, j)
-            _replace_call(out, i, close, "current_user()")
-        elif name == "pid":
-            # UtilityFunctions pid(): the coordinator process id — here
-            # the Spark driver (the coordinator analog). Bound at
-            # translate time; a constant for the statement's lifetime,
-            # exactly like the reference (one coordinator per query).
-            import os as _os
-
-            close = _matching_paren(out, j)
-            _replace_call(out, i, close, f"CAST({_os.getpid()} AS INT)")
-        elif name == "coordinator":
-            # UtilityFunctions coordinator(): hostname of the node
-            # coordinating the query — the Spark driver host.
-            import socket as _socket
-
-            close = _matching_paren(out, j)
-            _replace_call(out, i, close, f"'{_socket.gethostname()}'")
-        elif name == "isnull":
-            # Impala isnull(a, b) is 2-arg NVL (ScalarBuiltins); Spark's
-            # isnull(a) is 1-arg. Rename only the 2-arg form.
-            close = _matching_paren(out, j)
-            depth = 0
-            has_comma = False
-            for k in range(j, close):
-                tk = out[k]
-                if tk.kind == "op" and tk.text == "(":
-                    depth += 1
-                elif tk.kind == "op" and tk.text == ")":
-                    depth -= 1
-                elif tk.kind == "op" and tk.text == "," and depth == 1:
-                    has_comma = True
-            if has_comma:
-                out[i] = Token("word", "nvl")
-        i += 1
+            text = rule(texts)
+        if text is not None:
+            out.append(Token("word", text))
+        else:
+            out += [name, *tokens[i + 1:j + 1], *args]
+            if tail:
+                out.append(Token("word", tail))
+            out.append(tokens[close])
+        i = close + 1
     return out
 
 
@@ -12249,18 +12065,6 @@ def translate(
     tokens = _rewrite_bool_aliases(tokens)
     tokens = _rewrite_iregexp(tokens)
     tokens = _rewrite_hints(tokens)
-    # Structural call rewrites (decode -> CASE, *_add -> interval math)
-    # splice whole expressions in as single tokens; re-tokenize and re-run
-    # until fixpoint so calls NESTED inside rewritten arguments are seen.
-    # The ORDER BY NULLS pass reads the token list of the fixpoint's last
-    # round (both passes copy their input, so it is theirs to share).
-    text = untokenize(_rewrite_functions(tokens))
-    for _ in range(8):
-        tokens = tokenize(text)
-        new = untokenize(_rewrite_functions(tokens))
-        if new == text:
-            break
-        text = new
-    else:
-        tokens = tokenize(text)
-    return untokenize(_rewrite_order_by_nulls(tokens))
+    tokens = _rewrite_order_by_nulls(tokens)
+    # calls last: a rewritten call is one token, which no pass reads into
+    return untokenize(_rewrite_functions(tokens))

@@ -2,8 +2,8 @@
 (catalog/BuiltinsDb.java aggregates + generated ScalarBuiltins, per the
 public Impala 2.7 function reference) must translate and EXECUTE on
 Spark. This is the breadth check behind SURVEY §2.4-2.6 — names Spark
-shares pass through, divergent ones go through FUNCTION_RENAMES or
-structural rewrites in parser.py."""
+shares pass through, divergent ones go through parser.py's
+CALL_REWRITES table."""
 
 import pytest
 

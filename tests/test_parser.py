@@ -163,6 +163,26 @@ def test_ts_builtin_family():
 def test_nested_structural_rewrites_reach_fixpoint():
     out = translate("SELECT decode(x, 1, years_add(ts, 1), ts) FROM t")
     assert "make_interval" in out and "CASE WHEN" in out
+    # ten levels: deeper than any fixed number of re-scans would reach
+    out = translate("SELECT " + "quotient(" * 10 + "x" + ", 2)" * 10 + " FROM t")
+    assert "quotient" not in out and out.count(" DIV ") == 10
+    out = translate("SELECT " + "decode(" * 10 + "c" + ", 1, 2, 3)" * 10 + " FROM t")
+    assert "decode" not in out and out.count("CASE WHEN") == 10
+
+
+def test_passes_reach_inside_a_rewritten_call():
+    """A rewritten call is spliced in as one token, so IREGEXP, join
+    hints and ORDER BY NULLS must already hold inside its arguments."""
+    assert "((a RLIKE '(?i)x') IS TRUE)" in translate("SELECT istrue(a IREGEXP 'x') FROM t")
+    out = translate(
+        "SELECT decode((SELECT max(a) FROM t1 JOIN [broadcast] t2 ON t1.k = t2.k),"
+        " 1, 2, 3) FROM t"
+    )
+    assert "/*+ BROADCAST(t2) */" in out and "[broadcast]" not in out
+    out = translate("SELECT quotient((SELECT max(a) FROM u ORDER BY a LIMIT 1), 2) FROM t")
+    assert "NULLS LAST" in out and " DIV " in out
+    # and the calls inside an IREGEXP operand are rewritten
+    assert "concat('(?i)', (lower(p)))" in translate("SELECT 1 FROM t WHERE a IREGEXP (lcase(p))")
 
 
 def test_postfix_factorial_vs_prefix_not():

@@ -131,10 +131,10 @@ def test_a_miss_analyzes_once_and_a_hit_never(interactive_engine, monkeypatch):
         assert len(built) == 1, name
 
 
-def test_a_miss_tokenizes_twice(interactive_engine, monkeypatch):
-    """A strict miss tokenizes its text once for the analysis and once
-    in translate's function-rewrite fixpoint, whose last token list the
-    ORDER BY NULLS pass reuses. A hit tokenizes nothing."""
+def test_a_miss_tokenizes_once(interactive_engine, monkeypatch):
+    """A strict miss tokenizes its text once, for the analysis that
+    translate's passes then read; the size-gated plan rewrites parse
+    nothing below their gates. A hit tokenizes nothing."""
     # (the modules the engine loads lazily bind the unpatched tokenize)
     from impala_spark import parser as P, rewrites, tosql  # noqa: F401
 
@@ -145,15 +145,16 @@ def test_a_miss_tokenizes_twice(interactive_engine, monkeypatch):
         calls.append(sql)
         return tokenize(sql)
 
-    for mod in (P, E):  # translate's and the statement analysis's
+    # translate's, the statement analysis's and the plan rewrites'
+    for mod in (P, E, rewrites):
         monkeypatch.setattr(mod, "tokenize", counted)
     for name in INTERACTIVE:
         text = SPARK_QUERIES[name].__doc__
         calls.clear()
         _read(interactive_engine, text, hit=False)
-        assert len(calls) == 2, (name, len(calls))
+        assert len(calls) == 1, (name, len(calls))
         _read(interactive_engine, text, hit=True)
-        assert len(calls) == 2, name
+        assert len(calls) == 1, name
 
 
 def test_registry_entry_takes_the_front_door(spark, sf_dir):

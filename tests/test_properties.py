@@ -164,13 +164,21 @@ _FRAGMENTS = [
 ]
 
 
+#: rewritable calls to nest a fragment in
+_WRAPS = ["quotient({}, 2)", "zeroifnull({})", "decode({}, 1, 2, 3)"]
+
+
 @given(
     picks=st.lists(st.sampled_from(_FRAGMENTS), min_size=1, max_size=5),
+    wraps=st.lists(st.sampled_from(_WRAPS), min_size=1, max_size=12),
     where=st.sampled_from(["", " WHERE a > 1", " WHERE a && b", " WHERE !c"]),
 )
 @settings(max_examples=120, deadline=None)
-def test_translate_fuzz_balanced_and_idempotent(picks, where):
-    sql = f"SELECT {', '.join(picks)} FROM t{where}"
+def test_translate_fuzz_balanced_and_idempotent(picks, wraps, where):
+    nested = picks[0]
+    for wrap in wraps:
+        nested = wrap.format(nested)
+    sql = f"SELECT {', '.join([nested, *picks[1:]])} FROM t{where}"
     out = translate(sql)
     assert out.count("(") == out.count(")"), (sql, out)
     out2 = translate(out)
